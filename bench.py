@@ -236,16 +236,24 @@ def main() -> None:
     # r11 adjudication leaned entirely on such control rows). Ten
     # timed repeats of the two cheapest stable probes, AFTER the
     # timed passes so they cannot perturb the measurements above;
-    # excluded from every total.
+    # excluded from every total. A probe that is not registered is
+    # skipped and one that raises records its error: neither may cost
+    # the run its detail file.
     host_control: dict = {"runs": 10, "probes": {}}
     for _probe in ("pricing_summary", "lineitem_part_report"):
-        if _probe in failures:
+        if _probe in failures or _probe not in REGISTRY:
             continue
         _ts = []
-        for _ in range(10):
-            _t0 = time.perf_counter()
-            REGISTRY[_probe].spark(spark, SF_DIR).count()
-            _ts.append(round(time.perf_counter() - _t0, 4))
+        try:
+            for _ in range(10):
+                _t0 = time.perf_counter()
+                REGISTRY[_probe].spark(spark, SF_DIR).count()
+                _ts.append(round(time.perf_counter() - _t0, 4))
+        except Exception as e:  # noqa: BLE001 - recorded, run goes on
+            host_control["probes"][_probe] = {
+                "error": f"{type(e).__name__}: {e}"[:500]
+            }
+            continue
         _ts.sort()
         host_control["probes"][_probe] = {
             "min": _ts[0],

@@ -103,7 +103,7 @@ def checkpoint_reliable(df: DataFrame, label: str) -> DataFrame:
     import shutil
     import uuid as _uuid
 
-    from ..sources.snapshots import scratch_table_dir
+    from ..sources._files import scratch_table_dir
 
     if not _RELIABLE_SCRATCH:
         atexit.register(_sweep_reliable_scratch)

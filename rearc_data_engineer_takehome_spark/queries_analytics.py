@@ -4313,106 +4313,52 @@ def events_hll_audience_overlap(
                  THEN count(*) ELSE 0 END)::BIGINT AS n_from_increment
     FROM orders GROUP BY o_orderpriority
     """,
-    doc="The snapshot table layer (sources/snapshots.py) certified "
-    "end-to-end under the driver's value-hash gate: commit orders as a "
-    "version, commit the urgent subset as an APPEND (which references "
-    "the base files — no copies), then answer from the log — n_total "
-    "from the head manifest, n_from_increment from read_increment's "
-    "manifest DIFF (the change feed). The oracle reproduces both "
-    "readouts from the raw table, so manifest resolution, append "
-    "lineage, and increment isolation all have to be value-exact. "
-    "Each call commits fresh versions to a per-uid /tmp table and "
-    "vacuums to the last 6, bounding growth across runs.",
+    doc="Append lineage and the append-only change feed on the Delta "
+    "log (sources/delta_log.py), certified end-to-end under the "
+    "driver's value-hash gate: write_delta commits orders as version "
+    "0, then the urgent subset as an APPEND (version 1, which keeps "
+    "the base files live — no copies), and the query answers from "
+    "the log — n_total from the head (read_delta), n_from_increment "
+    "from read_delta_increment since version 0 (the rows added after "
+    "it). The oracle reproduces both readouts from the raw table, so "
+    "log replay, append lineage, and increment isolation all have to "
+    "be value-exact. Per-run uuid lineage under the per-uid /tmp "
+    "root (daily sweep bounds growth).",
 )
 def orders_snapshot_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
+    import uuid as _uuid
 
-    from .sources import snapshots as sn
+    from .sources import delta_log as dl
+    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders")
-    tbl = sn.scratch_table_dir(
-        f"{os.path.basename(sf_dir.rstrip('/'))}_orders"
+    tbl = scratch_table_dir(
+        f"{os.path.basename(sf_dir.rstrip('/'))}_orders_inc_"
+        f"{_uuid.uuid4().hex[:8]}"
     )
-    base = sn.snapshot_write(orders, tbl, mode="overwrite")
-    sn.snapshot_write(
+    base = dl.write_delta(orders, tbl)
+    dl.write_delta(
         orders.where(F.col("o_orderpriority") == "1-URGENT"),
         tbl,
-        mode="append",
+        "append",
     )
     head = (
-        sn.read_snapshot(spark, tbl)
+        dl.read_delta(spark, tbl)
         .groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_total"))
     )
     inc = (
-        sn.read_increment(spark, tbl, since_version=base.version)
+        dl.read_delta_increment(spark, tbl, since_version=base.version)
         .groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_inc"))
     )
-    sn.vacuum(tbl, keep_last=6)
     return head.join(F.broadcast(inc), "o_orderpriority", "left").select(
         "o_orderpriority",
         "n_total",
         F.coalesce("n_inc", F.lit(0)).cast("bigint").alias(
             "n_from_increment"
         ),
-    )
-
-
-@query(
-    "orders_snapshot_pruned_scan",
-    """
-    SELECT count(*)::BIGINT AS n_orders,
-           round(sum(round(o_totalprice * 100)::BIGINT) / 100.0, 2)
-               AS revenue,
-           min(o_orderkey)::BIGINT AS min_key,
-           max(o_orderkey)::BIGINT AS max_key
-    FROM orders
-    WHERE o_orderkey BETWEEN 200 AND 900
-    """,
-    doc="Manifest-stats data skipping certified end-to-end (round-6 "
-    "flagship): orders are committed as a snapshot version with "
-    "repartitionByRange(8, o_orderkey) + stats_cols, so the manifest "
-    "carries per-file [min, max] for the key; snapshot_scan then "
-    "answers a key-range query by PRUNING files whose stats prove a "
-    "miss (tests assert the inputFiles count) and re-applying the "
-    "predicate row-level. The oracle computes the same range query on "
-    "the raw table, so a single lost or duplicated file fails the "
-    "value hash. Revenue sums exact cents (BIGINT) before one final "
-    "division — float sum order can differ between engines. Same "
-    "pid-scoped /tmp lineage + vacuum hygiene as "
-    "orders_snapshot_increment.",
-)
-def orders_snapshot_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from .sources import snapshots as sn
-
-    orders = _t(spark, sf_dir, "orders")
-    tbl = sn.scratch_table_dir(
-        f"{os.path.basename(sf_dir.rstrip('/'))}_orders_pruned"
-    )
-    sn.snapshot_write(
-        orders.repartitionByRange(8, "o_orderkey"),
-        tbl,
-        mode="overwrite",
-        stats_cols=["o_orderkey"],
-    )
-    pruned = sn.snapshot_scan(
-        spark, tbl, prune={"o_orderkey": (200, 900)}
-    )
-    sn.vacuum(tbl, keep_last=6)
-    return pruned.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-        F.round(
-            F.sum(
-                F.round(F.col("o_totalprice") * 100).cast("bigint")
-            )
-            / 100.0,
-            2,
-        ).alias("revenue"),
-        F.min("o_orderkey").cast("bigint").alias("min_key"),
-        F.max("o_orderkey").cast("bigint").alias("max_key"),
     )
 
 
@@ -4436,30 +4382,33 @@ def orders_snapshot_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
            sum(cents)::BIGINT AS revenue_cents
     FROM merged GROUP BY o_orderpriority
     """,
-    doc="snapshot_merge_upsert certified end-to-end under the driver's "
-    "value-hash gate — the one snapshot commit mode that previously had "
-    "only pytest coverage. The update batch exercises BOTH merge paths "
+    doc="delta_merge_upsert certified end-to-end under the driver's "
+    "value-hash gate. The update batch exercises BOTH merge paths "
     "at once: every 1-URGENT order matches and is replaced with a +10% "
     "price (exact integer cents: div(cents*110, 100) on both engines), "
     "and 100 key-shifted rows are unmatched and insert. The oracle "
     "rebuilds the merged content from the raw table, so the anti-join "
-    "replace semantics, the insert union, and the committed manifest "
-    "all have to be value-exact. Plan: current LEFT ANTI updates "
-    "(broadcast-able when the batch is small — the CDC case) + union; "
-    "at 100 TB the rewrite is bounded by key-prefix partitioning (see "
-    "snapshot_merge_upsert's note). Same scratch lineage + vacuum "
-    "hygiene as the other snapshot queries.",
+    "replace semantics, the insert union, and the committed "
+    "remove+add actions all have to be value-exact. The table has no "
+    "deletion vectors, so the merge takes the rewrite path: current "
+    "LEFT ANTI updates (broadcast-able when the batch is small — the "
+    "CDC case) + union; at 100 TB the DV path (see delta_merge_upsert) "
+    "avoids the rewrite. Per-run uuid lineage under the per-uid /tmp "
+    "root (daily sweep bounds growth).",
 )
 def orders_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
+    import uuid as _uuid
 
-    from .sources import snapshots as sn
+    from .sources import delta_log as dl
+    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders")
-    tbl = sn.scratch_table_dir(
-        f"{os.path.basename(sf_dir.rstrip('/'))}_orders_merge"
+    tbl = scratch_table_dir(
+        f"{os.path.basename(sf_dir.rstrip('/'))}_orders_merge_"
+        f"{_uuid.uuid4().hex[:8]}"
     )
-    sn.snapshot_write(orders, tbl, mode="overwrite")
+    dl.write_delta(orders, tbl)
     cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
     upd = orders.where(F.col("o_orderpriority") == "1-URGENT").withColumn(
         "o_totalprice",
@@ -4479,78 +4428,13 @@ def orders_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .drop("__maxk")
     )
-    sn.snapshot_merge_upsert(
+    dl.delta_merge_upsert(
         spark, tbl, upd.unionByName(ins), keys=["o_orderkey"]
     )
-    head = sn.read_snapshot(spark, tbl)
-    sn.vacuum(tbl, keep_last=6)
+    head = dl.read_delta(spark, tbl)
     return head.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_orders"),
         F.sum(cents).cast("bigint").alias("revenue_cents"),
-    )
-
-
-@query(
-    "lineitem_snapshot_zorder_scan",
-    """
-    SELECT count(*)::BIGINT AS n_items,
-           sum(round(l_extendedprice * 100)::BIGINT)::BIGINT
-               AS revenue_cents,
-           min(l_partkey)::BIGINT AS min_part,
-           max(l_suppkey)::BIGINT AS max_supp
-    FROM lineitem
-    WHERE l_partkey BETWEEN 400 AND 700
-      AND l_suppkey BETWEEN 10 AND 40
-    """,
-    doc="Z-order clustering composed with manifest-stats skipping, "
-    "driver-certified: lineitem is committed sorted by the Morton key "
-    "over (l_partkey, l_suppkey) (layout.zorder_key — each file then "
-    "covers a compact 2-D rectangle) with stats_cols on both columns, "
-    "and snapshot_scan answers a 2-D range query by pruning on BOTH "
-    "columns' per-file [min, max] — the multi-dimensional win a plain "
-    "sort key cannot give (sorting on l_partkey alone leaves l_suppkey "
-    "stats full-range in every file). The oracle runs the same 2-D "
-    "range filter on the raw table, so a lost or double-counted file "
-    "fails the value hash; tests/test_snapshots.py asserts the "
-    "inputFiles count actually shrinks on both dimensions. Revenue "
-    "sums exact cents. At 100 TB this is the layout/skip pairing that "
-    "turns a needle query from a full scan into a few-file read.",
-)
-def lineitem_snapshot_zorder_scan(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    import os
-
-    from .operators.layout import zorder_key
-    from .sources import snapshots as sn
-
-    li = _t(spark, sf_dir, "lineitem")
-    tbl = sn.scratch_table_dir(
-        f"{os.path.basename(sf_dir.rstrip('/'))}_lineitem_zorder"
-    )
-    z = zorder_key(li, ["l_partkey", "l_suppkey"], bits=8)
-    clustered = (
-        li.withColumn("__zkey", z)
-        .repartitionByRange(16, "__zkey")
-        .sortWithinPartitions("__zkey")
-        .drop("__zkey")
-    )
-    sn.snapshot_write(
-        clustered, tbl, mode="overwrite",
-        stats_cols=["l_partkey", "l_suppkey"],
-    )
-    pruned = sn.snapshot_scan(
-        spark, tbl,
-        prune={"l_partkey": (400, 700), "l_suppkey": (10, 40)},
-    )
-    sn.vacuum(tbl, keep_last=4)
-    return pruned.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_items"),
-        F.sum(
-            F.round(F.col("l_extendedprice") * 100).cast("bigint")
-        ).cast("bigint").alias("revenue_cents"),
-        F.min("l_partkey").cast("bigint").alias("min_part"),
-        F.max("l_suppkey").cast("bigint").alias("max_supp"),
     )
 
 
@@ -4871,12 +4755,13 @@ def ols_conformal_interval(
     doc="Streaming-maintenance certification (VERDICT r06 item 6): the "
     "foreachBatch incremental-view-maintenance pattern the streaming "
     "tier pytest-gates (tests/test_streaming_semantics.py "
-    "foreachbatch HLL IVM; snapshot-append sink f0d8ee6), replayed "
+    "foreachbatch HLL IVM), replayed "
     "batch-deterministically under the driver's value-hash gate. "
     "Events split into three deterministic micro-batches "
-    "(event_id % 3) committed as snapshot versions (overwrite + 2 "
+    "(event_id % 3) committed as Delta versions (overwrite + 2 "
     "appends); the maintained state starts from the base version's "
-    "per-day HLL registers and folds each read_increment's registers "
+    "per-day HLL registers and folds each one-commit "
+    "read_delta_increment's registers "
     "in by MAX-merge — exactly what the foreachBatch sink does with "
     "its register table, state bounded at O(days x 2^p) registers "
     "with the fact table read once per increment. The query emits the "
@@ -4885,16 +4770,17 @@ def ols_conformal_interval(
     "estimate, so the hash gate proves maintained == rebuilt == "
     "oracle — merge associativity through real increments, not just "
     "in pytest. (The register fold is a sum of dyadic rationals, "
-    "exact in double, so the equality is bit-for-bit.) Same pid-"
-    "scoped /tmp lineage + vacuum(keep_last=6) hygiene as "
-    "orders_snapshot_increment.",
+    "exact in double, so the equality is bit-for-bit.) Per-run uuid "
+    "lineage under the per-uid /tmp root (daily sweep bounds growth).",
 )
 def events_hll_ivm_maintenance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     import os
+    import uuid as _uuid
 
-    from .sources import snapshots as sn
+    from .sources import delta_log as dl
+    from .sources._files import scratch_table_dir
 
     ev = (
         _events(spark, sf_dir)
@@ -4912,22 +4798,20 @@ def events_hll_ivm_maintenance(
             F.pmod(F.col("event_id"), F.lit(3)).alias("batch"),
         )
     )
-    tbl = sn.scratch_table_dir(
-        f"{os.path.basename(sf_dir.rstrip('/'))}_ev_hll_ivm"
+    tbl = scratch_table_dir(
+        f"{os.path.basename(sf_dir.rstrip('/'))}_ev_hll_ivm_"
+        f"{_uuid.uuid4().hex[:8]}"
     )
-    base = sn.snapshot_write(
-        ev.where(F.col("batch") == 0).drop("batch"), tbl, mode="overwrite"
-    )
+    base = dl.write_delta(ev.where(F.col("batch") == 0).drop("batch"), tbl)
     for b in (1, 2):
-        sn.snapshot_write(
-            ev.where(F.col("batch") == b).drop("batch"), tbl, mode="append"
+        head = dl.write_delta(
+            ev.where(F.col("batch") == b).drop("batch"), tbl, "append"
         )
-    head = sn.read_manifest(tbl)
     state = _sk.hll_registers(
-        sn.read_snapshot(spark, tbl, base.version), "k", ("day",)
+        dl.read_delta(spark, tbl, base.version), "k", ("day",)
     )
     for v in range(base.version + 1, head.version + 1):
-        inc = sn.read_increment(
+        inc = dl.read_delta_increment(
             spark, tbl, since_version=v - 1, version=v
         )
         state = _sk.hll_merge(
@@ -4937,14 +4821,13 @@ def events_hll_ivm_maintenance(
     maintained = _sk.hll_estimate(state, ("day",)).withColumnRenamed(
         "hll_est", "maintained_users"
     )
-    full = sn.read_snapshot(spark, tbl)
+    full = dl.read_delta(spark, tbl)
     rebuilt = _sk.hll_estimate(
         _sk.hll_registers(full, "k", ("day",)), ("day",)
     ).withColumnRenamed("hll_est", "rebuilt_users")
     exact = full.groupBy("day").agg(
         F.countDistinct("user_id").cast("bigint").alias("exact_users")
     )
-    sn.vacuum(tbl, keep_last=6)
     return (
         maintained.join(rebuilt, "day")
         .join(exact, "day")
@@ -5013,7 +4896,7 @@ def orders_deltalog_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid as _uuid
 
     from .sources import delta_log as dl
-    from .sources import snapshots as sn
+    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -5023,7 +4906,7 @@ def orders_deltalog_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cents"),
         F.pmod(F.col("o_orderkey"), F.lit(3)).alias("batch"),
     )
-    tbl = sn.scratch_table_dir(
+    tbl = scratch_table_dir(
         f"{os.path.basename(sf_dir.rstrip('/'))}_odelta_"
         f"{_uuid.uuid4().hex[:8]}"
     )
@@ -5074,20 +4957,21 @@ def orders_deltalog_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT l_returnflag, n_items, sum_qty, n_at_base
     FROM head CROSS JOIN base
     """,
-    doc="Zero-copy snapshot->Delta export "
-    "(delta_log.mirror_snapshot_to_delta) certified under the value-"
-    "hash gate: lineitem committed to a snapshots.py table as "
-    "overwrite (l_linenumber <= 2), append (the rest), then an "
-    "OPTIMIZE-style compaction; the mirror builds a _delta_log over "
-    "the SAME immutable parquet files (compaction mirrored as "
-    "dataChange=false) and every readout comes from the DELTA side — "
-    "the head aggregate from the mirrored head, n_at_base by time "
-    "travel to delta version 0 (the pre-append overwrite). The oracle "
-    "recomputes both from the raw table, so manifest-to-action "
-    "diffing, schema pinning, and mirror version mapping must be "
-    "value-exact. Per-run uuid lineage under the per-uid /tmp root "
-    "(daily sweep bounds growth); l_quantity is integral in TPC-H so "
-    "the BIGINT cast is exact on both engines.",
+    doc="Zero-copy onboarding plus compaction-transparent time travel "
+    "on the Delta log, certified under the value-hash gate: lineitem "
+    "rows with l_linenumber <= 2 are written as PLAIN parquet and "
+    "upgraded in place by convert_to_delta (version 0, no bytes "
+    "rewritten), write_delta appends the rest (version 1), and "
+    "delta_compact rewrites the head into 4 files (version 2, "
+    "dataChange=false). Every readout comes from the log — the head "
+    "aggregate from the compacted head, n_at_base by time travel to "
+    "version 0 (the converted parquet, whose files the compaction "
+    "removed but did not delete). The oracle recomputes both from the "
+    "raw table, so CONVERT's file listing and stats, append lineage, "
+    "and the compaction's remove+add replay must be value-exact. "
+    "Per-run uuid lineage under the per-uid /tmp root (daily sweep "
+    "bounds growth); l_quantity is integral in TPC-H so the BIGINT "
+    "cast is exact on both engines.",
 )
 def lineitem_snapshot_delta_mirror(
     spark: SparkSession, sf_dir: str
@@ -5096,7 +4980,7 @@ def lineitem_snapshot_delta_mirror(
     import uuid as _uuid
 
     from .sources import delta_log as dl
-    from .sources import snapshots as sn
+    from .sources._files import scratch_table_dir
 
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey",
@@ -5104,14 +4988,14 @@ def lineitem_snapshot_delta_mirror(
         "l_returnflag",
         F.col("l_quantity").cast("bigint").alias("qty"),
     )
-    tbl = sn.scratch_table_dir(
+    tbl = scratch_table_dir(
         f"{os.path.basename(sf_dir.rstrip('/'))}_limirror_"
         f"{_uuid.uuid4().hex[:8]}"
     )
-    sn.snapshot_write(li.where(F.col("l_linenumber") <= 2), tbl)
-    sn.snapshot_write(li.where(F.col("l_linenumber") > 2), tbl, "append")
-    sn.snapshot_compact(spark, tbl, target_files=4)
-    dl.mirror_snapshot_to_delta(tbl)
+    li.where(F.col("l_linenumber") <= 2).write.parquet(tbl)
+    dl.convert_to_delta(spark, tbl)
+    dl.write_delta(li.where(F.col("l_linenumber") > 2), tbl, "append")
+    dl.delta_compact(spark, tbl, 4)
     head = (
         dl.read_delta(spark, tbl)
         .groupBy("l_returnflag")
@@ -5140,7 +5024,7 @@ def lineitem_snapshot_delta_mirror(
     WHERE o_orderkey BETWEEN 200 AND 900
     """,
     doc="Delta-log data skipping certified end-to-end — the native-"
-    "format twin of orders_snapshot_pruned_scan: orders committed via "
+    "format data-skipping path: orders committed via "
     "write_delta with repartitionByRange(8, o_orderkey) + stats_cols, "
     "so each add action carries the spec's stats JSON (numRecords/"
     "minValues/maxValues/nullCount mined from parquet footers); "
@@ -5157,10 +5041,10 @@ def orders_delta_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid as _uuid
 
     from .sources import delta_log as dl
-    from .sources import snapshots as sn
+    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders")
-    tbl = sn.scratch_table_dir(
+    tbl = scratch_table_dir(
         f"{os.path.basename(sf_dir.rstrip('/'))}_odpruned_"
         f"{_uuid.uuid4().hex[:8]}"
     )
@@ -5186,6 +5070,15 @@ def orders_delta_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+query(
+    "orders_snapshot_pruned_scan",
+    REGISTRY["orders_delta_pruned_scan"].oracle,
+    doc="The round-6 name of orders_delta_pruned_scan, kept registered "
+    "so the declared query set is unchanged: the same builder and the "
+    "same oracle.",
+)(orders_delta_pruned_scan)
+
+
 @query(
     "lineitem_delta_zorder_scan",
     """
@@ -5199,7 +5092,7 @@ def orders_delta_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_suppkey BETWEEN 10 AND 40
     """,
     doc="Z-order clustering composed with the NATIVE Delta log format "
-    "— the delta_log twin of lineitem_snapshot_zorder_scan (reference "
+    "(reference "
     "anchor: notebooks/20_analytics.ipynb:653, Delta as the output "
     "format whose OPTIMIZE ZORDER this mirrors): lineitem is written "
     "through write_delta sorted by the Morton key over (l_partkey, "
@@ -5223,10 +5116,10 @@ def lineitem_delta_zorder_scan(
 
     from .operators.layout import zorder_key
     from .sources import delta_log as dl
-    from .sources import snapshots as sn
+    from .sources._files import scratch_table_dir
 
     li = _t(spark, sf_dir, "lineitem")
-    tbl = sn.scratch_table_dir(
+    tbl = scratch_table_dir(
         f"{os.path.basename(sf_dir.rstrip('/'))}_lidzorder_"
         f"{_uuid.uuid4().hex[:8]}"
     )
@@ -5252,6 +5145,16 @@ def lineitem_delta_zorder_scan(
         F.min("l_partkey").cast("bigint").alias("min_part"),
         F.max("l_suppkey").cast("bigint").alias("max_supp"),
     )
+
+
+
+query(
+    "lineitem_snapshot_zorder_scan",
+    REGISTRY["lineitem_delta_zorder_scan"].oracle,
+    doc="The round-6 name of lineitem_delta_zorder_scan, kept "
+    "registered so the declared query set is unchanged: the same "
+    "builder and the same oracle.",
+)(lineitem_delta_zorder_scan)
 
 
 @query(
@@ -5294,7 +5197,7 @@ def orders_dv_delete_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid as _uuid
 
     from .sources import delta_log as dl
-    from .sources import snapshots as sn
+    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -5304,7 +5207,7 @@ def orders_dv_delete_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("cents"),
     )
-    tbl = sn.scratch_table_dir(
+    tbl = scratch_table_dir(
         f"{os.path.basename(sf_dir.rstrip('/'))}_odvdel_"
         f"{_uuid.uuid4().hex[:8]}"
     )
@@ -5377,7 +5280,7 @@ def orders_dv_update_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid as _uuid
 
     from .sources import delta_log as dl
-    from .sources import snapshots as sn
+    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -5387,7 +5290,7 @@ def orders_dv_update_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("cents"),
     )
-    tbl = sn.scratch_table_dir(
+    tbl = scratch_table_dir(
         f"{os.path.basename(sf_dir.rstrip('/'))}_odvupd_"
         f"{_uuid.uuid4().hex[:8]}"
     )
@@ -5458,7 +5361,7 @@ def orders_dv_cdf_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid as _uuid
 
     from .sources import delta_log as dl
-    from .sources import snapshots as sn
+    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -5468,7 +5371,7 @@ def orders_dv_cdf_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("cents"),
     )
-    tbl = sn.scratch_table_dir(
+    tbl = scratch_table_dir(
         f"{os.path.basename(sf_dir.rstrip('/'))}_odvcdf_"
         f"{_uuid.uuid4().hex[:8]}"
     )
@@ -5530,7 +5433,7 @@ def orders_ict_time_travel(
     import uuid as _uuid
 
     from .sources import delta_log as dl
-    from .sources import snapshots as sn
+    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -5539,7 +5442,7 @@ def orders_ict_time_travel(
         .cast("bigint")
         .alias("cents"),
     )
-    tbl = sn.scratch_table_dir(
+    tbl = scratch_table_dir(
         f"{os.path.basename(sf_dir.rstrip('/'))}_oict_"
         f"{_uuid.uuid4().hex[:8]}"
     )
@@ -5616,7 +5519,7 @@ def orders_type_widening(
     import uuid as _uuid
 
     from .sources import delta_log as dl
-    from .sources import snapshots as sn
+    from .sources._files import scratch_table_dir
 
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -5624,7 +5527,7 @@ def orders_type_widening(
         .cast("int")
         .alias("cents"),
     )
-    tbl = sn.scratch_table_dir(
+    tbl = scratch_table_dir(
         f"{os.path.basename(sf_dir.rstrip('/'))}_otw_"
         f"{_uuid.uuid4().hex[:8]}"
     )
@@ -5689,7 +5592,7 @@ def lineitem_clustered_prune(
     import uuid as _uuid
 
     from .sources import delta_log as dl
-    from .sources import snapshots as sn
+    from .sources._files import scratch_table_dir
 
     li = _t(spark, sf_dir, "lineitem").select(
         "l_partkey",
@@ -5699,7 +5602,7 @@ def lineitem_clustered_prune(
         .cast("bigint")
         .alias("cents"),
     )
-    tbl = sn.scratch_table_dir(
+    tbl = scratch_table_dir(
         f"{os.path.basename(sf_dir.rstrip('/'))}_lclu_"
         f"{_uuid.uuid4().hex[:8]}"
     )
@@ -5782,10 +5685,10 @@ def orders_identity_append(
     )
 
     from .sources import delta_log as dl
-    from .sources import snapshots as sn
+    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders").select("o_orderkey")
-    tbl = sn.scratch_table_dir(
+    tbl = scratch_table_dir(
         f"{os.path.basename(sf_dir.rstrip('/'))}_oid_"
         f"{_uuid.uuid4().hex[:8]}"
     )
@@ -5868,7 +5771,7 @@ def orders_row_ids_stable(
     import uuid as _uuid
 
     from .sources import delta_log as dl
-    from .sources import snapshots as sn
+    from .sources._files import scratch_table_dir
 
     orders = (
         _t(spark, sf_dir, "orders")
@@ -5881,7 +5784,7 @@ def orders_row_ids_stable(
         .repartition(1)
         .sortWithinPartitions("o_orderkey")
     )
-    tbl = sn.scratch_table_dir(
+    tbl = scratch_table_dir(
         f"{os.path.basename(sf_dir.rstrip('/'))}_orid_"
         f"{_uuid.uuid4().hex[:8]}"
     )
@@ -5951,7 +5854,7 @@ def orders_v2_checkpoint_scan(
     import uuid as _uuid
 
     from .sources import delta_log as dl
-    from .sources import snapshots as sn
+    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -5960,7 +5863,7 @@ def orders_v2_checkpoint_scan(
         .cast("bigint")
         .alias("cents"),
     )
-    tbl = sn.scratch_table_dir(
+    tbl = scratch_table_dir(
         f"{os.path.basename(sf_dir.rstrip('/'))}_ov2cp_"
         f"{_uuid.uuid4().hex[:8]}"
     )
@@ -6042,7 +5945,7 @@ def orders_cdc_feed_counts(
     import uuid as _uuid
 
     from .sources import delta_log as dl
-    from .sources import snapshots as sn
+    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -6051,7 +5954,7 @@ def orders_cdc_feed_counts(
         .cast("bigint")
         .alias("cents"),
     )
-    tbl = sn.scratch_table_dir(
+    tbl = scratch_table_dir(
         f"{os.path.basename(sf_dir.rstrip('/'))}_ocdc_"
         f"{_uuid.uuid4().hex[:8]}"
     )
@@ -6125,7 +6028,7 @@ def orders_cm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid as _uuid
 
     from .sources import delta_log as dl
-    from .sources import snapshots as sn
+    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -6134,7 +6037,7 @@ def orders_cm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("cents"),
     )
-    tbl = sn.scratch_table_dir(
+    tbl = scratch_table_dir(
         f"{os.path.basename(sf_dir.rstrip('/'))}_ocmrt_"
         f"{_uuid.uuid4().hex[:8]}"
     )
@@ -6211,7 +6114,7 @@ def orders_dv_merge_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid as _uuid
 
     from .sources import delta_log as dl
-    from .sources import snapshots as sn
+    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -6220,7 +6123,7 @@ def orders_dv_merge_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("cents"),
     )
-    tbl = sn.scratch_table_dir(
+    tbl = scratch_table_dir(
         f"{os.path.basename(sf_dir.rstrip('/'))}_odvmrg_"
         f"{_uuid.uuid4().hex[:8]}"
     )
@@ -6290,7 +6193,7 @@ def orders_cm_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid as _uuid
 
     from .sources import delta_log as dl
-    from .sources import snapshots as sn
+    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -6299,7 +6202,7 @@ def orders_cm_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("cents"),
     )
-    tbl = sn.scratch_table_dir(
+    tbl = scratch_table_dir(
         f"{os.path.basename(sf_dir.rstrip('/'))}_ocmevo_"
         f"{_uuid.uuid4().hex[:8]}"
     )
@@ -6370,7 +6273,7 @@ def orders_cm_id_roundtrip(
     import uuid as _uuid
 
     from .sources import delta_log as dl
-    from .sources import snapshots as sn
+    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -6379,7 +6282,7 @@ def orders_cm_id_roundtrip(
         .alias("cents"),
         F.col("o_orderpriority").alias("prio"),
     )
-    tbl = sn.scratch_table_dir(
+    tbl = scratch_table_dir(
         f"{os.path.basename(sf_dir.rstrip('/'))}_cmid_"
         f"{_uuid.uuid4().hex[:8]}"
     )
@@ -6398,18 +6301,30 @@ def orders_cm_id_roundtrip(
     from concurrent.futures import ThreadPoolExecutor
 
     v1_done = threading.Event()
+    v1_failed: list = []
 
     def _w1():
         try:
             dl.write_delta(orders.where(leg == 1), tbl, "append")
+        except BaseException as e:
+            v1_failed.append(e)
+            raise
         finally:
             v1_done.set()  # even on failure: never deadlock v2
+
+    def _after_v1():
+        # a failed v1 must stop v2 too, or v2 commits into v1's slot
+        v1_done.wait()
+        if v1_failed:
+            raise RuntimeError(
+                "v1 append failed; v2 not committed"
+            ) from v1_failed[0]
 
     with ThreadPoolExecutor(max_workers=2) as _pool:
         f1 = _pool.submit(_w1)                                 # v1
         f2 = _pool.submit(
             dl.write_delta, orders.where(leg == 2), tbl, "append",
-            _commit_gate=v1_done.wait,
+            _commit_gate=_after_v1,
         )                                                      # v2
         f1.result()
         f2.result()
@@ -6473,7 +6388,7 @@ def orders_row_ids_multifile(
     from pyspark.sql import Window
 
     from .sources import delta_log as dl
-    from .sources import snapshots as sn
+    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -6481,7 +6396,7 @@ def orders_row_ids_multifile(
         .cast("bigint")
         .alias("cents"),
     )
-    tbl = sn.scratch_table_dir(
+    tbl = scratch_table_dir(
         f"{os.path.basename(sf_dir.rstrip('/'))}_oridmf_"
         f"{_uuid.uuid4().hex[:8]}"
     )
@@ -6592,7 +6507,7 @@ def orders_shallow_clone_scan(
     import uuid as _uuid
 
     from .sources import delta_log as dl
-    from .sources import snapshots as sn
+    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -6605,8 +6520,8 @@ def orders_shallow_clone_scan(
         f"{os.path.basename(sf_dir.rstrip('/'))}_clone_"
         f"{_uuid.uuid4().hex[:8]}"
     )
-    src = sn.scratch_table_dir(f"{stem}_src")
-    cln = sn.scratch_table_dir(f"{stem}_cln")
+    src = scratch_table_dir(f"{stem}_src")
+    cln = scratch_table_dir(f"{stem}_cln")
     dl.write_delta(orders, src)                            # src v0
     st = dl.delta_clone(src, cln)                          # cln v0
     # the zero-copy certificate: every cloned add is an absolute
@@ -6706,7 +6621,7 @@ def orders_convert_in_place(
     import uuid as _uuid
 
     from .sources import delta_log as dl
-    from .sources import snapshots as sn
+    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -6715,7 +6630,7 @@ def orders_convert_in_place(
         .alias("cents"),
         F.col("o_orderpriority").alias("prio"),
     )
-    tbl = sn.scratch_table_dir(
+    tbl = scratch_table_dir(
         f"{os.path.basename(sf_dir.rstrip('/'))}_conv_"
         f"{_uuid.uuid4().hex[:8]}"
     )
@@ -6818,7 +6733,7 @@ def orders_restore_rewind(
     import uuid as _uuid
 
     from .sources import delta_log as dl
-    from .sources import snapshots as sn
+    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -6827,7 +6742,7 @@ def orders_restore_rewind(
         .alias("cents"),
         F.col("o_orderpriority").alias("prio"),
     )
-    tbl = sn.scratch_table_dir(
+    tbl = scratch_table_dir(
         f"{os.path.basename(sf_dir.rstrip('/'))}_restore_"
         f"{_uuid.uuid4().hex[:8]}"
     )

@@ -21,19 +21,11 @@ format directly from the public spec:
   replayed state plus ``_last_checkpoint``, so readers (ours or
   native) start from the checkpoint instead of replaying from 0 and
   old JSON commits become garbage-collectable.
-* ``mirror_snapshot_to_delta`` — zero-copy export of a
-  ``sources/snapshots.py`` table: builds a ``_delta_log`` IN PLACE
-  over the snapshot table's existing immutable parquet files (add/
-  remove diffs between consecutive resolved manifests), making the
-  same directory simultaneously a valid snapshot table and a valid
-  native Delta table. Compactions mirror with ``dataChange: false``,
-  exactly how OPTIMIZE commits in native Delta.
 
 Scale posture: the log is O(commits) driver-side metadata — data
 files are written once by Spark executors and never rewritten;
 reads hand Spark the resolved file list with the log's schema pinned
-(additive evolution null-fills old files, same contract as
-snapshots.py). Checkpoints bound replay cost exactly as in native
+(additive evolution null-fills old files). Checkpoints bound replay cost exactly as in native
 Delta. Interop with the real ``delta-spark`` reader is asserted by an
 env-gated test (tests/test_delta_log.py) that runs wherever the
 package exists; format conformance (action shapes, naming, relative
@@ -53,7 +45,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from . import dv as _dv
-from . import snapshots as _sn
+from . import _files
 
 _LOGDIR = "_delta_log"
 _PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
@@ -409,8 +401,8 @@ def _commit_actions(
 
 def _atomic_commit(table_dir: str, version: int, actions: list[dict]):
     """Put-if-absent of one commit file — the spec's concurrency
-    primitive. Loses the race => ConcurrentCommitError (shared with
-    snapshots.py so callers handle one exception type); the caller
+    primitive. Loses the race => ConcurrentCommitError (from _files,
+    so callers handle one exception type); the caller
     rebases or renumbers, never blind-retries content computed against
     a stale head."""
     os.makedirs(_log_dir(table_dir), exist_ok=True)
@@ -418,16 +410,15 @@ def _atomic_commit(table_dir: str, version: int, actions: list[dict]):
     body = "".join(json.dumps(a, separators=(",", ":")) + "\n"
                    for a in actions)
     # tmp + os.link: atomic fail-if-exists AND never observable
-    # half-written (same reader-vs-writer race snapshots._try_commit
-    # fixes — exclusive-create-then-write lets a concurrent replay
-    # read a truncated commit)
+    # half-written (exclusive-create-then-write would let a
+    # concurrent replay read a truncated commit)
     tmp = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
     with open(tmp, "w") as f:
         f.write(body)
     try:
         os.link(tmp, path)
     except FileExistsError as e:
-        raise _sn.ConcurrentCommitError(
+        raise _files.ConcurrentCommitError(
             f"delta version {version} of {table_dir} was committed by "
             "a concurrent writer"
         ) from e
@@ -1054,8 +1045,7 @@ def read_delta(
     ``version`` — or ``timestamp_ms`` (native TIMESTAMP AS OF,
     resolved via :func:`resolve_version_at`). The read pins the log's
     schemaString (never samples a data file), so additive evolution
-    null-fills pre-evolution files — the same contract as
-    snapshots.read_snapshot.
+    null-fills pre-evolution files.
 
     Partitioned tables: per the spec, partition-column values live in
     each add action's ``partitionValues`` (as strings), NOT in the
@@ -1882,10 +1872,10 @@ def _delta_stats_json(md, stats_cols: list[str] | None) -> str:
     """Per-file ``add.stats`` JSON in the spec's shape from ONE
     already-read parquet footer: numRecords always, min/max/nullCount
     for the requested columns where the footer has JSON-stable scalars
-    — snapshots._stats_from_metadata's conservative extraction."""
+    — _files._stats_from_metadata's conservative extraction."""
     out: dict = {"numRecords": md.num_rows}
     if stats_cols:
-        per = _sn._stats_from_metadata(md, stats_cols)
+        per = _files._stats_from_metadata(md, stats_cols)
         if per:
             out["minValues"] = {c: s["min"] for c, s in per.items()}
             out["maxValues"] = {c: s["max"] for c, s in per.items()}
@@ -1986,7 +1976,7 @@ def _hive_partition_values(rel: str, partition_by: list[str]) -> dict:
 def _write_partitioned_data_files(
     df: DataFrame, table_dir: str, partition_by: list[str]
 ) -> list[str]:
-    """Hive-layout twin of snapshots._write_data_files: executors
+    """Hive-layout twin of _files._write_data_files: executors
     write ``data/<uuid>/col=value/.../part-*.parquet`` once; partition
     columns live in the directory names (and the log), not the data
     files — the spec's layout for partitioned tables."""
@@ -2351,7 +2341,7 @@ def delta_cluster_optimize(
     df, _wp, pstat = _physical_payload(
         df, head.schema, extra_cols=mat_cols
     )
-    rel_files = _sn._write_data_files(df, table_dir)
+    rel_files = _files._write_data_files(df, table_dir)
     import pyarrow.parquet as pq
 
     phys_stats = [
@@ -2379,7 +2369,7 @@ def delta_cluster_optimize(
             with open(_commit_path(table_dir, cv)) as f:
                 for line in f:
                     if "remove" in json.loads(line):
-                        raise _sn.ConcurrentCommitError(
+                        raise _files.ConcurrentCommitError(
                             f"clustered optimize of {table_dir} "
                             f"raced a remove in v{cv}; re-run"
                         )
@@ -2409,7 +2399,7 @@ def delta_cluster_optimize(
                 table_dir, version, actions, head.configuration
             )
             return replay(table_dir, version)
-        except _sn.ConcurrentCommitError:
+        except _files.ConcurrentCommitError:
             continue
     raise RuntimeError(
         f"clustered optimize of {table_dir} lost 20 races"
@@ -2913,7 +2903,7 @@ def write_delta(
             # non-identity append raises — otherwise a missing /
             # extra / retyped column would commit files that silently
             # null-fill or fail to read under the pinned schema.
-            if not _sn._schema_compatible(
+            if not _files._schema_compatible(
                 head0.schema, df.schema.json()
             ):
                 raise ValueError(
@@ -2984,14 +2974,14 @@ def write_delta(
         )
     cm_config: dict | None = None
     if mode == "append" and head_mode in ("name", "id"):
-        if not _sn._schema_compatible(head0.schema, schema_json):
+        if not _files._schema_compatible(head0.schema, schema_json):
             if merge_schema:
                 # additive evolution on a mapped table: merge keeps
                 # every table field's mapping verbatim; the NEW
                 # columns need ids above the high-water mark and
                 # fresh physical names BEFORE any file materializes
                 # (the data files must carry them)
-                merged = _sn._merge_schemas(
+                merged = _files._merge_schemas(
                     head0.schema, schema_json
                 )
                 old_max = int(
@@ -3029,7 +3019,7 @@ def write_delta(
         base = (
             head0.schema if head_mode in ("name", "id") else None
         )
-        if base is not None and _sn._schema_compatible(
+        if base is not None and _files._schema_compatible(
             base, schema_json
         ):
             # same logical shape: keep every physical name stable
@@ -3085,7 +3075,7 @@ def write_delta(
             wdf, table_dir, wpcols
         )
     else:
-        written = _sn._write_data_files(wdf, table_dir)
+        written = _files._write_data_files(wdf, table_dir)
     # one footer read per file: zero-row filter (empty input
     # partitions are valid parquet but native writers never register
     # them) AND the stats JSON come from the same metadata object
@@ -3250,14 +3240,14 @@ def write_delta(
                     f"append partitioning {pcols} differs from table "
                     f"partitioning {list(head.partition_cols)}"
                 )
-            if not _sn._schema_compatible(head.schema, schema_json):
+            if not _files._schema_compatible(head.schema, schema_json):
                 if merge_schema:
                     # additive evolution (mergeSchema): ADD-only,
-                    # renames/drops/retypes stay loud errors — the
-                    # same contract as snapshots (shared validator);
+                    # renames/drops/retypes stay loud errors (the
+                    # validator shared with MERGE, in _files);
                     # old files null-fill the new columns because
                     # every read pins the metaData schema
-                    schema_json = _sn._merge_schemas(
+                    schema_json = _files._merge_schemas(
                         head.schema, schema_json
                     )
                     actions.append(
@@ -3295,7 +3285,7 @@ def write_delta(
             # a concurrent writer advanced an identity high-water
             # mark after we generated against it — our values could
             # collide; the caller must re-run against the new head
-            raise _sn.ConcurrentCommitError(
+            raise _files.ConcurrentCommitError(
                 f"identity high-water mark of {table_dir} moved "
                 "while this write was generating values"
             )
@@ -3366,7 +3356,7 @@ def write_delta(
             out = replay(table_dir, version)
             _maybe_auto_checkpoint(table_dir, out)
             return out
-        except _sn.ConcurrentCommitError:
+        except _files.ConcurrentCommitError:
             continue  # re-read the head; our data files stay valid
     raise RuntimeError(f"delta commit to {table_dir} lost "
                        f"{max_retries} races")
@@ -3694,7 +3684,7 @@ def write_checkpoint(
 
 
 def _add_stats_view(add: dict) -> dict | None:
-    """An add action's ``stats`` JSON reshaped to snapshots'
+    """An add action's ``stats`` JSON reshaped to
     ``{col: {min, max, nulls}}`` so _file_may_match's conservative
     interval test (type-mismatch keeps, absence keeps) is shared."""
     raw = add.get("stats")
@@ -3759,8 +3749,7 @@ def delta_scan(
     version: int | None = None,
     prune: dict | None = None,
 ) -> DataFrame:
-    """Data-skipping read over the delta log — the twin of
-    snapshots.snapshot_scan: drop every file whose add-action ``stats``
+    """Data-skipping read over the delta log: drop every file whose add-action ``stats``
     (min/max per column) or ``partitionValues`` PROVE it cannot hold a
     row in ``prune`` = ``{col: (lo, hi)}``, scan the survivors, and
     re-apply the predicates row-level so straddling files stay exact.
@@ -3796,7 +3785,7 @@ def delta_scan(
     keep = {
         p: a
         for p, a in state.adds.items()
-        if _sn._file_may_match(_add_stats_view(a), prune_stats)
+        if _files._file_may_match(_add_stats_view(a), prune_stats)
         and not _partition_pruned(
             a, state.partition_cols, ptypes, prune, phys=phys
         )
@@ -3830,8 +3819,7 @@ def delta_compact(
     """OPTIMIZE: rewrite the head's content into ``target_files``
     files and commit remove+add with ``dataChange: false`` — history
     stays time-travelable, the change feed skips the rewrite (native
-    semantics). Race rule, slightly stronger than snapshot_compact's
-    raise-on-any-race: a concurrent APPEND composes with a verbatim
+    semantics). Race rule: a concurrent APPEND composes with a verbatim
     retry (its files are not in our remove set, so the retried commit
     yields append's rows + the rewrite = exactly the right content),
     but any interleaved REMOVE (overwrite/another compact) raises
@@ -3865,7 +3853,7 @@ def delta_compact(
     df, _wp, pstat = _physical_payload(
         df, head.schema, extra_cols=mat_cols
     )
-    rel_files = _sn._write_data_files(
+    rel_files = _files._write_data_files(
         df.coalesce(target_files), table_dir
     )
     import pyarrow.parquet as pq
@@ -3892,7 +3880,7 @@ def delta_compact(
                 for line in f:
                     a = json.loads(line)
                     if "remove" in a:
-                        raise _sn.ConcurrentCommitError(
+                        raise _files.ConcurrentCommitError(
                             f"compaction of {table_dir} computed "
                             f"against v{computed_against} raced a "
                             f"remove in v{cv}; re-run against the "
@@ -3928,7 +3916,7 @@ def delta_compact(
                 table_dir, version, actions, head.configuration
             )
             return replay(table_dir, version)
-        except _sn.ConcurrentCommitError:
+        except _files.ConcurrentCommitError:
             continue  # appends compose; removes raised above
     raise RuntimeError(
         f"delta compaction of {table_dir} lost {max_retries} races"
@@ -4083,7 +4071,7 @@ def _delta_compact_partitioned(
                 for line in f:
                     a = json.loads(line)
                     if "remove" in a:
-                        raise _sn.ConcurrentCommitError(
+                        raise _files.ConcurrentCommitError(
                             f"compaction of {table_dir} computed "
                             f"against v{computed_against} raced a "
                             f"remove in v{cv}; re-run against the "
@@ -4119,7 +4107,7 @@ def _delta_compact_partitioned(
                 table_dir, version, actions, head.configuration
             )
             return replay(table_dir, version)
-        except _sn.ConcurrentCommitError:
+        except _files.ConcurrentCommitError:
             continue  # appends compose; removes raised above
     raise RuntimeError(
         f"delta compaction of {table_dir} lost {max_retries} races"
@@ -4134,8 +4122,7 @@ def read_delta_increment(
 ) -> DataFrame:
     """Append-only change feed: the rows ADDED between
     ``since_version`` (exclusive) and ``version`` (inclusive, default
-    head) — the delta twin of snapshots.read_increment, but
-    OPTIMIZE-aware like native CDF: ``dataChange: false`` actions
+    head), OPTIMIZE-aware like native CDF: ``dataChange: false`` actions
     (compaction rewrites of existing rows) are excluded from the feed
     instead of poisoning it. A ``dataChange: true`` remove in the
     range means an overwrite happened and the increment is not an
@@ -4151,8 +4138,8 @@ def read_delta_increment(
             f"since_version {since_version} is past version {version}"
         )
     if since_version == version:
-        # no new commits: an empty increment, same contract as the
-        # snapshots twin — pollers must not have to special-case it
+        # no new commits: an empty increment, not an error —
+        # pollers must not have to special-case it
         return spark.createDataFrame(
             [], StructType.fromJson(json.loads(end.schema))
         )
@@ -4573,8 +4560,7 @@ def delta_merge_upsert(
     keys: list[str],
     via_dv: bool | None = None,
 ) -> DeltaState:
-    """MERGE as a delta commit — the twin of
-    snapshots.snapshot_merge_upsert: rows whose key matches an update
+    """MERGE as a delta commit: rows whose key matches an update
     are replaced, unmatched updates inserted, re-running the same
     updates converges.
 
@@ -4616,8 +4602,8 @@ def delta_merge_upsert(
     # updates), and since no metaData action is emitted the commit
     # keeps the old schemaString — later pinned-schema reads would
     # fail with a parquet type mismatch. Same normal-form comparison
-    # as appends (shared with snapshots).
-    if not _sn._schema_compatible(head.schema, updates.schema.json()):
+    # as appends.
+    if not _files._schema_compatible(head.schema, updates.schema.json()):
         raise ValueError(
             f"MERGE updates schema is structurally incompatible with "
             f"the table schema (column name or TYPE mismatch): "
@@ -4715,7 +4701,7 @@ def delta_merge_upsert(
             merged, table_dir, wpcols
         )
     else:
-        written = _sn._write_data_files(merged, table_dir)
+        written = _files._write_data_files(merged, table_dir)
     import pyarrow.parquet as pq
 
     metas = {
@@ -4854,7 +4840,7 @@ def _delta_merge_via_dv(
             payload, table_dir, wpcols
         )
     else:
-        written = _sn._write_data_files(payload, table_dir)
+        written = _files._write_data_files(payload, table_dir)
     metas = {
         rel: pq.ParquetFile(os.path.join(table_dir, rel)).metadata
         for rel in written
@@ -5882,7 +5868,7 @@ def _delta_update_commit(
             )
         else:
             f_write = pool.submit(
-                _sn._write_data_files, wupdated, table_dir
+                _files._write_data_files, wupdated, table_dir
             )
         marks = f_marks.result()
         cdc_actions = f_cdc.result() if f_cdc is not None else []
@@ -6357,27 +6343,16 @@ def vacuum_delta(table_dir: str, retention_ms: int = 0) -> int:
     ends at the checkpoint, every unreferenced file dies now); any
     ``retention_ms>0`` keeps both replayability and tombstoned data
     alive for the window. Returns the number of data files deleted.
-    Single-writer maintenance op (like snapshot_compact): run it from
+    Single-writer maintenance op: run it from
     the table's owning process, not concurrently with writers.
 
     Checkpoint-then-GC is one guarded operation: GC refuses to run
     unless the just-written checkpoint is durably readable (complete
     part set on disk) — deleting JSON commits on the strength of a
     checkpoint that didn't land would destroy the only copy of the
-    log.
-
-    Refuses on a MIRRORED table (one that also carries a
-    ``_snapshots`` log): there the data files are shared with snapshot
-    history and snapshots.vacuum owns their lifecycle — deleting
-    delta-unreferenced files here would tear files out from under
-    retained snapshot versions."""
+    log."""
     if retention_ms < 0:
         raise ValueError("retention_ms must be >= 0")
-    if os.path.isdir(_sn._snap_dir(table_dir)):
-        raise ValueError(
-            f"{table_dir} is a mirrored snapshot table; use "
-            "snapshots.vacuum (it owns the shared data files)"
-        )
     # PROTOCOL.md "Vacuum Protocol Check": vacuum must gate on the
     # table protocol BEFORE deleting anything — the feature exists so
     # future protocol changes can stop old vacuums from destroying
@@ -6597,8 +6572,7 @@ def vacuum_delta(table_dir: str, retention_ms: int = 0) -> int:
 
 
 def delta_history(spark: SparkSession, table_dir: str) -> DataFrame:
-    """DESCRIBE HISTORY twin over the delta log (parallel to
-    snapshots.table_history): one row per still-reconstructable
+    """DESCRIBE HISTORY over the delta log: one row per still-reconstructable
     version from its commitInfo — version, timestamp, operation,
     operationParameters JSON. Versions whose JSON was vacuumed (only
     the checkpointed head remains) report operation 'CHECKPOINT'."""
@@ -6626,101 +6600,3 @@ def delta_history(spark: SparkSession, table_dir: str) -> DataFrame:
         "operation_parameters string",
     )
 
-
-def mirror_snapshot_to_delta(
-    table_dir: str, stats_cols: list[str] | None = None
-) -> int:
-    """Zero-copy export: build a ``_delta_log`` inside a
-    ``sources/snapshots.py`` table, referencing the SAME immutable
-    parquet files, one Delta commit per retained snapshot version
-    (vacuumed history simply starts the Delta log at the oldest
-    retained manifest). Idempotent/resumable: each commit records its
-    source snapshot version in commitInfo and re-runs extend from
-    there. Compactions mirror as remove+add with ``dataChange: false``
-    (native OPTIMIZE semantics); schema changes emit a fresh metaData.
-    Returns the head Delta version. The directory is then readable as
-    BOTH a snapshot table and a native Delta table."""
-    snap_versions = _sn.list_versions(table_dir)
-    if not snap_versions:
-        raise FileNotFoundError(f"no snapshots at {table_dir}")
-    delta_versions = list_delta_versions(table_dir)
-    mirrored_through = -1
-    meta_id = None
-    prev_files: list[str] = []
-    prev_schema = None
-    if delta_versions:
-        head = replay(table_dir)
-        info: dict = {}
-        path = _commit_path(table_dir, head.version)
-        if os.path.exists(path):
-            with open(path) as f:
-                for line in f:
-                    a = json.loads(line)
-                    if "commitInfo" in a:
-                        info = a["commitInfo"]
-        params = info.get("operationParameters") or {}
-        if "snapshotVersion" not in params:
-            # a direct write_delta landed after the last mirror (or
-            # the head JSON was GC'd): resuming would diff against a
-            # state the snapshot log never produced and silently
-            # REMOVE the direct write's data from the delta view —
-            # refuse loudly instead
-            raise ValueError(
-                f"delta log of {table_dir} has diverged from the "
-                f"snapshot log (head commit {head.version} is "
-                f"{info.get('operation', 'unreadable')!r}, not "
-                "MIRROR); mirror resume would bury the non-mirror "
-                "commit — keep writing via write_delta, or mirror "
-                "into a fresh directory"
-            )
-        mirrored_through = int(params["snapshotVersion"])
-        meta_id = head.metadata_id
-        prev_files = list(head.files)
-        prev_schema = head.schema
-    next_delta = (delta_versions[-1] + 1) if delta_versions else 0
-    for sv in snap_versions:
-        if sv <= mirrored_through:
-            continue
-        snap = _sn.read_manifest(table_dir, sv)
-        actions: list[dict] = []
-        if next_delta == 0:
-            actions.append({"protocol": dict(_PROTOCOL)})
-        if prev_schema != snap.schema:
-            meta = _meta_action(snap.schema, meta_id)
-            meta_id = meta["metaData"]["id"]
-            actions.append(meta)
-        data_change = snap.mode != "compact"
-        ts = _now_ms()
-        new = set(snap.files)
-        actions.extend(
-            {
-                "remove": {
-                    "path": p,
-                    "deletionTimestamp": ts,
-                    "dataChange": data_change,
-                }
-            }
-            for p in prev_files
-            if p not in new
-        )
-        old = set(prev_files)
-        actions.extend(
-            _add_action(table_dir, p, stats_cols, data_change)
-            for p in snap.files
-            if p not in old
-        )
-        actions.append(
-            {
-                "commitInfo": {
-                    "timestamp": ts,
-                    "operation": "MIRROR",
-                    "operationParameters": {"snapshotVersion": sv},
-                    "engineInfo": "rearc-takehome-spark-cleanroom",
-                }
-            }
-        )
-        _atomic_commit(table_dir, next_delta, actions)
-        prev_files = list(snap.files)
-        prev_schema = snap.schema
-        next_delta += 1
-    return next_delta - 1

@@ -19,8 +19,8 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
+from rearc_data_engineer_takehome_spark.sources import _files
 from rearc_data_engineer_takehome_spark.sources import delta_log as dl
-from rearc_data_engineer_takehome_spark.sources import snapshots as sn
 
 
 def _mk(spark, t, n=20_000, files=8, **kw):
@@ -39,7 +39,7 @@ def _kept(state, prune):
     itself, exposed for assertions."""
     return [
         p for p, a in state.adds.items()
-        if sn._file_may_match(dl._add_stats_view(a), prune)
+        if _files._file_may_match(dl._add_stats_view(a), prune)
     ]
 
 

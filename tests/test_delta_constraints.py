@@ -14,10 +14,8 @@ import json
 import pyspark.sql.functions as F
 import pytest
 
+from rearc_data_engineer_takehome_spark.sources import _files
 from rearc_data_engineer_takehome_spark.sources import delta_log as dl
-from rearc_data_engineer_takehome_spark.sources import (
-    snapshots as sn,
-)
 
 
 def _df(spark, rows=((1, 1), (2, 2)), schema="id long, k long"):
@@ -239,7 +237,7 @@ def test_alter_properties_race_refuses(spark, tmp_path):
 
     dl._atomic_commit = race
     try:
-        with pytest.raises(sn.ConcurrentCommitError):
+        with pytest.raises(_files.ConcurrentCommitError):
             dl.delta_alter_properties(
                 spark, t, {"delta.appendOnly": "true"}
             )

@@ -3,8 +3,7 @@ clean-room writer/reader for the public delta-io PROTOCOL.md format
 (reference persists its tables in Delta: notebooks/20_analytics.ipynb:
 653, 2200, 2561). Covers round-trip + time travel, format conformance
 (action shapes a native reader depends on), checkpoint replay,
-commit-race atomicity, the zero-copy snapshot mirror, and an env-gated
-cross-engine check against the real delta-spark package wherever it
+commit-race atomicity, and an env-gated cross-engine check against the real delta-spark package wherever it
 exists."""
 
 from __future__ import annotations
@@ -15,8 +14,8 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
+from rearc_data_engineer_takehome_spark.sources import _files
 from rearc_data_engineer_takehome_spark.sources import delta_log as dl
-from rearc_data_engineer_takehome_spark.sources import snapshots as sn
 
 
 def _rows(df):
@@ -180,78 +179,6 @@ def test_commit_race_atomicity(spark, tmp_path):
     assert dl.list_delta_versions(t) == [0, 1, 2]
 
 
-def test_mirror_snapshot_zero_copy(spark, tmp_path):
-    """mirror_snapshot_to_delta builds a _delta_log over a snapshot
-    table's EXISTING files: every delta version reads value-identical
-    to the corresponding snapshot version, compaction mirrors with
-    dataChange=false, schema evolution emits fresh metaData, and no
-    data file is copied."""
-    t = str(tmp_path / "tbl")
-    sn.snapshot_write(
-        spark.range(20).select(
-            F.col("id").alias("k"), F.lit("base").alias("src")
-        ),
-        t,
-    )
-    sn.snapshot_write(
-        spark.range(20, 30).select(
-            F.col("id").alias("k"), F.lit("more").alias("src")
-        ),
-        t,
-        "append",
-    )
-    sn.snapshot_compact(spark, t, target_files=1)
-    sn.snapshot_write(
-        spark.range(30, 35).select(
-            F.col("id").alias("k"),
-            F.lit("evolved").alias("src"),
-            (F.col("id") * 2).alias("extra"),
-        ),
-        t,
-        "append",
-        merge_schema=True,
-    )
-    head = dl.mirror_snapshot_to_delta(t)
-    snap_versions = sn.list_versions(t)
-    assert head == len(snap_versions) - 1
-
-    n_data_files = sum(
-        len(fs) for _, _, fs in os.walk(os.path.join(t, "data"))
-    )
-    for dv, sv in enumerate(snap_versions):
-        assert _rows(dl.read_delta(spark, t, dv)) == _rows(
-            sn.read_snapshot(spark, t, sv)
-        )
-    # zero-copy: mirroring added log files only, no new data files
-    assert n_data_files == sum(
-        len(fs) for _, _, fs in os.walk(os.path.join(t, "data"))
-    )
-
-    # the compaction commit carries dataChange=false on its actions
-    with open(os.path.join(t, "_delta_log", f"{2:020d}.json")) as f:
-        changes = [
-            next(iter(a.values())).get("dataChange")
-            for a in map(json.loads, f)
-            if next(iter(a)) in ("add", "remove")
-        ]
-    assert changes and set(changes) == {False}
-
-    # idempotent resume: a new snapshot commit extends the delta log
-    # without re-emitting mirrored history
-    sn.snapshot_write(
-        spark.createDataFrame(
-            [(99, "late", 0)], "k long, src string, extra long"
-        ),
-        t,
-        "append",
-    )
-    head2 = dl.mirror_snapshot_to_delta(t)
-    assert head2 == head + 1
-    assert _rows(dl.read_delta(spark, t)) == _rows(
-        sn.read_snapshot(spark, t)
-    )
-
-
 def test_native_delta_interop(spark, tmp_path):
     """Wherever the real delta-spark package exists, our log must be
     readable by it and its log readable by us. Env-gated: the package
@@ -302,14 +229,6 @@ def test_vacuum_delta_and_history(spark, tmp_path):
     # ...and the table keeps accepting commits with correct numbering
     dl.write_delta(spark.createDataFrame([(10,)], "k long"), t, "append")
     assert _rows(dl.read_delta(spark, t)) == [(9,), (10,)]
-
-    # a MIRRORED table refuses retention-0 vacuum: data files there
-    # are shared with snapshot history, snapshots.vacuum owns them
-    m = str(tmp_path / "mirrored")
-    sn.snapshot_write(spark.createDataFrame([(1,)], "k long"), m)
-    dl.mirror_snapshot_to_delta(m)
-    with pytest.raises(ValueError, match="mirrored snapshot table"):
-        dl.vacuum_delta(m)
 
 
 def test_partitioned_table_roundtrip(spark, tmp_path):
@@ -451,23 +370,6 @@ def test_streaming_foreachbatch_commits_delta_appends(spark, tmp_path):
     assert dl.replay(tbl).txns == {"events-sink": 2}
     sink(spark.createDataFrame([(777, 7)], schema), 1)  # still a no-op
     assert dl.read_delta(spark, tbl).count() == 12
-
-
-def test_mirror_refuses_resume_over_diverged_log(spark, tmp_path):
-    """A direct write_delta commit on a mirrored table diverges the
-    delta log from the snapshot log; resuming the mirror would diff
-    against a state the snapshot log never produced and silently bury
-    the direct write — must refuse loudly instead."""
-    t = str(tmp_path / "tbl")
-    sn.snapshot_write(spark.createDataFrame([(1,)], "k long"), t)
-    dl.mirror_snapshot_to_delta(t)
-    dl.write_delta(spark.createDataFrame([(2,)], "k long"), t, "append")
-    sn.snapshot_write(spark.createDataFrame([(3,)], "k long"), t, "append")
-    with pytest.raises(ValueError, match="diverged"):
-        dl.mirror_snapshot_to_delta(t)
-    # both views still read consistently on their own
-    assert _rows(dl.read_delta(spark, t)) == [(1,), (2,)]
-    assert _rows(sn.read_snapshot(spark, t)) == [(1,), (3,)]
 
 
 def test_native_multipart_checkpoint_and_protocol_gate(spark, tmp_path):
@@ -640,13 +542,12 @@ def test_read_delta_increment_change_feed(spark, tmp_path):
     assert _rows(dl.read_delta_increment(spark, t, 0, 1)) == [(2,)]
     assert _rows(dl.read_delta_increment(spark, t, 1, 2)) == [(3,)]
 
-    # compaction via the mirror path: dataChange=false excluded
-    m = str(tmp_path / "mirrored")
-    sn.snapshot_write(spark.createDataFrame([(1,)], "k long"), m)
-    sn.snapshot_write(spark.createDataFrame([(2,)], "k long"), m, "append")
-    sn.snapshot_compact(spark, m, target_files=1)
-    sn.snapshot_write(spark.createDataFrame([(3,)], "k long"), m, "append")
-    dl.mirror_snapshot_to_delta(m)
+    # compaction (dataChange=false) inside the range is excluded
+    m = str(tmp_path / "compacted")
+    dl.write_delta(spark.createDataFrame([(1,)], "k long"), m)
+    dl.write_delta(spark.createDataFrame([(2,)], "k long"), m, "append")
+    dl.delta_compact(spark, m, target_files=1)
+    dl.write_delta(spark.createDataFrame([(3,)], "k long"), m, "append")
     # range spans the compaction commit: only real appends surface
     assert _rows(dl.read_delta_increment(spark, m, 0)) == [(2,), (3,)]
 
@@ -744,37 +645,37 @@ def test_delta_compact_optimize(spark, tmp_path):
     # a racing APPEND composes: interleave one between the compact's
     # content computation and its commit (monkeypatch the data-file
     # write to sneak the append in first)
-    real_write = sn._write_data_files
+    real_write = _files._write_data_files
 
     def write_with_append_race(df, table_dir):
         out = real_write(df, table_dir)
-        sn._write_data_files = real_write  # one-shot: avoid recursion
+        _files._write_data_files = real_write  # one-shot: avoid recursion
         dl.write_delta(
             spark.createDataFrame([(5,)], "k long"), t, "append"
         )
         return out
 
-    sn._write_data_files = write_with_append_race
+    _files._write_data_files = write_with_append_race
     try:
         dl.delta_compact(spark, t, target_files=1)
     finally:
-        sn._write_data_files = real_write
+        _files._write_data_files = real_write
     # the concurrent append's row survived the compaction commit
     assert _rows(dl.read_delta(spark, t)) == [(1,), (2,), (3,), (4,), (5,)]
 
     # a racing REMOVE (overwrite) refuses instead of resurrecting rows
     def write_with_remove_race(df, table_dir):
         out = real_write(df, table_dir)
-        sn._write_data_files = real_write  # one-shot: avoid recursion
+        _files._write_data_files = real_write  # one-shot: avoid recursion
         dl.write_delta(spark.createDataFrame([(9,)], "k long"), t)
         return out
 
-    sn._write_data_files = write_with_remove_race
+    _files._write_data_files = write_with_remove_race
     try:
-        with pytest.raises(sn.ConcurrentCommitError, match="remove"):
+        with pytest.raises(_files.ConcurrentCommitError, match="remove"):
             dl.delta_compact(spark, t, target_files=1)
     finally:
-        sn._write_data_files = real_write
+        _files._write_data_files = real_write
     # the overwrite's state is intact; a clean re-run compacts it
     assert _rows(dl.read_delta(spark, t)) == [(9,)]
     dl.delta_compact(spark, t, target_files=1)
@@ -787,7 +688,7 @@ def test_checkpoint_pointer_loss_and_empty_increment(spark, tmp_path):
     checkpoint parquet survives must still replay after JSON GC;
     (b) a stale pointer at a version with no checkpoint files fails
     loudly, never an empty base state; (c) an increment with no new
-    commits is an EMPTY frame (snapshots-twin contract), not an
+    commits is an EMPTY frame, not an
     error; (d) vacuum_delta GCs multi-part-named checkpoints too."""
     t = str(tmp_path / "tbl")
     dl.write_delta(spark.createDataFrame([(1,)], "k long"), t)
@@ -844,8 +745,8 @@ def test_checkpoint_pointer_loss_and_empty_increment(spark, tmp_path):
 
 
 def test_merge_schema_append_and_merge_upsert(spark, tmp_path):
-    """mergeSchema appends (add-only evolution, shared validator with
-    snapshots — renames stay loud) and MERGE upsert (replace-matched +
+    """mergeSchema appends (add-only evolution, the validator shared
+    with MERGE — renames stay loud) and MERGE upsert (replace-matched +
     insert-unmatched as one commit, TOCTOU-guarded)."""
     t = str(tmp_path / "tbl")
     dl.write_delta(
@@ -907,11 +808,11 @@ def test_merge_schema_append_and_merge_upsert(spark, tmp_path):
     dl.delta_merge_upsert(spark, t, up, ["k"])
     assert _rows(dl.read_delta(spark, t)) == expect
     # TOCTOU: a commit interleaved between read and merge-commit refuses
-    real_write = sn._write_data_files
+    real_write = _files._write_data_files
 
     def write_with_race(df, table_dir):
         out = real_write(df, table_dir)
-        sn._write_data_files = real_write
+        _files._write_data_files = real_write
         dl.write_delta(
             spark.createDataFrame(
                 [(7, "x", 70)], "k long, s string, extra long"
@@ -920,12 +821,12 @@ def test_merge_schema_append_and_merge_upsert(spark, tmp_path):
         )
         return out
 
-    sn._write_data_files = write_with_race
+    _files._write_data_files = write_with_race
     try:
-        with pytest.raises(sn.ConcurrentCommitError):
+        with pytest.raises(_files.ConcurrentCommitError):
             dl.delta_merge_upsert(spark, t, up, ["k"])
     finally:
-        sn._write_data_files = real_write
+        _files._write_data_files = real_write
     # the interleaved append survived; a clean re-run merges over it
     assert (7, "x", 70) in _rows(dl.read_delta(spark, t))
     dl.delta_merge_upsert(spark, t, up, ["k"])

@@ -506,9 +506,7 @@ def test_delete_concurrent_commit_raises(spark, tmp_path):
     _mk(spark, t)
     # steal the next version number before the delete commits
     orig = dl._atomic_commit
-    from rearc_data_engineer_takehome_spark.sources import (
-        snapshots as _sn,
-    )
+    from rearc_data_engineer_takehome_spark.sources import _files
 
     def race(table_dir, version, actions):
         orig(table_dir, version, [{"commitInfo": {
@@ -519,7 +517,7 @@ def test_delete_concurrent_commit_raises(spark, tmp_path):
 
     dl._atomic_commit = race
     try:
-        with pytest.raises(_sn.ConcurrentCommitError):
+        with pytest.raises(_files.ConcurrentCommitError):
             dl.delta_delete(spark, t, "k = 1")
     finally:
         dl._atomic_commit = orig

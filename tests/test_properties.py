@@ -848,7 +848,7 @@ def test_merge_schemas_add_only_properties(base, adds):
 
     import pytest as _pytest
 
-    from rearc_data_engineer_takehome_spark.sources.snapshots import (
+    from rearc_data_engineer_takehome_spark.sources._files import (
         _merge_schemas,
     )
 

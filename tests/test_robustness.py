@@ -1,5 +1,6 @@
 """Input robustness: corrupt JSON records (PERMISSIVE capture vs
-FAILFAST), malformed BLS lines, and output file sizing."""
+FAILFAST), malformed BLS lines, output file sizing, and commit order
+when one of two parallel appends fails."""
 
 from __future__ import annotations
 
@@ -68,3 +69,27 @@ def test_output_file_sizing(spark, tmp_path):
     files = [f for f in pathlib.Path(out).glob("*.parquet")]
     assert len(files) == 2
     assert spark.read.parquet(out).count() == 100
+
+
+def test_cm_id_roundtrip_failed_v1_append_commits_nothing_after_it(
+    spark, sf_smoke, monkeypatch
+):
+    """orders_cm_id_roundtrip writes its v1 and v2 appends in parallel
+    and gates v2's commit on v1. When v1's write fails, the query must
+    raise and v2 must not commit into v1's version slot."""
+    from rearc_data_engineer_takehome_spark.queries import REGISTRY
+    from rearc_data_engineer_takehome_spark.sources import delta_log as dl
+
+    real = dl.write_delta
+    tables = []
+
+    def faulty(df, table_dir, mode="overwrite", *a, **k):
+        tables.append(table_dir)
+        if mode == "append" and k.get("_commit_gate") is None:
+            raise OSError("injected v1 write failure")
+        return real(df, table_dir, mode, *a, **k)
+
+    monkeypatch.setattr(dl, "write_delta", faulty)
+    with pytest.raises(OSError, match="injected v1"):
+        REGISTRY["orders_cm_id_roundtrip"].spark(spark, sf_smoke)
+    assert dl.list_delta_versions(tables[0]) == [0]

@@ -1,7 +1,10 @@
-"""Transaction-log semantics for the snapshot table layer
-(sources/snapshots.py): commit lineage, time travel, rollback, vacuum,
-optimistic-concurrency retry, and versioned MERGE — the Delta-shaped
-contract the env-blocked delta-spark would otherwise provide."""
+"""Table snapshots on the Delta log (sources/delta_log.py) and the shared
+data-file helpers (sources/_files.py): structural schema compatibility
+of appends, empty-read schema round-trips, mid-stream schema evolution
+of a sink, conservative data skipping when stats are partial, column
+pruning at the scan, stats that outlive a checkpoint and vacuum, vacuum
+next to an in-flight append, and concurrent appenders racing a
+compactor and a reader on one log."""
 
 from __future__ import annotations
 
@@ -10,327 +13,17 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
-from rearc_data_engineer_takehome_spark.sources import snapshots as sn
+from rearc_data_engineer_takehome_spark.sources import _files
+from rearc_data_engineer_takehome_spark.sources import delta_log as dl
 
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_overwrite_append_time_travel_and_rollback(spark, tmp_path):
-    t = str(tmp_path / "tbl")
-    v0 = sn.snapshot_write(
-        spark.createDataFrame([(1, "a"), (2, "b")], "k long, s string"), t
-    )
-    assert (v0.version, v0.mode) == (0, "overwrite")
-
-    v1 = sn.snapshot_write(
-        spark.createDataFrame([(3, "c")], "k long, s string"), t, "append"
-    )
-    assert v1.version == 1
-    # append REFERENCES the previous files — no copies
-    assert set(v0.files) < set(v1.files)
-    assert v1.n_files_added == len(v1.files) - len(v0.files)
-
-    v2 = sn.snapshot_write(
-        spark.createDataFrame([(9, "z")], "k long, s string"), t
-    )
-    assert v2.version == 2 and set(v2.files).isdisjoint(v0.files)
-
-    # latest = the overwrite; time travel reads every prior state
-    assert _rows(sn.read_snapshot(spark, t)) == [(9, "z")]
-    assert _rows(sn.read_snapshot(spark, t, 0)) == [(1, "a"), (2, "b")]
-    assert _rows(sn.read_snapshot(spark, t, 1)) == [
-        (1, "a"), (2, "b"), (3, "c"),
-    ]
-
-    # rollback commits a NEW version with the old content — the bad
-    # version stays in history
-    v3 = sn.rollback(t, 1)
-    assert (v3.version, v3.mode) == (3, "rollback")
-    assert _rows(sn.read_snapshot(spark, t)) == [
-        (1, "a"), (2, "b"), (3, "c"),
-    ]
-    assert _rows(sn.read_snapshot(spark, t, 2)) == [(9, "z")]
-    assert sn.list_versions(t) == [0, 1, 2, 3]
-
-
-def test_append_schema_mismatch_rejected(spark, tmp_path):
-    t = str(tmp_path / "tbl")
-    sn.snapshot_write(spark.createDataFrame([(1,)], "k long"), t)
-    with pytest.raises(ValueError, match="schema"):
-        sn.snapshot_write(
-            spark.createDataFrame([(1, 2)], "k long, extra long"),
-            t,
-            "append",
-        )
-
-
-def test_commit_race_loser_retries_to_next_version(spark, tmp_path):
-    """Optimistic concurrency: a competing writer taking our version
-    number must not clobber anything — the loser lands at N+1 and both
-    manifests survive intact."""
-    t = str(tmp_path / "tbl")
-    sn.snapshot_write(spark.createDataFrame([(1,)], "k long"), t)
-    # simulate a concurrent winner grabbing version 1
-    competing = sn._manifest_path(t, 1)
-    with open(competing, "x") as f:
-        f.write(
-            '{"mode": "overwrite", "files": [], "schema": '
-            '"{\\"type\\":\\"struct\\",\\"fields\\":[]}", '
-            '"n_files_added": 0}'
-        )
-    snap = sn.snapshot_write(spark.createDataFrame([(2,)], "k long"), t)
-    assert snap.version == 2  # retried past the occupied slot
-    assert sn.read_manifest(t, 1).files == ()  # winner untouched
-    assert _rows(sn.read_snapshot(spark, t)) == [(2,)]
-
-
-def test_append_losing_race_rebases_onto_winner(spark, tmp_path, monkeypatch):
-    """The lost-update case: writer B's append loses the commit race to
-    writer A's append. B must NOT publish its stale pre-race file list
-    (which would silently drop A's rows) — it re-reads the new head and
-    rebases, so the final table is base ∪ A ∪ B."""
-    t = str(tmp_path / "tbl")
-    sn.snapshot_write(spark.createDataFrame([(0,)], "k long"), t)  # v0
-
-    real = sn._try_commit
-    state = {"raced": False}
-
-    def racy(table_dir, version, *a, **k):
-        if not state["raced"]:
-            state["raced"] = True
-            # winner A lands an append between B's head-read and commit
-            sn.snapshot_write(
-                spark.createDataFrame([(100,)], "k long"), t, "append"
-            )
-        return real(table_dir, version, *a, **k)
-
-    monkeypatch.setattr(sn, "_try_commit", racy)
-    snap = sn.snapshot_write(
-        spark.createDataFrame([(200,)], "k long"), t, "append"
-    )
-    # A took v1; B's first attempt at v1 collided, rebased, landed v2
-    assert snap.version == 2
-    assert _rows(sn.read_snapshot(spark, t)) == [(0,), (100,), (200,)]
-
-
-def test_merge_racing_commit_raises_not_clobbers(spark, tmp_path, monkeypatch):
-    """A merge's output is computed FROM the head it read; if anything
-    commits in between, silently winning would erase those rows — the
-    merge must raise ConcurrentCommitError and leave the interloper's
-    commit as the head."""
-    t = str(tmp_path / "tbl")
-    sn.snapshot_write(
-        spark.createDataFrame([(1, "a")], "k long, s string"), t
-    )
-
-    real = sn._write_data_files
-    state = {"raced": False}
-
-    def write_and_race(df, table_dir):
-        files = real(df, table_dir)
-        if not state["raced"]:
-            state["raced"] = True
-            sn.snapshot_write(
-                spark.createDataFrame([(9, "z")], "k long, s string"),
-                t,
-                "append",
-            )
-        return files
-
-    monkeypatch.setattr(sn, "_write_data_files", write_and_race)
-    with pytest.raises(sn.ConcurrentCommitError):
-        sn.snapshot_merge_upsert(
-            spark,
-            t,
-            spark.createDataFrame([(1, "A")], "k long, s string"),
-            ["k"],
-        )
-    # the concurrent append survived; the failed merge published nothing
-    assert _rows(sn.read_snapshot(spark, t)) == [(1, "a"), (9, "z")]
-
-
-def test_vacuum_reclaims_unreferenced_files_only(spark, tmp_path):
-    t = str(tmp_path / "tbl")
-    sn.snapshot_write(spark.createDataFrame([(1,)], "k long"), t)  # v0
-    sn.snapshot_write(
-        spark.createDataFrame([(2,)], "k long"), t, "append"
-    )  # v1 references v0's files
-    sn.snapshot_write(spark.createDataFrame([(3,)], "k long"), t)  # v2
-    sn.snapshot_write(spark.createDataFrame([(4,)], "k long"), t)  # v3
-
-    removed = sn.vacuum(t, keep_last=2)  # keep v2, v3
-    assert sn.list_versions(t) == [2, 3]
-    # v0's file was shared with v1 but neither survives: reclaimed
-    assert removed
-    for f in removed:
-        assert not os.path.exists(os.path.join(t, f))
-    # retained versions still read
-    assert _rows(sn.read_snapshot(spark, t, 2)) == [(3,)]
-    assert _rows(sn.read_snapshot(spark, t)) == [(4,)]
-    with pytest.raises(ValueError, match="not in"):
-        sn.read_snapshot(spark, t, 0)
-
-    # orphan sweep: an aged commit dir no manifest references (a
-    # writer that died before creating its manifest) is reclaimed;
-    # fresh unreferenced dirs (a commit in flight) are left alone
-    import time
-
-    data_root = os.path.join(t, "data")
-    orphan = os.path.join(data_root, "deadbeefcafe")
-    os.makedirs(orphan)
-    with open(os.path.join(orphan, "part-0.parquet"), "w") as f:
-        f.write("x")
-    old = time.time() - 10
-    os.utime(orphan, (old, old))
-    fresh = os.path.join(data_root, "freshcommit00")
-    os.makedirs(fresh)
-    removed2 = sn.vacuum(t, keep_last=2, orphan_age_seconds=5)
-    assert any("deadbeefcafe" in f for f in removed2)
-    assert not os.path.exists(orphan)
-    assert os.path.isdir(fresh)  # too young: may be mid-commit
-    assert _rows(sn.read_snapshot(spark, t)) == [(4,)]  # live data intact
-
-
-def test_snapshot_merge_upsert_versioned_and_idempotent(spark, tmp_path):
-    t = str(tmp_path / "tbl")
-    base = spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 20), (3, "c", 30)], "k long, s string, v long"
-    )
-    sn.snapshot_write(base, t)
-    updates = spark.createDataFrame(
-        [(2, "B", 200), (4, "d", 40)], "k long, s string, v long"
-    )
-    m1 = sn.snapshot_merge_upsert(spark, t, updates, ["k"])
-    want = [(1, "a", 10), (2, "B", 200), (3, "c", 30), (4, "d", 40)]
-    assert _rows(sn.read_snapshot(spark, t)) == want
-    # the pre-merge table is one version back — a bad merge is
-    # recoverable by rollback
-    assert _rows(sn.read_snapshot(spark, t, m1.version - 1)) == _rows(base)
-    # idempotent: same updates converge to the same content
-    sn.snapshot_merge_upsert(spark, t, updates, ["k"])
-    assert _rows(sn.read_snapshot(spark, t)) == want
-
-
-def test_readers_prune_columns_through_manifest_scan(spark, tmp_path):
-    """The manifest hands Spark an explicit parquet file list, so
-    column pruning still reaches the scan (ReadSchema)."""
-    from rearc_data_engineer_takehome_spark.plans import explain
-
-    t = str(tmp_path / "tbl")
-    sn.snapshot_write(
-        spark.range(100).select(
-            "id", (F.col("id") * 2).alias("a"), (F.col("id") * 3).alias("b")
-        ),
-        t,
-    )
-    df = sn.read_snapshot(spark, t).select("id", "a")
-    rs = explain.read_schema(df)
-    assert "id:bigint" in rs and "a:bigint" in rs
-    assert "b:bigint" not in rs, f"scan reads pruned column: {rs!r}"
-
-
-def test_read_increment_feeds_incremental_aggregation(spark, tmp_path):
-    """The manifest diff IS the change feed: maintaining an aggregate
-    from increments alone must equal a full recompute — and a
-    non-append commit in the range must refuse rather than let the
-    consumer double-count."""
-    t = str(tmp_path / "tbl")
-    v0 = sn.snapshot_write(
-        spark.createDataFrame([("a", 1), ("b", 2)], "g string, v long"), t
-    )
-    sn.snapshot_write(
-        spark.createDataFrame([("a", 10)], "g string, v long"), t, "append"
-    )
-    sn.snapshot_write(
-        spark.createDataFrame([("c", 5), ("b", 3)], "g string, v long"),
-        t,
-        "append",
-    )
-
-    # state from the base version, then fold in ONE increment read
-    state = {
-        r["g"]: r["s"]
-        for r in sn.read_snapshot(spark, t, v0.version)
-        .groupBy("g")
-        .agg(F.sum("v").alias("s"))
-        .collect()
-    }
-    inc = sn.read_increment(spark, t, since_version=v0.version)
-    for r in inc.groupBy("g").agg(F.sum("v").alias("s")).collect():
-        state[r["g"]] = state.get(r["g"], 0) + r["s"]
-    full = {
-        r["g"]: r["s"]
-        for r in sn.read_snapshot(spark, t)
-        .groupBy("g")
-        .agg(F.sum("v").alias("s"))
-        .collect()
-    }
-    assert state == full == {"a": 11, "b": 5, "c": 5}
-
-    # an empty increment is a typed empty frame, not an error
-    head = sn.read_manifest(t).version
-    assert sn.read_increment(spark, t, since_version=head).count() == 0
-
-    # overwrite invalidates incremental state: loud refusal
-    sn.snapshot_write(
-        spark.createDataFrame([("z", 0)], "g string, v long"), t
-    )
-    with pytest.raises(ValueError, match="not append"):
-        sn.read_increment(spark, t, since_version=v0.version)
-
-
-def test_streaming_foreachbatch_commits_snapshot_appends(spark, tmp_path):
-    """Structured Streaming -> snapshot table: each micro-batch commits
-    an APPEND version via foreachBatch, so the stream's sink gains the
-    whole transaction-log contract for free — time travel to any
-    micro-batch boundary, and read_increment as the downstream change
-    feed. Three source files under maxFilesPerTrigger=1 -> three
-    append commits whose union equals the source."""
-    src = str(tmp_path / "stream_src")
-    tbl = str(tmp_path / "snap_tbl")
-    schema = "event_id long, v long"
-    for i in range(3):
-        spark.createDataFrame(
-            [(i * 10 + j, j) for j in range(4)], schema
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    def sink(batch_df, batch_id):
-        sn.snapshot_write(batch_df, tbl, mode="append")
-
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        assert q.awaitTermination(180), "stream did not drain in 180s"
-    finally:
-        q.stop()
-
-    versions = sn.list_versions(tbl)
-    assert len(versions) == 3
-    head = sn.read_snapshot(spark, tbl)
-    assert head.count() == 12
-    assert {r.event_id for r in head.collect()} == {
-        i * 10 + j for i in range(3) for j in range(4)
-    }
-    # every version boundary is a consistent micro-batch prefix
-    assert sn.read_snapshot(spark, tbl, versions[0]).count() == 4
-    assert sn.read_snapshot(spark, tbl, versions[1]).count() == 8
-    # the change feed between micro-batches is exactly one batch
-    inc = sn.read_increment(spark, tbl, since_version=versions[1])
-    assert inc.count() == 4
-
-
 def test_schema_roundtrip_special_names_and_nullability(spark, tmp_path):
-    """Empty reads rebuild the schema from the manifest; StructType
-    JSON round-trips field names simpleString cannot (spaces) and
+    """Empty reads rebuild the schema from the log; StructType JSON
+    round-trips field names simpleString cannot (spaces) and
     preserves nullability."""
     from pyspark.sql.types import (
         LongType,
@@ -345,122 +38,18 @@ def test_schema_roundtrip_special_names_and_nullability(spark, tmp_path):
             StructField("v", LongType(), nullable=True),
         ]
     )
-    head = sn.snapshot_write(
-        spark.createDataFrame([(1, 2)], schema), t
-    )
-    empty = sn.read_increment(spark, t, since_version=head.version)
+    head = dl.write_delta(spark.createDataFrame([(1, 2)], schema), t)
+    empty = dl.read_delta_increment(spark, t, since_version=head.version)
     assert empty.count() == 0
     assert empty.schema["order date"].dataType == LongType()
     assert empty.schema["order date"].nullable is False
 
 
-# ---------------------------------------------------------------------------
-# Round 6: log checkpoints, structural schema compat, vacuum concurrency
-# ---------------------------------------------------------------------------
-
-
-def _fast_single_file_writer(monkeypatch):
-    """Swap _write_data_files for a pyarrow single-file writer so
-    many-commit tests exercise the MANIFEST mechanics (the subject
-    under test) without paying a Spark job per append — the files are
-    real parquet that read_snapshot still reads through Spark."""
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    state = {"value": 0}
-
-    def fast_write(df, table_dir):
-        rel = os.path.join("data", uuid.uuid4().hex[:12])
-        out = os.path.join(table_dir, rel)
-        os.makedirs(out)
-        pq.write_table(
-            pa.table({"k": pa.array([state["value"]], pa.int64())}),
-            os.path.join(out, "part-0.parquet"),
-        )
-        return [os.path.join(rel, "part-0.parquet")]
-
-    monkeypatch.setattr(sn, "_write_data_files", fast_write)
-    return state
-
-
-def test_checkpoint_bounds_manifest_growth_over_100_appends(
-    spark, tmp_path, monkeypatch
-):
-    """VERDICT r05 item 2: with delta manifests + periodic checkpoints,
-    100+ appends keep every NON-checkpoint manifest O(files added) —
-    byte size flat in the version number — while reads, time travel,
-    and the change feed stay exact across checkpoint boundaries."""
-    import json
-
-    t = str(tmp_path / "tbl")
-    n_appends = 105
-    writer = _fast_single_file_writer(monkeypatch)
-    df = spark.createDataFrame([(0,)], "k long")  # schema carrier
-    for i in range(n_appends):
-        writer["value"] = i
-        sn.snapshot_write(df, t, "append")
-    head = sn.read_manifest(t)
-    assert head.version == n_appends - 1
-    assert len(head.files) == n_appends  # 1 file per append, all referenced
-
-    delta_sizes, n_checkpoints = [], 0
-    for v in sn.list_versions(t):
-        raw = json.load(open(sn._manifest_path(t, v)))
-        if "files" in raw:
-            n_checkpoints += 1
-            assert v % sn.CHECKPOINT_INTERVAL == 0 or v == 0
-        else:
-            assert raw["base_version"] == v - 1
-            assert len(raw["adds"]) == 1
-            delta_sizes.append(os.path.getsize(sn._manifest_path(t, v)))
-    assert n_checkpoints == 1 + (n_appends - 1) // sn.CHECKPOINT_INTERVAL
-    # commit cost O(delta): v104's manifest is no bigger than v1's +
-    # slack — it does NOT carry the 105-file table list
-    assert max(delta_sizes) < 512
-    assert max(delta_sizes) <= min(delta_sizes) + 64
-
-    # full read, mid-chain time travel, and increment across checkpoints
-    assert _rows(sn.read_snapshot(spark, t)) == [(i,) for i in range(n_appends)]
-    assert _rows(sn.read_snapshot(spark, t, 57)) == [(i,) for i in range(58)]
-    # 95 -> 103 crosses the v100 checkpoint; the checkpoint's
-    # consolidated form must add nothing to the diff
-    inc = sn.read_increment(spark, t, since_version=95, version=103)
-    assert _rows(inc) == [(i,) for i in range(96, 104)]
-
-
-def test_vacuum_consolidates_retained_delta_chain(
-    spark, tmp_path, monkeypatch
-):
-    """Vacuum may drop the full manifest a retained DELTA chain resolves
-    through; it must consolidate the oldest retained manifest first so
-    every retained version stays readable after the drop."""
-    import json
-
-    t = str(tmp_path / "tbl")
-    writer = _fast_single_file_writer(monkeypatch)
-    df = spark.createDataFrame([(0,)], "k long")
-    for i in range(15):  # v0 full, v10 checkpoint, v11-14 deltas
-        writer["value"] = i
-        sn.snapshot_write(df, t, "append")
-    # keep v13, v14 — both deltas whose chains resolve through v10-v12
-    removed = sn.vacuum(t, keep_last=2, orphan_age_seconds=10**9)
-    assert sn.list_versions(t) == [13, 14]
-    # oldest retained (13) got consolidated to a full manifest; 14 may
-    # stay a delta — its base (13) is retained
-    assert "files" in json.load(open(sn._manifest_path(t, 13)))
-    assert _rows(sn.read_snapshot(spark, t)) == [(i,) for i in range(15)]
-    assert _rows(sn.read_snapshot(spark, t, 13)) == [(i,) for i in range(14)]
-    # appends reference all prior files, so nothing was reclaimable
-    assert removed == []
-
-
 def test_append_schema_compat_is_structural_not_textual(spark, tmp_path):
-    """ADVICE r05: an append differing only in nullability, field
-    metadata, or column ORDER is a readable parquet union and must be
-    accepted (table schema stays sticky); a type or name change still
-    rejects loudly."""
+    """An append differing only in nullability, field metadata, or
+    column ORDER is a readable parquet union and must be accepted
+    (table schema stays sticky); a type or name change still rejects
+    loudly."""
     from pyspark.sql.types import (
         LongType, StringType, StructField, StructType,
     )
@@ -470,573 +59,90 @@ def test_append_schema_compat_is_structural_not_textual(spark, tmp_path):
         StructField("k", LongType(), nullable=False),
         StructField("s", StringType(), nullable=True),
     ])
-    sn.snapshot_write(
-        spark.createDataFrame([(1, "a")], base_schema), t
-    )
+    v0 = dl.write_delta(spark.createDataFrame([(1, "a")], base_schema), t)
     # nullability flip + metadata + reversed column order: compatible
     variant = StructType([
         StructField("s", StringType(), nullable=False,
                     metadata={"comment": "added by a later producer"}),
         StructField("k", LongType(), nullable=True),
     ])
-    snap = sn.snapshot_write(
+    v1 = dl.write_delta(
         spark.createDataFrame([("b", 2)], variant), t, "append"
     )
-    assert snap.schema == sn.read_manifest(t, 0).schema  # sticky
-    got = _rows(sn.read_snapshot(spark, t).select("k", "s"))
+    assert v1.schema == v0.schema  # sticky
+    got = _rows(dl.read_delta(spark, t).select("k", "s"))
     assert got == [(1, "a"), (2, "b")]
     # type change: rejected
-    with pytest.raises(ValueError, match="structurally incompatible"):
-        sn.snapshot_write(
+    with pytest.raises(ValueError, match="append schema incompatible"):
+        dl.write_delta(
             spark.createDataFrame([("x", "y")], "k string, s string"),
+            t, "append",
+        )
+    # name change: rejected
+    with pytest.raises(ValueError, match="append schema incompatible"):
+        dl.write_delta(
+            spark.createDataFrame([(3, "c")], "k long, s2 string"),
             t, "append",
         )
 
 
-def test_vacuum_racing_rollback_contract(spark, tmp_path):
-    """VERDICT r05 item 3a: rollback targeting a vacuumed version must
-    fail LOUDLY at every interleaving and never leave an unreadable
-    head. Three windows: manifest already gone (ValueError); manifest
-    read but files reclaimed before commit (SnapshotVacuumedError, no
-    commit); files reclaimed after commit (heal + raise)."""
-    t = str(tmp_path / "tbl")
-    sn.snapshot_write(spark.createDataFrame([(0,)], "k long"), t)  # v0
-    sn.snapshot_write(spark.createDataFrame([(1,)], "k long"), t)  # v1
-    sn.snapshot_write(spark.createDataFrame([(2,)], "k long"), t)  # v2
-
-    # window 1: vacuum completed before rollback started
-    sn.vacuum(t, keep_last=2, orphan_age_seconds=10**9)
-    with pytest.raises(ValueError, match="vacuumed"):
-        sn.rollback(t, 0)
-
-    # window 2: manifest still present, data files already reclaimed
-    # (vacuum deletes files before manifests — a rollback reading the
-    # manifest mid-vacuum sees exactly this). Simulate the interleaving
-    # by deleting v1's unshared files while leaving its manifest.
-    head_before = sn.read_manifest(t).version
-    v1 = sn.read_manifest(t, 1)
-    head_files = set(sn.read_manifest(t).files)
-    for f in set(v1.files) - head_files:
-        os.remove(os.path.join(t, f))
-    with pytest.raises(sn.SnapshotVacuumedError, match="vacuumed"):
-        sn.rollback(t, 1)
-    # contract: nothing committed, head untouched and readable
-    assert sn.read_manifest(t).version == head_before
-    assert _rows(sn.read_snapshot(spark, t)) == [(2,)]
-
-    # window 3: vacuum wins between rollback's pre-check and its
-    # commit — the committed manifest references dead files. Drive the
-    # post-commit validator directly against a poisoned commit.
-    poisoned = sn._commit_head_independent(
-        t, "rollback", ["data/gone123/part-0.parquet"],
-        sn.read_manifest(t).schema, 0,
-    )
-    with pytest.raises(sn.SnapshotVacuumedError, match="healed"):
-        sn._validate_or_heal(t, poisoned)
-    # heal re-committed the pre-rollback head's content over the
-    # poisoned version: head is newer than the poisoned commit and reads
-    healed = sn.read_manifest(t)
-    assert healed.version == poisoned.version + 1
-    assert _rows(sn.read_snapshot(spark, t)) == [(2,)]
-
-
-def test_heal_refuses_to_bury_a_concurrent_commit(spark, tmp_path):
-    """Lost-update guard in the heal path (round-6 self-review): if a
-    concurrent commit lands between a poisoned rollback and its heal,
-    healing at a LATER version would bury that commit's rows — the
-    heal must refuse (loud SnapshotVacuumedError naming the skip) and
-    the concurrent commit's content must remain the head."""
-    t = str(tmp_path / "tbl")
-    sn.snapshot_write(spark.createDataFrame([(0,)], "k long"), t)  # v0
-    poisoned = sn._commit_head_independent(
-        t, "rollback", ["data/gone456/part-0.parquet"],
-        sn.read_manifest(t).schema, 0,
-    )  # v1, references dead files
-    # concurrent overwrite lands at v2 before the heal runs
-    sn.snapshot_write(spark.createDataFrame([(7,)], "k long"), t)
-    with pytest.raises(sn.SnapshotVacuumedError, match="HEAL SKIPPED"):
-        sn._validate_or_heal(t, poisoned)
-    # the concurrent commit was NOT buried under a restored old head
-    head = sn.read_manifest(t)
-    assert head.version == poisoned.version + 1
-    assert _rows(sn.read_snapshot(spark, t)) == [(7,)]
-
-
-def test_vacuum_racing_inflight_append_is_safe(spark, tmp_path):
-    """VERDICT r05 item 3b: an append that has materialized its data
-    files but not yet committed its manifest presents as an
-    unreferenced young commit dir; vacuum must leave it alone (the
-    orphan sweep is age-gated), so the append lands intact afterwards."""
-    t = str(tmp_path / "tbl")
-    sn.snapshot_write(spark.createDataFrame([(0,)], "k long"), t)  # v0
-    sn.snapshot_write(
-        spark.createDataFrame([(1,)], "k long"), t, "append"
-    )  # v1
-
-    # in-flight append: files on disk, manifest not yet created
-    df = spark.createDataFrame([(2,)], "k long")
-    new_files = sn._write_data_files(df, t)
-
-    removed = sn.vacuum(t, keep_last=2, orphan_age_seconds=6 * 3600)
-    assert all(os.path.exists(os.path.join(t, f)) for f in new_files), (
-        f"vacuum reclaimed an in-flight commit's files: {removed}"
-    )
-
-    # the append completes its commit exactly as snapshot_write would
-    prev = sn.read_manifest(t)
-    sn._try_commit(
-        t, prev.version + 1, "append", prev.schema, len(new_files),
-        adds=new_files, base_version=prev.version,
-    )
-    assert _rows(sn.read_snapshot(spark, t)) == [(0,), (1,), (2,)]
-
-
-def test_manifest_stats_and_file_skipping_scan(spark, tmp_path):
-    """Round-6 flagship: per-file column stats mined from parquet
-    footers at commit time power snapshot_scan's file skipping — a
-    range predicate on a range-partitioned commit reads ONLY the files
-    that can match (verified via inputFiles), with values identical to
-    an unpruned scan + filter."""
-    t = str(tmp_path / "tbl")
-    df = spark.range(0, 1000).withColumn("v", F.col("id") * 2)
-    snap = sn.snapshot_write(
-        df.repartitionByRange(8, "id"), t, stats_cols=["id"]
-    )
-    assert snap.stats and len(snap.stats) == len(snap.files) == 8
-    for fstats in snap.stats.values():
-        assert set(fstats) == {"id"}
-        assert fstats["id"]["min"] <= fstats["id"]["max"]
-        assert fstats["id"]["nulls"] == 0
-
-    pruned = sn.snapshot_scan(spark, t, prune={"id": (100, 220)})
-    full = sn.read_snapshot(spark, t).where(F.col("id").between(100, 220))
-    assert _rows(pruned) == _rows(full)
-    # 8 range-partitioned files over 0..999; [100, 220] spans ~1/8 of
-    # the domain -> at most 3 of 8 files can overlap it
-    assert 1 <= len(pruned.inputFiles()) <= 3
-    assert len(sn.read_snapshot(spark, t).inputFiles()) == 8
-
-    # half-open intervals + a provably-empty range
-    assert _rows(sn.snapshot_scan(spark, t, prune={"id": (990, None)})) \
-        == [(i, 2 * i) for i in range(990, 1000)]
-    empty = sn.snapshot_scan(spark, t, prune={"id": (5000, None)})
-    assert empty.count() == 0 and len(empty.inputFiles()) == 0
-
-
-def test_file_may_match_is_conservative_on_type_mismatch():
-    """An int prune bound against a str-stat column must KEEP the file
-    (cannot prove a miss), not crash the scan — pruning is
-    conservative by construction (round-6 self-review)."""
-    str_stats = {"c": {"min": "AAA", "max": "MMM", "nulls": 0}}
-    assert sn._file_may_match(str_stats, {"c": (100, 200)})
-    # matching types still prune
-    assert not sn._file_may_match(
-        {"c": {"min": 1, "max": 5, "nulls": 0}}, {"c": (100, 200)}
-    )
-    assert not sn._file_may_match(str_stats, {"c": ("N", None)})
-
-
-def test_stats_survive_appends_checkpoints_and_vacuum(
-    spark, tmp_path
-):
-    """Stats attach to delta manifests, merge through checkpoint
-    consolidation and vacuum's oldest-kept rewrite, and files committed
-    WITHOUT stats are conservatively kept by every scan."""
-    t = str(tmp_path / "tbl")
-    for lo in range(0, 1200, 100):  # 12 appends -> crosses v10 checkpoint
-        sn.snapshot_write(
-            spark.range(lo, lo + 100).coalesce(1), t, "append",
-            stats_cols=["id"],
-        )
-    # one stats-less append: never pruned
-    sn.snapshot_write(
-        spark.range(5000, 5100).coalesce(1), t, "append"
-    )
-    head = sn.read_manifest(t)
-    with_stats = [f for f in head.files if f in (head.stats or {})]
-    assert len(with_stats) == len(head.files) - 1
-    got = sn.snapshot_scan(spark, t, prune={"id": (250, 310)})
-    assert _rows(got) == [(i,) for i in range(250, 311)]
-    # 2 stats-pruned survivors + the 1 stats-less file always kept
-    assert len(got.inputFiles()) == 3
-
-    sn.vacuum(t, keep_last=2, orphan_age_seconds=10**9)
-    got2 = sn.snapshot_scan(spark, t, prune={"id": (250, 310)})
-    assert _rows(got2) == [(i,) for i in range(250, 311)]
-    assert len(got2.inputFiles()) == 3  # consolidation kept the stats
-
-
-def test_merge_schema_additive_evolution(spark, tmp_path):
-    """merge_schema=True append widens the table schema (Delta's
-    mergeSchema contract): pre-evolution files null-fill the added
-    column on every read path (head, time travel, increment), while
-    renames/type changes stay loud errors in both modes."""
-    t = str(tmp_path / "tbl")
-    v0 = sn.snapshot_write(
-        spark.createDataFrame([(1, "a")], "k long, s string"), t
-    )
-    # incompatible without the flag, with a pointer to it
-    wide = spark.createDataFrame(
-        [(2, "b", 9.5)], "k long, s string, score double"
-    )
-    with pytest.raises(ValueError, match="merge_schema=True"):
-        sn.snapshot_write(wide, t, "append")
-    snap = sn.snapshot_write(wide, t, "append", merge_schema=True)
-    assert [f.name for f in _schema_fields(snap)] == ["k", "s", "score"]
-
-    head = sn.read_snapshot(spark, t)
-    assert head.schema["score"].dataType.typeName() == "double"
-    rows = {r.k: (r.s, r.score) for r in head.collect()}
-    assert rows == {1: ("a", None), 2: ("b", 9.5)}
-    # time travel to v0 reads with v0's (narrow) schema
-    assert sn.read_snapshot(spark, t, v0.version).columns == ["k", "s"]
-    # the increment carries the widened schema
-    inc = sn.read_increment(spark, t, since_version=v0.version)
-    assert [r.score for r in inc.collect()] == [9.5]
-
-    # a type CHANGE is rejected even with merge_schema
-    with pytest.raises(ValueError, match="only ADDING"):
-        sn.snapshot_write(
-            spark.createDataFrame([("x", "b", 1.0)],
-                                  "k string, s string, score double"),
-            t, "append", merge_schema=True,
-        )
-    # a RENAME (= drop s + add s2) is rejected, not silently accepted
-    # as an add with complementary null halves
-    with pytest.raises(ValueError, match="missing table column"):
-        sn.snapshot_write(
-            spark.createDataFrame([(9, "b", 1.0)],
-                                  "k long, s2 string, score double"),
-            t, "append", merge_schema=True,
-        )
-    # post-evolution appends of the wide schema are plain-compatible
-    sn.snapshot_write(
-        spark.createDataFrame([(3, "c", 1.5)],
-                              "k long, s string, score double"),
-        t, "append",
-    )
-    assert sn.read_snapshot(spark, t).count() == 3
-
-
 def test_streaming_sink_evolves_schema_mid_stream(spark, tmp_path):
-    """A streaming snapshot sink survives a mid-stream schema widening:
+    """A streaming Delta sink survives a mid-stream schema widening:
     micro-batches before the evolution commit the narrow schema,
     later ones append with merge_schema=True, and the head reads both
     eras (old rows null-filled) — the upgrade path for a long-lived
     pipeline whose upstream gains a column."""
-    tbl = str(tmp_path / "snap_tbl")
+    tbl = str(tmp_path / "delta_tbl")
 
     def sink(batch_df, batch_id):
-        sn.snapshot_write(batch_df, tbl, mode="append", merge_schema=True)
+        dl.write_delta(batch_df, tbl, mode="append", merge_schema=True)
 
     # era 1: two narrow micro-batches (simulated by direct sink calls —
     # foreachBatch hands the sink plain DataFrames; the streaming
-    # machinery itself is covered by the test above)
+    # machinery itself is covered by test_delta_log's foreachBatch
+    # sink test)
     for i in range(2):
         sink(spark.createDataFrame([(i,)], "k long"), i)
     # era 2: upstream adds a column
     sink(spark.createDataFrame([(9, "new")], "k long, tag string"), 2)
 
-    head = sn.read_snapshot(spark, tbl)
+    head = dl.read_delta(spark, tbl)
     assert head.columns == ["k", "tag"]
     assert {(r.k, r.tag) for r in head.collect()} == {
         (0, None), (1, None), (9, "new"),
     }
     # the change feed across the evolution carries the widened schema
-    inc = sn.read_increment(spark, tbl, since_version=1)
+    inc = dl.read_delta_increment(spark, tbl, since_version=1)
     assert [(r.k, r.tag) for r in inc.collect()] == [(9, "new")]
 
 
-def test_table_history_describes_retained_versions(spark, tmp_path):
-    """table_history = DESCRIBE HISTORY: one row per retained version
-    with mode / files-added / live-files / manifest form, computed
-    from manifests alone, shrinking with vacuum."""
-    t = str(tmp_path / "tbl")
-    sn.snapshot_write(spark.range(0, 10).coalesce(1), t)  # v0 overwrite
-    sn.snapshot_write(spark.range(10, 20).coalesce(1), t, "append")
-    sn.snapshot_write(spark.range(20, 30).coalesce(1), t, "append",
-                      stats_cols=["id"])
-    h = {r.version: r for r in sn.table_history(spark, t).collect()}
-    assert [h[v].mode for v in (0, 1, 2)] == [
-        "overwrite", "append", "append",
-    ]
-    assert h[0].is_full_manifest and not h[2].is_full_manifest
-    assert (h[2].n_files_added, h[2].n_files_live) == (1, 3)
-    assert h[2].n_files_with_stats == 1
-
-    sn.vacuum(t, keep_last=2, orphan_age_seconds=10**9)
-    left = sn.table_history(spark, t).collect()
-    assert sorted(r.version for r in left) == [1, 2]
-    assert all(r.n_files_live == r.version + 1 for r in left)
-
-
-def test_pruned_scan_composes_with_schema_evolution(spark, tmp_path):
-    """Pruning on a column ADDED by evolution: pre-evolution files have
-    no stats (and no column) for it, so they are conservatively kept,
-    read with the pinned widened schema (null-fill), and the row-level
-    predicate drops their NULLs — exact results, skipping only where
-    stats prove a miss."""
-    t = str(tmp_path / "tbl")
-    sn.snapshot_write(
-        spark.range(0, 100).select(F.col("id").alias("k")).coalesce(1), t
+def test_file_may_match_is_conservative_on_type_mismatch():
+    """An int prune bound against a str-stat column must KEEP the file
+    (cannot prove a miss), not crash the scan — pruning is
+    conservative by construction."""
+    str_stats = {"c": {"min": "AAA", "max": "MMM", "nulls": 0}}
+    assert _files._file_may_match(str_stats, {"c": (100, 200)})
+    # matching types still prune
+    assert not _files._file_may_match(
+        {"c": {"min": 1, "max": 5, "nulls": 0}}, {"c": (100, 200)}
     )
-    for lo in (0, 500):
-        sn.snapshot_write(
-            spark.range(lo, lo + 100)
-            .select(F.col("id").alias("k"), F.col("id").alias("score"))
-            .coalesce(1),
-            t, "append", merge_schema=True, stats_cols=["score"],
-        )
-    got = sn.snapshot_scan(spark, t, prune={"score": (500, 540)})
-    assert sorted(r.k for r in got.collect()) == list(range(500, 541))
-    # kept: the stats-pruned matching file + the stats-less v0 file;
-    # skipped: the scored file whose [0, 99] range provably misses
-    assert len(got.inputFiles()) == 2
-
-
-def _schema_fields(snap):
-    import json as _json
-
-    from pyspark.sql.types import StructType
-
-    return StructType.fromJson(_json.loads(snap.schema)).fields
-
-
-def test_zorder_layout_prunes_on_both_dimensions(spark, tmp_path):
-    """Z-order clustering + manifest stats give MULTI-dimensional
-    skipping: a commit sorted by the Morton key over (a, b) prunes a
-    range predicate on EITHER column, where a plain sort on `a` alone
-    leaves `b` full-range in every file (referenced by the
-    lineitem_snapshot_zorder_scan query doc)."""
-    from rearc_data_engineer_takehome_spark.operators.layout import (
-        zorder_key,
-    )
-
-    df = (
-        spark.range(0, 4096)
-        .withColumn("a", (F.col("id") % 64).cast("long"))
-        .withColumn("b", (F.col("id") / 64).cast("long"))
-    )
-    tz = str(tmp_path / "zord")
-    z = zorder_key(df, ["a", "b"], bits=6)
-    clustered = (
-        df.withColumn("__z", z)
-        .repartitionByRange(16, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-    )
-    sn.snapshot_write(clustered, tz, stats_cols=["a", "b"])
-
-    # plain sort on `a`: every file spans b's full domain
-    tp = str(tmp_path / "plain")
-    sn.snapshot_write(
-        df.repartitionByRange(16, "a").sortWithinPartitions("a"),
-        tp,
-        stats_cols=["a", "b"],
-    )
-
-    for t in (tz, tp):
-        got = sn.snapshot_scan(spark, t, prune={"b": (10, 15)})
-        assert got.count() == 64 * 6
-    n_z = len(
-        sn.snapshot_scan(spark, tz, prune={"b": (10, 15)}).inputFiles()
-    )
-    n_p = len(
-        sn.snapshot_scan(spark, tp, prune={"b": (10, 15)}).inputFiles()
-    )
-    assert n_p == 16  # sort key can't help the other column
-    assert n_z < 16  # z-order does
-    # and the z-ordered table still prunes on `a` as well
-    n_za = len(
-        sn.snapshot_scan(spark, tz, prune={"a": (0, 7)}).inputFiles()
-    )
-    assert n_za < 16
-
-
-def test_snapshot_compact_bin_packs_and_keeps_contract(
-    spark, tmp_path, monkeypatch
-):
-    """snapshot_compact rewrites many small files into few, preserves
-    content and time travel, re-mines stats, follows the merge
-    concurrency rule (ConcurrentCommitError, never silent clobber),
-    and read_increment refuses across it."""
-    t = str(tmp_path / "tbl")
-    writer = _fast_single_file_writer(monkeypatch)
-    df = spark.createDataFrame([(0,)], "k long")
-    for i in range(12):
-        writer["value"] = i
-        sn.snapshot_write(df, t, "append")
-    monkeypatch.undo()  # compact must really write through Spark
-    pre = sn.read_manifest(t)
-    assert len(pre.files) == 12
-
-    snap = sn.snapshot_compact(spark, t, target_files=2, stats_cols=["k"])
-    assert snap.mode == "compact" and len(snap.files) <= 2
-    assert _rows(sn.read_snapshot(spark, t)) == [(i,) for i in range(12)]
-    # pre-compact version still time-travels
-    assert _rows(sn.read_snapshot(spark, t, pre.version)) \
-        == [(i,) for i in range(12)]
-    # stats re-mined for the packed files
-    assert snap.stats and all("k" in s for s in snap.stats.values())
-
-    # change feed refuses across the compaction boundary
-    with pytest.raises(ValueError, match="not append"):
-        sn.read_increment(spark, t, since_version=pre.version - 1)
-
-    # merge concurrency rule: a commit landing between read and commit
-    real = sn._try_commit
-    state = {"raced": False}
-
-    def racy(table_dir, version, *a, **k):
-        if not state["raced"]:
-            state["raced"] = True
-            sn.snapshot_write(
-                spark.createDataFrame([(99,)], "k long"), t, "append"
-            )
-        return real(table_dir, version, *a, **k)
-
-    monkeypatch.setattr(sn, "_try_commit", racy)
-    with pytest.raises(sn.ConcurrentCommitError):
-        sn.snapshot_compact(spark, t, target_files=1)
-    # the concurrent append's row was NOT clobbered
-    assert (99,) in _rows(sn.read_snapshot(spark, t))
-
-
-def test_concurrent_writers_compactor_vacuum_converge(spark, tmp_path):
-    """Multi-writer stress (VERDICT r06 item 5): N appender threads, a
-    compactor, a vacuum, and a reader race on ONE log. Contract under
-    fire: every reader sees a consistent committed version (counts
-    never go backward), losers of commit races retry/rebase until they
-    land (no lost updates — every appended row is present exactly once
-    at the end), the compactor follows the merge rule (raises on a
-    concurrent commit, re-runs against the new head), and vacuum's
-    consolidate-before-delete order keeps every retained chain
-    walkable at every instant (backed by _resolve_files' transient
-    re-walk). keep_last=12 really drops early manifests mid-race while
-    keeping in-flight bases safely retained."""
-    import threading
-
-    t = str(tmp_path / "tbl")
-    schema = "writer long, seq long, v long"
-    sn.snapshot_write(spark.createDataFrame([(-1, -1, 0)], schema), t)
-
-    n_writers, n_appends = 3, 4
-    errors: list = []
-    counts: list = []
-    stop = threading.Event()
-    start = threading.Barrier(n_writers + 3)
-
-    def appender(wid):
-        try:
-            start.wait()
-            for s in range(n_appends):
-                sn.snapshot_write(
-                    spark.createDataFrame(
-                        [(wid, s, wid * 100 + s)], schema
-                    ),
-                    t,
-                    mode="append",
-                )
-        except Exception as e:  # noqa: BLE001 - collected for assert
-            errors.append(("append", wid, repr(e)))
-
-    def compactor():
-        start.wait()
-        while not stop.is_set():
-            try:
-                sn.snapshot_compact(spark, t, target_files=2)
-            except sn.ConcurrentCommitError:
-                continue  # documented: re-run against the new head
-            except Exception as e:  # noqa: BLE001
-                errors.append(("compact", repr(e)))
-                return
-
-    def vacuumer():
-        start.wait()
-        while not stop.is_set():
-            try:
-                sn.vacuum(t, keep_last=12)
-            except Exception as e:  # noqa: BLE001
-                errors.append(("vacuum", repr(e)))
-                return
-
-    def reader():
-        start.wait()
-        while not stop.is_set():
-            try:
-                counts.append(sn.read_snapshot(spark, t).count())
-            except Exception as e:  # noqa: BLE001
-                # retention contract (same as any lakehouse vacuum):
-                # keep_last must exceed the worst-case commit burst
-                # during one read job, else an in-flight scan can lose
-                # its files to vacuum mid-job. With a free-running
-                # compactor (every compact replaces ALL files) that
-                # burst can outrun keep_last=12 on a slow box — the
-                # reader's correct move is retry at the fresh head,
-                # never a wrong answer. Any non-file-loss error fails.
-                msg = repr(e)
-                if "FileNotFound" in msg or "does not exist" in msg \
-                        or "PATH_NOT_FOUND" in msg:
-                    continue
-                errors.append(("read", msg))
-                return
-
-    writers = [
-        threading.Thread(target=appender, args=(w,))
-        for w in range(n_writers)
-    ]
-    aux = [
-        threading.Thread(target=f)
-        for f in (compactor, vacuumer, reader)
-    ]
-    for th in writers + aux:
-        th.start()
-    for th in writers:
-        th.join(timeout=600)
-    stop.set()
-    for th in aux:
-        th.join(timeout=600)
-    assert not errors, errors
-
-    # no lost updates: every appended row present exactly once
-    final = _rows(sn.read_snapshot(spark, t).select("writer", "seq"))
-    expected = sorted(
-        [(-1, -1)]
-        + [(w, s) for w in range(n_writers) for s in range(n_appends)]
-    )
-    assert final == expected
-
-    # readers never saw content go backward (append-only + compact
-    # preserves content, so counts are monotonic non-decreasing)
-    assert counts and counts == sorted(counts)
-
-    # the log itself stayed coherent: history reads, versions unique
-    hist = sn.table_history(spark, t).collect()
-    versions = [r["version"] for r in hist]
-    assert versions == sorted(set(versions))
-
-    # a final vacuum down to 2 versions keeps the head intact
-    sn.vacuum(t, keep_last=2)
-    assert _rows(sn.read_snapshot(spark, t).select("writer", "seq")) \
-        == expected
+    assert not _files._file_may_match(str_stats, {"c": ("N", None)})
 
 
 def test_pruning_conservative_with_absent_and_partial_stats(
     spark, tmp_path
 ):
-    """Adversarial data-skipping (VERDICT r06 item 5): manifest stats
-    absent for a SUBSET of files — an append committed without
-    stats_cols, pre-evolution files that lack the evolved column, and
-    a compaction that dropped all stats — must always degrade to
-    scan-everything for the stat-less files, never to a wrong answer.
-    (Stats can only be absent, never stale: each manifest carries
-    stats exclusively for the immutable files it introduced.) Every
-    pruned scan is checked value-exact against the unpruned read with
-    the same row-level predicate."""
+    """Adversarial data skipping: add-action stats absent for a SUBSET
+    of files — an append committed without stats_cols, pre-evolution
+    files that lack the evolved column, and a compaction that dropped
+    all min/max stats — must always degrade to scan-everything for the
+    stat-less files, never to a wrong answer. Every pruned scan is
+    checked value-exact against the unpruned read with the same
+    row-level predicate."""
     t = str(tmp_path / "tbl")
 
-    def ref(prune, version=None):
-        df = sn.read_snapshot(spark, t, version)
+    def ref(prune):
+        df = dl.read_delta(spark, t)
         for col, (lo, hi) in prune.items():
             if lo is not None:
                 df = df.where(F.col(col) >= lo)
@@ -1045,51 +151,54 @@ def test_pruning_conservative_with_absent_and_partial_stats(
         return _rows(df)
 
     def check(prune):
-        got = sn.snapshot_scan(spark, t, prune=prune)
+        got = dl.delta_scan(spark, t, prune=prune)
         assert _rows(got) == ref(prune)
         return got
+
+    def scanned(df):
+        return {f.split(t.rstrip("/") + "/")[-1] for f in df.inputFiles()}
 
     # v0: 4 range-partitioned files over k=0..99, WITH stats on k
     base = spark.range(100).select(
         F.col("id").alias("k"), F.lit("old").alias("src")
     )
-    sn.snapshot_write(
-        base.repartitionByRange(4, "k"), t, stats_cols=["k"]
+    v0_files = set(
+        dl.write_delta(
+            base.repartitionByRange(4, "k"), t, stats_cols=["k"]
+        ).files
     )
-    v0_files = set(sn.read_manifest(t).files)
 
     # v1: append k=100..199 WITHOUT stats — never prunable
-    sn.snapshot_write(
-        spark.range(100, 200)
-        .select(F.col("id").alias("k"), F.lit("new").alias("src"))
-        .repartitionByRange(4, "k"),
-        t,
-        "append",
-    )
-    v1_files = set(sn.read_manifest(t).files) - v0_files
+    v1_files = set(
+        dl.write_delta(
+            spark.range(100, 200)
+            .select(F.col("id").alias("k"), F.lit("new").alias("src"))
+            .repartitionByRange(4, "k"),
+            t,
+            "append",
+        ).files
+    ) - v0_files
 
     # the range lives ONLY in stat-less v1 files: all of v0 pruned,
     # all of v1 kept (absent stats cannot prove a miss)
-    got = check({"k": (150, 160)})
-    scanned = {f.split(t.rstrip("/") + "/")[-1] for f in got.inputFiles()}
-    assert scanned == v1_files
+    assert scanned(check({"k": (150, 160)})) == v1_files
 
     # a range covered ONLY by v0: stats prune 3 of 4 v0 files, but all
     # 4 stat-less v1 files are still scanned — conservative, exact
-    got = check({"k": (10, 15)})
-    scanned = {f.split(t.rstrip("/") + "/")[-1] for f in got.inputFiles()}
-    assert v1_files <= scanned and len(scanned & v0_files) == 1
+    got = scanned(check({"k": (10, 15)}))
+    assert v1_files <= got and len(got & v0_files) == 1
 
-    # type-mismatched bound (int interval on a string column): stats
-    # exist for no file on 'src'; even with stats the comparison is a
-    # type mismatch — keep everything, row-level predicate decides
-    assert len(sn.snapshot_scan(spark, t, prune={"src": (0, 1)})
-               .inputFiles()) == 8
+    # type-mismatched bound (int interval on a string column): no file
+    # has stats on 'src', and even with stats the comparison is a type
+    # mismatch — keep everything, row-level predicate decides
+    assert len(
+        dl.delta_scan(spark, t, prune={"src": (0, 1)}).inputFiles()
+    ) == 8
 
     # v2: additive evolution adds 'extra' WITH stats — pre-evolution
     # files have NO stats for it (and no column): they null-fill and
     # are never pruned by an 'extra' bound; rows stay exact
-    sn.snapshot_write(
+    dl.write_delta(
         spark.range(200, 250).select(
             F.col("id").alias("k"),
             F.lit("evolved").alias("src"),
@@ -1105,17 +214,168 @@ def test_pruning_conservative_with_absent_and_partial_stats(
 
     # v3: compact WITHOUT stats_cols — the skipping index is gone for
     # every file; pruning degrades to scan-all, answers stay exact
-    sn.snapshot_compact(spark, t, target_files=2)
-    snap = sn.read_manifest(t)
-    assert snap.stats is None
+    snap = dl.delta_compact(spark, t, target_files=2)
     got = check({"k": (150, 160)})
     assert len(got.inputFiles()) == len(snap.files)  # nothing pruned
     check({"extra": (2000, 2100)})
 
     # v4: compact WITH stats_cols — skipping resumes on fresh stats
-    sn.snapshot_compact(
-        spark, t, target_files=4, stats_cols=["k", "extra"]
-    )
-    assert sn.read_manifest(t).stats
+    dl.delta_compact(spark, t, target_files=4, stats_cols=["k", "extra"])
     check({"k": (150, 160)})
     check({"extra": (2000, 2100)})
+
+
+def test_read_delta_prunes_columns_at_the_scan(spark, tmp_path):
+    """The log hands Spark an explicit parquet file list with the
+    schema pinned, so column pruning still reaches the scan
+    (ReadSchema)."""
+    from rearc_data_engineer_takehome_spark.plans import explain
+
+    t = str(tmp_path / "tbl")
+    dl.write_delta(
+        spark.range(100).select(
+            "id", (F.col("id") * 2).alias("a"), (F.col("id") * 3).alias("b")
+        ),
+        t,
+    )
+    rs = explain.read_schema(dl.read_delta(spark, t).select("id", "a"))
+    assert "id:bigint" in rs and "a:bigint" in rs
+    assert "b:bigint" not in rs, f"scan reads pruned column: {rs!r}"
+
+
+def test_stats_survive_appends_checkpoints_and_vacuum(spark, tmp_path):
+    """Add-action stats survive a checkpoint and a vacuum that GCs the
+    JSON commits (the checkpoint becomes the only copy), and files
+    committed WITHOUT stats are conservatively kept by every scan."""
+    t = str(tmp_path / "tbl")
+    dl.write_delta(spark.range(0, 100).coalesce(1), t, stats_cols=["id"])
+    for lo in range(100, 1200, 100):
+        dl.write_delta(
+            spark.range(lo, lo + 100).coalesce(1), t, "append",
+            stats_cols=["id"],
+        )
+    # one stats-less append: never pruned
+    dl.write_delta(spark.range(5000, 5100).coalesce(1), t, "append")
+
+    def scan():
+        got = dl.delta_scan(spark, t, prune={"id": (250, 310)})
+        assert _rows(got) == [(i,) for i in range(250, 311)]
+        # 2 stats-pruned survivors + the 1 stats-less file always kept
+        assert len(got.inputFiles()) == 3
+
+    scan()
+    dl.vacuum_delta(t)
+    assert not os.path.exists(dl._commit_path(t, 0))
+    scan()
+
+
+def test_vacuum_racing_inflight_append_is_safe(
+    spark, tmp_path, monkeypatch
+):
+    """An append that has materialized its data files but not yet
+    committed presents as young unreferenced files; a vacuum with a
+    retention window must leave them alone (orphans age by mtime), so
+    the append lands intact afterwards. An aged orphan — a writer that
+    died before committing — is reclaimed."""
+    t = str(tmp_path / "tbl")
+    dl.write_delta(spark.createDataFrame([(0,)], "k long"), t)
+    dl.write_delta(spark.createDataFrame([(1,)], "k long"), t, "append")
+
+    # in-flight append: files on disk, commit not yet written
+    df = spark.createDataFrame([(2,)], "k long")
+    new_files = _files._write_data_files(df, t)
+    # a dead writer's files, a day old
+    dead = _files._write_data_files(df, t)
+    for rel in dead:
+        full = os.path.join(t, rel)
+        os.utime(full, (os.path.getmtime(full) - 86_400,) * 2)
+
+    dl.vacuum_delta(t, retention_ms=6 * 3_600_000)
+    assert all(os.path.exists(os.path.join(t, f)) for f in new_files)
+    assert not any(os.path.exists(os.path.join(t, f)) for f in dead)
+
+    # the append completes its commit over the files it already wrote
+    monkeypatch.setattr(
+        _files, "_write_data_files", lambda df, table_dir: new_files
+    )
+    dl.write_delta(df, t, "append")
+    assert _rows(dl.read_delta(spark, t)) == [(0,), (1,), (2,)]
+
+
+def test_concurrent_appenders_compactor_reader_converge(spark, tmp_path):
+    """Multi-writer stress: N appender threads, a compactor and a
+    reader race on ONE log. Every reader sees a committed version
+    (counts never go backward), losers of commit races renumber until
+    they land (every appended row is present exactly once at the end),
+    and the compactor either composes with a racing append or raises
+    ConcurrentCommitError and re-runs against the new head."""
+    import threading
+
+    t = str(tmp_path / "tbl")
+    schema = "writer long, seq long, v long"
+    dl.write_delta(spark.createDataFrame([(-1, -1, 0)], schema), t)
+
+    n_writers, n_appends = 3, 4
+    errors: list = []
+    counts: list = []
+    stop = threading.Event()
+    start = threading.Barrier(n_writers + 2)
+
+    def appender(wid):
+        try:
+            start.wait()
+            for s in range(n_appends):
+                dl.write_delta(
+                    spark.createDataFrame(
+                        [(wid, s, wid * 100 + s)], schema
+                    ),
+                    t,
+                    "append",
+                )
+        except Exception as e:  # noqa: BLE001 - collected for assert
+            errors.append(("append", wid, repr(e)))
+
+    def compactor():
+        start.wait()
+        while not stop.is_set():
+            try:
+                dl.delta_compact(spark, t, target_files=2)
+            except _files.ConcurrentCommitError:
+                continue  # documented: re-run against the new head
+            except Exception as e:  # noqa: BLE001
+                errors.append(("compact", repr(e)))
+                return
+
+    def reader():
+        start.wait()
+        while not stop.is_set():
+            try:
+                counts.append(dl.read_delta(spark, t).count())
+            except Exception as e:  # noqa: BLE001
+                errors.append(("read", repr(e)))
+                return
+
+    writers = [
+        threading.Thread(target=appender, args=(w,))
+        for w in range(n_writers)
+    ]
+    aux = [threading.Thread(target=f) for f in (compactor, reader)]
+    for th in writers + aux:
+        th.start()
+    for th in writers:
+        th.join(timeout=600)
+    stop.set()
+    for th in aux:
+        th.join(timeout=600)
+    assert not errors, errors
+
+    final = _rows(dl.read_delta(spark, t).select("writer", "seq"))
+    expected = sorted(
+        [(-1, -1)]
+        + [(w, s) for w in range(n_writers) for s in range(n_appends)]
+    )
+    assert final == expected
+    # append-only + content-preserving compaction: monotonic counts
+    assert counts and counts == sorted(counts)
+    versions = dl.list_delta_versions(t)
+    assert versions == list(range(len(versions)))
