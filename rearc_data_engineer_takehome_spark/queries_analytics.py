@@ -5023,8 +5023,8 @@ def lineitem_snapshot_delta_mirror(
     FROM orders
     WHERE o_orderkey BETWEEN 200 AND 900
     """,
-    doc="Delta-log data skipping certified end-to-end — the native-"
-    "format data-skipping path: orders committed via "
+    doc="Delta-log data skipping certified end-to-end (also "
+    "registered as orders_snapshot_pruned_scan): orders committed via "
     "write_delta with repartitionByRange(8, o_orderkey) + stats_cols, "
     "so each add action carries the spec's stats JSON (numRecords/"
     "minValues/maxValues/nullCount mined from parquet footers); "
@@ -5092,7 +5092,7 @@ query(
       AND l_suppkey BETWEEN 10 AND 40
     """,
     doc="Z-order clustering composed with the NATIVE Delta log format "
-    "(reference "
+    "(also registered as lineitem_snapshot_zorder_scan; reference "
     "anchor: notebooks/20_analytics.ipynb:653, Delta as the output "
     "format whose OPTIMIZE ZORDER this mirrors): lineitem is written "
     "through write_delta sorted by the Morton key over (l_partkey, "
@@ -5145,7 +5145,6 @@ def lineitem_delta_zorder_scan(
         F.min("l_partkey").cast("bigint").alias("min_part"),
         F.max("l_suppkey").cast("bigint").alias("max_supp"),
     )
-
 
 
 query(

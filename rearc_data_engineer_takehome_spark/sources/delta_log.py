@@ -25,11 +25,12 @@ format directly from the public spec:
 Scale posture: the log is O(commits) driver-side metadata — data
 files are written once by Spark executors and never rewritten;
 reads hand Spark the resolved file list with the log's schema pinned
-(additive evolution null-fills old files). Checkpoints bound replay cost exactly as in native
-Delta. Interop with the real ``delta-spark`` reader is asserted by an
-env-gated test (tests/test_delta_log.py) that runs wherever the
-package exists; format conformance (action shapes, naming, relative
-paths, stats encoding) is asserted unconditionally.
+(additive evolution null-fills old files). Checkpoints bound replay
+cost exactly as in native Delta. Interop with the real
+``delta-spark`` reader is asserted by an env-gated test
+(tests/test_delta_log.py) that runs wherever the package exists;
+format conformance (action shapes, naming, relative paths, stats
+encoding) is asserted unconditionally.
 """
 
 from __future__ import annotations
@@ -3749,10 +3750,11 @@ def delta_scan(
     version: int | None = None,
     prune: dict | None = None,
 ) -> DataFrame:
-    """Data-skipping read over the delta log: drop every file whose add-action ``stats``
-    (min/max per column) or ``partitionValues`` PROVE it cannot hold a
-    row in ``prune`` = ``{col: (lo, hi)}``, scan the survivors, and
-    re-apply the predicates row-level so straddling files stay exact.
+    """Data-skipping read over the delta log: drop every file whose
+    add-action ``stats`` (min/max per column) or ``partitionValues``
+    PROVE it cannot hold a row in ``prune`` = ``{col: (lo, hi)}``,
+    scan the survivors, and re-apply the predicates row-level so
+    straddling files stay exact.
     Missing/type-mismatched stats always scan. At 100 TB the skip
     decision runs over the log's metadata (KBs), never the storage
     listing — the same IO win any native Delta reader gets from the
@@ -6572,10 +6574,11 @@ def vacuum_delta(table_dir: str, retention_ms: int = 0) -> int:
 
 
 def delta_history(spark: SparkSession, table_dir: str) -> DataFrame:
-    """DESCRIBE HISTORY over the delta log: one row per still-reconstructable
-    version from its commitInfo — version, timestamp, operation,
-    operationParameters JSON. Versions whose JSON was vacuumed (only
-    the checkpointed head remains) report operation 'CHECKPOINT'."""
+    """DESCRIBE HISTORY over the delta log: one row per
+    still-reconstructable version from its commitInfo — version,
+    timestamp, operation, operationParameters JSON. Versions whose
+    JSON was vacuumed (only the checkpointed head remains) report
+    operation 'CHECKPOINT'."""
     rows = []
     for v in list_delta_versions(table_dir):
         info = {"timestamp": None, "operation": "CHECKPOINT",

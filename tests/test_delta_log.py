@@ -3,8 +3,8 @@ clean-room writer/reader for the public delta-io PROTOCOL.md format
 (reference persists its tables in Delta: notebooks/20_analytics.ipynb:
 653, 2200, 2561). Covers round-trip + time travel, format conformance
 (action shapes a native reader depends on), checkpoint replay,
-commit-race atomicity, and an env-gated cross-engine check against the real delta-spark package wherever it
-exists."""
+commit-race atomicity, and an env-gated cross-engine check against the
+real delta-spark package wherever it exists."""
 
 from __future__ import annotations
 
