@@ -140,13 +140,12 @@ def exact_quantiles_bracketed(
     p = (n-1)·q — bit-identical to ``percentile`` (property-tested)
     and within-ulp of DuckDB ``quantile_cont``.
 
-    Sibling: :func:`exact_quantiles_scalable` trades ~1.7× speed for a
-    distinct-count walk that never materializes a value array — the
-    safer choice on duplicate-heavy columns where a single value could
-    straddle the whole bracket. Both carry ±1-rank adjacent-value
-    fallbacks for the small-n case where the fractional pad is narrower
-    than one rank; this one is the fast path for near-continuous
-    columns.
+    Sibling: :func:`exact_quantiles_scalable` walks distinct-value
+    counts and never materializes a value array — the safer choice on
+    duplicate-heavy columns where a single value could straddle the
+    whole bracket. Both answer exactly when a bracket misses its rank
+    by one (the small-n case where the fractional pad is narrower than
+    one rank) and raise when it misses by more.
     """
     pad = 3.0 / accuracy
     plist = [max(0.0, q - pad) for q in qs] + [min(1.0, q + pad) for q in qs]
@@ -370,12 +369,16 @@ def exact_quantiles_scalable(
     around each target rank (percentile_approx at rank-fraction margin
     2/accuracy — twice the GK sketch's guaranteed rank error, so the
     true order statistics provably lie inside the brackets).
-    Pass 2: one scan counts rows below each bracket (the global rank
-    offset) while the in-bracket DISTINCT values are counted per value
-    — duplicate-heavy columns collapse to their distinct set, so no
-    task ever materializes an O(bracket) array — then a cumulative walk
-    over that tiny table locates the floor/ceil order statistics and
-    interpolates exactly like quantile_cont / Spark ``percentile``.
+    Pass 2 (:func:`_quantiles_in_brackets`): ONE scan and ONE
+    aggregate. In-bracket rows are counted per DISTINCT value
+    (duplicate-heavy columns collapse to their distinct set, so no task
+    ever materializes an O(bracket) array); every other row is counted
+    into the gap between brackets it falls in. A cumulative count over
+    that small table gives each value its global rank range, and the
+    floor/ceil order statistics interpolate exactly like quantile_cont
+    / Spark ``percentile``. An order statistic that lands inside a gap
+    rather than on its edge means a bracket missed its rank by more
+    than one: the query raises instead of returning a wrong value.
 
     Everything stays in-plan (the result is a 1-row DataFrame with one
     ``q_{i}`` column per prob, broadcastable as bounds); only plan
@@ -383,8 +386,6 @@ def exact_quantiles_scalable(
     exact order statistics, so results are bit-identical to the
     single-pass exact percentile (asserted in tests).
     """
-    from pyspark.sql import Window
-
     probs = list(probs)
     margin = 2.0 / accuracy
     lows = [max(p - margin, 0.0) for p in probs]
@@ -407,7 +408,7 @@ def exact_quantiles_scalable(
             F.slice("vb", len(probs) + 1, len(probs)).alias("vhi"),
         )
         .localCheckpoint()
-    )  # tiny; feeds the filter AND the final assembly
+    )  # tiny; feeds the endgame's n fetch AND the pass-2 join
 
     if small_n_bound:
         # small-input endgame: pass 1 already computed n, so reading it
@@ -429,103 +430,7 @@ def exact_quantiles_scalable(
                 ]
             )
 
-    cand = src.join(F.broadcast(b))
-    # one scan: per prob, the below-bracket count plus the adjacent
-    # distinct values just OUTSIDE the bracket — the GK rank-error bound
-    # means a bracket can miss the floor/ceil order statistic by at most
-    # ONE rank (when the margin is narrower than a rank, i.e. tiny n or
-    # extreme p), and the max-below / min-above values are exactly those
-    # ±1-rank fallbacks. In-bracket rows explode to (prob index, value)
-    # for the distinct-count walk.
-    side_aggs = []
-    for i in range(len(probs)):
-        vlo_i, vhi_i = F.get(F.col("vlo"), i), F.get(F.col("vhi"), i)
-        side_aggs.append(
-            F.sum((F.col("x") < vlo_i).cast("long")).alias(f"below_{i}")
-        )
-        side_aggs.append(
-            F.max(F.when(F.col("x") < vlo_i, F.col("x"))).alias(f"maxbelow_{i}")
-        )
-        side_aggs.append(
-            F.min(F.when(F.col("x") > vhi_i, F.col("x"))).alias(f"minabove_{i}")
-        )
-    below = cand.groupBy().agg(*side_aggs)
-    # NOTE (r12 A/B, kept for the record): filtering the index array
-    # in-row and exploding only matches (explode(filter(sequence...)))
-    # measured ~40% SLOWER than this posexplode+where — the lambda HOF
-    # is interpreted per row while Generate+Filter is codegen'd.
-    in_bracket = (
-        cand.select(
-            "x",
-            F.posexplode(
-                F.array(*[F.lit(i) for i in range(len(probs))])
-            ).alias("pos", "i"),
-        )
-        .where(
-            (F.col("x") >= F.get(F.col("vlo"), F.col("i")))
-            & (F.col("x") <= F.get(F.col("vhi"), F.col("i")))
-        )
-        .groupBy("i", "x")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    w = Window.partitionBy("i").orderBy("x")
-    walked = in_bracket.select(
-        "i",
-        "x",
-        (F.sum("cnt").over(w) - F.col("cnt")).alias("cum_before"),
-        F.sum("cnt").over(w).alias("cum_incl"),
-    )
-    # global rank range of value x for prob i: [below_i + cum_before,
-    # below_i + cum_incl - 1]; pick the values covering floor(h), ceil(h)
-    joined = walked.join(F.broadcast(below)).join(F.broadcast(b.select("n")))
-    aggs = []
-    for i, p in enumerate(probs):
-        h = (F.col("n") - 1).cast("double") * F.lit(float(p))
-        lo_rank = F.floor(h)
-        hi_rank = -F.floor(-h)
-        start = F.col(f"below_{i}") + F.col("cum_before")
-        end = F.col(f"below_{i}") + F.col("cum_incl") - 1
-        aggs.append(
-            F.max(
-                F.when(
-                    (F.col("i") == i) & (start <= lo_rank) & (lo_rank <= end),
-                    F.col("x"),
-                )
-            ).alias(f"xf_{i}")
-        )
-        aggs.append(
-            F.max(
-                F.when(
-                    (F.col("i") == i) & (start <= hi_rank) & (hi_rank <= end),
-                    F.col("x"),
-                )
-            ).alias(f"xc_{i}")
-        )
-        aggs.append(F.max(h - lo_rank.cast("double")).alias(f"frac_{i}"))
-        aggs.append(F.max(h).alias(f"h_{i}"))
-        aggs.append(F.max(F.col(f"maxbelow_{i}")).alias(f"mb_{i}"))
-        aggs.append(F.max(F.col(f"minabove_{i}")).alias(f"ma_{i}"))
-    folded = joined.agg(*aggs)
-    final_cols = []
-    for i, p in enumerate(probs):
-        # ±1-rank fallbacks: a floor rank just below the bracket is the
-        # adjacent value below; a ceil rank just above is the one above
-        xf = F.coalesce(F.col(f"xf_{i}"), F.col(f"mb_{i}"))
-        xc = F.coalesce(F.col(f"xc_{i}"), F.col(f"ma_{i}"))
-        frac = F.col(f"frac_{i}")
-        # percentile()'s exact branch structure: same-distinct-value
-        # ranks return the value exactly; otherwise two-sided weighted
-        # interpolation (see exact_quantiles_bracketed for the ulp
-        # analysis of why BOTH branches are needed)
-        h = F.col(f"h_{i}")
-        lo = F.floor(h).cast("double")
-        final_cols.append(
-            F.when(frac == 0.0, xf)
-            .when(xf == xc, xf)
-            .otherwise((lo + 1.0 - h) * xf + (h - lo) * xc)
-            .alias(f"q_{i}")
-        )
-    return folded.select(*final_cols)
+    return _quantiles_in_brackets(src, b, [], probs)
 
 
 def grouped_exact_quantiles_scalable(
@@ -542,15 +447,14 @@ def grouped_exact_quantiles_scalable(
     Same two-pass structure with the group key threaded through every
     stage: pass 1 is a grouped aggregate (n + approx brackets per
     group), pass 2 joins brackets back on the group key (a plain
-    shuffle equi-join — works for unbounded group counts) and walks
-    each group's in-bracket distinct values. Per-group state is
-    O(distinct values inside the brackets), not O(group distinct
-    cardinality) — the property ``percentile() GROUP BY`` lacks.
-    Returns (group_col, q_0..q_{k-1}), bit-identical to grouped
-    ``percentile`` (tested).
+    shuffle equi-join — works for unbounded group counts) and reads the
+    data ONCE, walking each group's in-bracket distinct values and
+    between-bracket gaps. Per-group state is O(distinct values inside
+    the brackets + 2k+1), not O(group distinct cardinality) — the
+    property ``percentile() GROUP BY`` lacks. A bracket that missed its
+    rank by more than one raises. Returns (group_col, q_0..q_{k-1}),
+    bit-identical to grouped ``percentile`` (tested).
     """
-    from pyspark.sql import Window
-
     probs = list(probs)
     margin = 2.0 / accuracy
     lows = [max(p - margin, 0.0) for p in probs]
@@ -560,7 +464,7 @@ def grouped_exact_quantiles_scalable(
         F.col("x").isNotNull()
     )
     # O(|groups|) bracket relation with a full-scan lineage, consumed
-    # by the candidate join AND the final assembly — reliable scratch
+    # by the endgame's total AND the pass-2 join — reliable scratch
     # keeps an executor loss a parquet re-scan instead of an
     # unrecoverable localCheckpoint lineage error; group count is
     # caller-controlled and unbounded (r09 ADVICE long tail)
@@ -600,86 +504,83 @@ def grouped_exact_quantiles_scalable(
                 ]
             )
 
-    cand = src.join(b, g)
-    side_aggs = []
-    for i in range(len(probs)):
-        vlo_i, vhi_i = F.get(F.col("vlo"), i), F.get(F.col("vhi"), i)
-        side_aggs.append(
-            F.sum((F.col("x") < vlo_i).cast("long")).alias(f"below_{i}")
-        )
-        side_aggs.append(
-            F.max(F.when(F.col("x") < vlo_i, F.col("x"))).alias(f"maxbelow_{i}")
-        )
-        side_aggs.append(
-            F.min(F.when(F.col("x") > vhi_i, F.col("x"))).alias(f"minabove_{i}")
-        )
-    below = cand.groupBy(g).agg(*side_aggs)
-    in_bracket = (
-        cand.select(
-            g,
-            "x",
-            F.posexplode(
-                F.array(*[F.lit(i) for i in range(len(probs))])
-            ).alias("pos", "i"),
-        )
-        .where(
-            (F.col("x") >= F.get(F.col("vlo"), F.col("i")))
-            & (F.col("x") <= F.get(F.col("vhi"), F.col("i")))
-        )
-        .groupBy(g, "i", "x")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+    return _quantiles_in_brackets(src, b, [g], probs)
+
+
+def _quantiles_in_brackets(
+    src: DataFrame, b: DataFrame, keys: Sequence[str], probs: Sequence[float]
+) -> DataFrame:
+    """Pass 2 of the two-pass exact quantiles: ONE scan of ``src``
+    (``keys`` + non-null double ``x``) against the pass-1 brackets ``b``
+    (``keys``, ``n``, arrays ``vlo``/``vhi``; ungrouped when ``keys`` is
+    empty). Returns ``keys`` + ``q_0..q_{k-1}``.
+
+    One aggregate keys a row inside any bracket by its value and a row
+    outside every bracket by the gap it falls in (the count of brackets
+    opened below it: brackets are closed, so a gap row never equals a
+    boundary and distinct gaps are separated by a whole bracket). Each
+    key keeps count/min/max, and ordering the O(in-bracket distinct +
+    2k+1)-row result by ``min`` is value order, so one cumulative count
+    gives every row its global rank range [s, e]. The order statistic
+    at rank r is the covering value, or the min/max of a gap row whose
+    edge is r (the bracket missed by one rank: tiny n, extreme p). A
+    rank strictly inside a gap raises instead of returning a neighbour.
+    Every per-probability expression is SQL text, so plan construction
+    costs a constant number of py4j round-trips, not one per Column.
+    """
+    ks = [f"`{c}`" for c in keys]
+    cand = src.join(b, list(keys)) if keys else src.join(F.broadcast(b))
+    los = [f"vlo[{i}]" for i in range(len(probs))]
+    his = [f"vhi[{i}]" for i in range(len(probs))]
+    # brackets open at x: lows at or below x minus highs below it
+    opened = " + ".join(f"CAST(x >= {v} AS INT)" for v in los)
+    closed = " + ".join(f"CAST(x > {v} AS INT)" for v in his)
+    slots = (
+        cand.selectExpr(*ks, "n", "x", f"{opened} AS a", f"{closed} AS z")
+        .selectExpr(*ks, "n", "x", "a", "IF(a > z, x, NULL) AS xv")
+        .groupBy(*keys, "n", "a", "xv")
+        .agg(F.expr("count(1) AS cnt"), F.expr("min(x) AS mn"), F.expr("max(x) AS mx"))
     )
-    w = Window.partitionBy(g, "i").orderBy("x")
-    walked = in_bracket.select(
-        g,
-        "i",
-        "x",
-        (F.sum("cnt").over(w) - F.col("cnt")).alias("cum_before"),
-        F.sum("cnt").over(w).alias("cum_incl"),
+    part = f"PARTITION BY {', '.join(ks)} " if ks else ""
+    cum = f"sum(cnt) OVER ({part}ORDER BY mn ROWS UNBOUNDED PRECEDING)"
+    ranked = slots.selectExpr(
+        *ks, "n", "xv", "mn", "mx", f"{cum} - cnt AS s", f"{cum} - 1 AS e"
     )
-    joined = walked.join(below, g).join(b.select(g, "n"), g)
-    aggs = []
-    for i, p in enumerate(probs):
-        h = (F.col("n") - 1).cast("double") * F.lit(float(p))
-        lo_rank = F.floor(h)
-        hi_rank = -F.floor(-h)
-        start = F.col(f"below_{i}") + F.col("cum_before")
-        end = F.col(f"below_{i}") + F.col("cum_incl") - 1
-        aggs.append(
-            F.max(
-                F.when(
-                    (F.col("i") == i) & (start <= lo_rank) & (lo_rank <= end),
-                    F.col("x"),
-                )
-            ).alias(f"xf_{i}")
+
+    ps = list(enumerate(probs))
+
+    def h(p: float) -> str:
+        return f"(CAST(n - 1 AS DOUBLE) * {float(p)!r}D)"
+
+    def at_rank(r: str, p: float) -> str:
+        miss = (
+            "exact_quantiles_scalable: sketch bracket missed rank for "
+            f"q={p} by more than one rank; raise accuracy"
         )
-        aggs.append(
-            F.max(
-                F.when(
-                    (F.col("i") == i) & (start <= hi_rank) & (hi_rank <= end),
-                    F.col("x"),
-                )
-            ).alias(f"xc_{i}")
+        return (
+            f"max(CASE WHEN s <= {r} AND {r} <= e THEN CASE"
+            f" WHEN xv IS NOT NULL OR {r} = s THEN mn WHEN {r} = e THEN mx"
+            f" ELSE CAST(raise_error('{miss}') AS DOUBLE) END END)"
         )
-        aggs.append(F.max(h - lo_rank.cast("double")).alias(f"frac_{i}"))
-        aggs.append(F.max(h).alias(f"h_{i}"))
-        aggs.append(F.max(F.col(f"maxbelow_{i}")).alias(f"mb_{i}"))
-        aggs.append(F.max(F.col(f"minabove_{i}")).alias(f"ma_{i}"))
-    folded = joined.groupBy(g).agg(*aggs)
-    final_cols = [F.col(g)]
-    for i in range(len(probs)):
-        xf = F.coalesce(F.col(f"xf_{i}"), F.col(f"mb_{i}"))
-        xc = F.coalesce(F.col(f"xc_{i}"), F.col(f"ma_{i}"))
-        frac = F.col(f"frac_{i}")
-        h = F.col(f"h_{i}")
-        lo = F.floor(h).cast("double")
-        final_cols.append(
-            F.when(frac == 0.0, xf)
-            .when(xf == xc, xf)
-            .otherwise((lo + 1.0 - h) * xf + (h - lo) * xc)
-            .alias(f"q_{i}")
+
+    folded = ranked.groupBy(*keys).agg(
+        F.expr("max(n) AS n"),
+        *[F.expr(f"{at_rank(f'FLOOR({h(p)})', p)} AS xf_{i}") for i, p in ps],
+        *[F.expr(f"{at_rank(f'CEIL({h(p)})', p)} AS xc_{i}") for i, p in ps],
+    )
+    # percentile()'s exact branch structure: same-distinct-value ranks
+    # return the value exactly; otherwise two-sided weighted
+    # interpolation (see exact_quantiles_bracketed for the ulp analysis
+    # of why BOTH branches are needed)
+    out = []
+    for i, p in ps:
+        lo = f"CAST(FLOOR({h(p)}) AS DOUBLE)"
+        xf, xc = f"xf_{i}", f"xc_{i}"
+        out.append(
+            f"CASE WHEN {h(p)} - {lo} = 0.0D THEN {xf} WHEN {xf} = {xc} THEN {xf}"
+            f" ELSE ({lo} + 1.0D - {h(p)}) * {xf} + ({h(p)} - {lo}) * {xc} END AS q_{i}"
         )
-    return folded.select(*final_cols)
+    return folded.selectExpr(*ks, *out)
 
 
 def winsorize(

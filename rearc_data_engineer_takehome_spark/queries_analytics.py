@@ -1132,11 +1132,12 @@ def top2_orders_per_customer_lateral(spark: SparkSession, sf_dir: str) -> DataFr
     FROM lineitem
     """,
     doc="EXACT quantiles via quality.exact_quantiles_scalable: two "
-    "bounded passes (approx brackets, then a distinct-count rank walk "
-    "inside the brackets) instead of percentile()'s single-pass counts "
-    "map, whose memory and single-reducer merge scale with "
-    "distinct-value cardinality. Bit-identical to quantile_cont "
-    "(interpolates exact order statistics) — the oracle proves it.",
+    "bounded passes (approx brackets, then ONE scan that counts "
+    "in-bracket distinct values and between-bracket gaps, walked by "
+    "rank) instead of percentile()'s single-pass counts map, whose "
+    "memory and single-reducer merge scale with distinct-value "
+    "cardinality. Bit-identical to quantile_cont (interpolates exact "
+    "order statistics) — the oracle proves it.",
 )
 def price_quantiles_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.quality import exact_quantiles_scalable
@@ -1258,9 +1259,10 @@ def part_pair_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="GROUPED exact quantiles via "
     "quality.grouped_exact_quantiles_scalable: the per-group two-pass "
-    "bracketed walk — per-group state is O(distinct values inside the "
-    "brackets), not O(group distinct cardinality) like percentile() "
-    "GROUP BY, so groups of unbounded size stay bounded-memory. "
+    "bracketed walk, whose second pass reads the data once — per-group "
+    "state is O(distinct values inside the brackets), not O(group "
+    "distinct cardinality) like percentile() GROUP BY, so groups of "
+    "unbounded size stay bounded-memory. "
     "Bit-identical to quantile_cont per group (the oracle proves it).",
 )
 def returnflag_price_deciles_scalable(

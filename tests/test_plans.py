@@ -144,6 +144,31 @@ def test_parquet_aggregate_pushdown_metadata_only(spark, sf_smoke):
             spark.conf.set("spark.sql.sources.useV1SourceList", saved)
 
 
+def test_two_pass_quantiles_scan_the_source_once(spark, sf_smoke, lineitem):
+    """Pass 2 of the two-pass exact quantiles reads the data ONCE: after
+    the eager pass 1, each operator's returned plan holds exactly one
+    FileScan of the source (pass 1's brackets are a checkpoint, not a
+    rescan). A second branch that re-reads the source fails here."""
+    import re
+
+    from rearc_data_engineer_takehome_spark.operators.quality import (
+        exact_quantiles_scalable,
+        grouped_exact_quantiles_scalable,
+    )
+
+    probs = [0.1, 0.5, 0.9]
+    for df in (
+        exact_quantiles_scalable(lineitem, "l_extendedprice", probs, small_n_bound=0),
+        grouped_exact_quantiles_scalable(
+            lineitem, "l_returnflag", "l_extendedprice", probs, small_n_bound=0
+        ),
+    ):
+        locations = re.findall(r"Location: \w+ \[([^\]]*)\]", explain.formatted_plan(df))
+        assert [p for p in locations if p.endswith("/lineitem.parquet")] == [
+            f"file:{sf_smoke}/lineitem.parquet"
+        ], locations
+
+
 def test_no_registered_query_plans_a_cartesian_product(spark, sf_smoke):
     """Registry-wide hygiene sweep: no query may compile to
     CartesianProduct. Intentional 1-row bound joins (stats bounds,

@@ -327,31 +327,45 @@ def test_streak_grouping_constant_matches_bruteforce(spark, user_days):
         assert got[u] == (best, runs_py)
 
 
-@settings(max_examples=15, deadline=None, suppress_health_check=[HealthCheck.too_slow])
-@given(
-    st.lists(
-        st.integers(min_value=-100, max_value=100), min_size=2, max_size=60
-    ),
-    st.integers(min_value=1, max_value=19),
+# Two-pass quantile inputs: integer values plus both signed zeros, and
+# probability lists spanning 0.0..1.0 — including lists whose brackets
+# overlap or coincide (repeated and near-equal probabilities). Results
+# compare with ==, under which -0.0 == 0.0: percentile() keeps the two
+# zeros as separate map keys and returns whichever its hash-map order
+# puts first, so the sign of a zero answer is not a function of the
+# values. Every nonzero answer must match bit for bit.
+_QUANTILE_VALUES = st.one_of(
+    st.integers(min_value=-100, max_value=100).map(float),
+    st.sampled_from([-0.0, 0.0]),
 )
-def test_exact_quantiles_scalable_matches_percentile(spark, vals, p20):
+_QUANTILE_PROBS = st.one_of(
+    st.lists(st.integers(0, 20).map(lambda p20: p20 / 20.0), min_size=1, max_size=4),
+    st.sampled_from([[0.5, 0.5, 0.50001], [0.0, 1e-05, 0.99999, 1.0], [0.45, 0.5, 0.55]]),
+)
+
+
+def _percentile_array(probs) -> str:
+    return f"percentile(x, array({', '.join(map(repr, probs))}))"
+
+
+@settings(max_examples=15, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(st.lists(_QUANTILE_VALUES, min_size=2, max_size=60), _QUANTILE_PROBS)
+def test_exact_quantiles_scalable_matches_percentile(spark, vals, probs):
     """Property: the two-pass bracketed quantile equals the single-pass
-    exact percentile for any value multiset (duplicates included) and
-    any interior probability."""
+    exact percentile for any value multiset (duplicates and signed
+    zeros included) and any probability list (0.0 and 1.0, overlapping
+    brackets included)."""
     from rearc_data_engineer_takehome_spark.operators.quality import (
         exact_quantiles_scalable,
     )
 
-    prob = p20 / 20.0
-    df = spark.createDataFrame([(float(v),) for v in vals], "x double")
-    ref = df.agg(F.expr(f"percentile(x, {prob})")).collect()[0][0]
+    df = spark.createDataFrame([(v,) for v in vals], "x double")
+    ref = df.agg(F.expr(_percentile_array(probs))).collect()[0][0]
     # small_n_bound=0 forces the two-pass machinery this property
     # stresses (±1-rank fallbacks, bracket collapse); the default
     # bound would route these tiny inputs to percentile() itself
-    got = exact_quantiles_scalable(
-        df, "x", [prob], small_n_bound=0
-    ).collect()[0]["q_0"]
-    assert got == ref
+    got = exact_quantiles_scalable(df, "x", probs, small_n_bound=0).collect()[0]
+    assert list(got) == list(ref)
 
 
 @settings(max_examples=15, deadline=None, suppress_health_check=[HealthCheck.too_slow])
@@ -412,34 +426,26 @@ def test_twap_shape_matches_bruteforce(spark, rows):
 
 @settings(max_examples=10, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 @given(
-    st.lists(
-        st.tuples(st.integers(0, 2), st.integers(-50, 50)),
-        min_size=2,
-        max_size=40,
-    ),
-    st.integers(min_value=1, max_value=19),
+    st.lists(st.tuples(st.integers(0, 2), _QUANTILE_VALUES), min_size=2, max_size=40),
+    _QUANTILE_PROBS,
 )
-def test_grouped_exact_quantiles_scalable_property(spark, rows, p20):
+def test_grouped_exact_quantiles_scalable_property(spark, rows, probs):
     """Property: per-group bracketed quantiles equal grouped
-    percentile() bit-for-bit on any grouped multiset."""
+    percentile() on any grouped multiset and probability list (bit for
+    bit up to the sign of a zero answer, see above)."""
     from rearc_data_engineer_takehome_spark.operators.quality import (
         grouped_exact_quantiles_scalable,
     )
 
-    prob = p20 / 20.0
-    df = spark.createDataFrame(
-        [(g, float(v)) for g, v in rows], "g long, x double"
-    )
+    df = spark.createDataFrame(rows, "g long, x double")
     ref = {
-        r.g: r.q
-        for r in df.groupBy("g")
-        .agg(F.expr(f"percentile(x, {prob})").alias("q"))
-        .collect()
+        r.g: list(r.q)
+        for r in df.groupBy("g").agg(F.expr(_percentile_array(probs)).alias("q")).collect()
     }
     got = {
-        r.g: r.q_0
+        r.g: list(r)[1:]
         for r in grouped_exact_quantiles_scalable(
-            df, "g", "x", [prob], small_n_bound=0  # force the two-pass
+            df, "g", "x", probs, small_n_bound=0  # force the two-pass
         ).collect()
     }
     assert got == ref

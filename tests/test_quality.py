@@ -215,6 +215,49 @@ def test_grouped_exact_quantiles_scalable_matches_single_pass(spark, sf_smoke):
             assert got == ref, (col, kw)
 
 
+def test_quantile_pass2_raises_when_bracket_misses_rank_by_two(spark):
+    """Fault injection: hand-built brackets that start two ranks above
+    the floor order statistic must make pass 2 raise, never return the
+    adjacent value just below the bracket. One rank off is the exact
+    ±1 fallback and must still answer."""
+    from pyspark.errors import PySparkException
+
+    flat = spark.range(10).selectExpr("CAST(id AS DOUBLE) AS x")  # ranks = values
+    grouped = spark.range(20).selectExpr("id % 2 AS g", "CAST(id AS DOUBLE) AS x")
+
+    def brackets(rows, keyed):
+        schema = "n long, vlo array<double>, vhi array<double>"
+        return spark.createDataFrame(rows, ("g long, " + schema) if keyed else schema)
+
+    # p=0.5 over n=10: floor rank 4, ceil rank 5
+    one_off = brackets([(10, [5.0], [9.0])], keyed=False)
+    assert quality._quantiles_in_brackets(flat, one_off, [], [0.5]).first().q_0 == 4.5
+    two_off = brackets([(10, [6.0], [9.0])], keyed=False)
+    with pytest.raises(PySparkException, match="missed rank"):
+        quality._quantiles_in_brackets(flat, two_off, [], [0.5]).collect()
+
+    # group 0 holds 0, 2, ..., 18: floor rank 4 is 8, the bracket starts
+    # at 12 (rank 6); group 1 is bracketed correctly
+    two_off = brackets([(0, 10, [12.0], [18.0]), (1, 10, [7.0], [19.0])], keyed=True)
+    with pytest.raises(PySparkException, match="missed rank"):
+        quality._quantiles_in_brackets(grouped, two_off, ["g"], [0.5]).collect()
+
+
+def test_two_pass_quantiles_empty_and_all_null_inputs(spark):
+    """The forced two-pass path on no non-null rows: one all-null row
+    ungrouped, zero rows grouped — never an error."""
+    empty = spark.createDataFrame([], "g long, x double")
+    all_null = spark.createDataFrame([(1, None), (2, None)], "g long, x double")
+    for df in (empty, all_null):
+        got = quality.exact_quantiles_scalable(
+            df, "x", [0.0, 0.5, 1.0], small_n_bound=0
+        ).collect()
+        assert [tuple(r) for r in got] == [(None, None, None)]
+        assert quality.grouped_exact_quantiles_scalable(
+            df, "g", "x", [0.5], small_n_bound=0
+        ).collect() == []
+
+
 def test_fk_integrity_detects_planted_orphans(spark):
     from rearc_data_engineer_takehome_spark.operators.quality import fk_integrity
 
