@@ -31,6 +31,17 @@ cost exactly as in native Delta. Interop with the real
 (tests/test_delta_log.py) that runs wherever the package exists;
 format conformance (action shapes, naming, relative paths, stats
 encoding) is asserted unconditionally.
+
+Commit path: every operation commits through one private helper,
+``_commit``. It appends the commitInfo (one ``_ENGINE_INFO``
+constant), commits with in-commit-timestamp stamping
+(``_commit_actions`` -> ``_atomic_commit``), replays the new version
+and applies the ``delta.checkpointInterval`` auto-checkpoint. Only
+``write_checkpoint``'s own protocol-upgrade commit calls
+``_commit_actions`` directly. The steps around a commit are shared
+the same way: ``_write_adds`` / ``_file_adds`` (data files -> footers
+-> add actions), ``_optimize_commit`` (the OPTIMIZE retry loop) and
+``_dv_commit_actions`` (the action list of a deletion-vector commit).
 """
 
 from __future__ import annotations
@@ -49,6 +60,10 @@ from . import dv as _dv
 from . import _files
 
 _LOGDIR = "_delta_log"
+_ENGINE_INFO = "rearc-takehome-spark-cleanroom"  # commitInfo.engineInfo
+# attempts a writer makes to land a commit that composes with
+# concurrent appends before giving up
+_MAX_COMMIT_RETRIES = 20
 _PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
 # table-features protocol stamped when deletion vectors first appear
 # on a table (PROTOCOL.md: DVs require reader version 3 + the
@@ -425,6 +440,43 @@ def _atomic_commit(table_dir: str, version: int, actions: list[dict]):
         ) from e
     finally:
         os.unlink(tmp)
+
+
+def _commit(
+    table_dir: str,
+    version: int,
+    actions: list[dict],
+    configuration: dict | None,
+    operation: str,
+    parameters: dict,
+    metrics: dict | None = None,
+    ts: int | None = None,
+    ict: int | None = None,
+) -> DeltaState:
+    """The one commit path: append the commitInfo, commit ``actions``
+    at ``version`` with ICT stamping (_commit_actions), replay the new
+    version, and auto-checkpoint it (_maybe_auto_checkpoint). ``ts``
+    is the commit timestamp when the caller already stamped it on its
+    remove actions; ``ict`` pins the inCommitTimestamp of a commit
+    that enables ICT to the enablement timestamp it records. A taken
+    ``version`` raises ConcurrentCommitError."""
+    info = {
+        "timestamp": _now_ms() if ts is None else ts,
+        "operation": operation,
+        "operationParameters": parameters,
+    }
+    if metrics is not None:
+        info["operationMetrics"] = metrics
+    info["engineInfo"] = _ENGINE_INFO
+    if ict is not None:
+        info["inCommitTimestamp"] = ict
+    _commit_actions(
+        table_dir, version, actions + [{"commitInfo": info}],
+        configuration,
+    )
+    out = replay(table_dir, version)
+    _maybe_auto_checkpoint(table_dir, out)
+    return out
 
 
 def _check_protocol(table_dir: str, protocols) -> None:
@@ -1995,6 +2047,53 @@ def _write_partitioned_data_files(
     return sorted(files)
 
 
+def _file_adds(
+    table_dir: str,
+    rels: list[str],
+    stats_cols: list[str] | None,
+    data_change: bool = True,
+    wpcols: list[str] | None = None,
+) -> tuple[list[dict], dict]:
+    """Add actions for freshly written files, one footer read per
+    file: the zero-row filter (empty input partitions are valid
+    parquet but native writers never register them) AND the stats
+    JSON come from the same metadata object. ``wpcols`` (physical
+    partition columns) parses hive segments into partitionValues.
+    Returns ``(adds, {rel: footer metadata})``."""
+    import pyarrow.parquet as pq
+
+    metas = {
+        rel: pq.ParquetFile(os.path.join(table_dir, rel)).metadata
+        for rel in rels
+    }
+    adds = [
+        _add_action(
+            table_dir, rel, stats_cols, data_change,
+            _hive_partition_values(rel, wpcols) if wpcols else None,
+            md=md,
+        )
+        for rel, md in metas.items()
+        if md.num_rows
+    ]
+    return adds, metas
+
+
+def _write_adds(
+    df: DataFrame,
+    table_dir: str,
+    wpcols: list[str] | None = None,
+    stats_cols: list[str] | None = None,
+    data_change: bool = True,
+) -> tuple[list[dict], dict]:
+    """Write ``df`` as new data files (hive layout when ``wpcols``)
+    and return :func:`_file_adds` of them."""
+    if wpcols:
+        written = _write_partitioned_data_files(df, table_dir, wpcols)
+    else:
+        written = _files._write_data_files(df, table_dir)
+    return _file_adds(table_dir, written, stats_cols, data_change, wpcols)
+
+
 # --- change data files (PROTOCOL.md "Add CDC File") -----------------
 # When delta.enableChangeDataFeed=true, commits whose row-level
 # changes are NOT derivable from add/remove alone (DV deletes,
@@ -2275,18 +2374,10 @@ def delta_set_clustering(
             "removed": False,
         }
     })
-    actions.append({
-        "commitInfo": {
-            "timestamp": _now_ms(),
-            "operation": "CLUSTER BY",
-            "operationParameters": {"columns": list(cols)},
-            "engineInfo": "rearc-takehome-spark-cleanroom",
-        }
-    })
-    _commit_actions(
-        table_dir, head.version + 1, actions, head.configuration
+    return _commit(
+        table_dir, head.version + 1, actions, head.configuration,
+        "CLUSTER BY", {"columns": list(cols)},
     )
-    return replay(table_dir, head.version + 1)
 
 
 def delta_cluster_optimize(
@@ -2342,68 +2433,19 @@ def delta_cluster_optimize(
     df, _wp, pstat = _physical_payload(
         df, head.schema, extra_cols=mat_cols
     )
-    rel_files = _files._write_data_files(df, table_dir)
-    import pyarrow.parquet as pq
-
     phys_stats = [
         pstat(c) for c in (
             list(stats_cols) if stats_cols else list(cols)
         )
     ]
-    metas = {
-        rel: pq.ParquetFile(os.path.join(table_dir, rel)).metadata
-        for rel in rel_files
-    }
-    adds = []
-    for rel, md in metas.items():
-        if not md.num_rows:
-            continue
-        a = _add_action(table_dir, rel, phys_stats, False, None,
-                        md=md)
+    adds, _ = _write_adds(
+        df, table_dir, stats_cols=phys_stats, data_change=False
+    )
+    for a in adds:
         a["add"]["clusteringProvider"] = "liquid"
-        adds.append(a)
-    computed_against = head.version
-    for _ in range(20):
-        versions = list_delta_versions(table_dir)
-        version = versions[-1] + 1
-        for cv in range(computed_against + 1, version):
-            with open(_commit_path(table_dir, cv)) as f:
-                for line in f:
-                    if "remove" in json.loads(line):
-                        raise _files.ConcurrentCommitError(
-                            f"clustered optimize of {table_dir} "
-                            f"raced a remove in v{cv}; re-run"
-                        )
-        ts = _now_ms()
-        actions: list[dict] = [
-            _remove_action(head.adds[p], ts, False)
-            for p in head.files
-        ]
-        actions.extend(adds)
-        if _rt_active(head.protocol, head.configuration):
-            actions.extend(_stamp_row_ids(
-                adds, replay(table_dir).domain_metadata, version
-            ))
-        actions.append({
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "OPTIMIZE",
-                "operationParameters": {
-                    "targetFiles": target_files,
-                    "clusterBy": list(cols),
-                },
-                "engineInfo": "rearc-takehome-spark-cleanroom",
-            }
-        })
-        try:
-            _commit_actions(
-                table_dir, version, actions, head.configuration
-            )
-            return replay(table_dir, version)
-        except _files.ConcurrentCommitError:
-            continue
-    raise RuntimeError(
-        f"clustered optimize of {table_dir} lost 20 races"
+    return _optimize_commit(
+        table_dir, head, head.files, adds,
+        {"targetFiles": target_files, "clusterBy": list(cols)},
     )
 
 
@@ -2573,22 +2615,11 @@ def delta_create_identity_table(
     proto = _merge_feature_protocol(
         dict(_PROTOCOL), set(), {"identityColumns"}
     )
-    actions = [
-        {"protocol": proto},
-        _meta_action(schema_json, None, pcols, None),
-        {
-            "commitInfo": {
-                "timestamp": _now_ms(),
-                "operation": "CREATE TABLE",
-                "operationParameters": {
-                    "identityColumns": sorted(identity)
-                },
-                "engineInfo": "rearc-takehome-spark-cleanroom",
-            }
-        },
-    ]
-    _commit_actions(table_dir, 0, actions, None)
-    return replay(table_dir, 0)
+    return _commit(
+        table_dir, 0,
+        [{"protocol": proto}, _meta_action(schema_json, None, pcols, None)],
+        None, "CREATE TABLE", {"identityColumns": sorted(identity)},
+    )
 
 
 # --- row tracking (PROTOCOL.md "Row Tracking") -----------------------
@@ -2774,7 +2805,6 @@ def write_delta(
     table_dir: str,
     mode: str = "overwrite",
     stats_cols: list[str] | None = None,
-    max_retries: int = 20,
     partition_by: list[str] | None = None,
     operation_parameters: dict | None = None,
     txn: tuple[str, int] | None = None,
@@ -2828,8 +2858,6 @@ def write_delta(
             f"column_mapping={column_mapping!r}: 'name' and 'id' "
             "modes are implemented"
         )
-    import pyarrow.parquet as pq
-
     schema_json = df.schema.json()
     pcols = list(partition_by or [])
     validated: tuple | None = None
@@ -3071,31 +3099,7 @@ def write_delta(
     phys_stats = (
         [pstat(c) for c in stats_cols] if stats_cols else stats_cols
     )
-    if wpcols:
-        written = _write_partitioned_data_files(
-            wdf, table_dir, wpcols
-        )
-    else:
-        written = _files._write_data_files(wdf, table_dir)
-    # one footer read per file: zero-row filter (empty input
-    # partitions are valid parquet but native writers never register
-    # them) AND the stats JSON come from the same metadata object
-    metas = {
-        rel: pq.ParquetFile(os.path.join(table_dir, rel)).metadata
-        for rel in written
-    }
-    adds = [
-        _add_action(
-            table_dir,
-            rel,
-            phys_stats,
-            True,
-            _hive_partition_values(rel, wpcols) if wpcols else None,
-            md=md,
-        )
-        for rel, md in metas.items()
-        if md.num_rows
-    ]
+    adds, metas = _write_adds(wdf, table_dir, wpcols, phys_stats)
     if id_guard:
         # _identity_generate allocates per-partition ranges from a
         # SEPARATE count job; a nondeterministic input (rand/sample/
@@ -3160,7 +3164,7 @@ def write_delta(
         # under data/<uuid>/ and the loop below revalidates against
         # whatever head it finds, exactly as for any concurrent writer.
         _commit_gate()
-    for _ in range(max_retries):
+    for _ in range(_MAX_COMMIT_RETRIES):
         versions = list_delta_versions(table_dir)
         head = replay(table_dir) if versions else None
         if head is not None:
@@ -3331,36 +3335,22 @@ def write_delta(
                     "lastUpdated": _now_ms(),
                 }
             })
-        actions.append(
-            {
-                "commitInfo": {
-                    "timestamp": _now_ms(),
-                    "operation": "WRITE",
-                    # caller-supplied params ride along (e.g. a
-                    # streaming sink's batch id for restart
-                    # idempotency — the txn/appId pattern); commit
-                    # files stay immutable, so stamping happens HERE
-                    "operationParameters": {
-                        "mode": mode.upper(),
-                        **(operation_parameters or {}),
-                    },
-                    "engineInfo": "rearc-takehome-spark-cleanroom",
-                }
-            }
-        )
         try:
-            _commit_actions(
+            return _commit(
                 table_dir, version, actions,
                 new_config if new_config is not None
                 else (head.configuration if head else None),
+                "WRITE",
+                # caller-supplied params ride along (e.g. a streaming
+                # sink's batch id for restart idempotency — the
+                # txn/appId pattern); commit files stay immutable, so
+                # stamping happens HERE
+                {"mode": mode.upper(), **(operation_parameters or {})},
             )
-            out = replay(table_dir, version)
-            _maybe_auto_checkpoint(table_dir, out)
-            return out
         except _files.ConcurrentCommitError:
             continue  # re-read the head; our data files stay valid
     raise RuntimeError(f"delta commit to {table_dir} lost "
-                       f"{max_retries} races")
+                       f"{_MAX_COMMIT_RETRIES} races")
 
 
 def write_checkpoint(
@@ -3412,6 +3402,9 @@ def write_checkpoint(
             state.protocol, {"v2Checkpoint"}, {"v2Checkpoint"}
         )
         if pa_up:
+            # the one commit that bypasses _commit: the checkpoint
+            # this function writes next covers it, so _commit's
+            # auto-checkpoint could only write a duplicate
             _commit_actions(
                 table_dir,
                 state.version + 1,
@@ -3423,8 +3416,7 @@ def write_checkpoint(
                         "operationParameters": {
                             "feature": "v2Checkpoint"
                         },
-                        "engineInfo":
-                            "rearc-takehome-spark-cleanroom",
+                        "engineInfo": _ENGINE_INFO,
                     }},
                 ],
                 state.configuration,
@@ -3811,22 +3803,67 @@ def delta_scan(
     return df
 
 
+def _optimize_commit(
+    table_dir: str,
+    head: DeltaState,
+    removed: tuple[str, ...] | list[str],
+    adds: list[dict],
+    parameters: dict,
+) -> DeltaState:
+    """Commit an OPTIMIZE rewrite computed against ``head``: remove the
+    ``removed`` paths, add ``adds``, both ``dataChange: false``. Race
+    rule: a concurrent APPEND composes with a verbatim retry (its
+    files are not in our remove set, so the retried commit yields the
+    append's rows + the rewrite = exactly the right content), but any
+    interleaved REMOVE (overwrite/another compact) raises
+    ConcurrentCommitError — retrying verbatim would resurrect its
+    removed rows. Each attempt restamps row ids against the CURRENT
+    head's high-water mark, which a composed append advances."""
+    rt = _rt_active(head.protocol, head.configuration)
+    for _ in range(_MAX_COMMIT_RETRIES):
+        version = list_delta_versions(table_dir)[-1] + 1
+        # inspect commits that landed since we computed the rewrite
+        for cv in range(head.version + 1, version):
+            with open(_commit_path(table_dir, cv)) as f:
+                if any("remove" in json.loads(line) for line in f):
+                    raise _files.ConcurrentCommitError(
+                        f"OPTIMIZE of {table_dir} computed against "
+                        f"v{head.version} raced a remove in v{cv}; "
+                        "re-run against the new head"
+                    )
+        ts = _now_ms()
+        actions: list[dict] = [
+            _remove_action(head.adds[p], ts, False) for p in removed
+        ]
+        actions.extend(adds)
+        if rt:
+            actions.extend(_stamp_row_ids(
+                adds, replay(table_dir).domain_metadata, version
+            ))
+        try:
+            return _commit(
+                table_dir, version, actions, head.configuration,
+                "OPTIMIZE", parameters, ts=ts,
+            )
+        except _files.ConcurrentCommitError:
+            continue  # appends compose; removes raised above
+    raise RuntimeError(
+        f"OPTIMIZE of {table_dir} lost {_MAX_COMMIT_RETRIES} races"
+    )
+
+
 def delta_compact(
     spark: SparkSession,
     table_dir: str,
     target_files: int,
     stats_cols: list[str] | None = None,
-    max_retries: int = 20,
 ) -> DeltaState:
     """OPTIMIZE: rewrite the head's content into ``target_files``
     files and commit remove+add with ``dataChange: false`` — history
     stays time-travelable, the change feed skips the rewrite (native
-    semantics). Race rule: a concurrent APPEND composes with a verbatim
-    retry (its files are not in our remove set, so the retried commit
-    yields append's rows + the rewrite = exactly the right content),
-    but any interleaved REMOVE (overwrite/another compact) raises
-    ConcurrentCommitError — retrying verbatim would resurrect its
-    removed rows."""
+    semantics). A concurrent append composes with the commit, an
+    interleaved remove raises ConcurrentCommitError
+    (:func:`_optimize_commit`)."""
     if target_files < 1:
         raise ValueError("target_files must be >= 1")
     head = replay(table_dir)
@@ -3836,7 +3873,6 @@ def delta_compact(
     if head.partition_cols:
         return _delta_compact_partitioned(
             spark, table_dir, head, target_files, stats_cols,
-            max_retries,
         )
     rt_on = _rt_enabled(head.configuration)
     mat_cols: list = []
@@ -3855,73 +3891,16 @@ def delta_compact(
     df, _wp, pstat = _physical_payload(
         df, head.schema, extra_cols=mat_cols
     )
-    rel_files = _files._write_data_files(
-        df.coalesce(target_files), table_dir
-    )
-    import pyarrow.parquet as pq
-
     phys_stats = (
         [pstat(c) for c in stats_cols] if stats_cols else stats_cols
     )
-    metas = {
-        rel: pq.ParquetFile(os.path.join(table_dir, rel)).metadata
-        for rel in rel_files
-    }
-    adds = [
-        _add_action(table_dir, rel, phys_stats, False, None, md=md)
-        for rel, md in metas.items()
-        if md.num_rows
-    ]
-    computed_against = head.version
-    for _ in range(max_retries):
-        versions = list_delta_versions(table_dir)
-        version = versions[-1] + 1
-        # inspect commits that landed since we computed the rewrite
-        for cv in range(computed_against + 1, version):
-            with open(_commit_path(table_dir, cv)) as f:
-                for line in f:
-                    a = json.loads(line)
-                    if "remove" in a:
-                        raise _files.ConcurrentCommitError(
-                            f"compaction of {table_dir} computed "
-                            f"against v{computed_against} raced a "
-                            f"remove in v{cv}; re-run against the "
-                            "new head"
-                        )
-        ts = _now_ms()
-        actions: list[dict] = [
-            _remove_action(head.adds[p], ts, False)
-            for p in head.files
-        ]
-        actions.extend(adds)
-        if _rt_active(head.protocol, head.configuration):
-            # concurrent appends compose with a verbatim retry, but
-            # they ADVANCE the row-id high-water mark — restamp
-            # against the CURRENT head's domain metadata each attempt
-            actions.extend(_stamp_row_ids(
-                adds, replay(table_dir).domain_metadata, version
-            ))
-        actions.append(
-            {
-                "commitInfo": {
-                    "timestamp": ts,
-                    "operation": "OPTIMIZE",
-                    "operationParameters": {
-                        "targetFiles": target_files
-                    },
-                    "engineInfo": "rearc-takehome-spark-cleanroom",
-                }
-            }
-        )
-        try:
-            _commit_actions(
-                table_dir, version, actions, head.configuration
-            )
-            return replay(table_dir, version)
-        except _files.ConcurrentCommitError:
-            continue  # appends compose; removes raised above
-    raise RuntimeError(
-        f"delta compaction of {table_dir} lost {max_retries} races"
+    adds, _ = _write_adds(
+        df.coalesce(target_files), table_dir,
+        stats_cols=phys_stats, data_change=False,
+    )
+    return _optimize_commit(
+        table_dir, head, head.files, adds,
+        {"targetFiles": target_files},
     )
 
 
@@ -3942,7 +3921,6 @@ def _delta_compact_partitioned(
     head: DeltaState,
     target_files: int,
     stats_cols: list[str] | None,
-    max_retries: int,
 ) -> DeltaState:
     """Per-partition bin packing — how OPTIMIZE works on partitioned
     tables (files never combine across partition boundaries): every
@@ -3956,7 +3934,6 @@ def _delta_compact_partitioned(
     any interleaved remove raises. Work scales with the partitions
     that need packing, not table size; each partition rewrite is one
     distributed read+write of just that partition's files."""
-    import pyarrow.parquet as pq
     from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(json.loads(head.schema))
@@ -4049,70 +4026,16 @@ def _delta_compact_partitioned(
     phys_stats = (
         [pstat(c) for c in stats_cols] if stats_cols else stats_cols
     )
-    metas = {
-        rel: pq.ParquetFile(os.path.join(table_dir, rel)).metadata
-        for rel in sorted(new_rels)
-    }
-    adds = [
-        _add_action(
-            table_dir, rel, phys_stats, False,
-            _hive_partition_values(
-                rel, [pphys[c] for c in pcols]
-            ),
-            md=md,
-        )
-        for rel, md in metas.items()
-        if md.num_rows
-    ]
-    computed_against = head.version
-    for _ in range(max_retries):
-        versions = list_delta_versions(table_dir)
-        version = versions[-1] + 1
-        for cv in range(computed_against + 1, version):
-            with open(_commit_path(table_dir, cv)) as f:
-                for line in f:
-                    a = json.loads(line)
-                    if "remove" in a:
-                        raise _files.ConcurrentCommitError(
-                            f"compaction of {table_dir} computed "
-                            f"against v{computed_against} raced a "
-                            f"remove in v{cv}; re-run against the "
-                            "new head"
-                        )
-        ts = _now_ms()
-        actions: list[dict] = [
-            _remove_action(head.adds[p], ts, False)
-            for p in replaced
-        ]
-        actions.extend(adds)
-        if _rt_active(head.protocol, head.configuration):
-            # restamp per attempt — a composed concurrent append
-            # advances the row-id high-water mark
-            actions.extend(_stamp_row_ids(
-                adds, replay(table_dir).domain_metadata, version
-            ))
-        actions.append(
-            {
-                "commitInfo": {
-                    "timestamp": ts,
-                    "operation": "OPTIMIZE",
-                    "operationParameters": {
-                        "targetFiles": target_files,
-                        "partitionsRewritten": len(to_pack),
-                    },
-                    "engineInfo": "rearc-takehome-spark-cleanroom",
-                }
-            }
-        )
-        try:
-            _commit_actions(
-                table_dir, version, actions, head.configuration
-            )
-            return replay(table_dir, version)
-        except _files.ConcurrentCommitError:
-            continue  # appends compose; removes raised above
-    raise RuntimeError(
-        f"delta compaction of {table_dir} lost {max_retries} races"
+    adds, _ = _file_adds(
+        table_dir, sorted(new_rels), phys_stats, False,
+        [pphys[c] for c in pcols],
+    )
+    return _optimize_commit(
+        table_dir, head, replaced, adds,
+        {
+            "targetFiles": target_files,
+            "partitionsRewritten": len(to_pack),
+        },
     )
 
 
@@ -4698,30 +4621,7 @@ def delta_merge_upsert(
     merged, wpcols, _ = _physical_payload(
         merged, head.schema, pcols, extra_cols=mat_cols
     )
-    if wpcols:
-        written = _write_partitioned_data_files(
-            merged, table_dir, wpcols
-        )
-    else:
-        written = _files._write_data_files(merged, table_dir)
-    import pyarrow.parquet as pq
-
-    metas = {
-        rel: pq.ParquetFile(os.path.join(table_dir, rel)).metadata
-        for rel in written
-    }
-    adds = [
-        _add_action(
-            table_dir,
-            rel,
-            None,
-            True,
-            _hive_partition_values(rel, wpcols) if wpcols else None,
-            md=md,
-        )
-        for rel, md in metas.items()
-        if md.num_rows
-    ]
+    adds, _ = _write_adds(merged, table_dir, wpcols)
     ts = _now_ms()
     actions: list[dict] = list(cdc_actions)
     actions.extend(
@@ -4733,22 +4633,10 @@ def delta_merge_upsert(
         actions.extend(_stamp_row_ids(
             adds, head.domain_metadata, head.version + 1
         ))
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "MERGE",
-                "operationParameters": {"keys": list(keys)},
-                "engineInfo": "rearc-takehome-spark-cleanroom",
-            }
-        }
+    return _commit(
+        table_dir, head.version + 1, actions, head.configuration,
+        "MERGE", {"keys": list(keys)}, ts=ts,
     )
-    _commit_actions(
-        table_dir, head.version + 1, actions, head.configuration
-    )
-    out = replay(table_dir, head.version + 1)
-    _maybe_auto_checkpoint(table_dir, out)
-    return out
 
 
 def _delta_merge_via_dv(
@@ -4761,8 +4649,6 @@ def _delta_merge_via_dv(
     """DV-enabled MERGE body (gates already ran in
     delta_merge_upsert): matched target rows -> deletion vectors on
     their existing files, all update rows -> new appended files."""
-    import pyarrow.parquet as pq
-
     from pyspark.sql.types import StructType
 
     rt_on = _rt_enabled(head.configuration)
@@ -4837,66 +4723,20 @@ def _delta_merge_via_dv(
     payload, wpcols, _ = _physical_payload(
         payload, head.schema, pcols, extra_cols=mat_cols
     )
-    if wpcols:
-        written = _write_partitioned_data_files(
-            payload, table_dir, wpcols
-        )
-    else:
-        written = _files._write_data_files(payload, table_dir)
-    metas = {
-        rel: pq.ParquetFile(os.path.join(table_dir, rel)).metadata
-        for rel in written
-    }
-    new_adds = [
-        _add_action(
-            table_dir,
-            rel,
-            None,
-            True,
-            _hive_partition_values(rel, wpcols) if wpcols else None,
-            md=md,
-        )
-        for rel, md in metas.items()
-        if md.num_rows
-    ]
-    actions: list[dict] = []
-    actions.extend(cdc_actions)
-    pa = _merge_feature_protocol(
-        head.protocol, {"deletionVectors"}, {"deletionVectors"}
-    )
-    if pa:
-        actions.append({"protocol": pa})
-    actions.extend(removes)
-    actions.extend(dv_adds)
-    actions.extend(new_adds)
-    if _rt_active(head.protocol, head.configuration):
-        actions.extend(_stamp_row_ids(
-            new_adds, head.domain_metadata, head.version + 1
-        ))
-    actions.append(
+    new_adds, _ = _write_adds(payload, table_dir, wpcols)
+    return _commit(
+        table_dir, head.version + 1,
+        _dv_commit_actions(head, cdc_actions, removes, dv_adds, new_adds),
+        head.configuration,
+        "MERGE", {"keys": list(keys), "strategy": "deletionVectors"},
         {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "MERGE",
-                "operationParameters": {
-                    "keys": list(keys), "strategy": "deletionVectors",
-                },
-                "operationMetrics": {
-                    "numTargetRowsMatched": metrics["n_marked"],
-                    "numDeletionVectorsAdded": metrics["n_dv"],
-                    "numRemovedFiles": metrics["n_dead_files"],
-                    "numAddedFiles": len(new_adds),
-                },
-                "engineInfo": "rearc-takehome-spark-cleanroom",
-            }
-        }
+            "numTargetRowsMatched": metrics["n_marked"],
+            "numDeletionVectorsAdded": metrics["n_dv"],
+            "numRemovedFiles": metrics["n_dead_files"],
+            "numAddedFiles": len(new_adds),
+        },
+        ts,
     )
-    _commit_actions(
-        table_dir, head.version + 1, actions, head.configuration
-    )
-    out = replay(table_dir, head.version + 1)
-    _maybe_auto_checkpoint(table_dir, out)
-    return out
 
 
 def delta_alter_properties(
@@ -5028,25 +4868,15 @@ def delta_alter_properties(
         )
     )
     actions.extend(rt_actions)
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": _now_ms(),
-                "operation": "SET TBLPROPERTIES",
-                "operationParameters": {
-                    "properties": sorted(set_props),
-                    "unset": sorted(unset),
-                },
-                "engineInfo": "rearc-takehome-spark-cleanroom",
-                # the enablement commit's OWN ict must equal the
-                # recorded enablement timestamp (pre-computed above);
-                # _commit_actions keeps a pre-set value
-                **({"inCommitTimestamp": ict0} if ict0 else {}),
-            }
-        }
+    return _commit(
+        table_dir, head.version + 1, actions, config,
+        "SET TBLPROPERTIES",
+        {"properties": sorted(set_props), "unset": sorted(unset)},
+        # the enablement commit's OWN ict must equal the recorded
+        # enablement timestamp (pre-computed above); _commit_actions
+        # keeps a pre-set value
+        ict=ict0,
     )
-    _commit_actions(table_dir, head.version + 1, actions, config)
-    return replay(table_dir, head.version + 1)
 
 
 def delta_rename_column(
@@ -5108,28 +4938,16 @@ def delta_rename_column(
         ({**f, "name": new} if f["name"] == old else f)
         for f in sj["fields"]
     ]
-    actions = [
-        _meta_action(
-            json.dumps({**sj, "fields": fields}),
-            head.metadata_id,
-            pcols,
-            head.configuration,
-        ),
-        {
-            "commitInfo": {
-                "timestamp": _now_ms(),
-                "operation": "RENAME COLUMN",
-                "operationParameters": {"from": old, "to": new},
-                "engineInfo": "rearc-takehome-spark-cleanroom",
-            }
-        },
-    ]
-    _commit_actions(
-        table_dir, head.version + 1, actions, head.configuration
+    meta = _meta_action(
+        json.dumps({**sj, "fields": fields}),
+        head.metadata_id,
+        pcols,
+        head.configuration,
     )
-    out = replay(table_dir, head.version + 1)
-    _maybe_auto_checkpoint(table_dir, out)
-    return out
+    return _commit(
+        table_dir, head.version + 1, [meta], head.configuration,
+        "RENAME COLUMN", {"from": old, "to": new},
+    )
 
 
 def delta_drop_column(table_dir: str, col: str) -> DeltaState:
@@ -5183,28 +5001,16 @@ def delta_drop_column(table_dir: str, col: str) -> DeltaState:
             f"{hit} — drop or rewrite them first"
         )
     fields = [f for f in sj["fields"] if f["name"] != col]
-    actions = [
-        _meta_action(
-            json.dumps({**sj, "fields": fields}),
-            head.metadata_id,
-            list(head.partition_cols),
-            head.configuration,
-        ),
-        {
-            "commitInfo": {
-                "timestamp": _now_ms(),
-                "operation": "DROP COLUMNS",
-                "operationParameters": {"columns": [col]},
-                "engineInfo": "rearc-takehome-spark-cleanroom",
-            }
-        },
-    ]
-    _commit_actions(
-        table_dir, head.version + 1, actions, head.configuration
+    meta = _meta_action(
+        json.dumps({**sj, "fields": fields}),
+        head.metadata_id,
+        list(head.partition_cols),
+        head.configuration,
     )
-    out = replay(table_dir, head.version + 1)
-    _maybe_auto_checkpoint(table_dir, out)
-    return out
+    return _commit(
+        table_dir, head.version + 1, [meta], head.configuration,
+        "DROP COLUMNS", {"columns": [col]},
+    )
 
 
 def delta_upgrade_column_mapping(table_dir: str) -> DeltaState:
@@ -5261,20 +5067,11 @@ def delta_upgrade_column_mapping(table_dir: str) -> DeltaState:
             list(head.partition_cols), config,
         )
     )
-    actions.append({
-        "commitInfo": {
-            "timestamp": _now_ms(),
-            "operation": "SET TBLPROPERTIES",
-            "operationParameters": {
-                "properties": '{"delta.columnMapping.mode":"name"}'
-            },
-            "engineInfo": "rearc-takehome-spark-cleanroom",
-        }
-    })
-    _commit_actions(table_dir, head.version + 1, actions, config)
-    out = replay(table_dir, head.version + 1)
-    _maybe_auto_checkpoint(table_dir, out)
-    return out
+    return _commit(
+        table_dir, head.version + 1, actions, config,
+        "SET TBLPROPERTIES",
+        {"properties": '{"delta.columnMapping.mode":"name"}'},
+    )
 
 
 # PROTOCOL.md "Type Widening": the allowed metadata-only widenings —
@@ -5413,23 +5210,11 @@ def delta_widen_column(
             head.configuration,
         )
     )
-    actions.append({
-        "commitInfo": {
-            "timestamp": _now_ms(),
-            "operation": "CHANGE COLUMN",
-            "operationParameters": {
-                "column": col, "from": str(old_type),
-                "to": str(new_type),
-            },
-            "engineInfo": "rearc-takehome-spark-cleanroom",
-        }
-    })
-    _commit_actions(
-        table_dir, head.version + 1, actions, head.configuration
+    return _commit(
+        table_dir, head.version + 1, actions, head.configuration,
+        "CHANGE COLUMN",
+        {"column": col, "from": str(old_type), "to": str(new_type)},
     )
-    out = replay(table_dir, head.version + 1)
-    _maybe_auto_checkpoint(table_dir, out)
-    return out
 
 
 def delta_delete(
@@ -5485,7 +5270,7 @@ def delta_delete(
         matched = matched.persist()
     try:
         hits = matched.select(_DV_PATH, _DV_IDX)
-        actions: list[dict] = []
+        cdc_actions: list[dict] = []
         if cdf:
             # the bitmap pass and the change-data file write are
             # independent jobs over the SAME persisted matched set —
@@ -5513,53 +5298,31 @@ def delta_delete(
                     head.schema,
                     head.partition_cols,
                 )
-                marks = f_marks.result()
-                cdc_actions = f_cdc.result()
-            if marks is None:  # unreachable with count > 0; keep the
-                return head    # serial path's contract regardless
-            removes, dv_adds, metrics, ts = marks
+            marks = _dv_marks_or_discard(table_dir, f_marks, f_cdc)
             # CDF contract: a DV delete is NOT derivable from
             # add/remove by readers that trust cdc files, so the
             # deleted rows ride a change-data file
-            actions.extend(cdc_actions)
+            cdc_actions = f_cdc.result()
         else:
             marks = _dv_mark_actions(spark, table_dir, head, hits)
-            if marks is None:
-                return head  # nothing matched: no commit, converged
-            removes, dv_adds, metrics, ts = marks
+        if marks is None:
+            return head  # nothing matched: no commit, converged
+        removes, dv_adds, metrics, ts = marks
     finally:
         if cdf:
             matched.unpersist()
-    pa = _merge_feature_protocol(
-        head.protocol, {"deletionVectors"}, {"deletionVectors"}
-    )
-    if pa:
-        actions.append({"protocol": pa})
-    actions.extend(removes)
-    actions.extend(dv_adds)
-    actions.append(
+    return _commit(
+        table_dir, head.version + 1,
+        _dv_commit_actions(head, cdc_actions, removes, dv_adds),
+        head.configuration,
+        "DELETE", {"predicate": str(predicate)},
         {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "DELETE",
-                "operationParameters": {
-                    "predicate": str(predicate)
-                },
-                "operationMetrics": {
-                    "numDeletedRows": metrics["n_marked"],
-                    "numDeletionVectorsAdded": metrics["n_dv"],
-                    "numRemovedFiles": metrics["n_dead_files"],
-                },
-                "engineInfo": "rearc-takehome-spark-cleanroom",
-            }
-        }
+            "numDeletedRows": metrics["n_marked"],
+            "numDeletionVectorsAdded": metrics["n_dv"],
+            "numRemovedFiles": metrics["n_dead_files"],
+        },
+        ts,
     )
-    _commit_actions(
-        table_dir, head.version + 1, actions, head.configuration
-    )
-    out = replay(table_dir, head.version + 1)
-    _maybe_auto_checkpoint(table_dir, out)
-    return out
 
 
 def _dv_mark_actions(
@@ -5704,6 +5467,50 @@ def _dv_mark_actions(
         "n_dead_files": len(merged) - len(dv_rels),
     }
     return removes, dv_adds, metrics, ts
+
+
+def _dv_marks_or_discard(table_dir: str, f_marks, f_cdc, f_write=None):
+    """The bitmap leg's result once every concurrent DML leg has
+    finished. If the bitmap pass raised, best-effort delete what the
+    sibling legs wrote (their ``_change_data/<uuid>/`` and
+    ``data/<uuid>/`` roots — no commit will ever reference them) and
+    re-raise."""
+    import shutil
+
+    try:
+        return f_marks.result()
+    except Exception:
+        rels: list[str] = []
+        if f_cdc is not None and f_cdc.exception() is None:
+            rels += [a["cdc"]["path"] for a in f_cdc.result()]
+        if f_write is not None and f_write.exception() is None:
+            rels += list(f_write.result()[1])  # every written file
+        for root in {os.path.join(*r.split(os.sep)[:2]) for r in rels}:
+            shutil.rmtree(
+                os.path.join(table_dir, root), ignore_errors=True
+            )
+        raise
+
+
+def _dv_commit_actions(
+    head: DeltaState, cdc_actions, removes, dv_adds, new_adds=()
+) -> list[dict]:
+    """A DV commit's actions (DELETE, UPDATE, DV MERGE) in log order:
+    change-data files, the deletionVectors protocol upgrade when the
+    table lacks it, removes, DV-carrying re-adds, new files, and the
+    row-id stamps of the new files."""
+    actions = list(cdc_actions)
+    pa = _merge_feature_protocol(
+        head.protocol, {"deletionVectors"}, {"deletionVectors"}
+    )
+    if pa:
+        actions.append({"protocol": pa})
+    actions += [*removes, *dv_adds, *new_adds]
+    if _rt_active(head.protocol, head.configuration):
+        actions.extend(_stamp_row_ids(
+            new_adds, head.domain_metadata, head.version + 1
+        ))
+    return actions
 
 
 def delta_update(
@@ -5863,77 +5670,25 @@ def _delta_update_commit(
                 _write_cdc_files,
                 [pre, post], table_dir, head.schema, pcols,
             )
-        if wpcols:
-            f_write = pool.submit(
-                _write_partitioned_data_files,
-                wupdated, table_dir, wpcols,
-            )
-        else:
-            f_write = pool.submit(
-                _files._write_data_files, wupdated, table_dir
-            )
-        marks = f_marks.result()
-        cdc_actions = f_cdc.result() if f_cdc is not None else []
-        written = f_write.result()
+        f_write = pool.submit(_write_adds, wupdated, table_dir, wpcols)
+    marks = _dv_marks_or_discard(table_dir, f_marks, f_cdc, f_write)
     if marks is None:  # unreachable with count > 0; keep the serial
         return head    # path's contract regardless
     removes, dv_adds, metrics, ts = marks
-    import pyarrow.parquet as pq
-
-    metas = {
-        rel: pq.ParquetFile(os.path.join(table_dir, rel)).metadata
-        for rel in written
-    }
-    new_adds = [
-        _add_action(
-            table_dir,
-            rel,
-            None,
-            True,
-            _hive_partition_values(rel, wpcols) if wpcols else None,
-            md=md,
-        )
-        for rel, md in metas.items()
-        if md.num_rows
-    ]
-
-    actions: list[dict] = []
-    actions.extend(cdc_actions)
-    pa = _merge_feature_protocol(
-        head.protocol, {"deletionVectors"}, {"deletionVectors"}
-    )
-    if pa:
-        actions.append({"protocol": pa})
-    actions.extend(removes)
-    actions.extend(dv_adds)
-    actions.extend(new_adds)
-    if _rt_active(head.protocol, head.configuration):
-        actions.extend(_stamp_row_ids(
-            new_adds, head.domain_metadata, head.version + 1
-        ))
-    actions.append(
+    cdc_actions = f_cdc.result() if f_cdc is not None else []
+    new_adds, _ = f_write.result()
+    return _commit(
+        table_dir, head.version + 1,
+        _dv_commit_actions(head, cdc_actions, removes, dv_adds, new_adds),
+        head.configuration,
+        "UPDATE", {"predicate": str(predicate)},
         {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "UPDATE",
-                "operationParameters": {
-                    "predicate": str(predicate)
-                },
-                "operationMetrics": {
-                    "numUpdatedRows": metrics["n_marked"],
-                    "numDeletionVectorsAdded": metrics["n_dv"],
-                    "numAddedFiles": len(new_adds),
-                },
-                "engineInfo": "rearc-takehome-spark-cleanroom",
-            }
-        }
+            "numUpdatedRows": metrics["n_marked"],
+            "numDeletionVectorsAdded": metrics["n_dv"],
+            "numAddedFiles": len(new_adds),
+        },
+        ts,
     )
-    _commit_actions(
-        table_dir, head.version + 1, actions, head.configuration
-    )
-    out = replay(table_dir, head.version + 1)
-    _maybe_auto_checkpoint(table_dir, out)
-    return out
 
 
 def delta_clone(
@@ -6045,28 +5800,18 @@ def delta_clone(
                 # offset within the bin is unchanged
             }
         actions.append({"add": a})
-    actions.append({
-        "commitInfo": {
-            "timestamp": ict0 or _now_ms(),
-            "operation": "CLONE",
-            "operationParameters": {
-                "source": os.path.abspath(source_dir),
-                "sourceVersion": src.version,
-            },
-            "engineInfo": "rearc-takehome-spark-cleanroom",
-            # pin the clone commit's ICT to the enablement
-            # timestamp recorded in its own metaData (the alter
-            # path's invariant: enablement properties == the
-            # enabling commit's own ict); _commit_actions honors a
-            # pre-set value
-            **({"inCommitTimestamp": ict0} if ict0 else {}),
-        }
-    })
-    os.makedirs(_log_dir(target_dir), exist_ok=True)
-    _commit_actions(target_dir, 0, actions, cfg)
-    out = replay(target_dir, 0)
-    _maybe_auto_checkpoint(target_dir, out)
-    return out
+    return _commit(
+        target_dir, 0, actions, cfg, "CLONE",
+        {
+            "source": os.path.abspath(source_dir),
+            "sourceVersion": src.version,
+        },
+        # pin the clone commit's ICT to the enablement timestamp
+        # recorded in its own metaData (the alter path's invariant:
+        # enablement properties == the enabling commit's own ict);
+        # _commit_actions honors a pre-set value
+        ts=ict0, ict=ict0,
+    )
 
 
 def convert_to_delta(
@@ -6201,22 +5946,10 @@ def convert_to_delta(
                 "stats": row.stats,
             }
         })
-    actions.append({
-        "commitInfo": {
-            "timestamp": _now_ms(),
-            "operation": "CONVERT",
-            "operationParameters": {
-                "numFiles": len(rels),
-                "partitionedBy": json.dumps(pcols),
-            },
-            "engineInfo": "rearc-takehome-spark-cleanroom",
-        }
-    })
-    os.makedirs(_log_dir(table_dir), exist_ok=True)
-    _commit_actions(table_dir, 0, actions, {})
-    out = replay(table_dir, 0)
-    _maybe_auto_checkpoint(table_dir, out)
-    return out
+    return _commit(
+        table_dir, 0, actions, {}, "CONVERT",
+        {"numFiles": len(rels), "partitionedBy": json.dumps(pcols)},
+    )
 
 
 def delta_restore(table_dir: str, version: int) -> DeltaState:
@@ -6304,26 +6037,15 @@ def delta_restore(table_dir: str, version: int) -> DeltaState:
             unstamped, head.domain_metadata, head.version + 1,
             table_dir,
         ))
-    actions.append(
+    return _commit(
+        table_dir, head.version + 1, actions, head.configuration,
+        "RESTORE", {"version": version},
         {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "RESTORE",
-                "operationParameters": {"version": version},
-                "operationMetrics": {
-                    "numRestoredFiles": len(to_add),
-                    "numRemovedFiles": len(to_remove),
-                },
-                "engineInfo": "rearc-takehome-spark-cleanroom",
-            }
-        }
+            "numRestoredFiles": len(to_add),
+            "numRemovedFiles": len(to_remove),
+        },
+        ts,
     )
-    _commit_actions(
-        table_dir, head.version + 1, actions, head.configuration
-    )
-    out = replay(table_dir, head.version + 1)
-    _maybe_auto_checkpoint(table_dir, out)
-    return out
 
 
 def vacuum_delta(table_dir: str, retention_ms: int = 0) -> int:

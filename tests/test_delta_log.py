@@ -1437,6 +1437,45 @@ def test_checkpoint_interval_auto_checkpoints(spark, tmp_path):
     assert dl._checkpoint_versions(t) == [3, 6]
     assert dl._last_checkpoint(t) == 6
     assert dl.read_delta(spark, t).count() == 3
+    # every operation commits through the same path, OPTIMIZE and SET
+    # TBLPROPERTIES included
+    for k in (5, 6):
+        dl.write_delta(
+            spark.createDataFrame([(k,)], "k long"), t, "append"
+        )  # 7, 8
+    dl.delta_compact(spark, t, target_files=1)  # 9: OPTIMIZE -> auto
+    assert dl._checkpoint_versions(t) == [3, 6, 9]
+    for k in (7, 8):
+        dl.write_delta(
+            spark.createDataFrame([(k,)], "k long"), t, "append"
+        )  # 10, 11
+    dl.delta_alter_properties(
+        spark, t, {"delta.appendOnly": "false"}
+    )  # 12: SET TBLPROPERTIES -> auto
+    assert dl._checkpoint_versions(t) == [3, 6, 9, 12]
+    assert dl._last_checkpoint(t) == 12
+    assert dl.read_delta(spark, t).count() == 7
+
+
+def test_one_commit_path():
+    """Every Delta commit goes through ``_commit``: ``_commit_actions``
+    is called only from it and from ``write_checkpoint`` (whose
+    protocol upgrade is followed by its own checkpoint), and the
+    commitInfo engine string is spelled once."""
+    import ast
+    import inspect
+
+    src = inspect.getsource(dl)
+    callers = []
+    for fn in ast.walk(ast.parse(src)):
+        if isinstance(fn, ast.FunctionDef):
+            for n in ast.walk(fn):
+                if isinstance(n, ast.Call) and getattr(
+                    n.func, "id", None
+                ) == "_commit_actions":
+                    callers.append(fn.name)
+    assert sorted(callers) == ["_commit", "write_checkpoint"]
+    assert src.count('"rearc-takehome-spark-cleanroom"') == 1
 
 
 def test_timestamp_as_of_ignores_checkpoint_mtime(spark, tmp_path):

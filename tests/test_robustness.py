@@ -93,3 +93,68 @@ def test_cm_id_roundtrip_failed_v1_append_commits_nothing_after_it(
     with pytest.raises(OSError, match="injected v1"):
         REGISTRY["orders_cm_id_roundtrip"].spark(spark, sf_smoke)
     assert dl.list_delta_versions(tables[0]) == [0]
+
+
+def _non_log_files(table_dir):
+    import os
+
+    out = set()
+    for root, dirs, files in os.walk(table_dir):
+        dirs[:] = [d for d in dirs if d != "_delta_log"]
+        out |= {os.path.relpath(os.path.join(root, f), table_dir)
+                for f in files}
+    return out
+
+
+def _cdf_table(spark, table_dir):
+    from rearc_data_engineer_takehome_spark.sources import delta_log as dl
+
+    dl.write_delta(
+        spark.createDataFrame(
+            [(i, f"s{i}") for i in range(6)], "k long, s string"
+        ),
+        table_dir,
+    )
+    dl.delta_alter_properties(
+        spark, table_dir, {"delta.enableChangeDataFeed": "true"}
+    )
+
+
+def _failing_dv_pass(*_a, **_k):
+    raise RuntimeError("injected DV bitmap failure")
+
+
+def test_failed_dv_pass_leaves_no_orphan_cdc_files_on_delete(
+    spark, tmp_path, monkeypatch
+):
+    """A CDF DELETE writes its change-data file concurrently with the
+    DV bitmap pass. When the bitmap pass fails, the change-data files
+    the sibling leg wrote must be deleted: no commit references them."""
+    from rearc_data_engineer_takehome_spark.sources import delta_log as dl
+
+    t = str(tmp_path / "t")
+    _cdf_table(spark, t)
+    before, head = _non_log_files(t), dl.replay(t).version
+    monkeypatch.setattr(dl, "_dv_mark_actions", _failing_dv_pass)
+    with pytest.raises(RuntimeError, match="injected DV"):
+        dl.delta_delete(spark, t, "k < 3")
+    assert _non_log_files(t) == before
+    assert dl.replay(t).version == head
+
+
+def test_failed_dv_pass_leaves_no_orphan_files_on_update(
+    spark, tmp_path, monkeypatch
+):
+    """UPDATE runs the DV bitmap pass, the change-data write and the
+    rewritten-copy write concurrently. When the bitmap pass fails, the
+    change-data and data files of the other two legs must be deleted."""
+    from rearc_data_engineer_takehome_spark.sources import delta_log as dl
+
+    t = str(tmp_path / "t")
+    _cdf_table(spark, t)
+    before, head = _non_log_files(t), dl.replay(t).version
+    monkeypatch.setattr(dl, "_dv_mark_actions", _failing_dv_pass)
+    with pytest.raises(RuntimeError, match="injected DV"):
+        dl.delta_update(spark, t, "k < 3", {"s": "'x'"})
+    assert _non_log_files(t) == before
+    assert dl.replay(t).version == head
