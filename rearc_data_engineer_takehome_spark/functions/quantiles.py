@@ -6,8 +6,8 @@ Spark returns the distinct value exactly when both bracketing ranks
 land on it and otherwise uses the two-sided weighted form
 ``(ceil(h) - h) * lo + (h - floor(h)) * hi`` (h = (n-1)*p), while
 ``quantile_cont`` uses the one-sided ``lo + frac * (hi - lo)``.  The
-forms drift an ulp apart in both directions (see
-``operators/quality.exact_quantiles_bracketed`` for the hypothesis
+forms drift an ulp apart in both directions (see the interpolation in
+``operators/quality._quantiles_in_brackets`` for the hypothesis
 counterexamples), which flips a post-round comparison whenever a value
 lands within an ulp of a rounding half-boundary.  Oracles that gate a
 Spark-side ``percentile()`` therefore render THIS structure instead of

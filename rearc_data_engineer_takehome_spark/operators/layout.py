@@ -10,6 +10,11 @@ footer min/max stats prune scans on ANY of the clustered columns
 Everything is codegen'd JVM expressions — the Morton key is built from
 shiftleft/bitwise-or over per-column quantile ranks, no UDF. One range
 shuffle on the Morton key, identical cost to a plain sorted write.
+
+:func:`table_file_audit` reports file counts, sizes and skew for any
+parquet directory. Acting on it — bin-packing small files — is
+``sources/delta_log.delta_compact``, which commits the rewrite
+atomically on the Delta log.
 """
 
 from __future__ import annotations
@@ -166,96 +171,3 @@ def table_file_audit(
         out = out.unionByName(a)
     return out
 
-
-def compact_table(
-    spark,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> dict:
-    """Execute what :func:`table_file_audit` recommends: rewrite
-    ``path`` as ``recommended_files`` right-sized parquet files —
-    Delta/Iceberg OPTIMIZE's bin-packing half, for plain parquet dirs
-    (thousands of tiny files serialize scheduling and footer reads at
-    100 TB; compaction is the act half of the audit->act loop).
-
-    Relationship to ``sources/writers.compact_parquet_dir``: that is
-    the low-level maintenance primitive — caller-chosen file count,
-    ``coalesce`` (no shuffle, file sizes inherit the input skew), no
-    verification. This operator is the audit-driven front door:
-    recommended count from footer stats, ``repartition`` for evenly
-    sized output, row-count verification before the swap, and
-    crash-recovery/idempotence semantics below.
-
-    Safety contract (LOCAL filesystems only — rename semantics; raises
-    on URI paths): the compacted copy is built in a sibling temp dir,
-    row-count-verified against the source, then swapped in with two
-    renames. The swap itself is two syscalls, not one atomic exchange
-    (POSIX has no portable directory RENAME_EXCHANGE), so a crash
-    between them leaves the table at ``<path>._pre_compact`` and
-    nothing at ``path`` — never a mix of old and new files, and never
-    data loss. The next compact_table call self-recovers: a backup
-    with no live table is restored; a leftover backup BESIDE a live
-    table (crash after the swap landed, before cleanup) is deleted.
-    Callers must quiesce writers; a no-op when the table already has
-    the recommended file count, so re-runs are idempotent and cheap.
-
-    Returns {"n_files_before", "n_files_after", "n_rows",
-    "total_bytes"} for the run log.
-    """
-    import os
-    import shutil
-    import uuid
-
-    if "://" in path:
-        raise ValueError(
-            "compact_table swaps directories with os.replace — local "
-            f"filesystem paths only, got {path!r}. On object storage, "
-            "write the compacted copy to a new prefix and flip the "
-            "table location in the catalog instead."
-        )
-    backup = f"{path}._pre_compact"
-    if os.path.isdir(backup):
-        if not os.path.isdir(path):
-            os.replace(backup, path)  # crash landed mid-swap: restore
-        else:
-            shutil.rmtree(backup)  # crash landed post-swap: residue
-    audit = table_file_audit(
-        spark, {"t": path}, target_file_bytes=target_file_bytes
-    ).collect()[0]
-    n_target = int(audit["recommended_files"])
-    stats = {
-        "n_files_before": int(audit["n_files"]),
-        "n_files_after": int(audit["n_files"]),
-        "n_rows": int(audit["n_rows"]),
-        "total_bytes": int(audit["total_bytes"]),
-    }
-    if int(audit["n_files"]) == n_target:
-        return stats  # already right-sized: no rewrite, no reader gap
-    tmp = f"{path}._compacting.{uuid.uuid4().hex[:12]}"
-    (
-        spark.read.parquet(path)
-        .repartition(n_target)
-        .write.mode("errorifexists")
-        .parquet(tmp)
-    )
-    n_after = spark.read.parquet(tmp).count()
-    if n_after != audit["n_rows"]:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise RuntimeError(
-            f"compact_table: row count changed ({audit['n_rows']} -> "
-            f"{n_after}); source left untouched"
-        )
-    os.replace(path, backup)
-    try:
-        os.replace(tmp, path)
-    except OSError:
-        os.replace(backup, path)  # restore; tmp kept for diagnosis
-        raise
-    shutil.rmtree(backup, ignore_errors=True)
-    files = [
-        f
-        for f in os.listdir(path)
-        if f.endswith(".parquet") and not f.startswith("_")
-    ]
-    stats["n_files_after"] = len(files)
-    return stats

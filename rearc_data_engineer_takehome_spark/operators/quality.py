@@ -104,149 +104,6 @@ def completeness(
     )
 
 
-def exact_quantiles_bracketed(
-    df: DataFrame,
-    col: str,
-    qs: Sequence[float],
-    accuracy: int = 1000,
-) -> DataFrame:
-    """EXACT interpolated quantiles (DuckDB ``quantile_cont`` semantics,
-    bit-identical) without building a full value-count map.
-
-    The classic exact ``percentile`` aggregate hashes every distinct
-    value into per-partition maps and merge-sorts them — on a
-    near-continuous column that is O(n) state (measured ~1.8 s at sf0.1
-    for 583k distinct prices). This uses the distributed-selection
-    shape instead:
-
-      pass 1: one GK sketch (``percentile_approx``) brackets each
-              target rank within ±3n/accuracy rows;
-      pass 2: ONE codegen scan counts rows below each bracket and
-              collects only the in-bracket values (~6n/accuracy
-              doubles) into a sorted array — exact rank arithmetic +
-              linear interpolation then read the answer out of the
-              array. In-plan ``assert_true`` guards fail LOUDLY if a
-              sketch bracket ever misses its rank (cannot silently
-              return a wrong quantile).
-
-    Scale knob: bracket width is ~6n/accuracy ROWS, so ``accuracy``
-    should grow with n to keep the collected array bounded (n=1e12 →
-    accuracy ~1e7 keeps brackets under ~1e6 values). State is two 1-row
-    broadcasts and one bounded array — never an O(distinct) map.
-
-    Returns a 1-row DataFrame with columns ``q0..q{len(qs)-1}``
-    (doubles), interpolated with Spark ``percentile``'s two-sided
-    weighted form (ceil-pos)·v[floor(p)] + (pos-floor)·v[ceil(p)],
-    p = (n-1)·q — bit-identical to ``percentile`` (property-tested)
-    and within-ulp of DuckDB ``quantile_cont``.
-
-    Sibling: :func:`exact_quantiles_scalable` walks distinct-value
-    counts and never materializes a value array — the safer choice on
-    duplicate-heavy columns where a single value could straddle the
-    whole bracket. Both answer exactly when a bracket misses its rank
-    by one (the small-n case where the fractional pad is narrower than
-    one rank) and raise when it misses by more.
-    """
-    pad = 3.0 / accuracy
-    plist = [max(0.0, q - pad) for q in qs] + [min(1.0, q + pad) for q in qs]
-    b = (
-        df.agg(
-            F.count(col).alias("n"),
-            F.percentile_approx(
-                col, F.array(*[F.lit(p) for p in plist]), accuracy
-            ).alias("br"),
-        )
-        .select(
-            "n",
-            *[F.col("br").getItem(i).alias(f"lo{i}") for i in range(len(qs))],
-            *[
-                F.col("br").getItem(i + len(qs)).alias(f"hi{i}")
-                for i in range(len(qs))
-            ],
-        )
-    )
-    j = df.join(F.broadcast(b))
-    aggs = [F.first("n").alias("n")]
-    for i in range(len(qs)):
-        aggs.append(
-            F.sum((F.col(col) < F.col(f"lo{i}")).cast("long")).alias(f"c{i}")
-        )
-        aggs.append(
-            F.sort_array(
-                F.collect_list(
-                    F.when(
-                        (F.col(col) >= F.col(f"lo{i}"))
-                        & (F.col(col) <= F.col(f"hi{i}")),
-                        F.col(col),
-                    )
-                )
-            ).alias(f"a{i}")
-        )
-        # ±1-rank fallbacks (same trick as exact_quantiles_scalable):
-        # when n is small the fractional pad can be narrower than one
-        # rank, so a bracket may miss the floor/ceil order statistic by
-        # at most ONE rank — the adjacent values just outside the
-        # bracket are exactly those fallbacks.
-        aggs.append(
-            F.max(F.when(F.col(col) < F.col(f"lo{i}"), F.col(col))).alias(
-                f"mb{i}"
-            )
-        )
-        aggs.append(
-            F.min(F.when(F.col(col) > F.col(f"hi{i}"), F.col(col))).alias(
-                f"ma{i}"
-            )
-        )
-    st = j.agg(*aggs)
-    exprs = []
-    for i, q in enumerate(qs):
-        p = (F.col("n") - 1) * F.lit(float(q))
-        fk, ck = F.floor(p), F.ceil(p)
-        frac = p - fk
-        ilo = (fk - F.col(f"c{i}") + 1).cast("int")
-        ihi = (ck - F.col(f"c{i}") + 1).cast("int")
-        sz = F.size(f"a{i}")
-        err = F.raise_error(
-            F.lit(
-                "exact_quantiles_bracketed: sketch bracket missed rank "
-                f"for q={q} by more than one rank; raise accuracy"
-            )
-        ).cast("double")
-        # CaseWhen branches are lazy, so the ±1 fallbacks / the error
-        # only evaluate on their branch; the guard lives INSIDE the
-        # output expression (a dropped side column would be pruned away,
-        # never evaluated) — a bracket off by >1 rank raises instead of
-        # silently interpolating junk.
-        lo = (
-            F.when(ilo >= F.lit(1), F.element_at(F.col(f"a{i}"), ilo))
-            .when(ilo == F.lit(0), F.col(f"mb{i}"))
-            .otherwise(err)
-        )
-        hi = (
-            F.when(ihi <= sz, F.element_at(F.col(f"a{i}"), ihi))
-            .when(ihi == sz + F.lit(1), F.col(f"ma{i}"))
-            .otherwise(err)
-        )
-        # Spark's percentile aggregates a counts map of DISTINCT values
-        # and RETURNS THE KEY EXACTLY when both bracketing ranks fall on
-        # the same distinct value; only across two distinct values does
-        # it interpolate, with the two-sided weighted form
-        # (ceil-pos)*lo + (pos-floor)*hi. Reproduce BOTH branches
-        # operand-for-operand: the two-sided form alone drifts an ulp
-        # when lo == hi (hypothesis counterexample [0 x6, -25, -25]
-        # @ p=0.05 -> -24.999999999999996), and the one-sided form
-        # lo + frac*(hi-lo) drifts the other way when lo != hi
-        # (counterexample [1, -1] @ p=0.05).
-        fkd = fk.cast("double")
-        exprs.append(
-            F.when(frac == F.lit(0.0), lo)
-            .when(lo == hi, lo)
-            .otherwise((fkd + F.lit(1.0) - p) * lo + (p - fkd) * hi)
-            .alias(f"q{i}")
-        )
-    return st.select(*exprs)
-
-
 def iqr_outliers(
     df: DataFrame, col: str, factor: float = 1.5, relative_error: float = 0.01
 ) -> DataFrame:
@@ -343,22 +200,11 @@ def assert_unique_keys(df: DataFrame, keys: Sequence[str], what: str) -> None:
         raise ValidationError(f"{what}: {n} duplicate key groups on {keys}")
 
 
-# Small-input endgame bound for the two-pass quantile operators
-# (optimization r12, the cluster_pairs _ONE_TASK_EDGES pattern): below
-# this many non-null rows the exact single-pass percentile() — whose
-# counts-map working set is bounded by the row count — beats the
-# two-pass plan's serial job barriers outright, and its results are
-# what the two-pass is tested bit-identical against. Beyond the bound
-# the scalable two-pass engages unchanged.
-_ONE_PASS_ROWS = 1_000_000
-
-
 def exact_quantiles_scalable(
     df: DataFrame,
     col: str,
     probs: Sequence[float],
     accuracy: int = 10_000,
-    small_n_bound: int | None = _ONE_PASS_ROWS,
 ) -> DataFrame:
     """EXACT interpolated quantiles (quantile_cont semantics) in two
     bounded passes — the 100 TB replacement for ``percentile()``'s
@@ -408,27 +254,7 @@ def exact_quantiles_scalable(
             F.slice("vb", len(probs) + 1, len(probs)).alias("vhi"),
         )
         .localCheckpoint()
-    )  # tiny; feeds the endgame's n fetch AND the pass-2 join
-
-    if small_n_bound:
-        # small-input endgame: pass 1 already computed n, so reading it
-        # back is a bounded driver fetch of the 1-row checkpoint (the
-        # materialize_small pattern). Below the bound, ONE exact
-        # percentile() aggregate replaces the whole pass-2 plan (below
-        # counts + bracket walk + assembly — a chain of serial stage
-        # barriers that dominates wall time when the data is small);
-        # its counts-map working set is bounded by n, and its results
-        # are the very reference the two-pass is tested bit-identical
-        # against. Large inputs pay one ~ms first() and proceed
-        # unchanged.
-        n_total = b.first()["n"]
-        if (n_total or 0) <= small_n_bound:
-            return src.agg(
-                *[
-                    F.percentile("x", F.lit(float(p))).alias(f"q_{i}")
-                    for i, p in enumerate(probs)
-                ]
-            )
+    )  # tiny; materialized so pass 2's plan scans the source only once
 
     return _quantiles_in_brackets(src, b, [], probs)
 
@@ -439,7 +265,6 @@ def grouped_exact_quantiles_scalable(
     col: str,
     probs: Sequence[float],
     accuracy: int = 10_000,
-    small_n_bound: int | None = _ONE_PASS_ROWS,
 ) -> DataFrame:
     """Per-group :func:`exact_quantiles_scalable`: one row per group
     with exact interpolated quantiles, without per-group counts maps.
@@ -463,8 +288,8 @@ def grouped_exact_quantiles_scalable(
     src = df.select(F.col(g), F.col(col).alias("x")).where(
         F.col("x").isNotNull()
     )
-    # O(|groups|) bracket relation with a full-scan lineage, consumed
-    # by the endgame's total AND the pass-2 join — reliable scratch
+    # O(|groups|) bracket relation with a full-scan lineage, materialized
+    # so the pass-2 join does not re-scan the source — reliable scratch
     # keeps an executor loss a parquet re-scan instead of an
     # unrecoverable localCheckpoint lineage error; group count is
     # caller-controlled and unbounded (r09 ADVICE long tail)
@@ -487,22 +312,6 @@ def grouped_exact_quantiles_scalable(
         ),
         "grouped_quantile_brackets",
     )
-
-    if small_n_bound:
-        # small-input endgame (see exact_quantiles_scalable): the TOTAL
-        # row count across groups bounds every per-group counts map, so
-        # below the bound one grouped percentile() aggregate replaces
-        # the pass-2 join/walk/assembly chain with bit-identical
-        # results. The total is a bounded aggregate over the already-
-        # written O(|groups|) bracket scratch, not a data rescan.
-        tot = b.agg(F.sum("n").alias("t")).first()["t"]
-        if (tot or 0) <= small_n_bound:
-            return src.groupBy(g).agg(
-                *[
-                    F.percentile("x", F.lit(float(p))).alias(f"q_{i}")
-                    for i, p in enumerate(probs)
-                ]
-            )
 
     return _quantiles_in_brackets(src, b, [g], probs)
 
@@ -568,10 +377,16 @@ def _quantiles_in_brackets(
         *[F.expr(f"{at_rank(f'FLOOR({h(p)})', p)} AS xf_{i}") for i, p in ps],
         *[F.expr(f"{at_rank(f'CEIL({h(p)})', p)} AS xc_{i}") for i, p in ps],
     )
-    # percentile()'s exact branch structure: same-distinct-value ranks
-    # return the value exactly; otherwise two-sided weighted
-    # interpolation (see exact_quantiles_bracketed for the ulp analysis
-    # of why BOTH branches are needed)
+    # Spark's percentile aggregates a counts map of DISTINCT values and
+    # RETURNS THE KEY EXACTLY when both bracketing ranks fall on the same
+    # distinct value; only across two distinct values does it
+    # interpolate, with the two-sided weighted form
+    # (ceil-pos)*lo + (pos-floor)*hi. Reproduce BOTH branches
+    # operand-for-operand: the two-sided form alone drifts an ulp when
+    # lo == hi (hypothesis counterexample [0 x6, -25, -25] @ p=0.05 ->
+    # -24.999999999999996), and the one-sided form lo + frac*(hi-lo)
+    # drifts the other way when lo != hi (counterexample [1, -1] @
+    # p=0.05).
     out = []
     for i, p in ps:
         lo = f"CAST(FLOOR({h(p)}) AS DOUBLE)"

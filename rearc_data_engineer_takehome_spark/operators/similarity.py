@@ -206,40 +206,6 @@ def ivf_centroids(
     )
 
 
-def bruteforce_topk_vectorized(
-    df: DataFrame,
-    query: list[float],
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Arrow-vectorized twin of :func:`bruteforce_topk`: a pandas UDF
-    computes the cosine batch-at-a-time with numpy instead of per-element
-    JVM lambda folds — the faster path when vectors are wide (the
-    zip_with/aggregate form evaluates ~3·dim lambda calls per row).
-
-    Numpy's pairwise-reduction summation differs from left-fold in the
-    last ulps, so results are rounded to 6dp like the JVM twin and the
-    top-k id set is equivalence-tested, not oracle-gated.
-    """
-    import numpy as np
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    q = np.asarray(query, dtype=np.float64)
-    qn = np.linalg.norm(q)
-
-    @pandas_udf("double")
-    def cos(batch):
-        import pandas as pd
-
-        mat = np.stack(batch.apply(lambda v: np.asarray(v, dtype=np.float64)))
-        sims = (mat @ q) / (np.linalg.norm(mat, axis=1) * qn)
-        return pd.Series(np.round(sims, 6))
-
-    scored = df.select(F.col(id_col), cos(F.col(vec_col)).alias("cos_sim"))
-    return scored.orderBy(F.col("cos_sim").desc(), F.col(id_col).asc()).limit(k)
-
-
 def all_pairs_topk(
     df: DataFrame,
     k: int = 5,

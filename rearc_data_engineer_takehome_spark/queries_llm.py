@@ -1334,22 +1334,22 @@ def cardinality_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
        OR l.l_extendedprice > b.q3 + 1.5 * (b.q3 - b.q1)
     """,
     doc="V9/A10: IQR outlier detection with quantiles computed IN-PLAN "
-    "(EXACT, bit-identical to DuckDB quantile_cont) via sketch-"
-    "bracketed distributed selection: a GK sketch brackets each rank, "
-    "one codegen scan counts below-bracket rows and collects only the "
-    "~6n/accuracy in-bracket values, exact rank arithmetic reads the "
-    "answer out — never an O(distinct) value-count map, no driver "
-    "round-trip, unlike the reference's collected approxQuantile "
-    "(21_EDA.ipynb:2309-2319). operators/quality.iqr_outliers is the "
-    "pure-sketch variant when exactness isn't required.",
+    "(EXACT, quantile_cont semantics) by the two-pass "
+    "exact_quantiles_scalable: a GK sketch brackets each rank, then one "
+    "scan counts rows per in-bracket distinct value and per gap between "
+    "brackets, and exact rank arithmetic reads the answer out — never an "
+    "O(distinct) value-count map, no driver round-trip, unlike the "
+    "reference's collected approxQuantile (21_EDA.ipynb:2309-2319). "
+    "operators/quality.iqr_outliers is the pure-sketch variant when "
+    "exactness isn't required.",
 )
 def iqr_outliers_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
-    bounds = quality.exact_quantiles_bracketed(
-        li, "l_extendedprice", [0.25, 0.75], accuracy=1000
+    bounds = quality.exact_quantiles_scalable(
+        li, "l_extendedprice", [0.25, 0.75]
     ).select(
-        (F.col("q0") - 1.5 * (F.col("q1") - F.col("q0"))).alias("lower"),
-        (F.col("q1") + 1.5 * (F.col("q1") - F.col("q0"))).alias("upper"),
+        (F.col("q_0") - 1.5 * (F.col("q_1") - F.col("q_0"))).alias("lower"),
+        (F.col("q_1") + 1.5 * (F.col("q_1") - F.col("q_0"))).alias("upper"),
     )
     return (
         li.join(F.broadcast(bounds))

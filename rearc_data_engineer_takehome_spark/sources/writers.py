@@ -9,6 +9,10 @@ so the engine runs anywhere (SURVEY.md §7.4 risk #6).
 Scale notes: curated outputs accept ``partition_by`` — at 100 TB an
 unpartitioned overwrite table is a full rewrite and an unprunable scan;
 callers partition on the dominant filter key (e.g. date).
+
+Row-level upserts and small-file compaction are table maintenance on
+the Delta log: ``delta_merge_upsert`` and ``delta_compact`` in
+``sources/delta_log`` commit each rewrite atomically.
 """
 
 from __future__ import annotations
@@ -95,94 +99,6 @@ def write_parquet_dir(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-
-
-def _swap_rewrite(path: str, write_tmp) -> None:
-    """Safe rewrite protocol: materialize the replacement in a sibling
-    temp dir, then swap directories — the original data is never
-    destroyed before the replacement is fully committed. ``write_tmp``
-    is called with the temp path and must produce the new contents.
-    """
-    import shutil
-    from pathlib import Path
-
-    src = Path(path)
-    tmp = src.with_name(src.name + "._rewriting")
-    backup = src.with_name(src.name + "._old")
-    if tmp.exists():
-        shutil.rmtree(tmp)
-
-    write_tmp(str(tmp))
-
-    src.rename(backup)
-    try:
-        tmp.rename(src)
-    except OSError:
-        backup.rename(src)  # roll back: original data restored
-        raise
-    shutil.rmtree(backup)
-
-
-def compact_parquet_dir(
-    spark: SparkSession, path: str, target_files: int
-) -> int:
-    """Small-file compaction: rewrite a parquet directory into
-    ``target_files`` files. Streaming/append sinks accrete tiny files
-    whose per-file open/footer overhead dominates scans at scale;
-    periodic compaction restores healthy file sizes. Returns the new
-    file count.
-
-    This is the low-level fixed-count primitive (``coalesce``: no
-    shuffle, sizes inherit input skew). For the audit-driven form —
-    recommended file count from footer stats, evenly-sized output,
-    row-count verification, crash recovery — use
-    ``operators/layout.compact_table``.
-    """
-    from pathlib import Path
-
-    df = spark.read.parquet(path)
-    _swap_rewrite(
-        path,
-        lambda tmp: df.coalesce(target_files).write.mode("overwrite").parquet(tmp),
-    )
-    return len(list(Path(path).glob("*.parquet")))
-
-
-def merge_upsert(
-    spark: SparkSession, path: str, updates: DataFrame, keys: Sequence[str]
-) -> None:
-    """Keyed MERGE (upsert) into a parquet directory: rows whose key
-    matches an update are replaced, unmatched updates are inserted,
-    everything else is untouched. Re-running the same updates converges
-    (idempotent), extending the reference's whole-table overwrite
-    idempotency contract (notebooks/10_ingest_bls.ipynb:203) to
-    row-level changes.
-
-    Plan shape: current LEFT ANTI updates on the keys (drops superseded
-    versions) ∪ updates, rewritten via the safe-swap protocol. On plain
-    parquet an upsert is necessarily a rewrite of the affected data; at
-    100 TB the affected data must be bounded — partition the table on a
-    key prefix and route each update batch through
-    ``publish_partition_overwrite`` so only touched partitions rewrite,
-    or use a metadata-native MERGE (Delta/Iceberg) when the runtime has
-    it (see _table_format). The anti-join itself broadcasts when the
-    update batch is small — the common CDC case.
-    """
-    from pathlib import Path
-
-    if not Path(path).exists():
-        updates.write.parquet(path)
-        return
-    current = spark.read.parquet(path)
-    if set(current.columns) != set(updates.columns):
-        raise ValueError(
-            f"update schema {sorted(updates.columns)} != table schema "
-            f"{sorted(current.columns)}"
-        )
-    merged = current.join(updates, on=list(keys), how="left_anti").unionByName(
-        updates
-    )
-    _swap_rewrite(path, lambda tmp: merged.write.parquet(tmp))
 
 
 def write_sorted(

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from rearc_data_engineer_takehome_spark.sources.writers import merge_upsert
+from rearc_data_engineer_takehome_spark.sources import delta_log as dl
 from rearc_data_engineer_takehome_spark.streaming.windows import gapfill_daily
 
 DAY = 86400
@@ -36,7 +36,8 @@ def test_gapfill_forward_fills_interior_gaps_leaves_leading_null(spark):
 
 def test_foreachbatch_cdc_upsert_converges_to_latest(spark, tmp_path):
     """CDC pattern: a stream of keyed updates applied per micro-batch via
-    foreachBatch + merge_upsert — the table converges to latest-per-key."""
+    foreachBatch + delta_merge_upsert — the table converges to
+    latest-per-key."""
     src, ckpt, table = (str(tmp_path / d) for d in ("src", "ckpt", "table"))
     schema = "id long, val string"
 
@@ -46,7 +47,7 @@ def test_foreachbatch_cdc_upsert_converges_to_latest(spark, tmp_path):
         ).parquet(src)
 
     def apply_batch(batch_df, _bid):
-        merge_upsert(spark, table, batch_df, keys=["id"])
+        dl.delta_merge_upsert(spark, table, batch_df, ["id"])
 
     def drain():
         q = (
@@ -58,11 +59,12 @@ def test_foreachbatch_cdc_upsert_converges_to_latest(spark, tmp_path):
         )
         q.awaitTermination(120)
 
+    dl.write_delta(spark.createDataFrame([], schema), table)
     land([(1, "a"), (2, "b")])
     drain()
     land([(1, "a2"), (3, "c")])  # update key 1, insert key 3
     drain()
-    state = {r.id: r.val for r in spark.read.parquet(table).collect()}
+    state = {r.id: r.val for r in dl.read_delta(spark, table).collect()}
     assert state == {1: "a2", 2: "b", 3: "c"}
 
 

@@ -168,53 +168,28 @@ def test_table_file_audit_partitioned_layout_identical_basenames(
 
 
 def test_compact_table_binpacks_and_preserves_rows(spark, tmp_path):
-    """compact_table executes the audit's recommendation: a 16-file
-    tiny table compacts to the recommended single file with rows and
-    values intact, and the original is swapped out atomically (no
-    _pre_compact/_compacting residue on success)."""
-    import os
-
-    from rearc_data_engineer_takehome_spark.operators.layout import (
-        compact_table,
-    )
+    """Bin-packing compaction on the Delta log: a 16-file tiny table
+    compacts to one file with rows and values intact, as one new
+    version, and the pre-compaction version stays readable. A re-run
+    converges to the same content."""
+    from rearc_data_engineer_takehome_spark.sources import delta_log as dl
 
     path = str(tmp_path / "shards")
-    spark.range(0, 20_000).withColumn(
-        "v", F.col("id") * 7
-    ).repartition(16).write.parquet(path)
-    before = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+    dl.write_delta(
+        spark.range(0, 20_000).withColumn("v", F.col("id") * 7).repartition(16),
+        path,
+    )
+    v0 = dl.replay(path)
+    assert len(v0.files) == 16
+    before = sorted(tuple(r) for r in dl.read_delta(spark, path).collect())
 
-    stats = compact_table(spark, path)
-    assert stats["n_files_before"] == 16
-    assert stats["n_files_after"] == 1  # tiny table -> 1 recommended
-    assert stats["n_rows"] == 20_000
-    files = [f for f in os.listdir(path) if f.endswith(".parquet")]
-    assert len(files) == 1
-    assert sorted(tuple(r) for r in spark.read.parquet(path).collect()) == before
-    assert not [d for d in os.listdir(tmp_path) if "_compacting" in d]
-    assert not os.path.exists(f"{path}._pre_compact")
+    st = dl.delta_compact(spark, path, target_files=1)
+    assert st.version == v0.version + 1
+    assert len(st.files) == 1
+    assert sorted(tuple(r) for r in dl.read_delta(spark, path).collect()) == before
+    old = dl.read_delta(spark, path, version=v0.version)
+    assert sorted(tuple(r) for r in old.collect()) == before
 
-    # idempotent re-run: already at the recommended count -> no rewrite
-    mtimes = {f: os.path.getmtime(os.path.join(path, f)) for f in files}
-    again = compact_table(spark, path)
-    assert again["n_files_before"] == again["n_files_after"] == 1
-    assert {
-        f: os.path.getmtime(os.path.join(path, f)) for f in files
-    } == mtimes  # files untouched
-
-    # crash recovery: a stale backup beside a live table is residue
-    # from a post-swap crash and must be cleared, not wedge the run
-    os.makedirs(f"{path}._pre_compact/x")
-    compact_table(spark, path)
-    assert not os.path.exists(f"{path}._pre_compact")
-    # a backup with NO live table is a mid-swap crash: restored
-    os.replace(path, f"{path}._pre_compact")
-    stats3 = compact_table(spark, path)
-    assert stats3["n_rows"] == 20_000
-    assert sorted(tuple(r) for r in spark.read.parquet(path).collect()) == before
-
-    # object-store paths are rejected before any work
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="local filesystem"):
-        compact_table(spark, "s3a://bucket/table")
+    again = dl.delta_compact(spark, path, target_files=1)
+    assert len(again.files) == 1
+    assert sorted(tuple(r) for r in dl.read_delta(spark, path).collect()) == before

@@ -493,16 +493,6 @@ def test_dedup_by_pairs_keeps_canonicals(spark, docs):
     assert len(ids) == 20 - 3  # three non-canonical members removed
 
 
-def test_vectorized_knn_matches_jvm_topk(emb):
-    q = _qvec(emb)
-    rest = emb.where(F.col("vec_id") != 0)
-    jvm = [(r.vec_id, r.cos_sim)
-           for r in similarity.bruteforce_topk(rest, q, k=10).collect()]
-    vec = [(r.vec_id, r.cos_sim)
-           for r in similarity.bruteforce_topk_vectorized(rest, q, k=10).collect()]
-    assert jvm == vec  # identical ids AND 6dp-rounded similarities
-
-
 def test_all_pairs_vectorized_matches_jvm_window(emb):
     """The BLAS/applyInPandas all-pairs top-k must equal the JVM
     join+window twin exactly: same neighbour ids, same 6dp sims, same

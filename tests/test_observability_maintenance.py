@@ -6,7 +6,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from rearc_data_engineer_takehome_spark.operators.quality import observed
-from rearc_data_engineer_takehome_spark.sources.writers import compact_parquet_dir
+from rearc_data_engineer_takehome_spark.sources import delta_log as dl
 
 
 def test_observed_metrics_collected_in_one_pass(spark):
@@ -58,20 +58,16 @@ def test_compact_parquet_dir(spark, tmp_path):
     path = str(tmp_path / "fragmented")
     # accrete 12 tiny files, as an append sink would
     for i in range(12):
-        spark.range(i * 10, (i + 1) * 10).coalesce(1).write.mode("append").parquet(path)
-    import pathlib
+        dl.write_delta(
+            spark.range(i * 10, (i + 1) * 10).coalesce(1), path, mode="append"
+        )
+    assert len(dl.replay(path).files) == 12
+    before = {r.id for r in dl.read_delta(spark, path).collect()}
 
-    assert len(list(pathlib.Path(path).glob("*.parquet"))) == 12
-    before = {r.id for r in spark.read.parquet(path).collect()}
-
-    n_files = compact_parquet_dir(spark, path, target_files=2)
-    assert n_files == 2
-    after = {r.id for r in spark.read.parquet(path).collect()}
-    assert after == before  # byte-for-byte same data, fewer files
-    # no leftover temp/backup dirs
-    leftovers = [p.name for p in pathlib.Path(path).parent.iterdir()
-                 if "._" in p.name]
-    assert leftovers == []
+    st = dl.delta_compact(spark, path, target_files=2)
+    assert len(st.files) == 2
+    after = {r.id for r in dl.read_delta(spark, path).collect()}
+    assert after == before  # same data, fewer files
 
 
 def test_available_now_incremental_ingestion(spark, tmp_path):

@@ -158,11 +158,38 @@ def test_two_pass_quantiles_scan_the_source_once(spark, sf_smoke, lineitem):
 
     probs = [0.1, 0.5, 0.9]
     for df in (
-        exact_quantiles_scalable(lineitem, "l_extendedprice", probs, small_n_bound=0),
+        exact_quantiles_scalable(lineitem, "l_extendedprice", probs),
         grouped_exact_quantiles_scalable(
-            lineitem, "l_returnflag", "l_extendedprice", probs, small_n_bound=0
+            lineitem, "l_returnflag", "l_extendedprice", probs
         ),
     ):
+        locations = re.findall(r"Location: \w+ \[([^\]]*)\]", explain.formatted_plan(df))
+        assert [p for p in locations if p.endswith("/lineitem.parquet")] == [
+            f"file:{sf_smoke}/lineitem.parquet"
+        ], locations
+
+
+def test_exact_quantiles_take_the_two_pass_plan_at_any_size(spark, sf_smoke, lineitem):
+    """One exact-quantile path: with default arguments on a tiny input,
+    both operators still return the two-pass plan. Its logical plan
+    holds no exact ``percentile(`` aggregate (a ``percentile_approx``
+    sketch would be allowed), and its physical plan reads the source
+    once."""
+    import re
+
+    from rearc_data_engineer_takehome_spark.operators.quality import (
+        exact_quantiles_scalable,
+        grouped_exact_quantiles_scalable,
+    )
+
+    for df in (
+        exact_quantiles_scalable(lineitem, "l_extendedprice", [0.25, 0.75]),
+        grouped_exact_quantiles_scalable(
+            lineitem, "l_returnflag", "l_extendedprice", [0.25, 0.75]
+        ),
+    ):
+        logical = df._jdf.queryExecution().logical().toString()
+        assert "percentile(" not in logical, logical
         locations = re.findall(r"Location: \w+ \[([^\]]*)\]", explain.formatted_plan(df))
         assert [p for p in locations if p.endswith("/lineitem.parquet")] == [
             f"file:{sf_smoke}/lineitem.parquet"

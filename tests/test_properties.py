@@ -361,10 +361,7 @@ def test_exact_quantiles_scalable_matches_percentile(spark, vals, probs):
 
     df = spark.createDataFrame([(v,) for v in vals], "x double")
     ref = df.agg(F.expr(_percentile_array(probs))).collect()[0][0]
-    # small_n_bound=0 forces the two-pass machinery this property
-    # stresses (±1-rank fallbacks, bracket collapse); the default
-    # bound would route these tiny inputs to percentile() itself
-    got = exact_quantiles_scalable(df, "x", probs, small_n_bound=0).collect()[0]
+    got = exact_quantiles_scalable(df, "x", probs).collect()[0]
     assert list(got) == list(ref)
 
 
@@ -445,7 +442,7 @@ def test_grouped_exact_quantiles_scalable_property(spark, rows, probs):
     got = {
         r.g: list(r)[1:]
         for r in grouped_exact_quantiles_scalable(
-            df, "g", "x", probs, small_n_bound=0  # force the two-pass
+            df, "g", "x", probs
         ).collect()
     }
     assert got == ref
@@ -459,17 +456,17 @@ def test_grouped_exact_quantiles_scalable_property(spark, rows, probs):
     st.integers(min_value=0, max_value=20),
 )
 def test_exact_quantiles_bracketed_matches_percentile(spark, vals, p20):
-    """Property: the sketch-bracketed fast path equals the single-pass
-    exact percentile for any value multiset (duplicates included) and
-    any probability, boundary 0.0/1.0 included."""
+    """Property: the two-pass quantile at a coarse sketch accuracy equals
+    the single-pass exact percentile for any value multiset (duplicates
+    included) and any probability, boundary 0.0/1.0 included."""
     from rearc_data_engineer_takehome_spark.operators.quality import (
-        exact_quantiles_bracketed,
+        exact_quantiles_scalable,
     )
 
     prob = p20 / 20.0
     df = spark.createDataFrame([(float(v),) for v in vals], "x double")
     ref = df.agg(F.expr(f"percentile(x, {prob})")).collect()[0][0]
-    got = exact_quantiles_bracketed(df, "x", [prob]).collect()[0]["q0"]
+    got = exact_quantiles_scalable(df, "x", [prob], accuracy=1000).first()["q_0"]
     assert got == ref
 
 

@@ -141,35 +141,24 @@ def test_exact_quantiles_scalable_matches_single_pass(spark, sf_smoke):
     ref = li.agg(
         F.expr(f"percentile(l_extendedprice, array({','.join(map(str, probs))}))")
     ).collect()[0][0]
-    # small_n_bound=0 pins the TWO-PASS path (the smoke fixture is far
-    # below the default endgame bound, which would otherwise route to
-    # the very percentile() this test compares against)
-    got = exact_quantiles_scalable(
-        li, "l_extendedprice", probs, small_n_bound=0
-    ).collect()[0]
+    got = exact_quantiles_scalable(li, "l_extendedprice", probs).collect()[0]
     assert [got[f"q_{i}"] for i in range(len(probs))] == list(ref)
 
     dup = li.select("l_quantity")  # ~50 distinct values, heavy duplicates
     ref2 = dup.agg(F.expr("percentile(l_quantity, array(0.5, 0.9))")).collect()[0][0]
-    got2 = exact_quantiles_scalable(
-        dup, "l_quantity", [0.5, 0.9], small_n_bound=0
-    ).collect()[0]
+    got2 = exact_quantiles_scalable(dup, "l_quantity", [0.5, 0.9]).collect()[0]
     assert [got2["q_0"], got2["q_1"]] == list(ref2)
-
-    # the default-bound small-input endgame (single-pass percentile)
-    # must agree with the forced two-pass on the same inputs
-    end = exact_quantiles_scalable(li, "l_extendedprice", probs).collect()[0]
-    assert [end[f"q_{i}"] for i in range(len(probs))] == list(ref)
 
 
 def test_exact_quantiles_bracketed_matches_single_pass(spark, sf_smoke):
-    """The fast collect-array variant must also be BIT-identical to the
-    single-pass exact percentile — near-continuous and duplicate-heavy
-    columns, extreme probs included."""
+    """At a coarse sketch accuracy (wide brackets), the two-pass
+    quantiles must still be BIT-identical to the single-pass exact
+    percentile — near-continuous and duplicate-heavy columns, extreme
+    probs included."""
     import pyspark.sql.functions as F
 
     from rearc_data_engineer_takehome_spark.operators.quality import (
-        exact_quantiles_bracketed,
+        exact_quantiles_scalable,
     )
 
     li = spark.read.parquet(f"{sf_smoke}/lineitem.parquet")
@@ -177,13 +166,17 @@ def test_exact_quantiles_bracketed_matches_single_pass(spark, sf_smoke):
     ref = li.agg(
         F.expr(f"percentile(l_extendedprice, array({','.join(map(str, probs))}))")
     ).collect()[0][0]
-    got = exact_quantiles_bracketed(li, "l_extendedprice", probs).collect()[0]
-    assert [got[f"q{i}"] for i in range(len(probs))] == list(ref)
+    got = exact_quantiles_scalable(
+        li, "l_extendedprice", probs, accuracy=1000
+    ).collect()[0]
+    assert [got[f"q_{i}"] for i in range(len(probs))] == list(ref)
 
     dup = li.select("l_quantity")  # ~50 distinct values, heavy duplicates
     ref2 = dup.agg(F.expr("percentile(l_quantity, array(0.5, 0.9))")).collect()[0][0]
-    got2 = exact_quantiles_bracketed(dup, "l_quantity", [0.5, 0.9]).collect()[0]
-    assert [got2["q0"], got2["q1"]] == list(ref2)
+    got2 = exact_quantiles_scalable(
+        dup, "l_quantity", [0.5, 0.9], accuracy=1000
+    ).collect()[0]
+    assert [got2["q_0"], got2["q_1"]] == list(ref2)
 
 
 def test_grouped_exact_quantiles_scalable_matches_single_pass(spark, sf_smoke):
@@ -203,16 +196,13 @@ def test_grouped_exact_quantiles_scalable_matches_single_pass(spark, sf_smoke):
             .agg(F.expr(f"percentile({col}, array(0.1, 0.5, 0.9))").alias("q"))
             .collect()
         }
-        # forced two-pass AND default-bound endgame must both be
-        # bit-identical to grouped percentile()
-        for kw in ({"small_n_bound": 0}, {}):
-            got = {
-                r.l_returnflag: [r.q_0, r.q_1, r.q_2]
-                for r in grouped_exact_quantiles_scalable(
-                    li, "l_returnflag", col, [0.1, 0.5, 0.9], **kw
-                ).collect()
-            }
-            assert got == ref, (col, kw)
+        got = {
+            r.l_returnflag: [r.q_0, r.q_1, r.q_2]
+            for r in grouped_exact_quantiles_scalable(
+                li, "l_returnflag", col, [0.1, 0.5, 0.9]
+            ).collect()
+        }
+        assert got == ref, col
 
 
 def test_quantile_pass2_raises_when_bracket_misses_rank_by_two(spark):
@@ -244,17 +234,15 @@ def test_quantile_pass2_raises_when_bracket_misses_rank_by_two(spark):
 
 
 def test_two_pass_quantiles_empty_and_all_null_inputs(spark):
-    """The forced two-pass path on no non-null rows: one all-null row
+    """The two-pass path on no non-null rows: one all-null row
     ungrouped, zero rows grouped — never an error."""
     empty = spark.createDataFrame([], "g long, x double")
     all_null = spark.createDataFrame([(1, None), (2, None)], "g long, x double")
     for df in (empty, all_null):
-        got = quality.exact_quantiles_scalable(
-            df, "x", [0.0, 0.5, 1.0], small_n_bound=0
-        ).collect()
+        got = quality.exact_quantiles_scalable(df, "x", [0.0, 0.5, 1.0]).collect()
         assert [tuple(r) for r in got] == [(None, None, None)]
         assert quality.grouped_exact_quantiles_scalable(
-            df, "g", "x", [0.5], small_n_bound=0
+            df, "g", "x", [0.5]
         ).collect() == []
 
 

@@ -1,4 +1,5 @@
-"""SCD2 interval building, keyed merge-upsert, sorted-write data skipping."""
+"""SCD2 interval building, keyed Delta merge-upsert, sorted-write data
+skipping."""
 
 from __future__ import annotations
 
@@ -8,10 +9,8 @@ import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 
 from rearc_data_engineer_takehome_spark.operators.scd import scd2_from_events
-from rearc_data_engineer_takehome_spark.sources.writers import (
-    merge_upsert,
-    write_sorted,
-)
+from rearc_data_engineer_takehome_spark.sources import delta_log as dl
+from rearc_data_engineer_takehome_spark.sources.writers import write_sorted
 
 
 def test_scd2_intervals_chain_and_single_current(spark):
@@ -45,13 +44,13 @@ def test_merge_upsert_updates_inserts_idempotent(spark, tmp_path):
         [(1, "one", 1.0), (2, "two", 2.0), (3, "three", 3.0)],
         "id long, name string, score double",
     )
-    merge_upsert(spark, path, base, keys=["id"])  # first write: plain create
+    dl.write_delta(base, path)
 
     updates = spark.createDataFrame(
         [(2, "TWO", 2.5), (4, "four", 4.0)], "id long, name string, score double"
     )
-    merge_upsert(spark, path, updates, keys=["id"])
-    state = {r.id: (r.name, r.score) for r in spark.read.parquet(path).collect()}
+    dl.delta_merge_upsert(spark, path, updates, ["id"])
+    state = {r.id: (r.name, r.score) for r in dl.read_delta(spark, path).collect()}
     assert state == {
         1: ("one", 1.0),
         2: ("TWO", 2.5),   # matched key replaced
@@ -59,21 +58,17 @@ def test_merge_upsert_updates_inserts_idempotent(spark, tmp_path):
         4: ("four", 4.0),   # new key inserted
     }
 
-    merge_upsert(spark, path, updates, keys=["id"])  # re-run converges
-    state2 = {r.id: (r.name, r.score) for r in spark.read.parquet(path).collect()}
+    dl.delta_merge_upsert(spark, path, updates, ["id"])  # re-run converges
+    state2 = {r.id: (r.name, r.score) for r in dl.read_delta(spark, path).collect()}
     assert state2 == state
-    # no leftover swap dirs
-    assert [p.name for p in tmp_path.iterdir() if "._" in p.name] == []
 
 
 def test_merge_upsert_rejects_schema_drift(spark, tmp_path):
     path = str(tmp_path / "dim2")
-    merge_upsert(
-        spark, path, spark.createDataFrame([(1, "a")], "id long, v string"), ["id"]
-    )
+    dl.write_delta(spark.createDataFrame([(1, "a")], "id long, v string"), path)
     bad = spark.createDataFrame([(1, 9)], "id long, other long")
     try:
-        merge_upsert(spark, path, bad, keys=["id"])
+        dl.delta_merge_upsert(spark, path, bad, ["id"])
         raise AssertionError("schema drift accepted")
     except ValueError as e:
         assert "schema" in str(e)
