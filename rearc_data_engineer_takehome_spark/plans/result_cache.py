@@ -34,6 +34,8 @@ from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.readers import read_parquet
+
 
 def plan_fingerprint(df: DataFrame) -> str:
     """Stable hex fingerprint of (canonicalized plan, input file
@@ -100,7 +102,7 @@ def cached_result(
             if not os.path.isdir(path):
                 raise
             shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def prune_cache(

@@ -25,6 +25,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from .operators import relational
+from .sources.readers import read_parquet
 
 
 @dataclass(frozen=True)
@@ -47,7 +48,7 @@ def query(name: str, oracle: str | None, doc: str = ""):
 
 
 def _t(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{table}.parquet")
 
 
 # ---------------------------------------------------------------------------

@@ -1132,7 +1132,7 @@ def top2_orders_per_customer_lateral(spark: SparkSession, sf_dir: str) -> DataFr
     FROM lineitem
     """,
     doc="EXACT quantiles via quality.exact_quantiles_scalable: two "
-    "bounded passes at every input size (approx brackets, then ONE "
+    "bounded passes at every input size (KLL-sketch brackets, then ONE "
     "scan that counts in-bracket distinct values and between-bracket "
     "gaps, walked by rank) instead of percentile()'s single-pass counts "
     "map, whose memory and single-reducer merge scale with distinct-value "

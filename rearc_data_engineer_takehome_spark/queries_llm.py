@@ -1335,7 +1335,7 @@ def cardinality_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="V9/A10: IQR outlier detection with quantiles computed IN-PLAN "
     "(EXACT, quantile_cont semantics) by the two-pass "
-    "exact_quantiles_scalable: a GK sketch brackets each rank, then one "
+    "exact_quantiles_scalable: a KLL sketch brackets each rank, then one "
     "scan counts rows per in-bracket distinct value and per gap between "
     "brackets, and exact rank arithmetic reads the answer out — never an "
     "O(distinct) value-count map, no driver round-trip, unlike the "

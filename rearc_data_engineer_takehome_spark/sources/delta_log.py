@@ -5471,25 +5471,36 @@ def _dv_mark_actions(
 
 def _dv_marks_or_discard(table_dir: str, f_marks, f_cdc, f_write=None):
     """The bitmap leg's result once every concurrent DML leg has
-    finished. If the bitmap pass raised, best-effort delete what the
-    sibling legs wrote (their ``_change_data/<uuid>/`` and
-    ``data/<uuid>/`` roots — no commit will ever reference them) and
-    re-raise."""
+    finished. If any leg raised, best-effort delete what the other
+    legs wrote — the bitmap leg's ``deletion_vector_<uuid>.bin`` (named
+    by its marks' descriptors) and the ``_change_data/<uuid>/`` and
+    ``data/<uuid>/`` roots; no commit will ever reference them — and
+    re-raise the first failed leg's error (bitmap, cdc, data order)."""
     import shutil
 
-    try:
+    legs = [f for f in (f_marks, f_cdc, f_write) if f is not None]
+    errors = [f.exception() for f in legs]
+    if not any(errors):
         return f_marks.result()
-    except Exception:
-        rels: list[str] = []
-        if f_cdc is not None and f_cdc.exception() is None:
-            rels += [a["cdc"]["path"] for a in f_cdc.result()]
-        if f_write is not None and f_write.exception() is None:
-            rels += list(f_write.result()[1])  # every written file
-        for root in {os.path.join(*r.split(os.sep)[:2]) for r in rels}:
-            shutil.rmtree(
-                os.path.join(table_dir, root), ignore_errors=True
-            )
-        raise
+    ok = {f for f, e in zip(legs, errors) if e is None}
+    marks = f_marks.result() if f_marks in ok else None
+    dv_files = {
+        _dv.absolute_dv_path(table_dir, a["add"]["deletionVector"])
+        for a in (marks[1] if marks else ())
+    }
+    for path in dv_files - {None}:
+        try:
+            os.remove(path)
+        except OSError:
+            pass
+    rels: list[str] = []
+    if f_cdc in ok:
+        rels += [a["cdc"]["path"] for a in f_cdc.result()]
+    if f_write in ok:
+        rels += list(f_write.result()[1])  # every written file
+    for root in {os.path.join(*r.split(os.sep)[:2]) for r in rels}:
+        shutil.rmtree(os.path.join(table_dir, root), ignore_errors=True)
+    raise next(e for e in errors if e is not None)
 
 
 def _dv_commit_actions(

@@ -13,7 +13,11 @@ reproduced because it cannot scale past driver memory.
 
 from __future__ import annotations
 
+import os
+from urllib.parse import unquote, urlparse
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: Canonical fixture tables generated by the driver (TESTDATA.md).
 TESTDATA_TABLES = (
@@ -59,10 +63,65 @@ def read_jsonl(spark: SparkSession, path: str, schema=None) -> DataFrame:
     return reader.json(path)
 
 
+#: Session confs that change the schema parquet inference returns.
+_PARQUET_INFERENCE_CONFS = (
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+
+#: path -> ((file state, inference confs), inferred schema); one entry
+#: per path, replaced when its key changes. Process-wide on purpose: the
+#: key fixes the inferred schema, so every session and thread may share
+#: an entry, and two threads racing on one path store equal values.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _local_file_state(path: str) -> tuple | None:
+    """Sorted (file, size, mtime_ns) of every file at or under a local
+    ``path``; None for a non-local, missing or glob path, or when a file
+    vanishes mid-listing."""
+    parsed = urlparse(path)
+    if parsed.scheme not in ("", "file"):
+        return None
+    local = unquote(parsed.path) if parsed.scheme else path
+    if os.path.isfile(local):
+        files = [local]
+    elif os.path.isdir(local):
+        files = [os.path.join(r, n) for r, _, ns in os.walk(local) for n in ns]
+    else:
+        return None
+    state = []
+    for f in files:
+        try:
+            st = os.stat(f)
+        except OSError:
+            return None
+        state.append((f, st.st_size, st.st_mtime_ns))
+    return tuple(sorted(state))
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Columnar scan; filters/projections applied downstream push into the
-    scan (verify with ``plans.explain.scan_pushdown``)."""
-    return spark.read.parquet(path)
+    scan (verify with ``plans.explain.scan_pushdown``).
+
+    The one parquet-table reader. Schema inference is a Spark job (a
+    footer read), so the inferred schema is memoized per path, keyed by
+    the path's local file state and the session's inference confs: a
+    repeat read of an unchanged table starts no job, and any rewrite,
+    added or removed file, or conf change re-infers. Every read, cold
+    or warm, scans with the explicit schema, so both build the same
+    plan. A non-local path infers on every read."""
+    state = _local_file_state(path)
+    if state is None:
+        return spark.read.parquet(path)
+    key = (state, tuple(spark.conf.get(c, None) for c in _PARQUET_INFERENCE_CONFS))
+    hit = _SCHEMAS.get(path)
+    if hit is None or hit[0] != key:
+        hit = _SCHEMAS[path] = (key, spark.read.parquet(path).schema)
+    return spark.read.schema(hit[1]).parquet(path)
 
 
 def read_table(spark: SparkSession, name: str) -> DataFrame:
@@ -78,7 +137,7 @@ def sql(spark: SparkSession, query: str) -> DataFrame:
 def load_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load every driver fixture table from ``sf_dir`` as a dict of
     DataFrames. Purely lazy — nothing is scanned until an action."""
-    return {t: spark.read.parquet(f"{sf_dir}/{t}.parquet") for t in TESTDATA_TABLES}
+    return {t: read_parquet(spark, f"{sf_dir}/{t}.parquet") for t in TESTDATA_TABLES}
 
 
 def register_testdata_views(spark: SparkSession, sf_dir: str) -> None:

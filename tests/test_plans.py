@@ -376,6 +376,94 @@ def test_result_cache_registry_query_hit_is_a_cache_scan(spark, sf_smoke):
     assert sorted(tuple(r) for r in uncached.collect()) == want
 
 
+def _jobs_started_by(spark, fn):
+    """(result of ``fn()``, number of Spark jobs it started). Jobs are
+    counted by job group; a sentinel job in a second group, once the
+    status tracker shows it, proves the listener bus has caught up."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"counted_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(f"{group}_sentinel", "sentinel")
+        sc.parallelize([0], 1).count()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + 60
+    while not sc.statusTracker().getJobIdsForGroup(f"{group}_sentinel"):
+        assert time.monotonic() < deadline, "status tracker never saw the sentinel"
+        time.sleep(0.05)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_table_read_starts_no_spark_job(spark, tmp_path):
+    """Parquet schema inference is a Spark job; the table reader
+    memoizes the schema, so a second read of an unchanged table starts
+    none, and cold and warm reads build the same plan."""
+    from rearc_data_engineer_takehome_spark.queries import _t
+
+    spark.range(50).selectExpr("id", "id * 2 AS v").write.parquet(
+        str(tmp_path / "tbl.parquet")
+    )
+    cold, n_cold = _jobs_started_by(spark, lambda: _t(spark, str(tmp_path), "tbl"))
+    warm, n_warm = _jobs_started_by(spark, lambda: _t(spark, str(tmp_path), "tbl"))
+    assert (n_cold, n_warm) == (1, 0)
+
+    def canon(df):
+        return df._jdf.queryExecution().optimizedPlan().canonicalized().toJSON()
+
+    assert canon(cold) == canon(warm)
+    assert warm.schema == spark.read.parquet(str(tmp_path / "tbl.parquet")).schema
+    assert sorted(tuple(r) for r in warm.collect()) == [(i, 2 * i) for i in range(50)]
+
+
+def test_table_rewrite_with_added_column_is_seen_by_next_read(spark, tmp_path):
+    """A rewrite at the same path changes the file state the memoized
+    schema is keyed by: the next read infers again and sees the new
+    column."""
+    import time
+
+    from rearc_data_engineer_takehome_spark.queries import _t
+
+    path = str(tmp_path / "tbl.parquet")
+    spark.range(5).write.parquet(path)
+    assert _t(spark, str(tmp_path), "tbl").columns == ["id"]
+    time.sleep(0.01)  # ensure mtime moves even on coarse filesystems
+    spark.range(5).selectExpr("id", "id + 1 AS extra").write.mode(
+        "overwrite"
+    ).parquet(path)
+    again = _t(spark, str(tmp_path), "tbl")
+    assert again.columns == ["id", "extra"]
+    assert sorted(tuple(r) for r in again.collect()) == [(i, i + 1) for i in range(5)]
+
+
+def test_result_cache_warm_hit_builds_with_no_spark_job(spark, tmp_path):
+    """Serving a cached result is a fingerprint plus a parquet read of
+    the materialization; once that entry's schema is known, a hit
+    builds its DataFrame without starting a Spark job."""
+    import os
+
+    from rearc_data_engineer_takehome_spark.plans.result_cache import cached_result
+    from rearc_data_engineer_takehome_spark.sources.readers import read_parquet
+
+    src = str(tmp_path / "src")
+    cache = str(tmp_path / "cache")
+    os.makedirs(cache)
+    spark.range(0, 100).withColumn("v", F.col("id") * 3).write.parquet(src)
+    q = read_parquet(spark, src).groupBy((F.col("id") % 7).alias("g")).agg(
+        F.sum("v").alias("s")
+    )
+    want = sorted(tuple(r) for r in cached_result(spark, q, cache).collect())
+    cached_result(spark, q, cache)  # first hit: reads the entry's schema
+    hit, n_jobs = _jobs_started_by(spark, lambda: cached_result(spark, q, cache))
+    assert n_jobs == 0
+    assert all(cache in f for f in hit.inputFiles())
+    assert sorted(tuple(r) for r in hit.collect()) == want
+
+
 def test_result_cache_prune_evicts_lru_and_keeps_hits(spark, tmp_path):
     """prune_cache deletes least-recently-used entries until the size
     bound holds, never touches ._building temp dirs, and a surviving

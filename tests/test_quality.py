@@ -246,6 +246,78 @@ def test_two_pass_quantiles_empty_and_all_null_inputs(spark):
         ).collect() == []
 
 
+def _percentile_rows(df, keys, col, probs):
+    """Reference: Spark's exact ``percentile()``, keyed by group."""
+    arr = ", ".join(f"{p!r}D" for p in probs)
+    agg = F.expr(f"percentile({col}, array({arr}))").alias("q")
+    rows = (df.groupBy(*keys) if keys else df).agg(agg).collect()
+    return {tuple(r[k] for k in keys): list(r.q) for r in rows}
+
+
+def _two_pass_rows(df, keys, col, probs):
+    if keys:
+        out = quality.grouped_exact_quantiles_scalable(df, keys[0], col, probs)
+    else:
+        out = quality.exact_quantiles_scalable(df, col, probs)
+    return {
+        tuple(r[k] for k in keys): [r[f"q_{i}"] for i in range(len(probs))]
+        for r in out.collect()
+    }
+
+
+def _nan_safe(rows):
+    return {k: ["NaN" if v != v else v for v in qs] for k, qs in rows.items()}
+
+
+def test_two_pass_quantiles_past_the_sketch_size(spark):
+    """1.2M rows in 8 partitions: every partition's KLL sketch compacts
+    (n > k), so pass 1 brackets come from a lossy sketch. The two-pass
+    answer must still equal ``percentile()`` exactly, on a
+    duplicate-heavy and an all-distinct column, ungrouped and over 3
+    groups, at the extreme and middle probabilities."""
+    df = spark.range(0, 1_200_000, 1, 8).selectExpr(
+        "id % 3 AS g",
+        "CAST(pmod(hash(id), 1000) AS DOUBLE) AS dup",
+        "CAST(hash(id) AS DOUBLE) / 7.0D AS uniq",
+    )
+    probs = [0.0, 0.001, 0.5, 0.999, 1.0]
+    for col in ("dup", "uniq"):
+        for keys in ([], ["g"]):
+            ref = _percentile_rows(df, keys, col, probs)
+            assert _two_pass_rows(df, keys, col, probs) == ref, (col, keys)
+
+
+def test_two_pass_quantiles_nan_and_infinities(spark):
+    """Spark orders NaN above +Infinity; the sketch must too. A column
+    with 2% NaN, a NaN / -Inf / +Inf mix and an all-NaN column all
+    match ``percentile()``, ungrouped and grouped — the ranks above
+    0.98 land on NaN rows, which a sketch that skipped NaN would leave
+    outside every bracket."""
+    df = spark.range(0, 200_000, 1, 4).selectExpr(
+        "id % 3 AS g",
+        "IF(id % 50 = 7, double('NaN'), CAST(pmod(hash(id), 100000) AS DOUBLE)) AS nan2",
+        "CASE id % 10 WHEN 0 THEN double('NaN') WHEN 1 THEN double('-Infinity')"
+        " WHEN 2 THEN double('Infinity') ELSE CAST(id AS DOUBLE) END AS mix",
+        "double('NaN') AS all_nan",
+    )
+    probs = [0.0, 0.05, 0.5, 0.85, 0.95, 0.985, 0.99, 1.0]
+    for col in ("nan2", "mix", "all_nan"):
+        for keys in ([], ["g"]):
+            ref = _nan_safe(_percentile_rows(df, keys, col, probs))
+            assert _nan_safe(_two_pass_rows(df, keys, col, probs)) == ref, (col, keys)
+
+
+def test_two_pass_quantiles_refuse_accuracy_past_the_sketch_bound(spark):
+    """A margin under 4x the KLL sketch's rank error would make bracket
+    misses likely: both operators refuse it before running a job."""
+    df = spark.createDataFrame([(1, 1.0), (1, 2.0)], "g long, x double")
+    quality.exact_quantiles_scalable(df, "x", [0.5], accuracy=10_000)
+    with pytest.raises(ValueError, match="accuracy=20000"):
+        quality.exact_quantiles_scalable(df, "x", [0.5], accuracy=20_000)
+    with pytest.raises(ValueError, match="accuracy=20000"):
+        quality.grouped_exact_quantiles_scalable(df, "g", "x", [0.5], accuracy=20_000)
+
+
 def test_fk_integrity_detects_planted_orphans(spark):
     from rearc_data_engineer_takehome_spark.operators.quality import fk_integrity
 

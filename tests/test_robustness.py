@@ -95,6 +95,46 @@ def test_cm_id_roundtrip_failed_v1_append_commits_nothing_after_it(
     assert dl.list_delta_versions(tables[0]) == [0]
 
 
+def test_failed_cdc_leg_leaves_no_orphan_dv_file_on_delete(
+    spark, tmp_path, monkeypatch
+):
+    """The reverse case: the DV bitmap pass succeeds and writes its
+    ``deletion_vector_<uuid>.bin``, then the concurrent change-data
+    leg fails. The ``.bin`` must be deleted: no commit references it."""
+    from rearc_data_engineer_takehome_spark.sources import delta_log as dl
+
+    t = str(tmp_path / "t")
+    _cdf_table(spark, t, one_file=True)
+    before, head = _non_log_files(t), dl.replay(t).version
+    dv_adds = _spy_dv_adds(monkeypatch, dl)
+    monkeypatch.setattr(dl, "_write_cdc_files", _failing_leg)
+    with pytest.raises(RuntimeError, match="injected leg"):
+        dl.delta_delete(spark, t, "k < 3")
+    assert dv_adds, "the bitmap pass wrote no deletion vector"
+    assert _non_log_files(t) == before
+    assert dl.replay(t).version == head
+
+
+def test_failed_write_leg_leaves_no_orphan_files_on_update(
+    spark, tmp_path, monkeypatch
+):
+    """UPDATE's rewritten-copy write fails after the bitmap pass wrote
+    its ``.bin`` and the change-data leg wrote its files: both must be
+    deleted."""
+    from rearc_data_engineer_takehome_spark.sources import delta_log as dl
+
+    t = str(tmp_path / "t")
+    _cdf_table(spark, t, one_file=True)
+    before, head = _non_log_files(t), dl.replay(t).version
+    dv_adds = _spy_dv_adds(monkeypatch, dl)
+    monkeypatch.setattr(dl, "_write_adds", _failing_leg)
+    with pytest.raises(RuntimeError, match="injected leg"):
+        dl.delta_update(spark, t, "k < 3", {"s": "'x'"})
+    assert dv_adds, "the bitmap pass wrote no deletion vector"
+    assert _non_log_files(t) == before
+    assert dl.replay(t).version == head
+
+
 def _non_log_files(table_dir):
     import os
 
@@ -106,15 +146,15 @@ def _non_log_files(table_dir):
     return out
 
 
-def _cdf_table(spark, table_dir):
+def _cdf_table(spark, table_dir, one_file=False):
+    """A 6-row CDF table; ``one_file`` keeps every row in one data file,
+    so deleting some rows writes a deletion vector, not a remove."""
     from rearc_data_engineer_takehome_spark.sources import delta_log as dl
 
-    dl.write_delta(
-        spark.createDataFrame(
-            [(i, f"s{i}") for i in range(6)], "k long, s string"
-        ),
-        table_dir,
+    df = spark.createDataFrame(
+        [(i, f"s{i}") for i in range(6)], "k long, s string"
     )
+    dl.write_delta(df.coalesce(1) if one_file else df, table_dir)
     dl.delta_alter_properties(
         spark, table_dir, {"delta.enableChangeDataFeed": "true"}
     )
@@ -122,6 +162,23 @@ def _cdf_table(spark, table_dir):
 
 def _failing_dv_pass(*_a, **_k):
     raise RuntimeError("injected DV bitmap failure")
+
+
+def _failing_leg(*_a, **_k):
+    raise RuntimeError("injected leg failure")
+
+
+def _spy_dv_adds(monkeypatch, dl):
+    """Record the DV-carrying adds the real bitmap pass returns."""
+    seen, real = [], dl._dv_mark_actions
+
+    def spy(*a, **k):
+        marks = real(*a, **k)
+        seen.extend(marks[1] if marks else ())
+        return marks
+
+    monkeypatch.setattr(dl, "_dv_mark_actions", spy)
+    return seen
 
 
 def test_failed_dv_pass_leaves_no_orphan_cdc_files_on_delete(

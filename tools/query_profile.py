@@ -1,11 +1,13 @@
 """Per-query profile: wall seconds + Spark job/stage/task counts.
 
-Optimization-round instrument (guide §1): many registry queries are
-iterative or multi-pass, so their sf0.1 cost is dominated by the NUMBER
-of sequential job barriers (driver round-trips), not data volume. This
-tool times each named query with the same ``.count()`` action bench.py
-uses and reports how many jobs/stages/tasks the action scheduled, via
-an attached SparkListener (accurate regardless of job groups).
+Many registry queries are iterative or multi-pass, so their sf0.1 cost
+is dominated by the NUMBER of sequential job barriers (driver
+round-trips), not data volume. This tool times each named query with
+the same ``.count()`` action bench.py uses and reports the jobs started
+while ``q.spark()`` built the plan (eager jobs: checkpoints, schema
+inference, small fetches) separately from the jobs the action ran,
+plus the stages and tasks of both. Jobs are counted by the scheduler's
+job id counter, so every job counts regardless of job groups.
 
 Usage:
     python tools/query_profile.py q1 q2 ...      # profile named queries
@@ -25,7 +27,7 @@ from rearc_data_engineer_takehome_spark.queries import REGISTRY  # noqa: E402
 from rearc_data_engineer_takehome_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 
 def main() -> None:
@@ -48,20 +50,22 @@ def main() -> None:
     spark.sparkContext.setLogLevel("WARN")
     sc = spark.sparkContext
 
-    # job/stage/task counting via the AppStatusStore REST-backing store:
-    # read cumulative counts before/after each run
-    def counts():
+    # job ids come from the scheduler's counter (the status store keeps
+    # only the last spark.ui.retainedJobs jobs); stages and tasks of a
+    # job id range from the status store, once the listener bus that
+    # feeds it has drained
+    def next_job_id() -> int:
+        return sc._jsc.sc().dagScheduler().nextJobId()
+
+    def stages_tasks(j0: int, j1: int) -> tuple[int, int]:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
         store = sc._jsc.sc().statusStore()
-        jobs = store.jobsList(None)
-        n_jobs = jobs.size()
-        n_stages = 0
-        n_tasks = 0
-        it = jobs.iterator()
-        while it.hasNext():
-            j = it.next()
+        n_stages = n_tasks = 0
+        for jid in range(j0, j1):
+            j = store.job(jid)
             n_stages += j.stageIds().size()
             n_tasks += j.numTasks()
-        return n_jobs, n_stages, n_tasks
+        return n_stages, n_tasks
 
     # warm like bench.py so first-touch JIT doesn't pollute
     for warm in ("pricing_summary", "doc_fingerprints"):
@@ -84,24 +88,32 @@ def main() -> None:
         q = REGISTRY[name]
         best = None
         for _ in range(2):
-            j0, s0, t0c = counts()
+            j0 = next_job_id()
             t0 = time.perf_counter()
-            q.spark(spark, SF_DIR).count()
-            dt = time.perf_counter() - t0
-            j1, s1, t1c = counts()
+            df = q.spark(spark, SF_DIR)
+            t_build = time.perf_counter() - t0
+            jb = next_job_id()
+            t1 = time.perf_counter()
+            df.count()
+            dt = t_build + time.perf_counter() - t1
+            j1 = next_job_id()
+            stages, tasks = stages_tasks(j0, j1)
             rec = {
                 "query": name,
                 "sec": round(dt, 3),
-                "jobs": j1 - j0,
-                "stages": s1 - s0,
-                "tasks": t1c - t0c,
+                "build_sec": round(t_build, 3),
+                "build_jobs": jb - j0,
+                "action_jobs": j1 - jb,
+                "stages": stages,
+                "tasks": tasks,
             }
             if best is None or rec["sec"] < best["sec"]:
                 best = rec
             free_blocks()
         rows.append(best)
         print(
-            f"{best['sec']:>8.3f}s  jobs={best['jobs']:<4} stages={best['stages']:<5} "
+            f"{best['sec']:>8.3f}s  build_jobs={best['build_jobs']:<4} "
+            f"action_jobs={best['action_jobs']:<4} stages={best['stages']:<5} "
             f"tasks={best['tasks']:<6} {name}",
             flush=True,
         )
