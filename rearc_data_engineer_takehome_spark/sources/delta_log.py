@@ -51,7 +51,8 @@ import os
 import re
 import time
 import uuid
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
+from functools import cached_property
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -137,6 +138,51 @@ class DeltaState:
     # high-water mark in the delta.rowTracking domain, so dropping
     # these at a checkpoint would hand out duplicate row ids
     domain_metadata: dict | None = None
+
+    @cached_property
+    def features(self) -> _Features:
+        """The table features of this version (:func:`_features`)."""
+        return _features(self.protocol, self.configuration)
+
+
+@dataclass(frozen=True)
+class _Features:
+    """What a (protocol, configuration) pair makes of a table — resolved
+    once by :func:`_features` instead of re-read by every operation."""
+
+    cm_mode: str  # delta.columnMapping.mode: "none", "name", "id", ...
+    rt_enabled: bool  # delta.enableRowTracking: rewrites keep row ids
+    # adds must carry row ids: per the spec a writer assigns them
+    # whenever the TABLE FEATURE is supported — enablement only adds
+    # the stability guarantee (preservation across rewrites)
+    rt_active: bool
+    cdf: bool  # delta.enableChangeDataFeed: DV DML writes cdc files
+    ict: bool  # delta.enableInCommitTimestamps
+    append_only: bool  # delta.appendOnly: no dataChange removes
+    # why this writer must not commit to the table (the honest-writer
+    # verdict of _check_writer_protocol), None when it may
+    writer_refusal: str | None
+
+
+def _features(protocol: dict | None, configuration: dict | None) -> _Features:
+    cfg = configuration or {}
+
+    def on(key):
+        return cfg.get(key, "").lower() == "true"
+
+    rt = on("delta.enableRowTracking")
+    cm = cfg.get("delta.columnMapping.mode") or "none"
+    return _Features(
+        cm_mode=cm,
+        rt_enabled=rt,
+        rt_active=rt or "rowTracking" in (
+            (protocol or {}).get("writerFeatures") or []
+        ),
+        cdf=on("delta.enableChangeDataFeed"),
+        ict=on("delta.enableInCommitTimestamps"),
+        append_only=on("delta.appendOnly"),
+        writer_refusal=_writer_refusal(protocol, cm),
+    )
 
 
 def _log_dir(table_dir: str) -> str:
@@ -305,12 +351,6 @@ def _now_ms() -> int:
 # which clock skew and file copies can corrupt.
 
 
-def _ict_enabled(configuration: dict | None) -> bool:
-    return (configuration or {}).get(
-        "delta.enableInCommitTimestamps", ""
-    ).lower() == "true"
-
-
 def _commit_ict(
     table_dir: str, version: int, ict_only: bool = False
 ) -> int | None:
@@ -370,7 +410,7 @@ def _commit_actions(
     then leads the commit file. Returns the ICT stamped (None when
     ICT is off)."""
     ict = None
-    if _ict_enabled(configuration):
+    if _features(None, configuration).ict:
         prev = _commit_ict(table_dir, version - 1) if version else None
         if prev is None and version:
             # version-1's JSON may be GC'd below a checkpoint; a pure
@@ -511,45 +551,26 @@ def _check_protocol(table_dir: str, protocols) -> None:
         )
 
 
-def _check_writer_protocol(
-    table_dir: str,
-    protocol,
-    configuration: dict | None = None,
-    checkpoint_only: bool = False,
-) -> None:
-    """Honest-writer gate, symmetric with _check_protocol: a table
+def _writer_refusal(protocol: dict | None, cm_mode: str) -> str | None:
+    """Honest-writer verdict, symmetric with _check_protocol: a table
     whose protocol demands writer capabilities this module does not
-    implement (minWriterVersion > 2: invariants, appendOnly, CDC,
-    generated columns, ...) must refuse to commit — appending or
-    overwriting anyway would silently violate those constraints for
-    native readers (e.g. new rows into an appendOnly table's
-    overwrite, unchecked invariants). Per the spec, writers reject
-    unsupported writer protocols even when the READER protocol is
-    satisfied.
-
-    ``checkpoint_only`` relaxes exactly the refusals irrelevant to a
-    checkpoint, which changes no rows and re-serializes protocol /
-    metaData / add actions verbatim. Since round 11 the set is empty
-    — id-mode column mapping (the one member through round 10)
-    became fully writable when _physical_payload started stamping
-    parquet field ids — but the parameter stays: any future
-    data-touching refusal belongs behind it, and checkpoint call
-    sites already declare their intent through it. Features that
-    change the CHECKPOINT's own contract (e.g. v2Checkpoint) must
-    never relax."""
-    if configuration and (
-        configuration.get("delta.columnMapping.mode") or "none"
-    ) not in ("none", "name", "id"):
+    implement must refuse to commit — appending or overwriting anyway
+    would silently violate those constraints for native readers (e.g.
+    new rows into an appendOnly table's overwrite, unchecked
+    invariants). Per the spec, writers reject unsupported writer
+    protocols even when the READER protocol is satisfied. Returns the
+    refusal (after the table name), or None. Features that change the
+    CHECKPOINT's own contract (e.g. v2Checkpoint) are gated here too:
+    checkpoints and vacuum take the same verdict as data writes."""
+    if cm_mode not in ("none", "name", "id"):
         # name AND id modes are fully writable (physical-name
         # bookkeeping + parquet field-id stamping in
         # _physical_payload); an unknown FUTURE mode still refuses —
         # files written under the wrong addressing scheme would be
         # unreadable for native readers of that mode
-        raise NotImplementedError(
-            f"{table_dir} uses column mapping mode "
-            f"{configuration.get('delta.columnMapping.mode')!r}; "
-            "this clean-room writer implements 'name' and 'id' "
-            "modes only"
+        return (
+            f"uses column mapping mode {cm_mode!r}; this clean-room "
+            "writer implements 'name' and 'id' modes only"
         )
     # changeDataFeed is a fully-implemented writer capability since
     # round 9: DV DELETE/UPDATE/MERGE emit spec cdc actions +
@@ -557,35 +578,52 @@ def _check_writer_protocol(
     # (appends/overwrites stay derivable from add/remove per the
     # spec, so they owe none); accepting CDF-on tables is honest.
     if not protocol:
-        return
+        return None
     mwv = protocol.get("minWriterVersion", 2) or 2
     feats = set(protocol.get("writerFeatures") or [])
-    ok_feats = _WRITER_FEATURES
     if mwv <= 6 and not feats:
         # writer v2 = appendOnly + invariants, v3 adds CHECK
         # constraints, v4 adds generated columns (+ CDF, gated
         # above), v5 adds column mapping (name AND id mode
-        # bookkeeping implemented; unknown future modes refused by
-        # the configuration gate above), v6 adds identity columns
-        # (generated + HWM
+        # bookkeeping implemented; unknown future modes refused
+        # above), v6 adds identity columns (generated + HWM
         # bookkeeping implemented round 10) — all ENFORCED on every
         # mutating path (_enforce_row_rules / _check_append_only /
         # _physical_payload / _identity_fields), so accepting these
         # versions is honest, not a bypass
-        return
-    if mwv == 7 and feats <= ok_feats:
+        return None
+    if mwv == 7 and feats <= _WRITER_FEATURES:
         # table-features writer protocol whose every listed feature
         # this module implements (deletionVectors: removes carry the
         # cancelled add's DV descriptor, delete/compact maintain them)
-        return
-    raise NotImplementedError(
-        f"{table_dir} requires Delta minWriterVersion {mwv} "
+        return None
+    return (
+        f"requires Delta minWriterVersion {mwv} "
         f"(writerFeatures={sorted(feats)}); this clean-room writer "
         f"implements writer protocol 5 plus {sorted(_WRITER_FEATURES)}"
         " only — committing anyway could silently violate the "
         "table's column-mapping/identity/row-tracking contracts for "
         "native readers"
     )
+
+
+def _check_writer_protocol(
+    table_dir: str, protocol, configuration: dict | None = None
+) -> None:
+    """Raise NotImplementedError when this writer must not commit to a
+    table with ``protocol`` and ``configuration`` (_writer_refusal)."""
+    refusal = _features(protocol, configuration).writer_refusal
+    if refusal:
+        raise NotImplementedError(f"{table_dir} {refusal}")
+
+
+def _writable_head(table_dir: str) -> DeltaState:
+    """The head state of a table this writer may commit to — the
+    replay + writer-gate pair that opens every operation on an
+    existing table."""
+    head = replay(table_dir)
+    _check_writer_protocol(table_dir, head.protocol, head.configuration)
+    return head
 
 
 def _table_constraints(configuration: dict | None) -> dict:
@@ -689,14 +727,12 @@ def _enforce_row_rules(
 
 
 def _check_append_only(
-    table_dir: str, configuration: dict | None, operation: str
+    table_dir: str, state: DeltaState, operation: str
 ) -> None:
     """delta.appendOnly forbids any dataChange=true remove (writer
     protocol 2 contract this writer previously ignored); OPTIMIZE's
     dataChange=false rewrites stay legal."""
-    if (configuration or {}).get(
-        "delta.appendOnly", ""
-    ).lower() == "true":
+    if state.features.append_only:
         raise ValueError(
             f"{table_dir} is delta.appendOnly=true: {operation} "
             "would remove live rows; only appends and dataChange="
@@ -744,10 +780,7 @@ def _merge_feature_protocol(
     if not need_r and not need_w:
         return None
     new_r = have_r | set(reader_feats)
-    new_w = (
-        (cur_w if mwv >= 7 else _IMPLIED_WRITER.get(mwv, set()))
-        | set(writer_feats)
-    )
+    new_w = have_w | set(writer_feats)
     return {
         "minReaderVersion": 3 if (new_r or mrv >= 3) else mrv,
         "minWriterVersion": 7,
@@ -1157,60 +1190,69 @@ def _dv_live_filter(spark: SparkSession, table_dir: str, adds: dict):
 
     @pandas_udf("boolean")
     def _live(paths, idxs):
-        import numpy as np
         import pandas as pd
 
         tdir, descs = bc.value
-        out = np.ones(len(paths), dtype=bool)
-        vals = idxs.to_numpy(dtype=np.int64)
-        # factorize instead of a per-row Python lambda: one C-speed
-        # pass turns the path column into integer codes + the (tiny,
-        # O(files)) unique list — normalization and row selection then
-        # run per FILE, not per row (optimization round, guide §4.2:
-        # the old .map(lambda)+string-mask body cost ~0.6s per 150k-row
-        # scan; this is ~10ms)
-        codes, uniques = pd.factorize(paths)
-        if (codes == -1).any():
-            # factorize codes null/NaN paths -1 and omits them from
-            # uniques — such a row would never match any `codes == k`
-            # mask below and silently stay live, bypassing the loud
-            # miss contract; a null _metadata.file_path cannot resolve
-            # to a descriptor, so refuse exactly like a path miss
-            raise ValueError(
-                "deletion-vector filter: scan batch carries a null "
-                "file path — cannot resolve a DV descriptor; passing "
-                "the row through would resurrect deleted rows"
-            )
-        for k, raw in enumerate(uniques):
-            ap = _normalize_file_uri(raw)
-            desc = descs.get(ap)
-            if desc is None:
-                # this filter is applied ONLY to the DV'd file group
-                # (_scan_files), so every scan path must resolve to a
-                # descriptor; passing rows through on a miss would
-                # silently resurrect deleted rows (path-normalization
-                # drift, symlinked tmp dirs)
-                raise ValueError(
-                    f"deletion-vector filter: scan file {ap!r} from "
-                    "the DV'd group matches no broadcast descriptor "
-                    f"(known: {sorted(descs)[:3]}...) — path "
-                    "normalization drift would resurrect deleted rows"
-                )
-            if ap not in decoded:
-                decoded[ap] = _dv.read_dv_positions(tdir, desc)
-            pos = decoded[ap]
-            if not len(pos):
-                continue
-            rows = np.flatnonzero(codes == k)
-            v = vals[rows]
-            j = np.searchsorted(pos, v)
-            hit = (j < len(pos)) & (
-                pos[np.minimum(j, len(pos) - 1)] == v
-            )
-            out[rows[hit]] = False
-        return pd.Series(out)
+
+        def positions(ap):
+            # this filter is applied ONLY to the DV'd file group
+            # (_scan_files), so every scan path must resolve to a
+            # descriptor (a miss is path-normalization drift or a
+            # symlinked tmp dir)
+            if ap not in decoded and ap in descs:
+                decoded[ap] = _dv.read_dv_positions(tdir, descs[ap])
+            return decoded.get(ap)
+
+        return pd.Series(~_position_hits(
+            paths, idxs, positions, "deletion-vector filter",
+            "resurrect deleted rows",
+        ))
 
     return _live
+
+
+def _position_hits(paths, idxs, positions, what: str, harm: str):
+    """Per row of one Arrow batch of (``_metadata.file_path``,
+    ``row_index``): whether the row index is in ``positions(abs
+    path)``, a sorted int64 array. A null path, or a file
+    ``positions`` answers None for, raises: ``what`` names the filter,
+    ``harm`` what passing the row on would do.
+
+    pd.factorize instead of a per-row Python lambda: one C-speed pass
+    turns the path column into integer codes + the (tiny, O(files))
+    unique list — normalization and row selection then run per FILE,
+    not per row (the old .map(lambda)+string-mask body cost ~0.6s per
+    150k-row scan; this is ~10ms)."""
+    import numpy as np
+    import pandas as pd
+
+    out = np.zeros(len(paths), dtype=bool)
+    vals = idxs.to_numpy(dtype=np.int64)
+    codes, uniques = pd.factorize(paths)
+    if (codes == -1).any():
+        # factorize codes null/NaN paths -1 and omits them from
+        # uniques — such a row would match no `codes == k` mask below
+        # and silently keep its default, bypassing the loud miss
+        raise ValueError(
+            f"{what}: scan batch carries a null file path — cannot "
+            f"resolve its positions; passing the row on would {harm}"
+        )
+    for k, raw in enumerate(uniques):
+        ap = _normalize_file_uri(raw)
+        pos = positions(ap)
+        if pos is None:
+            raise ValueError(
+                f"{what}: scan file {ap!r} matches no known file — "
+                f"path normalization drift would {harm}"
+            )
+        if not len(pos):
+            continue
+        rows = np.flatnonzero(codes == k)
+        v = vals[rows]
+        j = np.searchsorted(pos, v)
+        hit = (j < len(pos)) & (pos[np.minimum(j, len(pos) - 1)] == v)
+        out[rows[hit]] = True
+    return out
 
 
 # hidden row-provenance columns: file path + row index from Spark's
@@ -1227,13 +1269,6 @@ _DV_IDX = "__dv_idx"
 # mode (match by parquet field id) refuses loudly at read time.
 
 _CM_PHYS = "delta.columnMapping.physicalName"
-
-
-def _cm_mode(state: DeltaState) -> str:
-    return (
-        (state.configuration or {}).get("delta.columnMapping.mode")
-        or "none"
-    )
 
 
 def _physical_type(t):
@@ -1682,14 +1717,14 @@ def _scan_files(
     adds: dict,
     live_udf,
     keep_rowmeta: bool = False,
-    column_mapped: str | bool = False,
+    column_mapped: str = "none",
     mat_fields: list | None = None,
 ) -> DataFrame:
     """One distributed parquet scan over ``rels`` with deletion
     vectors applied; returns the columns of ``read_schema``
     (+ rowmeta when requested). Files without a DV take the plain
     scan — zero overhead on the common path. ``column_mapped``:
-    ``'name'``/True reads each field by its PHYSICAL name and renames
+    ``'name'`` reads each field by its PHYSICAL name and renames
     back to logical — nested struct fields included, via a same-shape
     cast (field renames by position); ``'id'`` keeps logical names
     but stamps ``parquet.field.id`` metadata so Spark's native
@@ -1701,10 +1736,7 @@ def _scan_files(
     (files predating materialization null-fill them)."""
     from pyspark.sql.types import StructType
 
-    cm = (
-        column_mapped if isinstance(column_mapped, str)
-        else ("name" if column_mapped else "none")
-    )
+    cm = column_mapped
     dv_set = {
         r for r in rels if adds[r].get("deletionVector")
     }
@@ -1712,22 +1744,8 @@ def _scan_files(
     dvd = [r for r in rels if r in dv_set]
     if cm == "name":
         phys_schema = _physical_struct(read_schema)
-        base = [
-            F.col(pf.name).cast(_relaxed(lf.dataType))
-            .alias(lf.name)
-            for pf, lf in zip(
-                phys_schema.fields, read_schema.fields
-            )
-        ]
     elif cm == "id":
         phys_schema = _field_id_struct(read_schema)
-        base = [
-            F.col(pf.name).cast(_relaxed(lf.dataType))
-            .alias(lf.name)
-            for pf, lf in zip(
-                phys_schema.fields, read_schema.fields
-            )
-        ]
         # matching-by-field-id must be ON when the scan EXECUTES.
         # SCOPE: this is a session-wide conf and it stays set — the
         # scan is lazy, so set-here/unset-after would race execution.
@@ -1745,7 +1763,11 @@ def _scan_files(
         )
     else:
         phys_schema = read_schema
-        base = [F.col(f.name) for f in read_schema.fields]
+    base = [
+        F.col(pf.name).cast(_relaxed(lf.dataType)).alias(lf.name)
+        if cm != "none" else F.col(lf.name)
+        for pf, lf in zip(phys_schema.fields, read_schema.fields)
+    ]
     extra: list = []
     if mat_fields:
         phys_schema = StructType(
@@ -1781,6 +1803,20 @@ def _scan_files(
     return out
 
 
+def _with_partition_values(df, pcols, values, ptypes) -> DataFrame:
+    """``df`` plus each partition column as its typed literal value;
+    per the spec a null value is JSON null or, on disk,
+    __HIVE_DEFAULT_PARTITION__."""
+    for c, v in zip(pcols, values):
+        lit = (
+            F.lit(None)
+            if v is None or v == "__HIVE_DEFAULT_PARTITION__"
+            else F.lit(v)
+        )
+        df = df.withColumn(c, lit.cast(ptypes[c]))
+    return df
+
+
 def _read_state(
     spark: SparkSession,
     table_dir: str,
@@ -1809,7 +1845,7 @@ def _read_state(
     # addresses parquet by field id via Spark's native fieldId.read
     # matching — both modes read-complete AND write-complete
     # (round 11: _physical_payload stamps the field ids)
-    cm = _cm_mode(state)
+    cm = state.features.cm_mode
     live_udf = _dv_live_filter(spark, table_dir, state.adds)
     mat_id = mat_rcv = None
     mat_fields: list | None = None
@@ -1901,15 +1937,7 @@ def _read_state(
     ):
         group = list(group_iter)
         df = scan(group, data_schema)
-        for c, v in zip(pcols, pvals(group[0])):
-            # spec: null partition value is serialized as JSON null /
-            # __HIVE_DEFAULT_PARTITION__ on disk
-            lit = (
-                F.lit(None)
-                if v is None or v == "__HIVE_DEFAULT_PARTITION__"
-                else F.lit(v)
-            )
-            df = df.withColumn(c, lit.cast(ptypes[c]))
+        df = _with_partition_values(df, pcols, pvals(group[0]), ptypes)
         parts.append(
             df.select(
                 *[f.name for f in schema.fields], *meta_cols
@@ -2106,12 +2134,6 @@ def _write_adds(
 _CHANGE_TYPE = "_change_type"
 
 
-def _cdf_enabled(configuration: dict | None) -> bool:
-    return (configuration or {}).get(
-        "delta.enableChangeDataFeed", ""
-    ).lower() == "true"
-
-
 def _write_cdc_files(
     df: DataFrame | list | tuple,
     table_dir: str,
@@ -2136,37 +2158,17 @@ def _write_cdc_files(
     persisted matched set: analyzed schema carried the ids, written
     footers did not). Per-branch stamping is the single-branch shape
     the DELETE path always used, which survives optimization."""
-    from pyspark.sql.types import StructType
-
-    branches = list(df) if isinstance(df, (list, tuple)) else [df]
-    schema = StructType.fromJson(json.loads(schema_json))
-    if _CM_PHYS in schema_json:
-        phys = _physical_struct(schema)
-        cols = [
-            F.col(lf.name).cast(pf.dataType).alias(pf.name)
-            for lf, pf in zip(schema.fields, phys.fields)
-        ]
-        pmap = {
-            lf.name: pf.name
-            for lf, pf in zip(schema.fields, phys.fields)
-        }
-    else:
-        cols = [F.col(f.name) for f in schema.fields]
-        pmap = {}
-
-    def _branch_payload(b: DataFrame) -> DataFrame:
-        p = b.select(*cols, F.col(_CHANGE_TYPE))
-        if _CM_PHYS in schema_json:
-            # change files carry field ids like data files do — the
-            # id-mode cdc reader addresses them by id; _change_type
-            # itself lives outside the table schema and rides id-less
-            p = _stamp_field_ids(p, schema, (_CHANGE_TYPE,))
-        return p
-
-    payload = _branch_payload(branches[0])
-    for b in branches[1:]:
-        payload = payload.unionByName(_branch_payload(b))
-    wpcols = [pmap.get(c, c) for c in pcols]
+    names = [f["name"] for f in json.loads(schema_json)["fields"]]
+    payload = None
+    for b in df if isinstance(df, (list, tuple)) else [df]:
+        # change files carry field ids like data files do — the id-mode
+        # cdc reader addresses them by id; _change_type itself lives
+        # outside the table schema and rides id-less
+        p, wpcols, _ = _physical_payload(
+            b.select(*names, _CHANGE_TYPE), schema_json, pcols,
+            extra_cols=(_CHANGE_TYPE,),
+        )
+        payload = p if payload is None else payload.unionByName(p)
     commit_id = uuid.uuid4().hex[:12]
     rel_root = os.path.join("_change_data", commit_id)
     out = os.path.join(table_dir, rel_root)
@@ -2217,7 +2219,7 @@ def _read_cdc_files(
     from pyspark.sql.types import StringType, StructField, StructType
 
     schema = StructType.fromJson(json.loads(end.schema))
-    cm = _cm_mode(end)
+    cm = end.features.cm_mode
     pcols = list(end.partition_cols)
     ptypes = {f.name: f.dataType for f in schema.fields}
     data_fields = [f for f in schema.fields if f.name not in pcols]
@@ -2272,14 +2274,9 @@ def _read_cdc_files(
             ]
         ).select(*base)
         pv = group[0]["cdc"].get("partitionValues") or {}
-        for c in pcols:
-            v = pv.get(pphys[c])
-            lit = (
-                F.lit(None)
-                if v is None or v == "__HIVE_DEFAULT_PARTITION__"
-                else F.lit(v)
-            )
-            df = df.withColumn(c, lit.cast(ptypes[c]))
+        df = _with_partition_values(
+            df, pcols, [pv.get(pphys[c]) for c in pcols], ptypes
+        )
         parts.append(
             df.select(
                 *[f.name for f in schema.fields], _CHANGE_TYPE
@@ -2335,10 +2332,7 @@ def delta_set_clustering(
     ``domainMetadata`` features. Metadata-only — the next
     :func:`delta_cluster_optimize` produces the physical layout,
     exactly how native defers clustering work to OPTIMIZE."""
-    head = replay(table_dir)
-    _check_writer_protocol(
-        table_dir, head.protocol, head.configuration
-    )
+    head = _writable_head(table_dir)
     sj = json.loads(head.schema)
     by_name = {f["name"]: f for f in sj["fields"]}
     missing = [c for c in cols if c not in by_name]
@@ -2398,10 +2392,7 @@ def delta_cluster_optimize(
     hive partitioning — native's liquid-clustering posture)."""
     from ..operators.layout import zorder_key
 
-    head = replay(table_dir)
-    _check_writer_protocol(
-        table_dir, head.protocol, head.configuration
-    )
+    head = _writable_head(table_dir)
     cols = clustering_columns(head)
     if not cols:
         raise ValueError(
@@ -2413,39 +2404,19 @@ def delta_cluster_optimize(
             "clustered OPTIMIZE supports unpartitioned tables only "
             "(clustering replaces hive partitioning)"
         )
-    rt_on = _rt_enabled(head.configuration)
-    mat_cols: list = []
-    df = _read_state(spark, table_dir, head, with_row_ids=rt_on)
-    if rt_on:
-        mat_id, mat_rcv = _rt_mat_names(
-            table_dir, head.configuration
+    def layout(df):
+        return (
+            df.withColumn("__zkey", zorder_key(df, cols, bits))
+            .repartitionByRange(target_files, "__zkey")
+            .sortWithinPartitions("__zkey")
+            .drop("__zkey")
         )
-        df = df.withColumnRenamed(_ROW_ID, mat_id) \
-               .withColumnRenamed(_ROW_RCV, mat_rcv)
-        mat_cols = [mat_id, mat_rcv]
-    z = zorder_key(df, cols, bits)
-    df = (
-        df.withColumn("__zkey", z)
-        .repartitionByRange(target_files, "__zkey")
-        .sortWithinPartitions("__zkey")
-        .drop("__zkey")
-    )
-    df, _wp, pstat = _physical_payload(
-        df, head.schema, extra_cols=mat_cols
-    )
-    phys_stats = [
-        pstat(c) for c in (
-            list(stats_cols) if stats_cols else list(cols)
-        )
-    ]
-    adds, _ = _write_adds(
-        df, table_dir, stats_cols=phys_stats, data_change=False
-    )
-    for a in adds:
-        a["add"]["clusteringProvider"] = "liquid"
-    return _optimize_commit(
-        table_dir, head, head.files, adds,
+
+    return _optimize_rewrite(
+        spark, table_dir, head, layout,
+        list(stats_cols) if stats_cols else list(cols),
         {"targetFiles": target_files, "clusterBy": list(cols)},
+        provider="liquid",
     )
 
 
@@ -2642,22 +2613,6 @@ _RT_MAT_RCV = (
 )
 _ROW_ID = "_row_id"
 _ROW_RCV = "_row_commit_version"
-
-
-def _rt_enabled(configuration: dict | None) -> bool:
-    return (configuration or {}).get(
-        "delta.enableRowTracking", ""
-    ).lower() == "true"
-
-
-def _rt_active(protocol: dict | None, configuration: dict | None) -> bool:
-    """Whether adds must carry row-id fields: per the spec, a writer
-    assigns baseRowId/defaultRowCommitVersion whenever the TABLE
-    FEATURE is supported — enablement only adds the stability
-    guarantee (preservation across rewrites)."""
-    return _rt_enabled(configuration) or "rowTracking" in (
-        (protocol or {}).get("writerFeatures") or []
-    )
 
 
 def _rt_hwm(domain_metadata: dict | None) -> int:
@@ -2872,14 +2827,9 @@ def write_delta(
         # a txn that has already transacted exits without writing
         # anything. Both checks re-run inside the commit loop to
         # close the concurrent-upgrade / concurrent-txn races.
-        head0 = replay(table_dir)
-        _check_writer_protocol(
-            table_dir, head0.protocol, head0.configuration
-        )
+        head0 = _writable_head(table_dir)
         if mode == "overwrite":
-            _check_append_only(
-                table_dir, head0.configuration, "overwrite"
-            )
+            _check_append_only(table_dir, head0, "overwrite")
         # --- identity columns (spec "Identity Columns"): absent
         # identity columns are GENERATED (per-partition ranges above
         # the high-water mark, gaps allowed); explicit values refuse
@@ -2968,11 +2918,7 @@ def write_delta(
     # --- column-mapping resolution, BEFORE any file materializes:
     # mapped tables write data files under PHYSICAL column names, and
     # partitionValues/stats keys are physical too ---
-    head_mode = (
-        ((head0.configuration or {}).get("delta.columnMapping.mode")
-         or "none")
-        if head0 is not None else "none"
-    )
+    head_mode = head0.features.cm_mode if head0 is not None else "none"
     if column_mapping == "none" and head_mode in ("name", "id"):
         # an explicit 'none' on a mapped table is an ask to DISABLE
         # the mode — a spec-governed operation (physical rewrite +
@@ -3071,30 +3017,26 @@ def write_delta(
         file_schema = schema_json
     else:
         file_schema = schema_json
-    # --- row-tracking resolution: rt_config carries the enablement
+    # --- row-tracking resolution: new_config gains the enablement
     # entries (flag + materialized column names) when THIS write turns
-    # the feature on; rt_on means adds must be stamped ---
-    head_cfg = (head0.configuration or {}) if head0 else {}
+    # the feature on; rt_on (a feature of the configuration this write
+    # commits) means adds must be stamped ---
     if row_tracking and mode == "append" and head0 is not None \
-            and not _rt_enabled(head_cfg):
+            and not head0.features.rt_enabled:
         raise ValueError(
             "cannot enable row tracking on an append; overwrite the "
             "table with row_tracking=True (or use "
             "delta_alter_properties, which backfills existing files)"
         )
-    rt_config: dict | None = None
-    if row_tracking and not _rt_enabled(
-        cm_config if cm_config is not None else head_cfg
-    ):
-        rt_config = {
-            **(cm_config if cm_config is not None else head_cfg),
-            **_rt_fresh_config(),
-        }
-    new_config = rt_config if rt_config is not None else cm_config
-    rt_on = row_tracking or _rt_active(
-        head0.protocol if head0 else None,
-        new_config if new_config is not None else head_cfg,
+    protocol0 = head0.protocol if head0 else None
+    new_config = cm_config
+    commit_cfg = (
+        cm_config if cm_config is not None
+        else (head0.configuration or {}) if head0 else {}
     )
+    if row_tracking and not _features(protocol0, commit_cfg).rt_enabled:
+        new_config = commit_cfg = {**commit_cfg, **_rt_fresh_config()}
+    rt_on = _features(protocol0, commit_cfg).rt_active
     wdf, wpcols, pstat = _physical_payload(df, file_schema, pcols)
     phys_stats = (
         [pstat(c) for c in stats_cols] if stats_cols else stats_cols
@@ -3178,9 +3120,7 @@ def write_delta(
                 # after validation: the rules the table now carries
                 # were never checked against these rows
                 if mode == "overwrite":
-                    _check_append_only(
-                        table_dir, head.configuration, "overwrite"
-                    )
+                    _check_append_only(table_dir, head, "overwrite")
                 _enforce_row_rules(
                     df,
                     head.configuration,
@@ -3199,9 +3139,7 @@ def write_delta(
         # (incapable readers would parse the physical type wrong
         # instead of refusing); enabling column mapping likewise
         need_r, need_w = _ntz_features(schema_json)
-        if (cm_config or {}).get(
-            "delta.columnMapping.mode"
-        ) in ("name", "id"):
+        if cm_config is not None:  # mapped or being mapped
             need_r = need_r | {"columnMapping"}
             need_w = need_w | {"columnMapping"}
         if rt_on:
@@ -3315,10 +3253,7 @@ def write_delta(
                 for p in head.files
             )
         actions.extend(adds)
-        if rt_on or (
-            head is not None
-            and _rt_active(head.protocol, head.configuration)
-        ):
+        if rt_on or (head is not None and head.features.rt_active):
             # stamp fresh row ids (retries restamp against the fresh
             # head's high-water mark — ids are provisional until the
             # commit wins) and advance the domain-metadata HWM
@@ -3429,11 +3364,8 @@ def write_checkpoint(
     # a stricter table's protocol the moment replay starts basing on
     # the checkpoint, disarming _check_writer_protocol for every
     # subsequent writer (and lying to native readers).
-    # checkpoint_only: a checkpoint changes no rows, so id-mapped
-    # tables (readable-metadata-wise) stay checkpointable
     _check_writer_protocol(
-        table_dir, state.protocol, state.configuration,
-        checkpoint_only=True,
+        table_dir, state.protocol, state.configuration
     )
     proto = state.protocol or dict(_PROTOCOL)
     rows = [
@@ -3445,11 +3377,8 @@ def write_checkpoint(
             # readers scan a DV table and resurrect deleted rows
             "readerFeatures": proto.get("readerFeatures"),
             "writerFeatures": proto.get("writerFeatures"),
-        }, "metaData": None, "add": None,
-         "txn": None},
+        }},
         {
-            "protocol": None,
-            "txn": None,
             "metaData": {
                 "id": state.metadata_id,
                 "format": {"provider": "parquet", "options": {}},
@@ -3461,14 +3390,10 @@ def write_checkpoint(
                 "configuration": dict(state.configuration or {}),
                 "createdTime": _now_ms(),
             },
-            "add": None,
         },
     ]
     for app_id, tv in sorted((state.txns or {}).items()):
         rows.append({
-            "protocol": None,
-            "metaData": None,
-            "add": None,
             "txn": {"appId": app_id, "version": tv,
                     "lastUpdated": None},
         })
@@ -3477,10 +3402,6 @@ def write_checkpoint(
         # high-water mark lives in delta.rowTracking; dropping it
         # would hand duplicate row ids to post-GC writers
         rows.append({
-            "protocol": None,
-            "metaData": None,
-            "add": None,
-            "txn": None,
             "domainMetadata": {
                 "domain": dom,
                 "configuration": cfg,
@@ -3492,9 +3413,6 @@ def write_checkpoint(
         a.setdefault("stats", None)
         dvd = a.get("deletionVector")
         rows.append({
-            "protocol": None,
-            "metaData": None,
-            "txn": None,
             "add": {
                 "path": a["path"],
                 "partitionValues": a.get("partitionValues", {}),
@@ -3665,7 +3583,7 @@ def write_checkpoint(
     # commit whose predecessor JSON was GC'd can still floor its own
     # ICT monotonically (_commit_actions). Readers ignore unknown
     # _last_checkpoint fields, so this stays format-compatible.
-    if _ict_enabled(state.configuration):
+    if state.features.ict:
         cp_ict = _commit_ict(table_dir, state.version, ict_only=True)
         if cp_ict is not None:
             lc["cleanroomLastIct"] = cp_ict
@@ -3765,7 +3683,7 @@ def delta_scan(
     # column-mapped tables (either mode) key per-file stats and
     # partitionValues by PHYSICAL names; remap the prune columns for
     # the file-level tests (the row-level re-filter stays logical)
-    cm = _cm_mode(state) != "none"
+    cm = state.features.cm_mode != "none"
     phys = {
         f["name"]: (f.get("metadata") or {}).get(
             _CM_PHYS, f["name"]
@@ -3784,17 +3702,9 @@ def delta_scan(
             a, state.partition_cols, ptypes, prune, phys=phys
         )
     }
-    sub = DeltaState(
-        version=state.version,
-        files=tuple(keep),
-        schema=state.schema,
-        metadata_id=state.metadata_id,
-        adds=keep,
-        partition_cols=state.partition_cols,
-        txns=state.txns,
-        configuration=state.configuration,
+    df = _read_state(
+        spark, table_dir, replace(state, files=tuple(keep), adds=keep)
     )
-    df = _read_state(spark, table_dir, sub)
     for col, (lo, hi) in prune.items():
         if lo is not None:
             df = df.where(F.col(col) >= lo)
@@ -3819,7 +3729,7 @@ def _optimize_commit(
     ConcurrentCommitError — retrying verbatim would resurrect its
     removed rows. Each attempt restamps row ids against the CURRENT
     head's high-water mark, which a composed append advances."""
-    rt = _rt_active(head.protocol, head.configuration)
+    rt = head.features.rt_active
     for _ in range(_MAX_COMMIT_RETRIES):
         version = list_delta_versions(table_dir)[-1] + 1
         # inspect commits that landed since we computed the rewrite
@@ -3866,22 +3776,39 @@ def delta_compact(
     (:func:`_optimize_commit`)."""
     if target_files < 1:
         raise ValueError("target_files must be >= 1")
-    head = replay(table_dir)
-    _check_writer_protocol(
-        table_dir, head.protocol, head.configuration
-    )
+    head = _writable_head(table_dir)
     if head.partition_cols:
         return _delta_compact_partitioned(
             spark, table_dir, head, target_files, stats_cols,
         )
-    rt_on = _rt_enabled(head.configuration)
+    return _optimize_rewrite(
+        spark, table_dir, head, lambda df: df.coalesce(target_files),
+        stats_cols, {"targetFiles": target_files},
+    )
+
+
+def _optimize_rewrite(
+    spark: SparkSession,
+    table_dir: str,
+    head: DeltaState,
+    layout,
+    stats_cols: list[str] | None,
+    parameters: dict,
+    provider: str | None = None,
+) -> DeltaState:
+    """The rewrite shared by plain and clustered OPTIMIZE of an
+    unpartitioned table: read the head's live rows, lay them out with
+    ``layout`` (DataFrame -> DataFrame), write them as ``dataChange:
+    false`` adds (tagged ``clusteringProvider`` when ``provider``) and
+    commit through :func:`_optimize_commit`. OPTIMIZE changes no rows,
+    so on a row-tracking table the rewritten rows keep BOTH their ids
+    and their original commit versions — materialized into the new
+    files (fresh defaults can't represent rows drawn from many source
+    commits)."""
+    rt_on = head.features.rt_enabled
     mat_cols: list = []
     df = _read_state(spark, table_dir, head, with_row_ids=rt_on)
     if rt_on:
-        # OPTIMIZE changes no rows, so compacted rows keep BOTH their
-        # ids and their original commit versions — materialize both
-        # into the rewritten files (fresh defaults can't represent
-        # rows drawn from many source commits)
         mat_id, mat_rcv = _rt_mat_names(
             table_dir, head.configuration
         )
@@ -3889,18 +3816,19 @@ def delta_compact(
                .withColumnRenamed(_ROW_RCV, mat_rcv)
         mat_cols = [mat_id, mat_rcv]
     df, _wp, pstat = _physical_payload(
-        df, head.schema, extra_cols=mat_cols
-    )
-    phys_stats = (
-        [pstat(c) for c in stats_cols] if stats_cols else stats_cols
+        layout(df), head.schema, extra_cols=mat_cols
     )
     adds, _ = _write_adds(
-        df.coalesce(target_files), table_dir,
-        stats_cols=phys_stats, data_change=False,
+        df, table_dir,
+        stats_cols=[pstat(c) for c in stats_cols] if stats_cols
+        else stats_cols,
+        data_change=False,
     )
+    if provider:
+        for a in adds:
+            a["add"]["clusteringProvider"] = provider
     return _optimize_commit(
-        table_dir, head, head.files, adds,
-        {"targetFiles": target_files},
+        table_dir, head, head.files, adds, parameters
     )
 
 
@@ -3944,9 +3872,10 @@ def _delta_compact_partitioned(
     # column-mapped tables (either mode) key partitionValues, hive
     # segments, and stats by PHYSICAL names (the reader's pphys,
     # mirrored here)
-    cm = _cm_mode(head) != "none"
+    cm = head.features.cm_mode
     pphys = {
-        c: (_phys_col_name(schema, c) if cm else c) for c in pcols
+        c: (_phys_col_name(schema, c) if cm != "none" else c)
+        for c in pcols
     }
     groups: dict[tuple, list[str]] = {}
     for rel, a in head.adds.items():
@@ -3968,7 +3897,7 @@ def _delta_compact_partitioned(
     # rows deleted by deletion vectors into the dataChange=false
     # rewrite — the purge must ride the same filtered scan as reads
     live_udf = _dv_live_filter(spark, table_dir, head.adds)
-    rt_on = _rt_enabled(head.configuration)
+    rt_on = head.features.rt_enabled
     mat_cols: list = []
     mat_fields = None
     if rt_on:
@@ -4118,16 +4047,9 @@ def read_delta_increment(
         return spark.createDataFrame([], schema)
     # route through _read_state (both layouts): the subset read must
     # honor the same column-mapping resolution as a full read
-    sub = DeltaState(
-        version=version,
-        files=tuple(added),
-        schema=end.schema,
-        metadata_id=end.metadata_id,
-        adds=added,
-        partition_cols=end.partition_cols,
-        configuration=end.configuration,
+    return _read_state(
+        spark, table_dir, replace(end, files=tuple(added), adds=added)
     )
-    return _read_state(spark, table_dir, sub)
 
 
 def read_delta_changes(
@@ -4205,15 +4127,7 @@ def read_delta_changes(
         return _dv.read_dv_positions(table_dir, desc)
 
     def _sub_state(adds: dict) -> DeltaState:
-        return DeltaState(
-            version=version,
-            files=tuple(adds),
-            schema=end.schema,
-            metadata_id=end.metadata_id,
-            adds=adds,
-            partition_cols=end.partition_cols,
-            configuration=end.configuration,
-        )
+        return replace(end, files=tuple(adds), adds=adds)
 
     def _keep_positions(df, pos_map: dict):
         """Inverse of the live filter: KEEP only (file, row_index)
@@ -4225,50 +4139,39 @@ def read_delta_changes(
         def _hit(paths, idxs):
             import pandas as pd
 
-            m = bc.value
-            out = np.zeros(len(paths), dtype=bool)
-            vals = idxs.to_numpy(dtype=np.int64)
-            # factorize: per-file selection at C speed instead of a
-            # per-row lambda + per-file string masks (same fix as
-            # _dv_live_filter, guide §4.2)
-            codes, uniques = pd.factorize(paths)
-            if (codes == -1).any():
-                # a null path factorizes to code -1 (absent from
-                # uniques) — the row would keep its default False and
-                # silently vanish from the feed; refuse like a key miss
-                raise ValueError(
-                    "change-feed diff filter: scan batch carries a "
-                    "null file path — cannot match a position-map "
-                    "key; dropping the row would lose changed rows"
-                )
-            for k, raw in enumerate(uniques):
-                ap = _normalize_file_uri(raw)
-                pos = m.get(ap)
-                if pos is None:
-                    # the raw scan covers exactly pos_map's files, so
-                    # a key miss is path-normalization drift; keeping
-                    # the default False would silently DROP changed
-                    # rows from the feed (mirror image of the live
-                    # filter's resurrect hazard)
-                    raise ValueError(
-                        f"change-feed diff filter: scan file {ap!r} "
-                        "matches no position-map key — path "
-                        "normalization drift would drop changed rows"
-                    )
-                if not len(pos):
-                    continue
-                rows = np.flatnonzero(codes == k)
-                v = vals[rows]
-                j = np.searchsorted(pos, v)
-                hit = (j < len(pos)) & (
-                    pos[np.minimum(j, len(pos) - 1)] == v
-                )
-                out[rows[hit]] = True
-            return pd.Series(out)
+            # the raw scan covers exactly pos_map's files (mirror image
+            # of the live filter's resurrect hazard)
+            return pd.Series(_position_hits(
+                paths, idxs, bc.value.get, "change-feed diff filter",
+                "drop changed rows",
+            ))
 
         return df.where(
             _hit(F.col(_DV_PATH), F.col(_DV_IDX))
         ).drop(_DV_PATH, _DV_IDX)
+
+    def _roll_forward(quiet, removes_v, adds_v):
+        """Apply one commit to the tracked state ``cur``: its
+        dataChange=false rewrites in log order, then its data removes
+        (a path the commit re-adds is replaced instead), then its data
+        adds. A remove cancels a live add only under the same (path,
+        DV unique id) key, as in replay."""
+        def cancel(r):
+            live = cur.get(r["path"])
+            if live is not None and _dv.dv_unique_id(
+                r.get("deletionVector")
+            ) == _dv.dv_unique_id(live.get("deletionVector")):
+                cur.pop(r["path"])
+
+        for action in quiet:
+            if "add" in action:
+                cur[action["add"]["path"]] = action["add"]
+            else:
+                cancel(action["remove"])
+        for path, r in removes_v.items():
+            if path not in adds_v:
+                cancel(r)
+        cur.update(adds_v)
 
     parts: list[DataFrame] = []
 
@@ -4342,26 +4245,7 @@ def read_delta_changes(
                     ),
                 )
             )
-            for action in quiet:
-                if "add" in action:
-                    cur[action["add"]["path"]] = action["add"]
-                else:
-                    r = action["remove"]
-                    live = cur.get(r["path"])
-                    if live is not None and _dv.dv_unique_id(
-                        r.get("deletionVector")
-                    ) == _dv.dv_unique_id(
-                        live.get("deletionVector")
-                    ):
-                        cur.pop(r["path"])
-            for path, r in removes_v.items():
-                live = cur.get(path)
-                if live is not None and path not in adds_v and \
-                        _dv.dv_unique_id(r.get("deletionVector")) \
-                        == _dv.dv_unique_id(
-                            live.get("deletionVector")):
-                    cur.pop(path)
-            cur.update(adds_v)
+            _roll_forward(quiet, removes_v, adds_v)
             continue
         full_inserts: dict = {}
         full_deletes: dict = {}
@@ -4449,26 +4333,7 @@ def read_delta_changes(
                 keep_rowmeta=True,
             )
             _stamp(_keep_positions(raw, pos_map), change, cv, ts)
-        # roll the tracked state forward (quiet rewrites included)
-        for action in quiet:
-            if "add" in action:
-                cur[action["add"]["path"]] = action["add"]
-            else:
-                r = action["remove"]
-                live = cur.get(r["path"])
-                if live is not None and _dv.dv_unique_id(
-                    r.get("deletionVector")
-                ) == _dv.dv_unique_id(
-                    live.get("deletionVector")
-                ):
-                    cur.pop(r["path"])
-        for path, r in removes_v.items():
-            live = cur.get(path)
-            if live is not None and path not in adds_v and \
-                    _dv.dv_unique_id(r.get("deletionVector")) == \
-                    _dv.dv_unique_id(live.get("deletionVector")):
-                cur.pop(path)
-        cur.update(adds_v)
+        _roll_forward(quiet, removes_v, adds_v)
 
     if not parts:
         return _empty()
@@ -4516,11 +4381,8 @@ def delta_merge_upsert(
     in between — silently renumbering would erase the concurrent
     commit's rows. The caller re-runs against the new head; updates
     are idempotent, so a re-run is always safe."""
-    head = replay(table_dir)
-    _check_writer_protocol(
-        table_dir, head.protocol, head.configuration
-    )
-    _check_append_only(table_dir, head.configuration, "MERGE")
+    head = _writable_head(table_dir)
+    _check_append_only(table_dir, head, "MERGE")
     current = _read_state(spark, table_dir, head)
     # structural check, not column-name sets: unionByName would
     # silently WIDEN the merged data files' type (long table + double
@@ -4550,7 +4412,7 @@ def delta_merge_upsert(
         return _delta_merge_via_dv(
             spark, table_dir, head, updates, keys
         )
-    rt_on = _rt_enabled(head.configuration)
+    rt_on = head.features.rt_enabled
     mat_cols: list = []
     if rt_on:
         # the rewrite strategy re-writes EVERY row, so stability needs
@@ -4590,7 +4452,7 @@ def delta_merge_upsert(
         ).unionByName(updates)
     pcols = list(head.partition_cols)
     cdc_actions: list[dict] = []
-    if _cdf_enabled(head.configuration):
+    if head.features.cdf:
         # the rewrite commits remove(all)+add(all), which a CDF
         # reader would have to interpret as delete-all+insert-all;
         # the SEMANTIC change is the merge diff, so record it as cdc
@@ -4629,7 +4491,7 @@ def delta_merge_upsert(
         for p in head.files
     )
     actions.extend(adds)
-    if _rt_active(head.protocol, head.configuration):
+    if head.features.rt_active:
         actions.extend(_stamp_row_ids(
             adds, head.domain_metadata, head.version + 1
         ))
@@ -4651,7 +4513,7 @@ def _delta_merge_via_dv(
     their existing files, all update rows -> new appended files."""
     from pyspark.sql.types import StructType
 
-    rt_on = _rt_enabled(head.configuration)
+    rt_on = head.features.rt_enabled
     mat_id = (
         _rt_mat_names(table_dir, head.configuration)[0]
         if rt_on else None
@@ -4691,7 +4553,7 @@ def _delta_merge_via_dv(
         mat_cols = [mat_id]
     pcols = list(head.partition_cols)
     cdc_actions: list[dict] = []
-    if _cdf_enabled(head.configuration):
+    if head.features.cdf:
         # native MERGE cdc shape: matched target rows as
         # update_preimage, their replacing source rows as
         # update_postimage, unmatched source rows as insert
@@ -4759,10 +4621,7 @@ def delta_alter_properties(
     Concurrency: committed at head+1 over the state the validation
     scan read; a racing commit raises ConcurrentCommitError (a
     renumber could validate against rows that no longer exist)."""
-    head = replay(table_dir)
-    _check_writer_protocol(
-        table_dir, head.protocol, head.configuration
-    )
+    head = _writable_head(table_dir)
     config = dict(head.configuration or {})
     set_props = dict(set_props or {})
     touched_cm = [
@@ -4801,7 +4660,8 @@ def delta_alter_properties(
     need_w: set = set()
     if _table_constraints(config):
         need_w.add("checkConstraints")
-    if _cdf_enabled(config):
+    new = _features(head.protocol, config)
+    if new.cdf:
         # enabling the change data feed obliges every subsequent
         # writer to emit cdc actions — the protocol must say so, so
         # cdc-incapable native writers refuse instead of silently
@@ -4816,9 +4676,9 @@ def delta_alter_properties(
         # the log into the protected range
         need_w.add("checkpointProtection")
     ict0 = None
-    if _ict_enabled(config):
+    if new.ict:
         need_w.add("inCommitTimestamp")
-        if not _ict_enabled(head.configuration):
+        if not head.features.ict:
             # spec: enabling ICT on an existing table records WHERE
             # the reliable clock starts — timestamp queries below the
             # enablement version fall back to file mtimes
@@ -4831,7 +4691,7 @@ def delta_alter_properties(
                 str(ict0)
             )
     rt_actions: list[dict] = []
-    if _rt_enabled(config) and not _rt_enabled(head.configuration):
+    if new.rt_enabled and not head.features.rt_enabled:
         # enabling row tracking on an EXISTING table: stamp the
         # materialized-column names (unless the caller set them) and
         # BACKFILL — re-add every live file (dataChange=false, DV
@@ -4879,6 +4739,27 @@ def delta_alter_properties(
     )
 
 
+def _check_unreferenced(head: DeltaState, col: str, what: str) -> None:
+    """Refuse to ``what`` (rename, drop, widen) column ``col`` while a
+    CHECK constraint, invariant or generated-column expression names
+    it: the expressions store LOGICAL names and would dangle (native
+    validates the same way)."""
+    hit = [
+        expr
+        for _, expr in (
+            list(_table_constraints(head.configuration).items())
+            + _column_invariants(head.schema)
+            + _generated_columns(head.schema)
+        )
+        if re.search(rf"\b{re.escape(col)}\b", expr)
+    ]
+    if hit:
+        raise ValueError(
+            f"cannot {what} {col!r}: referenced by table rule(s) "
+            f"{hit} — drop or rewrite them first"
+        )
+
+
 def delta_rename_column(
     table_dir: str, old: str, new: str
 ) -> DeltaState:
@@ -4891,12 +4772,8 @@ def delta_rename_column(
     constraint, invariant, or generated-column expression mentions
     the old name (native validates the same way: the expressions
     store LOGICAL names and would dangle)."""
-    head = replay(table_dir)
-    _check_writer_protocol(
-        table_dir, head.protocol, head.configuration
-    )
-    if ((head.configuration or {}).get("delta.columnMapping.mode")
-            or "none") not in ("name", "id"):
+    head = _writable_head(table_dir)
+    if head.features.cm_mode not in ("name", "id"):
         raise ValueError(
             f"{table_dir} has no column mapping; RENAME COLUMN "
             "needs it (enable via "
@@ -4911,25 +4788,7 @@ def delta_rename_column(
         )
     if new in names:
         raise ValueError(f"column {new!r} already exists")
-    rules = [
-        expr
-        for _, expr in (
-            list(_table_constraints(head.configuration).items())
-            + _column_invariants(head.schema)
-            + _generated_columns(head.schema)
-        )
-    ]
-    import re as _re
-
-    hit = [
-        r for r in rules
-        if _re.search(rf"\b{_re.escape(old)}\b", r)
-    ]
-    if hit:
-        raise ValueError(
-            f"cannot rename {old!r}: referenced by table rule(s) "
-            f"{hit} — drop or rewrite them first"
-        )
+    _check_unreferenced(head, old, "rename")
     if old in head.partition_cols:
         pcols = [new if c == old else c for c in head.partition_cols]
     else:
@@ -4960,12 +4819,8 @@ def delta_drop_column(table_dir: str, col: str) -> DeltaState:
     mentions. A later re-ADD of the same logical name gets a FRESH id
     and physical name (_remap_column_mapping keys off the post-drop
     schema), so old values can never resurrect — native semantics."""
-    head = replay(table_dir)
-    _check_writer_protocol(
-        table_dir, head.protocol, head.configuration
-    )
-    if ((head.configuration or {}).get("delta.columnMapping.mode")
-            or "none") not in ("name", "id"):
+    head = _writable_head(table_dir)
+    if head.features.cm_mode not in ("name", "id"):
         raise ValueError(
             f"{table_dir} has no column mapping; DROP COLUMN needs "
             "it — without mapping the reader cannot skip a physical "
@@ -4981,25 +4836,7 @@ def delta_drop_column(table_dir: str, col: str) -> DeltaState:
         raise ValueError(
             f"cannot drop partition column {col!r}"
         )
-    rules = [
-        expr
-        for _, expr in (
-            list(_table_constraints(head.configuration).items())
-            + _column_invariants(head.schema)
-            + _generated_columns(head.schema)
-        )
-    ]
-    import re as _re
-
-    hit = [
-        r for r in rules
-        if _re.search(rf"\b{_re.escape(col)}\b", r)
-    ]
-    if hit:
-        raise ValueError(
-            f"cannot drop {col!r}: referenced by table rule(s) "
-            f"{hit} — drop or rewrite them first"
-        )
+    _check_unreferenced(head, col, "drop")
     fields = [f for f in sj["fields"] if f["name"] != col]
     meta = _meta_action(
         json.dumps({**sj, "fields": fields}),
@@ -5032,14 +4869,8 @@ def delta_upgrade_column_mapping(table_dir: str) -> DeltaState:
     — enable id mode at creation (or whole-table overwrite) instead.
     Idempotent on an already-name-mapped table; refuses on id mode
     (a downgrade-to-name would flip addressing semantics)."""
-    head = replay(table_dir)
-    _check_writer_protocol(
-        table_dir, head.protocol, head.configuration
-    )
-    mode = (
-        (head.configuration or {}).get("delta.columnMapping.mode")
-        or "none"
-    )
+    head = _writable_head(table_dir)
+    mode = head.features.cm_mode
     if mode == "name":
         return head  # already enabled: no-op, like native
     if mode != "none":
@@ -5132,10 +4963,7 @@ def delta_widen_column(
     of failing on the narrow physical types still in the files.
     Decimal widenings accept precision growth at equal-or-grown
     scale with the integer part never shrinking."""
-    head = replay(table_dir)
-    _check_writer_protocol(
-        table_dir, head.protocol, head.configuration
-    )
+    head = _writable_head(table_dir)
     sj = json.loads(head.schema)
     by_name = {f["name"]: f for f in sj["fields"]}
     if col not in by_name:
@@ -5153,10 +4981,8 @@ def delta_widen_column(
     if not ok and isinstance(old_type, str) and \
             old_type.startswith("decimal(") and \
             new_type.startswith("decimal("):
-        import re as _re
-
-        po, so = map(int, _re.findall(r"\d+", old_type))
-        pn, sn = map(int, _re.findall(r"\d+", new_type))
+        po, so = map(int, re.findall(r"\d+", old_type))
+        pn, sn = map(int, re.findall(r"\d+", new_type))
         ok = sn >= so and (pn - sn) >= (po - so) and pn > po
     if not ok:
         raise ValueError(
@@ -5164,24 +4990,7 @@ def delta_widen_column(
             "widening (spec matrix: byte/short/int -> wider ints or "
             "double, float -> double, decimal precision growth)"
         )
-    rules = [
-        expr
-        for _, expr in (
-            list(_table_constraints(head.configuration).items())
-            + _column_invariants(head.schema)
-            + _generated_columns(head.schema)
-        )
-    ]
-    import re as _re
-
-    hit = [r for r in rules if _re.search(
-        rf"\b{_re.escape(col)}\b", r
-    )]
-    if hit:
-        raise ValueError(
-            f"cannot widen {col!r}: referenced by table rule(s) "
-            f"{hit} — drop or rewrite them first"
-        )
+    _check_unreferenced(head, col, "widen")
     f = dict(by_name[col])
     meta = dict(f.get("metadata") or {})
     hist = list(meta.get("delta.typeWidening") or [])
@@ -5249,16 +5058,13 @@ def delta_delete(
     silent renumber could double-delete against a rewritten file).
     Re-running the same predicate converges (already-dead rows no
     longer match)."""
-    head = replay(table_dir)
-    _check_writer_protocol(
-        table_dir, head.protocol, head.configuration
-    )
-    _check_append_only(table_dir, head.configuration, "DELETE")
+    head = _writable_head(table_dir)
+    _check_append_only(table_dir, head, "DELETE")
     live = _read_state(spark, table_dir, head, keep_rowmeta=True)
     cond = (
         F.expr(predicate) if isinstance(predicate, str) else predicate
     )
-    cdf = _cdf_enabled(head.configuration)
+    cdf = head.features.cdf
     matched = live.where(cond)
     if cdf:
         # two consumers of the matched set under CDF (bitmap pass +
@@ -5283,26 +5089,21 @@ def delta_delete(
             # byte-shape identical to the serial path.
             if matched.count() == 0:
                 return head  # nothing matched: no commit, converged
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                f_marks = pool.submit(
-                    _dv_mark_actions, spark, table_dir, head, hits
-                )
-                f_cdc = pool.submit(
-                    _write_cdc_files,
+            # CDF contract: a DV delete is NOT derivable from
+            # add/remove by readers that trust cdc files, so the
+            # deleted rows ride a change-data file
+            marks, cdc_actions, _ = _run_dv_legs(
+                table_dir,
+                lambda: _dv_mark_actions(spark, table_dir, head, hits),
+                lambda: _write_cdc_files(
                     matched
                     .drop(_DV_PATH, _DV_IDX)
                     .withColumn(_CHANGE_TYPE, F.lit("delete")),
                     table_dir,
                     head.schema,
                     head.partition_cols,
-                )
-            marks = _dv_marks_or_discard(table_dir, f_marks, f_cdc)
-            # CDF contract: a DV delete is NOT derivable from
-            # add/remove by readers that trust cdc files, so the
-            # deleted rows ride a change-data file
-            cdc_actions = f_cdc.result()
+                ),
+            )
         else:
             marks = _dv_mark_actions(spark, table_dir, head, hits)
         if marks is None:
@@ -5469,35 +5270,45 @@ def _dv_mark_actions(
     return removes, dv_adds, metrics, ts
 
 
-def _dv_marks_or_discard(table_dir: str, f_marks, f_cdc, f_write=None):
-    """The bitmap leg's result once every concurrent DML leg has
-    finished. If any leg raised, best-effort delete what the other
-    legs wrote — the bitmap leg's ``deletion_vector_<uuid>.bin`` (named
-    by its marks' descriptors) and the ``_change_data/<uuid>/`` and
+def _run_dv_legs(table_dir: str, marks, cdc=None, write=None):
+    """Run the independent jobs of a DV DELETE/UPDATE concurrently: the
+    bitmap pass ``marks`` (-> :func:`_dv_mark_actions`' result), the
+    change-data write ``cdc`` (-> cdc actions) and the rewritten-copy
+    write ``write`` (-> :func:`_write_adds`' result), each a
+    no-argument callable or None. Returns ``(marks, cdc actions, write
+    result)``, with [] / None for an absent leg.
+
+    If any leg raised, best-effort delete what the other legs wrote —
+    the bitmap leg's ``deletion_vector_<uuid>.bin`` (named by its
+    marks' descriptors) and the ``_change_data/<uuid>/`` and
     ``data/<uuid>/`` roots; no commit will ever reference them — and
     re-raise the first failed leg's error (bitmap, cdc, data order)."""
     import shutil
+    from concurrent.futures import ThreadPoolExecutor
 
-    legs = [f for f in (f_marks, f_cdc, f_write) if f is not None]
-    errors = [f.exception() for f in legs]
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        futures = [
+            pool.submit(leg) if leg is not None else None
+            for leg in (marks, cdc, write)
+        ]
+    errors = [f.exception() for f in futures if f is not None]
+    m, c, w = (
+        f.result() if f is not None and f.exception() is None else None
+        for f in futures
+    )
     if not any(errors):
-        return f_marks.result()
-    ok = {f for f, e in zip(legs, errors) if e is None}
-    marks = f_marks.result() if f_marks in ok else None
+        return m, c or [], w
     dv_files = {
         _dv.absolute_dv_path(table_dir, a["add"]["deletionVector"])
-        for a in (marks[1] if marks else ())
+        for a in (m[1] if m else ())
     }
     for path in dv_files - {None}:
         try:
             os.remove(path)
         except OSError:
             pass
-    rels: list[str] = []
-    if f_cdc in ok:
-        rels += [a["cdc"]["path"] for a in f_cdc.result()]
-    if f_write in ok:
-        rels += list(f_write.result()[1])  # every written file
+    # every cdc file, and every written data file
+    rels = [a["cdc"]["path"] for a in c or ()] + list(w[1] if w else ())
     for root in {os.path.join(*r.split(os.sep)[:2]) for r in rels}:
         shutil.rmtree(os.path.join(table_dir, root), ignore_errors=True)
     raise next(e for e in errors if e is not None)
@@ -5517,7 +5328,7 @@ def _dv_commit_actions(
     if pa:
         actions.append({"protocol": pa})
     actions += [*removes, *dv_adds, *new_adds]
-    if _rt_active(head.protocol, head.configuration):
+    if head.features.rt_active:
         actions.extend(_stamp_row_ids(
             new_adds, head.domain_metadata, head.version + 1
         ))
@@ -5550,10 +5361,7 @@ def delta_update(
     one. Concurrency: computed against the head, committed at
     head+1, ConcurrentCommitError on any interleaving (same TOCTOU
     rule as MERGE/DELETE)."""
-    head = replay(table_dir)
-    _check_writer_protocol(
-        table_dir, head.protocol, head.configuration
-    )
+    head = _writable_head(table_dir)
     from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(json.loads(head.schema))
@@ -5573,8 +5381,8 @@ def delta_update(
             f"{sorted(id_cols)} — identity values are "
             "writer-generated (spec rule)"
         )
-    _check_append_only(table_dir, head.configuration, "UPDATE")
-    rt_on = _rt_enabled(head.configuration)
+    _check_append_only(table_dir, head, "UPDATE")
+    rt_on = head.features.rt_enabled
     mat_id = (
         _rt_mat_names(table_dir, head.configuration)[0]
         if rt_on else None
@@ -5655,39 +5463,36 @@ def _delta_update_commit(
     # still reads the SAME materialized rows). Overlap them; the
     # commit-action assembly order below is unchanged, so the log is
     # byte-shape identical to the serial path.
-    from concurrent.futures import ThreadPoolExecutor
-
     wupdated, wpcols, _ = _physical_payload(
         updated, head.schema, pcols, extra_cols=mat_cols
     )
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_marks = pool.submit(
-            _dv_mark_actions, spark, table_dir, head,
-            matched.select(_DV_PATH, _DV_IDX),
+    cdc = None
+    if head.features.cdf:
+        # native UPDATE cdc shape: the matched rows' old values as
+        # update_preimage + their new values as update_postimage
+        pre = matched.drop(_DV_PATH, _DV_IDX).select(
+            *[f.name for f in schema.fields]
+        ).withColumn(_CHANGE_TYPE, F.lit("update_preimage"))
+        post = updated.select(
+            *[f.name for f in schema.fields]
+        ).withColumn(
+            _CHANGE_TYPE, F.lit("update_postimage")
         )
-        f_cdc = None
-        if _cdf_enabled(head.configuration):
-            # native UPDATE cdc shape: the matched rows' old values as
-            # update_preimage + their new values as update_postimage
-            pre = matched.drop(_DV_PATH, _DV_IDX).select(
-                *[f.name for f in schema.fields]
-            ).withColumn(_CHANGE_TYPE, F.lit("update_preimage"))
-            post = updated.select(
-                *[f.name for f in schema.fields]
-            ).withColumn(
-                _CHANGE_TYPE, F.lit("update_postimage")
+
+        def cdc():
+            return _write_cdc_files(
+                [pre, post], table_dir, head.schema, pcols
             )
-            f_cdc = pool.submit(
-                _write_cdc_files,
-                [pre, post], table_dir, head.schema, pcols,
-            )
-        f_write = pool.submit(_write_adds, wupdated, table_dir, wpcols)
-    marks = _dv_marks_or_discard(table_dir, f_marks, f_cdc, f_write)
-    if marks is None:  # unreachable with count > 0; keep the serial
-        return head    # path's contract regardless
+
+    marks, cdc_actions, (new_adds, _) = _run_dv_legs(
+        table_dir,
+        lambda: _dv_mark_actions(
+            spark, table_dir, head, matched.select(_DV_PATH, _DV_IDX)
+        ),
+        cdc,
+        lambda: _write_adds(wupdated, table_dir, wpcols),
+    )
     removes, dv_adds, metrics, ts = marks
-    cdc_actions = f_cdc.result() if f_cdc is not None else []
-    new_adds, _ = f_write.result()
     return _commit(
         table_dir, head.version + 1,
         _dv_commit_actions(head, cdc_actions, removes, dv_adds, new_adds),
@@ -5748,17 +5553,14 @@ def delta_clone(
     gets a dev/staging fork."""
     src = replay(source_dir, version)
     _check_protocol(source_dir, [src.protocol])
-    # full writer gate, not checkpoint_only: the clone COMMITS a log
-    # whose protocol promises these writer features to native readers
-    # of the TARGET — promising a contract we cannot enforce on the
-    # clone's own future commits would be a silent lie
+    # the clone COMMITS a log whose protocol promises these writer
+    # features to native readers of the TARGET — promising a contract
+    # we cannot enforce on the clone's own future commits would be a
+    # silent lie
     _check_writer_protocol(
         source_dir, src.protocol, src.configuration
     )
-    if os.path.isdir(_log_dir(target_dir)) and any(
-        n.endswith(".json") and n[:-5].isdigit()
-        for n in os.listdir(_log_dir(target_dir))
-    ):
+    if list_delta_versions(target_dir):
         raise ValueError(
             f"{target_dir} is already a Delta table — CLONE only "
             "creates new tables (native refuses too; REPLACE "
@@ -5766,7 +5568,7 @@ def delta_clone(
         )
     cfg = dict(src.configuration or {})
     ict0 = None
-    if _ict_enabled(cfg):
+    if src.features.ict:
         # the source's ICT enablement properties describe the
         # SOURCE's history; copied verbatim they would claim the
         # clone's v0 (which carries an ICT) is below the enablement
@@ -5857,10 +5659,7 @@ def convert_to_delta(
     written the table: appends, DV DELETE/UPDATE/MERGE, OPTIMIZE,
     checkpoints, time travel (history starts at the conversion),
     and ``delta_clone``."""
-    if os.path.isdir(_log_dir(table_dir)) and any(
-        n.endswith(".json") and n[:-5].isdigit()
-        for n in os.listdir(_log_dir(table_dir))
-    ):
+    if list_delta_versions(table_dir):
         raise ValueError(
             f"{table_dir} is already a Delta table — CONVERT "
             "upgrades plain parquet directories only"
@@ -5974,11 +5773,8 @@ def delta_restore(table_dir: str, version: int) -> DeltaState:
     any file (or DV bin) the target version needs was vacuumed —
     silently restoring a partial table would be data loss dressed as
     success."""
-    head = replay(table_dir)
-    _check_writer_protocol(
-        table_dir, head.protocol, head.configuration
-    )
-    _check_append_only(table_dir, head.configuration, "RESTORE")
+    head = _writable_head(table_dir)
+    _check_append_only(table_dir, head, "RESTORE")
     target = replay(table_dir, version)
     if target.version == head.version:
         return head  # restoring the head: nothing to do
@@ -6034,7 +5830,7 @@ def delta_restore(table_dir: str, version: int) -> DeltaState:
         na["dataChange"] = True
         readds.append({"add": na})
     actions.extend(readds)
-    if _rt_active(head.protocol, head.configuration):
+    if head.features.rt_active:
         # a restore to a post-enablement version re-adds files that
         # already carry their baseRowId — ids survive verbatim. A
         # restore BELOW the enablement re-surfaces unstamped files
@@ -6091,14 +5887,9 @@ def vacuum_delta(table_dir: str, retention_ms: int = 0) -> int:
     # PROTOCOL.md "Vacuum Protocol Check": vacuum must gate on the
     # table protocol BEFORE deleting anything — the feature exists so
     # future protocol changes can stop old vacuums from destroying
-    # files they no longer understand. replay() runs the reader gate;
-    # the writer gate runs in maintenance form (checkpoint_only: a
-    # vacuum writes no data, so e.g. id-mode tables stay vacuumable)
-    _head = replay(table_dir)
-    _check_writer_protocol(
-        table_dir, _head.protocol, _head.configuration,
-        checkpoint_only=True,
-    )
+    # files they no longer understand. replay() runs the reader gate,
+    # _writable_head the writer gate
+    _head = _writable_head(table_dir)
     now = _now_ms()
     cutoff = now - retention_ms
     log = _log_dir(table_dir)

@@ -309,51 +309,44 @@ def test_cdf_enabled_tables_accepted(spark, tmp_path):
 
 def test_checkpoint_only_gate_relaxes_cdf_and_column_mapping():
     # a checkpoint changes no rows: CDF-enabled and column-mapped
-    # tables must stay checkpointable (and therefore vacuumable)
+    # tables must stay checkpointable (and therefore vacuumable) under
+    # the one writer gate that checkpoints and vacuum share with writes
     dl._check_writer_protocol(
         "t", {"minWriterVersion": 4},
         {"delta.enableChangeDataFeed": "true"},
-        checkpoint_only=True,
     )
     dl._check_writer_protocol(
         "t",
         {"minWriterVersion": 7,
          "writerFeatures": ["changeDataFeed"]},
         {"delta.enableChangeDataFeed": "true"},
-        checkpoint_only=True,
     )
     dl._check_writer_protocol(
         "t", {"minWriterVersion": 5},
         {"delta.columnMapping.mode": "name"},
-        checkpoint_only=True,
     )
     dl._check_writer_protocol(
         "t",
         {"minWriterVersion": 7,
          "writerFeatures": ["columnMapping"]},
         {"delta.columnMapping.mode": "name"},
-        checkpoint_only=True,
     )
-    # ...but features this module does not implement still refuse,
-    # checkpoint_only or not (v2Checkpoint itself is read+write
-    # since round 9 — tests/test_v2_checkpoint.py)
+    # ...but features this module does not implement still refuse
+    # (v2Checkpoint itself is read+write since round 9 —
+    # tests/test_v2_checkpoint.py)
     dl._check_writer_protocol(
         "t",
         {"minWriterVersion": 7, "writerFeatures": ["v2Checkpoint"]},
-        checkpoint_only=True,
     )
     with pytest.raises(NotImplementedError):
         dl._check_writer_protocol(
             "t",
             {"minWriterVersion": 7,
              "writerFeatures": ["icebergCompatV2"]},
-            checkpoint_only=True,
         )
     # legacy writer v6 (identity columns) is implemented since
-    # round 10 — accepted in maintenance form too
-    dl._check_writer_protocol(
-        "t", {"minWriterVersion": 6}, checkpoint_only=True
-    )
+    # round 10 — accepted too
+    dl._check_writer_protocol("t", {"minWriterVersion": 6})
 
 
 def test_cdf_enabled_table_full_lifecycle(spark, tmp_path):
