@@ -1,4 +1,4 @@
-"""Data-file helpers shared by the Delta log (``delta_log.py``) and
+"""Data-file helpers shared by the Delta log (``delta_log/``) and
 the queries that write scratch tables: immutable data-file writes,
 parquet-footer statistics, structural schema compatibility and additive
 schema merge, the conservative file-skipping interval test, the

@@ -1,4 +1,4 @@
-"""Clustered tables (sources/delta_log.py): clean-room PROTOCOL.md
+"""Clustered tables (sources/delta_log/): clean-room PROTOCOL.md
 "Clustered Table" — clustering columns recorded in the
 ``delta.clustering`` domain-metadata domain (physical names under
 column mapping), the ``clustering`` writer feature, and a clustering

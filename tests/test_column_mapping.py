@@ -1,4 +1,4 @@
-"""Column mapping, name mode (sources/delta_log.py): clean-room READ
+"""Column mapping, name mode (sources/delta_log/): clean-room READ
 support for the public PROTOCOL.md "Column Mapping" feature — tables
 whose data files carry physical column names (``col-<uuid>``) in
 parquet while the log's schemaString maps them to logical names via

@@ -16,6 +16,7 @@ import pytest
 
 from rearc_data_engineer_takehome_spark.sources import _files
 from rearc_data_engineer_takehome_spark.sources import delta_log as dl
+from rearc_data_engineer_takehome_spark.sources.delta_log import log as dlog
 
 
 def _df(spark, rows=((1, 1), (2, 2)), schema="id long, k long"):
@@ -226,7 +227,7 @@ def test_writer_gate_accepts_v3_refuses_v4plus():
 def test_alter_properties_race_refuses(spark, tmp_path):
     t = str(tmp_path / "t")
     dl.write_delta(_df(spark), t)
-    orig = dl._atomic_commit
+    orig = dlog._atomic_commit
 
     def race(table_dir, version, actions):
         orig(table_dir, version, [{"commitInfo": {
@@ -235,14 +236,14 @@ def test_alter_properties_race_refuses(spark, tmp_path):
         }}])
         return orig(table_dir, version, actions)
 
-    dl._atomic_commit = race
+    dlog._atomic_commit = race
     try:
         with pytest.raises(_files.ConcurrentCommitError):
             dl.delta_alter_properties(
                 spark, t, {"delta.appendOnly": "true"}
             )
     finally:
-        dl._atomic_commit = orig
+        dlog._atomic_commit = orig
 
 
 def test_generated_columns_validated_on_write(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""Native Delta transaction-log format (sources/delta_log.py): the
+"""Native Delta transaction-log format (sources/delta_log/): the
 clean-room writer/reader for the public delta-io PROTOCOL.md format
 (reference persists its tables in Delta: notebooks/20_analytics.ipynb:
 653, 2200, 2561). Covers round-trip + time travel, format conformance
@@ -16,6 +16,7 @@ import pytest
 
 from rearc_data_engineer_takehome_spark.sources import _files
 from rearc_data_engineer_takehome_spark.sources import delta_log as dl
+from rearc_data_engineer_takehome_spark.sources.delta_log import log as dlog
 
 
 def _rows(df):
@@ -1461,21 +1462,42 @@ def test_one_commit_path():
     """Every Delta commit goes through ``_commit``: ``_commit_actions``
     is called only from it and from ``write_checkpoint`` (whose
     protocol upgrade is followed by its own checkpoint), and the
-    commitInfo engine string is spelled once."""
+    commitInfo engine string is spelled once — across every module of
+    the delta_log package."""
     import ast
+    import importlib
     import inspect
+    import pkgutil
 
-    src = inspect.getsource(dl)
+    mods = [dl] + [
+        importlib.import_module(f"{dl.__name__}.{m.name}")
+        for m in pkgutil.iter_modules(dl.__path__)
+    ]
+    # the walk must see the package's modules, not just __init__
+    assert {m.__name__.rsplit(".", 1)[-1] for m in mods} >= {
+        "log", "scan", "write", "dml", "maintenance",
+    }
+    srcs = [inspect.getsource(m) for m in mods]
     callers = []
-    for fn in ast.walk(ast.parse(src)):
-        if isinstance(fn, ast.FunctionDef):
-            for n in ast.walk(fn):
-                if isinstance(n, ast.Call) and getattr(
-                    n.func, "id", None
-                ) == "_commit_actions":
-                    callers.append(fn.name)
-    assert sorted(callers) == ["_commit", "write_checkpoint"]
-    assert src.count('"rearc-takehome-spark-cleanroom"') == 1
+    defined = set()
+    for src in srcs:
+        for fn in ast.walk(ast.parse(src)):
+            if isinstance(fn, ast.FunctionDef):
+                defined.add(fn.name)
+                for n in ast.walk(fn):
+                    if isinstance(n, ast.Call) and getattr(
+                        n.func, "id", None
+                    ) in ("_commit_actions", "_atomic_commit"):
+                        callers.append((fn.name, n.func.id))
+    assert {"_commit", "_commit_actions", "write_checkpoint"} <= defined
+    assert sorted(callers) == [
+        ("_commit", "_commit_actions"),
+        ("_commit_actions", "_atomic_commit"),
+        ("write_checkpoint", "_commit_actions"),
+    ]
+    assert sum(
+        src.count('"rearc-takehome-spark-cleanroom"') for src in srcs
+    ) == 1
 
 
 def test_timestamp_as_of_ignores_checkpoint_mtime(spark, tmp_path):
@@ -1538,7 +1560,7 @@ def test_ict_monotonic_after_json_gc(spark, tmp_path, monkeypatch):
     for v in (0, 1, 2):
         os.remove(dl._commit_path(t, v))
     # wall clock steps BACKWARDS below even the enablement timestamp
-    monkeypatch.setattr(dl, "_now_ms", lambda: enable_ts - 10_000)
+    monkeypatch.setattr(dlog, "_now_ms", lambda: enable_ts - 10_000)
     dl.write_delta(
         spark.createDataFrame([(3,)], "k long"), t, "append"
     )  # v3

@@ -23,6 +23,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from rearc_data_engineer_takehome_spark.sources import delta_log as dl
+from rearc_data_engineer_takehome_spark.sources.delta_log import log as dlog
 from rearc_data_engineer_takehome_spark.sources import dv
 
 
@@ -505,7 +506,7 @@ def test_delete_concurrent_commit_raises(spark, tmp_path):
     t = str(tmp_path / "t")
     _mk(spark, t)
     # steal the next version number before the delete commits
-    orig = dl._atomic_commit
+    orig = dlog._atomic_commit
     from rearc_data_engineer_takehome_spark.sources import _files
 
     def race(table_dir, version, actions):
@@ -515,12 +516,12 @@ def test_delete_concurrent_commit_raises(spark, tmp_path):
         }}])
         return orig(table_dir, version, actions)
 
-    dl._atomic_commit = race
+    dlog._atomic_commit = race
     try:
         with pytest.raises(_files.ConcurrentCommitError):
             dl.delta_delete(spark, t, "k = 1")
     finally:
-        dl._atomic_commit = orig
+        dlog._atomic_commit = orig
 
 
 def test_native_delta_reads_our_dv_table(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""Identity columns (sources/delta_log.py): clean-room PROTOCOL.md
+"""Identity columns (sources/delta_log/): clean-room PROTOCOL.md
 "Identity Columns" — fields carrying ``delta.identity.{start,step,
 allowExplicitInsert}`` metadata whose values the WRITER generates
 (start + k*step, all beyond the highWaterMark, gaps allowed) and

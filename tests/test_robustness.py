@@ -102,12 +102,13 @@ def test_failed_cdc_leg_leaves_no_orphan_dv_file_on_delete(
     ``deletion_vector_<uuid>.bin``, then the concurrent change-data
     leg fails. The ``.bin`` must be deleted: no commit references it."""
     from rearc_data_engineer_takehome_spark.sources import delta_log as dl
+    from rearc_data_engineer_takehome_spark.sources.delta_log import dml
 
     t = str(tmp_path / "t")
     _cdf_table(spark, t, one_file=True)
     before, head = _non_log_files(t), dl.replay(t).version
-    dv_adds = _spy_dv_adds(monkeypatch, dl)
-    monkeypatch.setattr(dl, "_write_cdc_files", _failing_leg)
+    dv_adds = _spy_dv_adds(monkeypatch, dml)
+    monkeypatch.setattr(dml, "_write_cdc_files", _failing_leg)
     with pytest.raises(RuntimeError, match="injected leg"):
         dl.delta_delete(spark, t, "k < 3")
     assert dv_adds, "the bitmap pass wrote no deletion vector"
@@ -122,12 +123,13 @@ def test_failed_write_leg_leaves_no_orphan_files_on_update(
     its ``.bin`` and the change-data leg wrote its files: both must be
     deleted."""
     from rearc_data_engineer_takehome_spark.sources import delta_log as dl
+    from rearc_data_engineer_takehome_spark.sources.delta_log import dml
 
     t = str(tmp_path / "t")
     _cdf_table(spark, t, one_file=True)
     before, head = _non_log_files(t), dl.replay(t).version
-    dv_adds = _spy_dv_adds(monkeypatch, dl)
-    monkeypatch.setattr(dl, "_write_adds", _failing_leg)
+    dv_adds = _spy_dv_adds(monkeypatch, dml)
+    monkeypatch.setattr(dml, "_write_adds", _failing_leg)
     with pytest.raises(RuntimeError, match="injected leg"):
         dl.delta_update(spark, t, "k < 3", {"s": "'x'"})
     assert dv_adds, "the bitmap pass wrote no deletion vector"
@@ -168,16 +170,16 @@ def _failing_leg(*_a, **_k):
     raise RuntimeError("injected leg failure")
 
 
-def _spy_dv_adds(monkeypatch, dl):
+def _spy_dv_adds(monkeypatch, dml):
     """Record the DV-carrying adds the real bitmap pass returns."""
-    seen, real = [], dl._dv_mark_actions
+    seen, real = [], dml._dv_mark_actions
 
     def spy(*a, **k):
         marks = real(*a, **k)
         seen.extend(marks[1] if marks else ())
         return marks
 
-    monkeypatch.setattr(dl, "_dv_mark_actions", spy)
+    monkeypatch.setattr(dml, "_dv_mark_actions", spy)
     return seen
 
 
@@ -188,11 +190,12 @@ def test_failed_dv_pass_leaves_no_orphan_cdc_files_on_delete(
     DV bitmap pass. When the bitmap pass fails, the change-data files
     the sibling leg wrote must be deleted: no commit references them."""
     from rearc_data_engineer_takehome_spark.sources import delta_log as dl
+    from rearc_data_engineer_takehome_spark.sources.delta_log import dml
 
     t = str(tmp_path / "t")
     _cdf_table(spark, t)
     before, head = _non_log_files(t), dl.replay(t).version
-    monkeypatch.setattr(dl, "_dv_mark_actions", _failing_dv_pass)
+    monkeypatch.setattr(dml, "_dv_mark_actions", _failing_dv_pass)
     with pytest.raises(RuntimeError, match="injected DV"):
         dl.delta_delete(spark, t, "k < 3")
     assert _non_log_files(t) == before
@@ -206,11 +209,12 @@ def test_failed_dv_pass_leaves_no_orphan_files_on_update(
     rewritten-copy write concurrently. When the bitmap pass fails, the
     change-data and data files of the other two legs must be deleted."""
     from rearc_data_engineer_takehome_spark.sources import delta_log as dl
+    from rearc_data_engineer_takehome_spark.sources.delta_log import dml
 
     t = str(tmp_path / "t")
     _cdf_table(spark, t)
     before, head = _non_log_files(t), dl.replay(t).version
-    monkeypatch.setattr(dl, "_dv_mark_actions", _failing_dv_pass)
+    monkeypatch.setattr(dml, "_dv_mark_actions", _failing_dv_pass)
     with pytest.raises(RuntimeError, match="injected DV"):
         dl.delta_update(spark, t, "k < 3", {"s": "'x'"})
     assert _non_log_files(t) == before

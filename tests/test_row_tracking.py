@@ -1,4 +1,4 @@
-"""Row tracking (sources/delta_log.py): clean-room implementation of
+"""Row tracking (sources/delta_log/): clean-room implementation of
 the public PROTOCOL.md "Row Tracking" feature — every add action on an
 enabled table carries ``baseRowId``/``defaultRowCommitVersion``, fresh
 ids are allocated under the ``delta.rowTracking`` domain-metadata

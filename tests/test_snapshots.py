@@ -1,4 +1,4 @@
-"""Table snapshots on the Delta log (sources/delta_log.py) and the shared
+"""Table snapshots on the Delta log (sources/delta_log/) and the shared
 data-file helpers (sources/_files.py): overwrite/append lineage, time
 travel and restore, commit-race renumbering and rebasing, MERGE that
 raises rather than clobbers a racing commit, vacuum of unreferenced
@@ -20,6 +20,7 @@ import pytest
 
 from rearc_data_engineer_takehome_spark.sources import _files
 from rearc_data_engineer_takehome_spark.sources import delta_log as dl
+from rearc_data_engineer_takehome_spark.sources.delta_log import log as dlog
 
 
 def _rows(df):
@@ -478,7 +479,7 @@ def test_append_losing_race_rebases_onto_winner(spark, tmp_path, monkeypatch):
     t = str(tmp_path / "tbl")
     dl.write_delta(spark.createDataFrame([(0,)], "k long"), t)  # v0
 
-    real = dl._atomic_commit
+    real = dlog._atomic_commit
     state = {"raced": False}
 
     def racy(table_dir, version, actions):
@@ -490,7 +491,7 @@ def test_append_losing_race_rebases_onto_winner(spark, tmp_path, monkeypatch):
             )
         return real(table_dir, version, actions)
 
-    monkeypatch.setattr(dl, "_atomic_commit", racy)
+    monkeypatch.setattr(dlog, "_atomic_commit", racy)
     snap = dl.write_delta(
         spark.createDataFrame([(200,)], "k long"), t, "append"
     )
@@ -927,7 +928,7 @@ def test_snapshot_compact_bin_packs_and_keeps_contract(
     inc = dl.read_delta_increment(spark, t, since_version=pre.version - 1)
     assert _rows(inc) == [(11,)]
 
-    real = dl._atomic_commit
+    real = dlog._atomic_commit
 
     def race_with(mode, value):
         state = {"raced": False}
@@ -940,7 +941,7 @@ def test_snapshot_compact_bin_packs_and_keeps_contract(
                 )
             return real(table_dir, version, actions)
 
-        monkeypatch.setattr(dl, "_atomic_commit", racy)
+        monkeypatch.setattr(dlog, "_atomic_commit", racy)
 
     # a racing APPEND composes: the retried compaction keeps its rows
     race_with("append", 99)
