@@ -1,5 +1,6 @@
 """Benchmark harness: runs the full query battery at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the
+CPUs the process may use).
 
 Output contract (round-2 fix — BENCH_r01.json came back "parsed": null
 because the single ~6 KB JSON line for 116 queries overflowed the
@@ -25,10 +26,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from rearc_data_engineer_takehome_spark.queries import REGISTRY
-from rearc_data_engineer_takehome_spark.session import get_spark
+from rearc_data_engineer_takehome_spark.session import get_spark, usable_cpus
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = usable_cpus()
 # SPARK_GRAFT_DETAIL redirects the per-query detail file so off-scale
 # probe runs (e.g. sf0.001 smoke) don't clobber the canonical sf0.1
 # artifact the driver records.

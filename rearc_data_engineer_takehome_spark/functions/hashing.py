@@ -83,14 +83,6 @@ def minhash_from_base(base: Column, n_perm: int, seed: int = 7) -> Column:
     return F.array(*sig)
 
 
-def minhash_signature(shingles: Column, n_perm: int, seed: int = 7) -> Column:
-    """MinHash signature as a single Column expression. Convenience form;
-    prefer the two-projection shape in dedup.minhash_signatures (base
-    hashes aliased once) — this inline form recomputes the md5 base per
-    permutation."""
-    return minhash_from_base(shingle_hashes(shingles), n_perm, seed)
-
-
 def simhash_from_base(base: Column, bits: int = 32) -> Column:
     """SimHash fingerprint from a precomputed token-hash array column:
     per bit, sum +1/-1 votes, take the sign, pack into a bigint.

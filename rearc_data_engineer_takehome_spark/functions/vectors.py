@@ -46,10 +46,3 @@ def cosine_sql(a: str, b: str) -> str:
         f"sqrt(list_dot_product({b}::DOUBLE[], {b}::DOUBLE[]))))"
     )
 
-
-def l2_normalize(a: Column) -> Column:
-    """Unit-normalize; with pre-normalized vectors cosine becomes a plain
-    dot product — normalize ONCE, reuse across many similarity queries
-    (the cheap trick that matters at 100 TB)."""
-    n = norm(a)
-    return F.transform(_as_double(a), lambda x: x / n)

@@ -129,12 +129,6 @@ def iqr_outliers(
     )
 
 
-def describe_stats(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """V-/A9: count/mean/stddev/min/max per numeric column.
-    Reference: notebooks/21_EDA.ipynb:2121-2124 (describe())."""
-    return df.select(*cols).describe()
-
-
 def dq_summary(df: DataFrame, keys: Sequence[str], run_utc: str) -> DataFrame:
     """V10: one summary row per run (row counts, dup counts, null counts)
     suitable for append-only accumulation into a run-log table.
@@ -478,16 +472,6 @@ def entropy_from_long(long_df: DataFrame) -> DataFrame:
         F.count(F.lit(1)).alias("n_distinct"),
         F.sum("c").cast("long").alias("n_rows"),
     )
-
-
-def columns_entropy(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """Entropy profile of several columns of one DataFrame in a single
-    pass: stack-unpivot (codegen, no shuffle) then entropy_from_long."""
-    pairs = ", ".join(f"'{c}', {c}" for c in cols)
-    long_df = df.select(
-        F.expr(f"stack({len(cols)}, {pairs}) AS (col_name, v)")
-    )
-    return entropy_from_long(long_df)
 
 
 def column_entropy(df: DataFrame, col: str) -> DataFrame:

@@ -221,14 +221,6 @@ def left_enrich(
     return fact.join(right, on=on, how="left")
 
 
-def grouped_agg(
-    df: DataFrame, keys: Sequence[str], aggs: Sequence[Column]
-) -> DataFrame:
-    """A2/A3/A11: groupBy + aggregates. Spark plans partial (map-side)
-    + final hash aggregation automatically; nothing to hand-tune."""
-    return df.groupBy(*keys).agg(*aggs)
-
-
 def top_k(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:
     """O1-O3: global sort + limit. Catalyst rewrites this to
     TakeOrderedAndProject — a per-partition heap + driver merge of k

@@ -4305,6 +4305,19 @@ def events_hll_audience_overlap(
     )
 
 
+def _scratch_table(sf_dir: str, tag: str) -> str:
+    """A fresh scratch Delta table for one scenario query:
+    ``<sf dir name>_<tag>_<8 hex>`` under ``scratch_table_dir``."""
+    import os
+    import uuid
+
+    from .sources._files import scratch_table_dir
+
+    return scratch_table_dir(
+        f"{os.path.basename(sf_dir.rstrip('/'))}_{tag}_{uuid.uuid4().hex[:8]}"
+    )
+
+
 @query(
     "orders_snapshot_increment",
     """
@@ -4316,7 +4329,7 @@ def events_hll_audience_overlap(
     FROM orders GROUP BY o_orderpriority
     """,
     doc="Append lineage and the append-only change feed on the Delta "
-    "log (sources/delta_log.py), certified end-to-end under the "
+    "log (sources/delta_log/), certified end-to-end under the "
     "driver's value-hash gate: write_delta commits orders as version "
     "0, then the urgent subset as an APPEND (version 1, which keeps "
     "the base files live — no copies), and the query answers from "
@@ -4328,17 +4341,10 @@ def events_hll_audience_overlap(
     "root (daily sweep bounds growth).",
 )
 def orders_snapshot_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import uuid as _uuid
-
     from .sources import delta_log as dl
-    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders")
-    tbl = scratch_table_dir(
-        f"{os.path.basename(sf_dir.rstrip('/'))}_orders_inc_"
-        f"{_uuid.uuid4().hex[:8]}"
-    )
+    tbl = _scratch_table(sf_dir, "orders_inc")
     base = dl.write_delta(orders, tbl)
     dl.write_delta(
         orders.where(F.col("o_orderpriority") == "1-URGENT"),
@@ -4399,17 +4405,10 @@ def orders_snapshot_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
     "root (daily sweep bounds growth).",
 )
 def orders_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import uuid as _uuid
-
     from .sources import delta_log as dl
-    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders")
-    tbl = scratch_table_dir(
-        f"{os.path.basename(sf_dir.rstrip('/'))}_orders_merge_"
-        f"{_uuid.uuid4().hex[:8]}"
-    )
+    tbl = _scratch_table(sf_dir, "orders_merge")
     dl.write_delta(orders, tbl)
     cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
     upd = orders.where(F.col("o_orderpriority") == "1-URGENT").withColumn(
@@ -4778,11 +4777,7 @@ def ols_conformal_interval(
 def events_hll_ivm_maintenance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import uuid as _uuid
-
     from .sources import delta_log as dl
-    from .sources._files import scratch_table_dir
 
     ev = (
         _events(spark, sf_dir)
@@ -4800,10 +4795,7 @@ def events_hll_ivm_maintenance(
             F.pmod(F.col("event_id"), F.lit(3)).alias("batch"),
         )
     )
-    tbl = scratch_table_dir(
-        f"{os.path.basename(sf_dir.rstrip('/'))}_ev_hll_ivm_"
-        f"{_uuid.uuid4().hex[:8]}"
-    )
+    tbl = _scratch_table(sf_dir, "ev_hll_ivm")
     base = dl.write_delta(ev.where(F.col("batch") == 0).drop("batch"), tbl)
     for b in (1, 2):
         head = dl.write_delta(
@@ -4856,7 +4848,7 @@ REGISTRY["events_hll_ivm_maintenance"] = type(
 
 
 # ---------------------------------------------------------------------------
-# Native Delta transaction-log format (sources/delta_log.py) — round 7
+# Native Delta transaction-log format (sources/delta_log/) — round 7
 # ---------------------------------------------------------------------------
 
 
@@ -4877,7 +4869,7 @@ REGISTRY["events_hll_ivm_maintenance"] = type(
     FROM head CROSS JOIN mid
     """,
     doc="The clean-room NATIVE Delta log format "
-    "(sources/delta_log.py; public delta-io PROTOCOL.md — the format "
+    "(sources/delta_log/; public delta-io PROTOCOL.md — the format "
     "the reference persists its tables in, "
     "notebooks/20_analytics.ipynb:653, 2200, 2561) certified "
     "end-to-end under the driver's value-hash gate: orders split into "
@@ -4894,11 +4886,7 @@ REGISTRY["events_hll_ivm_maintenance"] = type(
     "display math, per the repo's float-fold convention.",
 )
 def orders_deltalog_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import uuid as _uuid
-
     from .sources import delta_log as dl
-    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -4908,10 +4896,7 @@ def orders_deltalog_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cents"),
         F.pmod(F.col("o_orderkey"), F.lit(3)).alias("batch"),
     )
-    tbl = scratch_table_dir(
-        f"{os.path.basename(sf_dir.rstrip('/'))}_odelta_"
-        f"{_uuid.uuid4().hex[:8]}"
-    )
+    tbl = _scratch_table(sf_dir, "odelta")
     dl.write_delta(
         orders.where(F.col("batch") == 0).drop("batch"),
         tbl,
@@ -4978,11 +4963,7 @@ def orders_deltalog_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lineitem_snapshot_delta_mirror(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import uuid as _uuid
-
     from .sources import delta_log as dl
-    from .sources._files import scratch_table_dir
 
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey",
@@ -4990,10 +4971,7 @@ def lineitem_snapshot_delta_mirror(
         "l_returnflag",
         F.col("l_quantity").cast("bigint").alias("qty"),
     )
-    tbl = scratch_table_dir(
-        f"{os.path.basename(sf_dir.rstrip('/'))}_limirror_"
-        f"{_uuid.uuid4().hex[:8]}"
-    )
+    tbl = _scratch_table(sf_dir, "limirror")
     li.where(F.col("l_linenumber") <= 2).write.parquet(tbl)
     dl.convert_to_delta(spark, tbl)
     dl.write_delta(li.where(F.col("l_linenumber") > 2), tbl, "append")
@@ -5039,17 +5017,10 @@ def lineitem_snapshot_delta_mirror(
     "the one final division, per the float-fold convention.",
 )
 def orders_delta_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import uuid as _uuid
-
     from .sources import delta_log as dl
-    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders")
-    tbl = scratch_table_dir(
-        f"{os.path.basename(sf_dir.rstrip('/'))}_odpruned_"
-        f"{_uuid.uuid4().hex[:8]}"
-    )
+    tbl = _scratch_table(sf_dir, "odpruned")
     dl.write_delta(
         orders.repartitionByRange(8, "o_orderkey"),
         tbl,
@@ -5113,18 +5084,11 @@ query(
 def lineitem_delta_zorder_scan(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import uuid as _uuid
-
     from .operators.layout import zorder_key
     from .sources import delta_log as dl
-    from .sources._files import scratch_table_dir
 
     li = _t(spark, sf_dir, "lineitem")
-    tbl = scratch_table_dir(
-        f"{os.path.basename(sf_dir.rstrip('/'))}_lidzorder_"
-        f"{_uuid.uuid4().hex[:8]}"
-    )
+    tbl = _scratch_table(sf_dir, "lidzorder")
     z = zorder_key(li, ["l_partkey", "l_suppkey"], bits=8)
     clustered = (
         li.withColumn("__zkey", z)
@@ -5194,11 +5158,7 @@ query(
     "log — no data file is rewritten until OPTIMIZE chooses to.",
 )
 def orders_dv_delete_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import uuid as _uuid
-
     from .sources import delta_log as dl
-    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -5208,10 +5168,7 @@ def orders_dv_delete_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("cents"),
     )
-    tbl = scratch_table_dir(
-        f"{os.path.basename(sf_dir.rstrip('/'))}_odvdel_"
-        f"{_uuid.uuid4().hex[:8]}"
-    )
+    tbl = _scratch_table(sf_dir, "odvdel")
     dl.write_delta(
         orders.repartition(4), tbl, stats_cols=["o_orderkey"]
     )
@@ -5277,11 +5234,7 @@ def orders_dv_delete_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     "log — untouched rows are never read twice nor rewritten.",
 )
 def orders_dv_update_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import uuid as _uuid
-
     from .sources import delta_log as dl
-    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -5291,10 +5244,7 @@ def orders_dv_update_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("cents"),
     )
-    tbl = scratch_table_dir(
-        f"{os.path.basename(sf_dir.rstrip('/'))}_odvupd_"
-        f"{_uuid.uuid4().hex[:8]}"
-    )
+    tbl = _scratch_table(sf_dir, "odvupd")
     dl.write_delta(
         orders.repartition(4), tbl, stats_cols=["o_orderkey"]
     )
@@ -5358,11 +5308,7 @@ def orders_dv_update_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     "metadata and per-file position arrays.",
 )
 def orders_dv_cdf_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import uuid as _uuid
-
     from .sources import delta_log as dl
-    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -5372,10 +5318,7 @@ def orders_dv_cdf_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("cents"),
     )
-    tbl = scratch_table_dir(
-        f"{os.path.basename(sf_dir.rstrip('/'))}_odvcdf_"
-        f"{_uuid.uuid4().hex[:8]}"
-    )
+    tbl = _scratch_table(sf_dir, "odvcdf")
     dl.write_delta(
         orders.repartition(4), tbl, stats_cols=["o_orderkey"]
     )
@@ -5430,11 +5373,7 @@ def orders_dv_cdf_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def orders_ict_time_travel(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import uuid as _uuid
-
     from .sources import delta_log as dl
-    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -5443,10 +5382,7 @@ def orders_ict_time_travel(
         .cast("bigint")
         .alias("cents"),
     )
-    tbl = scratch_table_dir(
-        f"{os.path.basename(sf_dir.rstrip('/'))}_oict_"
-        f"{_uuid.uuid4().hex[:8]}"
-    )
+    tbl = _scratch_table(sf_dir, "oict")
     leg = F.pmod("o_orderkey", F.lit(3))
     dl.write_delta(orders.where(leg == 0).repartition(4), tbl)
     dl.delta_alter_properties(
@@ -5516,11 +5452,7 @@ def orders_ict_time_travel(
 def orders_type_widening(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import uuid as _uuid
-
     from .sources import delta_log as dl
-    from .sources._files import scratch_table_dir
 
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -5528,10 +5460,7 @@ def orders_type_widening(
         .cast("int")
         .alias("cents"),
     )
-    tbl = scratch_table_dir(
-        f"{os.path.basename(sf_dir.rstrip('/'))}_otw_"
-        f"{_uuid.uuid4().hex[:8]}"
-    )
+    tbl = _scratch_table(sf_dir, "otw")
     dl.write_delta(
         o.where(F.col("o_orderkey") % 2 == 0).select("cents"),
         tbl,
@@ -5589,11 +5518,7 @@ def orders_type_widening(
 def lineitem_clustered_prune(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import uuid as _uuid
-
     from .sources import delta_log as dl
-    from .sources._files import scratch_table_dir
 
     li = _t(spark, sf_dir, "lineitem").select(
         "l_partkey",
@@ -5603,10 +5528,7 @@ def lineitem_clustered_prune(
         .cast("bigint")
         .alias("cents"),
     )
-    tbl = scratch_table_dir(
-        f"{os.path.basename(sf_dir.rstrip('/'))}_lclu_"
-        f"{_uuid.uuid4().hex[:8]}"
-    )
+    tbl = _scratch_table(sf_dir, "lclu")
     dl.write_delta(
         li.repartition(8), tbl,
         stats_cols=["l_partkey", "l_suppkey"],
@@ -5676,9 +5598,6 @@ def lineitem_clustered_prune(
 def orders_identity_append(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import uuid as _uuid
-
     from pyspark.sql.types import (
         LongType,
         StructField,
@@ -5686,13 +5605,9 @@ def orders_identity_append(
     )
 
     from .sources import delta_log as dl
-    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders").select("o_orderkey")
-    tbl = scratch_table_dir(
-        f"{os.path.basename(sf_dir.rstrip('/'))}_oid_"
-        f"{_uuid.uuid4().hex[:8]}"
-    )
+    tbl = _scratch_table(sf_dir, "oid")
     dl.delta_create_identity_table(
         StructType([
             StructField("o_orderkey", LongType()),
@@ -5768,11 +5683,7 @@ def orders_identity_append(
 def orders_row_ids_stable(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import uuid as _uuid
-
     from .sources import delta_log as dl
-    from .sources._files import scratch_table_dir
 
     orders = (
         _t(spark, sf_dir, "orders")
@@ -5785,10 +5696,7 @@ def orders_row_ids_stable(
         .repartition(1)
         .sortWithinPartitions("o_orderkey")
     )
-    tbl = scratch_table_dir(
-        f"{os.path.basename(sf_dir.rstrip('/'))}_orid_"
-        f"{_uuid.uuid4().hex[:8]}"
-    )
+    tbl = _scratch_table(sf_dir, "orid")
     dl.write_delta(
         orders, tbl, row_tracking=True, stats_cols=["o_orderkey"]
     )                                                          # v0
@@ -5852,10 +5760,8 @@ def orders_v2_checkpoint_scan(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     import os
-    import uuid as _uuid
 
     from .sources import delta_log as dl
-    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -5864,10 +5770,7 @@ def orders_v2_checkpoint_scan(
         .cast("bigint")
         .alias("cents"),
     )
-    tbl = scratch_table_dir(
-        f"{os.path.basename(sf_dir.rstrip('/'))}_ov2cp_"
-        f"{_uuid.uuid4().hex[:8]}"
-    )
+    tbl = _scratch_table(sf_dir, "ov2cp")
     leg = F.pmod("o_orderkey", F.lit(3))
     dl.write_delta(
         orders.where(leg == 0).repartition(4), tbl
@@ -5942,11 +5845,7 @@ def orders_v2_checkpoint_scan(
 def orders_cdc_feed_counts(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import uuid as _uuid
-
     from .sources import delta_log as dl
-    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -5955,10 +5854,7 @@ def orders_cdc_feed_counts(
         .cast("bigint")
         .alias("cents"),
     )
-    tbl = scratch_table_dir(
-        f"{os.path.basename(sf_dir.rstrip('/'))}_ocdc_"
-        f"{_uuid.uuid4().hex[:8]}"
-    )
+    tbl = _scratch_table(sf_dir, "ocdc")
     dl.write_delta(orders.repartition(4), tbl)
     st0 = dl.delta_alter_properties(
         spark, tbl, {"delta.enableChangeDataFeed": "true"}
@@ -6025,11 +5921,7 @@ def orders_cdc_feed_counts(
     "commit; data files are immutable.",
 )
 def orders_cm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import uuid as _uuid
-
     from .sources import delta_log as dl
-    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -6038,10 +5930,7 @@ def orders_cm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("cents"),
     )
-    tbl = scratch_table_dir(
-        f"{os.path.basename(sf_dir.rstrip('/'))}_ocmrt_"
-        f"{_uuid.uuid4().hex[:8]}"
-    )
+    tbl = _scratch_table(sf_dir, "ocmrt")
     dl.write_delta(
         orders.where(F.pmod("o_orderkey", F.lit(2)) == 0)
         .repartition(4),
@@ -6111,11 +6000,7 @@ def orders_cm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "write plus kilobytes of log — not a table rewrite.",
 )
 def orders_dv_merge_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import uuid as _uuid
-
     from .sources import delta_log as dl
-    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -6124,10 +6009,7 @@ def orders_dv_merge_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("cents"),
     )
-    tbl = scratch_table_dir(
-        f"{os.path.basename(sf_dir.rstrip('/'))}_odvmrg_"
-        f"{_uuid.uuid4().hex[:8]}"
-    )
+    tbl = _scratch_table(sf_dir, "odvmrg")
     dl.write_delta(
         orders.repartition(4), tbl, stats_cols=["o_orderkey"]
     )
@@ -6190,11 +6072,7 @@ def orders_dv_merge_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     "DDLs are kilobyte commits against immutable data.",
 )
 def orders_cm_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import uuid as _uuid
-
     from .sources import delta_log as dl
-    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -6203,10 +6081,7 @@ def orders_cm_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("cents"),
     )
-    tbl = scratch_table_dir(
-        f"{os.path.basename(sf_dir.rstrip('/'))}_ocmevo_"
-        f"{_uuid.uuid4().hex[:8]}"
-    )
+    tbl = _scratch_table(sf_dir, "ocmevo")
     dl.write_delta(
         orders.where(F.pmod("o_orderkey", F.lit(2)) == 0)
         .repartition(4),
@@ -6270,11 +6145,7 @@ def orders_cm_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 def orders_cm_id_roundtrip(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import uuid as _uuid
-
     from .sources import delta_log as dl
-    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -6283,10 +6154,7 @@ def orders_cm_id_roundtrip(
         .alias("cents"),
         F.col("o_orderpriority").alias("prio"),
     )
-    tbl = scratch_table_dir(
-        f"{os.path.basename(sf_dir.rstrip('/'))}_cmid_"
-        f"{_uuid.uuid4().hex[:8]}"
-    )
+    tbl = _scratch_table(sf_dir, "cmid")
     leg = F.pmod("o_orderkey", F.lit(3))
     dl.write_delta(
         orders.where(leg == 0), tbl, column_mapping="id"
@@ -6383,13 +6251,9 @@ def orders_cm_id_roundtrip(
 def orders_row_ids_multifile(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import uuid as _uuid
-
     from pyspark.sql import Window
 
     from .sources import delta_log as dl
-    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -6397,10 +6261,7 @@ def orders_row_ids_multifile(
         .cast("bigint")
         .alias("cents"),
     )
-    tbl = scratch_table_dir(
-        f"{os.path.basename(sf_dir.rstrip('/'))}_oridmf_"
-        f"{_uuid.uuid4().hex[:8]}"
-    )
+    tbl = _scratch_table(sf_dir, "oridmf")
     legs = [
         orders.where(F.pmod("o_orderkey", F.lit(4)) == i)
         .repartition(1)
@@ -6619,10 +6480,8 @@ def orders_convert_in_place(
 ) -> DataFrame:
     import glob as _glob
     import os
-    import uuid as _uuid
 
     from .sources import delta_log as dl
-    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -6631,10 +6490,7 @@ def orders_convert_in_place(
         .alias("cents"),
         F.col("o_orderpriority").alias("prio"),
     )
-    tbl = scratch_table_dir(
-        f"{os.path.basename(sf_dir.rstrip('/'))}_conv_"
-        f"{_uuid.uuid4().hex[:8]}"
-    )
+    tbl = _scratch_table(sf_dir, "conv")
     # plain hive-partitioned parquet — no delta log yet
     orders.write.partitionBy("prio").parquet(tbl)
     before = sorted(
@@ -6730,11 +6586,7 @@ def orders_convert_in_place(
 def orders_restore_rewind(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import uuid as _uuid
-
     from .sources import delta_log as dl
-    from .sources._files import scratch_table_dir
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -6743,10 +6595,7 @@ def orders_restore_rewind(
         .alias("cents"),
         F.col("o_orderpriority").alias("prio"),
     )
-    tbl = scratch_table_dir(
-        f"{os.path.basename(sf_dir.rstrip('/'))}_restore_"
-        f"{_uuid.uuid4().hex[:8]}"
-    )
+    tbl = _scratch_table(sf_dir, "restore")
     dl.write_delta(orders, tbl)                                # v0
     dl.delta_delete(spark, tbl, "o_orderkey % 11 = 5")         # v1
     dl.write_delta(                                            # v2

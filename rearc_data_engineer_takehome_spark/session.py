@@ -23,6 +23,15 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
 
 
+def usable_cpus() -> str:
+    """``SPARK_GRAFT_CPUS``, else the number of CPUs this process may
+    run on: the ``local[N]`` of the bench and the probe tools, which
+    must not assume a 32-core host."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(
+        len(os.sched_getaffinity(0))
+    )
+
+
 def get_spark(
     app_name: str = "rearc-takehome-spark",
     master: str | None = None,

@@ -34,12 +34,6 @@ TESTDATA_TABLES = (
 )
 
 
-def read_text_lines(spark: SparkSession, path: str) -> DataFrame:
-    """S1: one ``value:string`` row per line. Splittable and distributed;
-    filter/parse downstream so the scan stays a plain line scan."""
-    return spark.read.text(path)
-
-
 def read_multiline_json(spark: SparkSession, path: str) -> DataFrame:
     """S2: schema-inferred nested JSON document read.
 

@@ -2,7 +2,8 @@
 Transport is stubbed; every branch of the idempotency contract is
 exercised: new/changed/same/gone-upstream, protected files, delete
 toggle, partial_success, run metadata, cached fallback, first-run hard
-fail."""
+fail. The production transport, ``default_http_fetch``, runs against a
+loopback ``http.server`` on 127.0.0.1: a 503 is retried, a 404 raises."""
 
 from __future__ import annotations
 
@@ -148,3 +149,61 @@ def test_listing_parser_variants():
     assert mirror.list_remote_files(html, prefix="pr.") == [
         "pr.data.0.Current", "pr.series", "pr.txt",
     ]
+
+
+class _LoopbackServer:
+    """A 127.0.0.1 HTTP server answering each GET with the next
+    (status, body) of ``replies``; records the paths it served."""
+
+    def __init__(self, replies):
+        import http.server
+        import threading
+
+        self.replies = list(replies)
+        self.paths: list[str] = []
+        outer = self
+
+        class Handler(http.server.BaseHTTPRequestHandler):
+            def do_GET(self):
+                outer.paths.append(self.path)
+                status, body = outer.replies.pop(0)
+                self.send_response(status)
+                self.send_header("Content-Length", str(len(body)))
+                self.end_headers()
+                self.wfile.write(body)
+
+            def log_message(self, *_args):
+                pass
+
+        self.server = http.server.ThreadingHTTPServer(
+            ("127.0.0.1", 0), Handler
+        )
+        self.url = f"http://127.0.0.1:{self.server.server_port}"
+        self.thread = threading.Thread(
+            target=self.server.serve_forever, daemon=True
+        )
+
+    def __enter__(self):
+        self.thread.start()
+        return self
+
+    def __exit__(self, *_exc):
+        self.server.shutdown()
+        self.server.server_close()
+
+
+def test_default_http_fetch_retries_a_503_then_returns_the_body():
+    with _LoopbackServer([(503, b"busy"), (200, b"pr.data")]) as srv:
+        fetch = mirror.default_http_fetch(timeout=(5, 5))
+        assert fetch(f"{srv.url}/pub/pr.data") == b"pr.data"
+    assert srv.paths == ["/pub/pr.data", "/pub/pr.data"]
+
+
+def test_default_http_fetch_raises_on_404():
+    import requests
+
+    with _LoopbackServer([(404, b"gone")]) as srv:
+        fetch = mirror.default_http_fetch(timeout=(5, 5))
+        with pytest.raises(requests.HTTPError):
+            fetch(f"{srv.url}/pub/missing")
+    assert srv.paths == ["/pub/missing"]

@@ -24,10 +24,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from rearc_data_engineer_takehome_spark.queries import REGISTRY  # noqa: E402
-from rearc_data_engineer_takehome_spark.session import get_spark  # noqa: E402
+from rearc_data_engineer_takehome_spark.session import get_spark, usable_cpus  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+CPUS = usable_cpus()
 
 
 def main() -> None:

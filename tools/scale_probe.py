@@ -3,8 +3,8 @@ synthesized 10x of it, and record the wall-clock ratio per operator.
 
 The 100 TB argument in SCALE.md is a design argument; this probe is the
 measurement behind it at the scales this box can hold. An operator whose
-plan is scale-linear should cost <= ~10x at 10x rows on a fixed 32-core
-box (sub-linear when the small scale under-utilizes cores); anything
+plan is scale-linear should cost <= ~10x at 10x rows on a fixed core
+count (sub-linear when the small scale under-utilizes cores); anything
 super-linear indicates a shuffle/skew/driver bottleneck that would only
 get worse on a cluster.
 
@@ -32,12 +32,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import pyspark.sql.functions as F  # noqa: E402
 
 from rearc_data_engineer_takehome_spark.queries import REGISTRY  # noqa: E402
-from rearc_data_engineer_takehome_spark.session import get_spark  # noqa: E402
+from rearc_data_engineer_takehome_spark.session import get_spark, usable_cpus  # noqa: E402
 
 BASE_SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 PROBE_DIR = os.environ.get("SCALE_PROBE_DIR", "/tmp/spark_graft_scale_probe")
 REPLICAS = int(os.environ.get("SCALE_PROBE_REPLICAS", "10"))
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = usable_cpus()
 
 # (table, id columns to offset per replica) — offsets keep keys unique
 # across replicas while preserving intra-replica join relationships.
@@ -204,7 +204,7 @@ def main() -> None:
             "Generated by `python tools/scale_probe.py`. Fact tables "
             f"replicated {REPLICAS}x with per-replica key offsets "
             "(join fan-outs and group cardinalities scale honestly); "
-            "dims kept catalog-sized. On a fixed 32-core box a "
+            f"dims kept catalog-sized. On a fixed {CPUS} cores a "
             "scale-linear operator costs <= ~Nx at Nx rows — sub-linear "
             "when the small scale under-utilized cores; super-linear "
             "flags a shuffle/skew/driver bottleneck that a cluster "
