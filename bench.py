@@ -1,5 +1,5 @@
 """Benchmark harness: runs the full query battery at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the
+(default: ``SF_DIR`` below) on local[$SPARK_GRAFT_CPUS] (default: the
 CPUs the process may use).
 
 Output contract (round-2 fix — BENCH_r01.json came back "parsed": null
