@@ -271,6 +271,7 @@ def main() -> None:
         "builds": builds,
         "build_seconds": round(sum(builds.values()), 4),
         "sf": sf_val,
+        "cpus": int(CPUS),
         "n_queries": len(query_timings),
         # n_runs main passes + one extra min-of pass (none when n_runs=1)
         "runs": n_runs + (1 if n_runs >= 2 else 0),

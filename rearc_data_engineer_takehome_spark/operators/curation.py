@@ -30,6 +30,7 @@ from ..functions.hashing import (
     stable_hash64_sql,
 )
 from ..functions.text import WS_PATTERN, word_shingles, ws_tokens
+from .relational import materialize, spread_compute
 
 #: Knuth's multiplicative-hash constant — maps a bucket id to a
 #: deterministic pseudo-weight without shipping a model file. The
@@ -141,8 +142,8 @@ def dsir_weights(
 
     Plan shape: two passes over the corpus, like the unigram LM. Pass 1
     explodes n-gram slots and folds them into a BOUNDED slot table
-    (``n_buckets`` rows), which is localCheckpoint'ed — it is the
-    trained model, kilobytes at any corpus size, and checkpointing it
+    (``n_buckets`` rows), which is materialized ``local`` — it is the
+    trained model, kilobytes at any corpus size, and materializing it
     keeps the totals/log-ratio derivations (two more consumers) from
     re-running the explode. Pass 2 never shuffles at all: the log-ratio
     table folds into a ONE-ROW slot→ratio map, broadcasts, and each
@@ -152,8 +153,6 @@ def dsir_weights(
     compute-spread first (hashing is CPU-bound, and a fresh parquet
     scan of a small table may arrive single-partition).
     """
-    from .relational import spread_compute
-
     toks = F.transform(ws_tokens(F.col(text_col)), F.lower)
     grams = word_shingles(toks, k)
     slot_arr = F.transform(
@@ -165,10 +164,11 @@ def dsir_weights(
         F.explode(slot_arr).alias("slot"),
     )
 
-    slots = (
-        pairs.groupBy("slot")
-        .agg(F.sum("is_target").alias("t_b"), F.count(F.lit(1)).alias("c_b"))
-        .localCheckpoint(eager=False)
+    slots = materialize(
+        pairs.groupBy("slot").agg(
+            F.sum("is_target").alias("t_b"), F.count(F.lit(1)).alias("c_b")
+        ),
+        "dsir_slots", "local", eager=False,
     )
     totals = slots.agg(
         F.sum("t_b").alias("t_tot"), F.sum("c_b").alias("c_tot")

@@ -20,13 +20,11 @@ probabilistic, and tests assert recall against the exact operator.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
 from ..functions import hashing, vectors
 from ..functions.text import word_shingles, ws_tokens
-
-
-from .relational import spread_compute
+from .relational import materialize, spread_compute
 
 
 def exact_dedup(
@@ -917,6 +915,20 @@ def _components_one_task(
     return pairs.coalesce(1).mapInPandas(_uf, schema=out_schema)
 
 
+def _graph_width(edges: DataFrame, graph_partitions: int | None) -> int:
+    """Partitions for a connected-components loop: an explicit
+    ``graph_partitions``, else ~``_ONE_TASK_EDGES`` edges each, at
+    least 1 and at most the cluster's parallelism. Counting the
+    materialized ``edges`` is one cheap job."""
+    return graph_partitions or max(
+        1,
+        min(
+            edges.sparkSession.sparkContext.defaultParallelism,
+            edges.count() // _ONE_TASK_EDGES + 1,
+        ),
+    )
+
+
 def cluster_pairs(
     pairs: DataFrame, max_iter: int = 20, graph_partitions: int | None = None
 ) -> DataFrame:
@@ -931,59 +943,31 @@ def cluster_pairs(
     where cluster_id = min doc id of the component. Documents not in any
     pair are absent (they are their own singleton cluster by definition).
     """
-    # localCheckpoint (not persist): iterative joins grow the logical
-    # plan linearly, so Catalyst re-optimizes an O(iterations)-deep
-    # lineage every round — checkpointing truncates it. TRADE-OFF: the
-    # checkpoint is non-reliable; on a cluster with preemptible executors
-    # use spark.sparkContext.setCheckpointDir + .checkpoint() instead
-    # (lineage is gone, so a lost block cannot recompute).
-    #
-    # The cluster graph is orders of magnitude smaller than the corpus,
-    # so iterations run on few partitions to skip per-task scheduling
-    # overhead — but the coalesce happens AFTER the distinct/checkpoint
-    # so the edge dedup itself keeps full shuffle parallelism. The width
-    # is sized from the MATERIALIZED edge count (counting a checkpointed
-    # frame is a metadata-cheap job): ~50k edges per partition, floor 1,
-    # cap at cluster parallelism — a 256-edge graph iterates on one
-    # partition (every round is pure fixed latency otherwise), a
-    # billion-edge graph still spreads cluster-wide.
-    # materialize the candidate pairs BEFORE the symmetrizing self-union:
-    # Spark re-executes a non-materialized plan once per union branch, so
-    # an expensive upstream pair generator (MinHash/Jaccard join) would
-    # run twice (measured 2× the pair-job cost on dedup_clusters).
-    pairs = pairs.select("id_a", "id_b").localCheckpoint()
-    # small-graph endgame: when the (directed) pair count already fits
-    # one graph partition, solve components in ONE executor task
-    # instead of paying per-round driver barriers; an explicit
-    # graph_partitions keeps the iterative path (tests exercise its
-    # exhaustion semantics through it). The count job on a
-    # checkpointed frame is metadata-cheap.
+    # the graph is orders of magnitude smaller than the corpus, so the
+    # rounds run on few partitions; the coalesce comes after the edge
+    # dedup, which keeps full shuffle parallelism. The pairs are
+    # computed once before the symmetrizing self-union, which would
+    # otherwise run the pair generator once per branch.
+    pairs = materialize(pairs.select("id_a", "id_b"), "cluster_pairs", "local")
+    # small-graph endgame: a graph that fits one partition is solved in
+    # ONE executor task; an explicit graph_partitions keeps the
+    # iterative path (tests exercise its exhaustion semantics)
     if graph_partitions is None and pairs.count() <= _ONE_TASK_EDGES:
-        labels = _components_one_task(pairs, drop_self_loops=False)
-        return labels.select(
-            F.col("doc_id"), F.col("cluster_id")
-        )
-    edges = (
+        return _components_one_task(pairs, drop_self_loops=False)
+    edges = materialize(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        "cluster_edges", "local",
     )
-    n_graph = graph_partitions or max(
-        1,
-        min(
-            pairs.sparkSession.sparkContext.defaultParallelism,
-            edges.count() // 50_000 + 1,
-        ),
-    )
+    n_graph = _graph_width(edges, graph_partitions)
     edges = edges.coalesce(n_graph)
-    labels = (
+    labels = materialize(
         edges.select(F.col("src").alias("id"))
         .distinct()
-        .withColumn("label", F.col("id"))
-        .localCheckpoint()
-        .coalesce(n_graph)
-    )
+        .withColumn("label", F.col("id")),
+        "cluster_labels", "local",
+    ).coalesce(n_graph)
     from pyspark.sql import Observation
 
     for i in range(max_iter):
@@ -996,7 +980,7 @@ def cluster_pairs(
         # checkpoint (Observation metrics are collected during it) — the
         # old separate join+count was one extra Spark job per round
         obs = Observation(f"cluster_round_{i}")
-        new_labels = (
+        labels = materialize(
             labels.join(neighbour_min, labels.id == neighbour_min.src, "left")
             .select(
                 "id",
@@ -1012,10 +996,9 @@ def cluster_pairs(
                 ),
             )
             .select("id", "label")
-            .coalesce(n_graph)
-            .localCheckpoint()
+            .coalesce(n_graph),
+            "cluster_round", "local",
         )
-        labels = new_labels
         if (obs.get["n_changed"] or 0) == 0:
             break
     else:
@@ -1056,7 +1039,7 @@ def cluster_pairs_star(
     Scale shape: the edge relation never grows beyond the input edge
     count (large-star emits ≤1 edge per adjacency entry, small-star
     contracts), every shuffle is keyed on a node id, and per-round
-    lineage is truncated with localCheckpoint exactly like
+    lineage is truncated by a ``local`` materialization exactly like
     cluster_pairs. Convergence is detected by an empty
     ``exceptAll`` between consecutive star-edge sets (node-scale
     relation, cheap); exhausting ``max_iter`` warns rather than
@@ -1064,27 +1047,20 @@ def cluster_pairs_star(
     """
     import warnings
 
-    pairs = pairs.select("id_a", "id_b").localCheckpoint()
-    # small-graph endgame — same gate as cluster_pairs: one executor
-    # task beats O(log n) rounds of star contraction when the whole
-    # graph fits one partition (each round here costs a checkpoint job
-    # PLUS two exceptAll convergence jobs). Star's u != v filter is
-    # mirrored by drop_self_loops.
+    pairs = materialize(
+        pairs.select("id_a", "id_b"), "cluster_star_pairs", "local"
+    )
+    # same small-graph endgame as cluster_pairs; star's u != v filter
+    # is mirrored by drop_self_loops
     if graph_partitions is None and pairs.count() <= _ONE_TASK_EDGES:
         return _components_one_task(pairs, drop_self_loops=True)
-    edges = (
+    edges = materialize(
         pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        "cluster_star_edges", "local",
     )
-    n_graph = graph_partitions or max(
-        1,
-        min(
-            pairs.sparkSession.sparkContext.defaultParallelism,
-            edges.count() // 50_000 + 1,
-        ),
-    )
+    n_graph = _graph_width(edges, graph_partitions)
     edges = edges.coalesce(n_graph)
 
     def _sym(e: DataFrame) -> DataFrame:
@@ -1113,7 +1089,7 @@ def cluster_pairs_star(
         m_le = le.groupBy("u").agg(
             F.least(F.first("u"), F.min("v")).alias("m")
         )
-        small = (
+        small = materialize(
             le.join(m_le, "u")
             .select(
                 F.explode(
@@ -1124,8 +1100,8 @@ def cluster_pairs_star(
             .where(F.col("x") != F.col("m"))
             .select(F.col("x").alias("u"), F.col("m").alias("v"))
             .distinct()
-            .coalesce(n_graph)
-            .localCheckpoint()
+            .coalesce(n_graph),
+            "cluster_star_round", "local",
         )
         if small.exceptAll(edges).isEmpty() and edges.exceptAll(small).isEmpty():
             edges = small

@@ -21,6 +21,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from .relational import materialize
+
 
 def roc_auc(
     df: DataFrame,
@@ -66,8 +68,8 @@ def roc_auc(
     )
     if max_distinct_scores is not None:
         # one tiny action over the aggregated relation answers both
-        # guards; the checkpoint lets the windows reuse the same blocks
-        g = g.localCheckpoint(eager=False)
+        # guards; the windows then reuse the same blocks
+        g = materialize(g, "roc_auc_scores", "local", eager=False)
         guard = g.agg(
             F.count(F.lit(1)).alias("nd"),
             F.sum("n_pos").alias("tp"),
@@ -125,19 +127,18 @@ def cohens_kappa(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
     (po - pe) / (1 - pe), each rounded 6dp.
 
     Scale shape: ONE fact aggregate reduces to the label-pair domain
-    (|A-labels| x |B-labels| cells, checkpointed because it feeds the
+    (|A-labels| x |B-labels| cells, materialized because it feeds the
     agreement total and both marginals); everything after is
     arithmetic over that tiny relation. Counts are exact bigints; the
     pe numerator sums products of marginals as bigints (label domains
     are small, so row_a * col_b fits easily); po/pe/kappa are final
     scalar double ratios.
     """
-    cells = (
-        df.groupBy(
-            F.col(col_a).alias("la"), F.col(col_b).alias("lb")
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        .localCheckpoint(eager=False)
+    cells = materialize(
+        df.groupBy(F.col(col_a).alias("la"), F.col(col_b).alias("lb")).agg(
+            F.count(F.lit(1)).cast("bigint").alias("cnt")
+        ),
+        "kappa_cells", "local", eager=False,
     )
     totals = cells.agg(
         F.sum("cnt").cast("bigint").alias("n"),

@@ -18,6 +18,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from .relational import materialize
+
 
 def copurchase_edges(
     lineitem: DataFrame,
@@ -97,29 +99,22 @@ def pagerank(
     graphs are symmetric so every node has out-degree ≥ 1; a directed
     web-style graph would add the dangling-sum scalar per round.
     """
-    # edges feeds nodes + outdeg + every iteration's contribution join;
-    # without materialization each reference re-runs the edge build
-    # (e.g. the co-purchase self-join) — measured 55 exchanges -> 13.
-    # Round 2: out-degree is pre-JOINED into the edge relation once and
-    # the result hash-partitioned on src BEFORE the checkpoint —
-    # localCheckpoint preserves outputPartitioning, so every iteration's
-    # contribution join reuses that one exchange instead of re-shuffling
-    # the edge side (and the per-iteration outdeg join disappears
-    # entirely): 13 exchanges -> ~1 per iteration (the dst groupBy,
-    # which is inherent to rank flow along edges).
-    edges = edges.localCheckpoint()
-    nodes = (
+    # edges feeds nodes, outdeg and every iteration's contribution
+    # join; computing it once cut the plan from 55 exchanges to 13
+    edges = materialize(edges, "pagerank_edges", "local")
+    nodes = materialize(
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    ).localCheckpoint()
-    # out-degree is one row per node with out-edges — catalog-sized, so
-    # its checkpoint is a cheap insurance against re-aggregating the
-    # edge relation every iteration
-    outdeg = (
-        edges.groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).alias("outdeg"))
-        .localCheckpoint()
+        .distinct(),
+        "pagerank_nodes", "local",
+    )
+    # one row per node with out-edges: spares every iteration a
+    # re-aggregation of the edge relation
+    outdeg = materialize(
+        edges.groupBy(F.col("src").alias("node")).agg(
+            F.count(F.lit(1)).alias("outdeg")
+        ),
+        "pagerank_outdeg", "local",
     )
     n = nodes.count()
     # The rank table is exactly one row per node. While it fits a
@@ -144,11 +139,11 @@ def pagerank(
         shuffle_parts = edges.sparkSession.conf.get(
             "spark.sql.shuffle.partitions"
         )
-        wedges = (
+        wedges = materialize(
             edges.join(outdeg, edges.src == outdeg.node)
             .select("src", "dst", "outdeg")
-            .repartition(int(shuffle_parts), "src")
-            .localCheckpoint()
+            .repartition(int(shuffle_parts), "src"),
+            "pagerank_wedges", "local",
         )
     init = round(1.0 / n, round_to)
     ranks = nodes.select("node", F.lit(init).alias("rank"))
@@ -278,14 +273,14 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     # closing-edge join. Without materialization each reference re-runs
     # the upstream edge GENERATOR (e.g. the co-purchase fold) — measured
     # 11.7s -> ~2s at sf0.1 with the two checkpoints.
-    und = (
+    und = materialize(
         edges.where(F.col("src") != F.col("dst"))
         .select(
             F.least("src", "dst").alias("a"),
             F.greatest("src", "dst").alias("b"),
         )
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        "triangle_und", "local",
     )
     deg = (
         und.select(F.col("a").alias("n"))
@@ -299,11 +294,14 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     a_first = F.struct(F.col("da"), F.col("a")) < F.struct(
         F.col("db"), F.col("b")
     )
-    orient = keyed.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("s"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("t"),
-        F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("dt"),
-    ).localCheckpoint()
+    orient = materialize(
+        keyed.select(
+            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("s"),
+            F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("t"),
+            F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("dt"),
+        ),
+        "triangle_orient", "local",
+    )
     e1 = orient.select(
         F.col("s"), F.col("t").alias("v"), F.col("dt").alias("dv")
     )

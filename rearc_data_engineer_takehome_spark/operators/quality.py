@@ -24,6 +24,8 @@ from collections.abc import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from .relational import materialize
+
 
 class ValidationError(RuntimeError):
     """Raised when a hard data-quality assertion fails (the reference
@@ -297,7 +299,9 @@ def exact_quantiles_scalable(
     probs = list(probs)
     src = df.select(F.col(col).alias("x")).where(F.col("x").isNotNull())
     # tiny; materialized so pass 2's plan scans the source only once
-    b = _kll_brackets(src, [], probs, accuracy).localCheckpoint()
+    b = materialize(
+        _kll_brackets(src, [], probs, accuracy), "quantile_brackets", "local"
+    )
     return _quantiles_in_brackets(src, b, [], probs)
 
 
@@ -327,15 +331,11 @@ def grouped_exact_quantiles_scalable(
     src = df.select(F.col(g), F.col(col).alias("x")).where(
         F.col("x").isNotNull()
     )
-    # O(|groups|) bracket relation with a full-scan lineage, materialized
-    # so the pass-2 join does not re-scan the source — reliable scratch
-    # keeps an executor loss a parquet re-scan instead of an
-    # unrecoverable localCheckpoint lineage error; group count is
-    # caller-controlled and unbounded (r09 ADVICE long tail)
-    from .relational import checkpoint_reliable
-
-    b = checkpoint_reliable(
-        _kll_brackets(src, [g], probs, accuracy), "grouped_quantile_brackets"
+    # O(|groups|) brackets, computed once so the pass-2 join does not
+    # re-scan the source; the caller controls the group count
+    b = materialize(
+        _kll_brackets(src, [g], probs, accuracy),
+        "grouped_quantile_brackets", "reliable",
     )
     return _quantiles_in_brackets(src, b, [g], probs)
 
@@ -634,7 +634,7 @@ def kaplan_meier(
     if max_distinct_durations is not None:
         # materialize the distinct-duration relation once: the guard
         # count and both cumulative windows below read the same blocks
-        t = t.localCheckpoint(eager=False)
+        t = materialize(t, "km_durations", "local", eager=False)
         n_distinct = t.count()
         if n_distinct > max_distinct_durations:
             raise ValueError(

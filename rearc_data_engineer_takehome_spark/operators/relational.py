@@ -12,17 +12,24 @@ Scale notes (100 TB posture):
     the *aggregate*, not the fact table.
   * ``left_enrich`` broadcasts the dimension side explicitly when told
     it is small; otherwise it leaves strategy to AQE.
-  * No ``collect()`` anywhere — everything composes into one plan.
+  * Everything composes into one plan, except where a caller asks
+    ``materialize`` to compute an intermediate once; its docstring
+    holds the package's one materialization policy.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import uuid
 from collections.abc import Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql.functions import broadcast
+
+from ..sources._files import scratch_table_dir
 
 
 def spread_compute(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -37,85 +44,89 @@ def spread_compute(df: DataFrame, min_partitions: int | None = None) -> DataFram
     return df.repartition(target)
 
 
-def materialize_small(df: DataFrame, max_rows: int) -> DataFrame:
-    """Materialize a PROVABLY small relation that feeds several
-    consumers: one bounded driver collect, re-embedded as a local
-    DataFrame. The bound is enforced — ``max_rows`` exceeded is a loud
-    error, never a silent driver OOM.
-
-    This is the audited alternative to ``localCheckpoint`` for
-    domain-bounded aggregates (|categories| cells, month grids,
-    strata): localCheckpoint pins blocks in *executor* memory, so at
-    cluster scale any executor loss kills the query with "RDD was
-    locally checkpointed ... cannot be recomputed"; a local-relation
-    re-embed keeps every consumer a pure recomputable lineage (the
-    data rides in the plan, as with the OLS betas pattern) while still
-    computing the expensive upstream exactly once."""
-    # collect(), not take(n+1): limit's incremental execution (try 1
-    # partition, grow) re-runs stages on aggregates and measured ~4x
-    # slower on the contingency-table queries; the callers' relations
-    # are domain-bounded by construction, so the bound check is a
-    # post-hoc audit, not the OOM guard
-    rows = df.collect()
-    if len(rows) > max_rows:
-        raise ValueError(
-            f"materialize_small bound exceeded: {len(rows)} > "
-            f"{max_rows} rows — this relation is not driver-bounded; "
-            "checkpoint it to reliable storage instead"
-        )
-    return df.sparkSession.createDataFrame(rows, df.schema)
-
-
-# latest scratch path per checkpoint_reliable label: each new call
-# for a label supersedes the previous run's copy (runs are sequential
-# within a process), so disk usage stays at ONE copy per label instead
-# of accumulating a copy per invocation across a bench session; the
-# atexit hook sweeps whatever is left when the process ends
+# latest scratch path per ``reliable`` label; swept at process exit
 _RELIABLE_SCRATCH: dict[str, str] = {}
 
 
 def _sweep_reliable_scratch() -> None:
-    import shutil
-
     for path in _RELIABLE_SCRATCH.values():
         shutil.rmtree(path, ignore_errors=True)
     _RELIABLE_SCRATCH.clear()
 
 
-def checkpoint_reliable(df: DataFrame, label: str) -> DataFrame:
-    """Materialize a multi-consumer intermediate to RELIABLE storage
-    (scratch parquet under the per-uid /tmp root; on a cluster this
-    path is the job's scratch prefix on the shared filesystem) and
-    read it back. The scale-safe sibling of ``materialize_small`` for
-    relations too big to re-embed driver-side: unlike localCheckpoint
-    — whose blocks live in executor memory, so one lost executor kills
-    the whole query with "RDD was locally checkpointed ... cannot be
-    recomputed" — recovery here is just a parquet re-scan. Costs one
-    write + one read per consumer; worth it exactly when >=2 consumers
-    would otherwise recompute an expensive upstream.
+def materialize(
+    df: DataFrame,
+    label: str,
+    kind: str,
+    *,
+    max_rows: int | None = None,
+    eager: bool = True,
+) -> DataFrame:
+    """Compute ``df`` once for several consumers (or to cut an
+    iterative plan's lineage) and return a DataFrame over the result.
+    This is the engine's one materialization policy; ``kind`` names
+    what each site gives up:
 
-    Lifecycle: the previous invocation's copy for the same ``label``
-    is deleted on the next call (a re-run's DataFrame must not be
-    consumed after a newer run of the same query begins), and an
-    atexit sweep removes the final copies — nothing survives the
-    process, unlike the day-scoped scratch_table_dir fallback."""
-    import atexit
-    import shutil
-    import uuid as _uuid
+    * ``"small"``: one driver ``collect()`` re-embedded as a local
+      relation. Consumers keep a recomputable lineage (the rows ride
+      in the plan). More than ``max_rows`` rows raises ``ValueError``
+      instead of growing the driver. ``collect()``, not ``take``:
+      limit's incremental execution re-runs stages on aggregates.
+    * ``"reliable"``: written to scratch parquet and read back, so an
+      executor loss costs a re-scan. The previous copy of the same
+      ``label`` is deleted when the next call for it starts (a re-run
+      must not read a superseded copy), and the last copies are swept
+      at process exit: one copy per label at any time.
+    * ``"local"``: ``localCheckpoint``. Blocks live in executor
+      memory and the lineage is gone, so a lost executor fails the
+      query ("RDD was locally checkpointed ... cannot be recomputed").
+      Meant for lineage truncation inside iterative loops, whose plans
+      would otherwise grow every round; the ``local`` sites outside a
+      loop are listed in ROADMAP.md for reclassification one measured
+      change at a time. ``eager=False`` defers the job to the first
+      consumer's action.
 
-    from ..sources._files import scratch_table_dir
+    A domain-bounded relation is ``small``; any other relation with
+    several consumers is ``reliable``.
 
-    if not _RELIABLE_SCRATCH:
-        atexit.register(_sweep_reliable_scratch)
-    prev = _RELIABLE_SCRATCH.pop(label, None)
-    if prev:
-        shutil.rmtree(prev, ignore_errors=True)
-    path = os.path.join(
-        scratch_table_dir(f"ckpt_{label}"), _uuid.uuid4().hex[:12]
-    )
-    df.write.mode("errorifexists").parquet(path)
-    _RELIABLE_SCRATCH[label] = path
-    return df.sparkSession.read.schema(df.schema).parquet(path)
+    Jobs started here carry the Spark job description
+    ``materialize:<kind>:<label>``; the caller's description is
+    restored afterwards.
+    """
+    if kind not in ("small", "reliable", "local"):
+        raise ValueError(f"unknown materialize kind {kind!r}")
+    if kind == "small" and max_rows is None:
+        raise ValueError("materialize(kind='small') needs max_rows")
+    if kind == "local" and not eager:
+        return df.localCheckpoint(eager=False)
+    sc = df.sparkSession.sparkContext
+    caller_desc = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"materialize:{kind}:{label}")
+    try:
+        if kind == "local":
+            return df.localCheckpoint()
+        if kind == "small":
+            rows = df.collect()
+            if len(rows) > max_rows:
+                raise ValueError(
+                    f"materialize {label!r}: {len(rows)} rows > "
+                    f"max_rows={max_rows}; not driver-bounded, use "
+                    "kind='reliable'"
+                )
+            return df.sparkSession.createDataFrame(rows, df.schema)
+        if not _RELIABLE_SCRATCH:
+            atexit.register(_sweep_reliable_scratch)
+        prev = _RELIABLE_SCRATCH.pop(label, None)
+        if prev:
+            shutil.rmtree(prev, ignore_errors=True)
+        path = os.path.join(
+            scratch_table_dir(f"ckpt_{label}"), uuid.uuid4().hex[:12]
+        )
+        df.write.mode("errorifexists").parquet(path)
+        _RELIABLE_SCRATCH[label] = path
+        return df.sparkSession.read.schema(df.schema).parquet(path)
+    finally:
+        sc.setLocalProperty("spark.job.description", caller_desc)
 
 
 def global_stats(
@@ -303,24 +314,13 @@ def dense_row_numbers(
     n = n_partitions or df.sparkSession.conf.get(
         "spark.sql.shuffle.partitions", "32"
     )
-    ranged = (
+    # pin the range boundaries: the rows and sizes branches below must
+    # see ONE sample, which exchange reuse gives only as an optimization
+    ranged = materialize(
         df.repartitionByRange(int(n), *cols)
         .sortWithinPartitions(*cols)
-        .withColumn("__pid", F.spark_partition_id())
-        # PIN the range partitioning: the rows branch and the sizes
-        # branch below both read `ranged`, and global row numbers are
-        # only correct if both see the SAME sampled range boundaries.
-        # Normally ReusedExchange guarantees that, but it is a planner
-        # optimization, not a contract — with
-        # spark.sql.exchange.reuse=false (or plans that canonicalize
-        # apart) each branch would re-sample boundaries independently
-        # and offsets would silently drift from the rows they label.
-        # A lazy localCheckpoint rewrites both branches onto ONE
-        # materialized RDD, making the single-sample property
-        # structural. Cost: one persisted pass over the relation —
-        # which the two consuming branches would each have recomputed
-        # anyway absent exchange reuse.
-        .localCheckpoint(eager=False)
+        .withColumn("__pid", F.spark_partition_id()),
+        "dense_row_numbers", "local", eager=False,
     )
     local = ranged.withColumn(
         "__lrn",

@@ -28,6 +28,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 from ..functions.text import ws_tokens
+from .relational import materialize, spread_compute
 
 K1 = 1.2
 B = 0.75
@@ -46,8 +47,6 @@ def bm25_topk(
     idf = ln((N - df + 0.5)/(df + 0.5) + 1), tf normalization
     tf·(k1+1)/(tf + k1·(1 − b + b·dl/avgdl)).
     """
-    from .relational import spread_compute
-
     terms = [t.lower() for t in terms]
     # spread first: tokenization is CPU-bound and a single parquet file
     # is ONE input partition otherwise. The lowered token array is
@@ -63,19 +62,11 @@ def bm25_topk(
         F.col(id_col), F.col("dl"), F.explode("arr").alias("term")
     ).where(F.col("term").isin(terms))
 
-    # tf feeds BOTH the per-term df aggregate and the scoring join; it
-    # is |query terms| × matching docs rows — corpus-sublinear but NOT
-    # constant-bounded (a stopword-ish term can match most of the
-    # corpus), while its lineage is a full corpus tokenize+explode.
-    # Reliable scratch materializes it once (two consumers) and keeps
-    # an executor loss a parquet re-scan instead of an unrecoverable
-    # localCheckpoint lineage error (r09 ADVICE long tail).
-    from .relational import checkpoint_reliable
-
-    tf = checkpoint_reliable(
-        toks.groupBy(id_col, "dl", "term")
-        .agg(F.count(F.lit(1)).alias("tf")),
-        "bm25_tf",
+    # tf feeds BOTH the per-term df aggregate and the scoring join; a
+    # stopword-ish term can match most of the corpus, hence reliable
+    tf = materialize(
+        toks.groupBy(id_col, "dl", "term").agg(F.count(F.lit(1)).alias("tf")),
+        "bm25_tf", "reliable",
     )
 
     n_docs, sum_dl = spread_compute(docs).agg(

@@ -21,6 +21,7 @@ from ..functions.text import (
     word_shingles,
     ws_tokens,
 )
+from .relational import materialize, spread_compute
 
 #: Tiny per-language stopword lexicons for the n-gram/stopword heuristic
 #: language ID. Deliberately small + hardcoded: the point is the Spark
@@ -107,7 +108,6 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     The stopword regexp battery is CPU-bound, so the input spreads
     across cores first (single-file inputs arrive as ONE partition;
     no-op on already-split inputs)."""
-    from .relational import spread_compute
 
     df = spread_compute(df)
     scores = language_scores(F.col(text_col))
@@ -249,7 +249,6 @@ def unigram_lm_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     from the ROUNDED mean, so both engines expose identical values.
     """
     from ..functions.text import ws_tokens
-    from .relational import spread_compute
 
     # single-file inputs arrive as ONE partition; tokenization is
     # CPU-bound, so spread before the explode
@@ -296,7 +295,6 @@ def bigram_lm_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     Output: (doc_id, n_bigrams, avg_surprisal, ppl2)."""
     from ..functions.text import word_shingles, ws_tokens
-    from .relational import spread_compute
 
     toks = F.transform(ws_tokens(text_col), lambda x: F.lower(x))
     # spread before the shingle explode (same rationale as the unigram
@@ -431,7 +429,7 @@ def bpe_train_merges(
     from ..functions.text import bpe_tokens
 
     sep = "\x1f"
-    words = (
+    words = materialize(
         df.where(F.col(text_col).isNotNull())
         .select(F.explode(bpe_tokens(text_col)).alias("w"))
         .where((F.length("w") >= 2) & (~F.col("w").contains(sep)))
@@ -440,8 +438,8 @@ def bpe_train_merges(
         .select(
             F.regexp_replace("w", "(.)", sep + "$1" + sep).alias("s"),
             "c",
-        )
-        .localCheckpoint()
+        ),
+        "bpe_words", "local",
     )
     toks = F.filter(F.split("s", sep), lambda x: x != "")
     merges: list[tuple] = []
@@ -464,14 +462,17 @@ def bpe_train_merges(
             break
         a, b, cnt = best[0]["lhs"], best[0]["rhs"], best[0]["n"]
         merges.append((rank, a, b, a + b, cnt))
-        words = words.select(
-            F.replace(
-                F.col("s"),
-                F.lit(sep + a + sep + sep + b + sep),
-                F.lit(sep + a + b + sep),
-            ).alias("s"),
-            "c",
-        ).localCheckpoint()
+        words = materialize(
+            words.select(
+                F.replace(
+                    F.col("s"),
+                    F.lit(sep + a + sep + sep + b + sep),
+                    F.lit(sep + a + b + sep),
+                ).alias("s"),
+                "c",
+            ),
+            "bpe_merge_round", "local",
+        )
     return df.sparkSession.createDataFrame(
         merges, "rank int, lhs string, rhs string, merged string, n bigint"
     )
@@ -658,17 +659,13 @@ def pmi_collocations(
     never a global sort.
     """
     from ..functions.text import word_shingles, ws_tokens
-    from .relational import checkpoint_reliable, spread_compute
 
     toks_arr = F.transform(ws_tokens(text_col), lambda x: F.lower(x))
     base = spread_compute(
         df.where(F.col(text_col).isNotNull())
     ).select(toks_arr.alias("toks"))
-    # the unigram/bigram vocab relations feed the total AND two probes
-    # each; they are corpus-SUBLINEAR (Zipf-bounded vocab) but not
-    # constant-bounded, so they materialize to RELIABLE scratch — a
-    # lost executor re-scans parquet instead of killing the query with
-    # unrecoverable localCheckpoint lineage (r09 ADVICE long tail)
+    # the vocab relations feed the total AND two probes each; Zipf
+    # bounds them, but no constant does, hence reliable
     # ONE tokenize pass feeds BOTH vocab folds (optimization round,
     # guide §1.2 step 1 — was two scans, each re-running the regexp
     # tokenizer): every doc emits its tagged unigram and bigram
@@ -690,11 +687,11 @@ def pmi_collocations(
             two, lambda x: F.struct(F.lit("b").alias("tag"), x.alias("g"))
         ),
     )
-    grams = checkpoint_reliable(
+    grams = materialize(
         base.select(F.explode(tagged).alias("e"))
         .groupBy(F.col("e.tag").alias("tag"), F.col("e.g").alias("g"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("c")),
-        "npmi_grams",
+        "npmi_grams", "reliable",
     )
     uni = grams.where(F.col("tag") == "u").select(
         F.col("g").alias("tok"), "c"

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from .functions.quantiles import spark_percentile_sql
 from .functions.timeops import epoch_micros, epoch_seconds
-from .operators.relational import checkpoint_reliable, materialize_small
+from .operators.relational import materialize
 from .queries import REGISTRY, _t, query
 from .queries_llm import _events
 
@@ -191,11 +191,10 @@ def priority_status_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # margins as WINDOWS over the |p|x|s|-cell aggregate (<=5x3=15
     # rows, domain-bounded at any SF): one plan, one orders scan, and
-    # no materialization primitive at all — strictly better than both
-    # localCheckpoint (executor-pinned, non-recomputable) and a
-    # collect/re-embed round trip (measured ~0.6s of driver<->JVM
-    # overhead). The windows run post-shuffle on the tiny aggregate;
-    # the unpartitioned total window is domain-bounded. Margin sums
+    # no materialization at all — better than a ``small`` round trip
+    # (measured ~0.6s of driver<->JVM overhead). The windows run
+    # post-shuffle on the tiny aggregate; the unpartitioned total
+    # window is domain-bounded. Margin sums
     # are integer-valued doubles, so window order cannot perturb them.
     w = o.select(
         "n",
@@ -678,21 +677,18 @@ def ship_lag_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 def repeat_vs_lapsed_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders")
     # each distinct key set feeds two set operations; materialized once
-    # so the orders scan runs twice (once per year), not six times.
-    # Customer-cardinality relations (NOT driver-bounded), so they go
-    # to reliable scratch storage: executor loss replays a parquet
-    # scan, never "locally checkpointed ... cannot be recomputed"
-    h1 = checkpoint_reliable(
+    # so the orders scan runs twice (once per year), not six times
+    h1 = materialize(
         orders.where(F.year("o_orderdate") == 1999)
         .select("o_custkey")
         .distinct(),
-        "rvl_h1",
+        "rvl_h1", "reliable",
     )
-    h2 = checkpoint_reliable(
+    h2 = materialize(
         orders.where(F.year("o_orderdate") == 2000)
         .select("o_custkey")
         .distinct(),
-        "rvl_h2",
+        "rvl_h2", "reliable",
     )
 
     def label(df: DataFrame, name: str) -> DataFrame:
@@ -1192,26 +1188,21 @@ def price_quantiles_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def part_pair_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
-    # order-cardinality (NOT driver-bounded) and feeds three consumers
-    # (count, part frequencies, pair explode): reliable scratch
-    # parquet, so re-reads are scans, not executor-pinned blocks
-    order_sets = checkpoint_reliable(
+    # feeds three consumers: count, part frequencies, pair explode
+    order_sets = materialize(
         li.groupBy("l_orderkey")
         .agg(F.array_sort(F.collect_set("l_partkey")).alias("parts")),
-        "ppa_ordersets",
+        "ppa_ordersets", "reliable",
     )
     n_orders = order_sets.agg(
         F.count(F.lit(1)).cast("double").alias("n")
     )
-    # materialized: fa and fb below each build a broadcast from this
-    # relation — without materialization the explode+agg runs twice.
-    # Part-catalog cardinality: broadcastable but not provably
-    # driver-small at every SF, so reliable storage, not a collect
-    part_freq = checkpoint_reliable(
+    # fa and fb below each build a broadcast from this relation
+    part_freq = materialize(
         order_sets.select(F.explode("parts").alias("l_partkey"))
         .groupBy("l_partkey")
         .agg(F.count(F.lit(1)).alias("f")),
-        "ppa_partfreq",
+        "ppa_partfreq", "reliable",
     )
     # sorted array ⇒ generated pairs already satisfy part_a < part_b
     pair_expr = (
@@ -2567,13 +2558,12 @@ def events_last_touch_attribution(
 def events_user_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.quality import exact_quantiles_scalable
 
-    # feeds the stats agg AND the two-pass quantile; user-cardinality
-    # (not driver-bounded) -> reliable scratch, not localCheckpoint
-    counts = checkpoint_reliable(
+    # feeds the stats agg AND the two-pass quantile
+    counts = materialize(
         _events(spark, sf_dir)
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).cast("double").alias("c")),
-        "skew_counts",
+        "skew_counts", "reliable",
     )
     stats = counts.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_keys"),
@@ -2874,8 +2864,7 @@ def order_price_psi_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     y = _t(spark, sf_dir, "orders").select(
         F.year("o_orderdate").alias("yr"), F.col("o_totalprice").alias("x")
     )
-    # ONE bounded driver fetch of the reference year (the
-    # materialize_small pattern at |rows| == 1): re-embedding min(yr)
+    # ONE driver fetch of the reference year: re-embedding min(yr)
     # as a plan LITERAL turns the reference slice into a plain filter
     # — the broadcast-join of the 1-row aggregate used to be
     # re-evaluated by EVERY consumer of ref (both quantile passes ×2
@@ -2894,8 +2883,8 @@ def order_price_psi_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("bin"),
     )
     # feeds the grid fill AND the reference share; |years*bins| rows
-    # (<=~50 at any SF: ~years x 10 bins) -> bounded collect + re-embed
-    shares = materialize_small(
+    # (<=~50 at any SF: ~years x 10 bins)
+    shares = materialize(
         binned.groupBy("yr", "bin")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .withColumn(
@@ -2903,12 +2892,12 @@ def order_price_psi_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cnt")
             / F.sum("cnt").over(Window.partitionBy("yr")),
         ),
-        2048,
+        "psi_shares", "small", max_rows=2048,
     )
     refshare = shares.where(F.col("yr") == F.lit(mny)).select(
         "bin", F.col("s").alias("p")
     )
-    # Year domain from the |years*bins|-row checkpointed aggregate (every
+    # Year domain from the |years*bins|-row materialized aggregate (every
     # year has >=1 order so appears in shares) — NOT a distinct over the
     # fact, which would be a 5th full scan plus a shuffle at 100 TB.
     grid = (
@@ -2997,9 +2986,8 @@ def orders_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.stddev_samp("o_totalprice"), 6).alias("s_h"),
         )
     )
-    # |strata| rows (5 priorities, domain-bounded); feeds two window
-    # consumers -> bounded collect + local re-embed
-    s = materialize_small(s, 64)
+    # |strata| rows (5 priorities); feeds two window consumers
+    s = materialize(s, "neyman_strata", "small", max_rows=64)
     wall = Window.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
@@ -3156,12 +3144,11 @@ def customer_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # customer table (same value as max over the fact) broadcast onto
     # the aggregate — no constant column widens the fact shuffle and
     # the fact is scanned exactly once
-    # feeds the horizon agg AND the scoring; customer-cardinality (not
-    # driver-bounded) -> reliable scratch parquet
-    c0 = checkpoint_reliable(
+    # feeds the horizon agg AND the scoring
+    c0 = materialize(
         o.groupBy("o_custkey")
         .agg(F.min("d").alias("first_d"), F.max("d").alias("last_d")),
-        "surv_c0",
+        "surv_c0", "reliable",
     )
     h = c0.agg(F.max("last_d").alias("hmax"))
     c = c0.join(F.broadcast(h)).select(
@@ -3324,15 +3311,15 @@ def events_histogram_merge_quantiles(
             F.col("value").alias("x"),
         )
     )
-    # 1 row; feeds binning AND the final readout -> bounded collect
-    b = materialize_small(
+    # 1 row; feeds binning AND the final readout
+    b = materialize(
         v.agg(
             F.min("x").alias("lo"),
             F.greatest(
                 (F.max("x") - F.min("x")) / F.lit(128.0), F.lit(1e-12)
             ).alias("w"),
         ),
-        4,
+        "hist_bounds", "small", max_rows=4,
     )
     day_sketch = (
         v.join(F.broadcast(b))
@@ -3615,42 +3602,34 @@ def part_two_hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.graph import copurchase_edges_half, mirror_edges
 
     li = _t(spark, sf_dir, "lineitem")
-    # edge-cardinality (basket pairs — not driver-bounded) and feeds
-    # the degree ranking plus BOTH hop expansions: reliable scratch.
-    # Only the src < dst HALF is materialized (half the scratch write
-    # bytes); the mirror direction is a map-side union over the
-    # read-back (optimization r12, guide §6)
+    # feeds the degree ranking plus BOTH hop expansions. Only the
+    # src < dst HALF is materialized (half the scratch write bytes);
+    # the mirror direction is a map-side union over the read-back
     edges = mirror_edges(
-        checkpoint_reliable(
+        materialize(
             copurchase_edges_half(li, "l_orderkey", "l_partkey"),
-            "twohop_edges",
+            "twohop_edges", "reliable",
         )
     )
     deg = edges.groupBy("src").agg(
         F.count(F.lit(1)).cast("bigint").alias("deg")
     )
-    # seeds (5 rows) and h1 (the seed frontier — already the BROADCAST
-    # side of the hop-2 join, so its size bound is a pre-existing
-    # contract, not a new one) each feed MULTIPLE consumers below;
-    # without materialization catalyst re-evaluates the whole degree
-    # aggregate 4x and scans the edge scratch 8x (plan dump
-    # plans/r12/part_two_hop_reach_before.txt: 8 parquet scans, 4
-    # TakeOrderedAndProject subtrees). localCheckpoint pins both so
-    # the final plan runs ONE degree pass, ONE h1 expansion, ONE
-    # hop-2 pass (optimization r12, guide §2.4).
-    seeds = (
+    # seeds (5 rows) and h1 (the seed frontier, already the broadcast
+    # side of the hop-2 join) each feed several consumers; unmaterialized
+    # the plan re-runs the degree aggregate 4x and scans the edge
+    # scratch 8x (plans/r12/part_two_hop_reach_before.txt)
+    seeds = materialize(
         deg.orderBy(F.col("deg").desc(), "src")
         .limit(5)
-        .select(F.col("src").alias("seed"), "deg")
-        .localCheckpoint()
+        .select(F.col("src").alias("seed"), "deg"),
+        "twohop_seeds", "local",
     )
-    h1 = (
+    h1 = materialize(
         edges.join(
             F.broadcast(seeds.select("seed")),
             edges.src == F.col("seed"),
-        )
-        .select("seed", F.col("dst").alias("node"))
-        .localCheckpoint()
+        ).select("seed", F.col("dst").alias("node")),
+        "twohop_h1", "local",
     )
     e2 = edges.select(
         F.col("src").alias("n2src"), F.col("dst").alias("n2dst")
@@ -3842,9 +3821,8 @@ def join_size_estimate_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_partkey", "l_returnflag"
     )
     # one fact pass -> vocab-sized (key, cnt_all, cnt_r); materialized
-    # because it feeds both sketch builds and the exact baseline.
-    # Part-catalog cardinality (not driver-bounded) -> reliable scratch
-    pre = checkpoint_reliable(
+    # because it feeds both sketch builds and the exact baseline
+    pre = materialize(
         li.groupBy("l_partkey")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("cnt_all"),
@@ -3857,7 +3835,7 @@ def join_size_estimate_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cnt_all",
             "cnt_r",
         ),
-        "cms_pre",
+        "cms_pre", "reliable",
     )
     ca = _sk.count_min_build(
         pre, "k", width=_CMS_JW, depth=_CMS_D, weight_col="cnt_all"
@@ -4633,11 +4611,10 @@ def ols_conformal_interval(
         )
         < 50
     )
-    # one lineitem pass writes the narrow integer projection to
-    # reliable scratch; the fit, both quantile passes, and the
-    # coverage pass then scan THIS 4-column relation (VERDICT r07
-    # item 5: was four recomputations of the lineitem scan)
-    rows = checkpoint_reliable(
+    # one lineitem pass materializes the narrow integer projection;
+    # the fit, both quantile passes, and the coverage pass then scan
+    # THIS 4-column relation, not lineitem four times
+    rows = materialize(
         li.select(
             F.col("l_quantity").cast("bigint").alias("q"),
             F.round(F.col("l_discount") * 100).cast("bigint").alias("d"),
@@ -4645,7 +4622,7 @@ def ols_conformal_interval(
             .alias("y"),
             is_train.alias("is_train"),
         ),
-        "ols_rows",
+        "ols_rows", "reliable",
     )
     m = rows.where("is_train").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -4693,10 +4670,8 @@ def ols_conformal_interval(
             / F.col("n_train").cast("double")
         ).alias("b0"),
     )
-    # 1-row bounded driver collect (the audited pattern): embedding the
-    # betas as literals keeps every downstream residual pass a pure,
-    # recomputable lineage — no localCheckpoint, no non-recoverable
-    # executor-local state at scale (VERDICT r06 item 4).
+    # 1-row driver collect: the betas ride as literals, so every
+    # downstream residual pass keeps a recomputable lineage
     fit = s2.collect()[0]
     n_train, beta1, beta2, b0 = (
         fit["n_train"], fit["beta1"], fit["beta2"], fit["b0"],

@@ -27,6 +27,7 @@ from .operators import curation
 from .operators import dedup as dedup_ops
 from .operators import similarity
 from .operators import text as text_ops
+from .operators.relational import materialize
 from .queries import REGISTRY, _t, query
 
 _TOKS = f"regexp_split_to_array(trim(text), '{WS_PATTERN}')"
@@ -1859,7 +1860,7 @@ _RFM_PROBS = (0.2, 0.4, 0.6, 0.8)
     "populations may differ from ntile's row-balanced fifths when "
     "duplicate values straddle a cut — the documented, deterministic "
     "semantics of value-based banding. The customer aggregate is "
-    "localCheckpointed once so the quantile passes and the scoring "
+    "materialized once so the quantile passes and the scoring "
     "scan all read the materialized fold instead of re-aggregating "
     "orders.",
 )
@@ -1868,13 +1869,8 @@ def customer_rfm_segments_scalable(
 ) -> DataFrame:
     from .operators.quality import grouped_exact_quantiles_scalable
 
-    # |customers| rows — NOT driver-bounded, so reliable scratch
-    # rather than localCheckpoint (an executor loss would kill the
-    # query with unrecoverable lineage; VERDICT r08 item 2)
-    from .operators.relational import checkpoint_reliable
-
-    rfm = checkpoint_reliable(
-        _rfm_aggregate(spark, sf_dir), "rfm_aggregate"
+    rfm = materialize(
+        _rfm_aggregate(spark, sf_dir), "rfm_aggregate", "reliable"
     )
     probs = list(_RFM_PROBS)
     # ONE grouped two-pass over the melted (dim, value) relation
@@ -1896,10 +1892,12 @@ def customer_rfm_segments_scalable(
             )
         ).alias("e")
     ).select("e.dim", "e.x")
-    gq = grouped_exact_quantiles_scalable(
-        melted, "dim", "x", probs
-    ).localCheckpoint()  # 3 rows; the filtered per-dim selects below
-    # must not re-run the two-pass plan once each
+    # 3 rows; the per-dim selects below must not each re-run the
+    # two-pass plan
+    gq = materialize(
+        grouped_exact_quantiles_scalable(melted, "dim", "x", probs),
+        "rfm_cuts", "local",
+    )
     cuts = None
     for d, pre in (("r", "rc"), ("f", "fc"), ("m", "mc")):
         c = gq.where(F.col("dim") == d).select(
@@ -2268,10 +2266,8 @@ def source_lang_js_divergence(
     c = docs.groupBy("source", "lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     )
-    # bounded: |sources| x |langs| grouped cells (hundreds at any
-    # corpus scale — source and lang are low-cardinality enums), so
-    # executor-pinned localCheckpoint is safe here
-    c = c.localCheckpoint()  # feeds three derived dims + the fill join
+    # |sources| x |langs| cells; feeds three derived dims + the fill join
+    c = materialize(c, "js_cells", "local")
     ns = c.groupBy("source").agg(F.sum("c").cast("bigint").alias("n"))
     nl = c.groupBy("lang").agg(F.sum("c").cast("bigint").alias("cl"))
     tot = c.agg(F.sum("c").cast("bigint").alias("nt"))

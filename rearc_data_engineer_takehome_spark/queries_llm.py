@@ -29,6 +29,7 @@ from .functions.text import BPE_PATTERN, PUNCT_PATTERN, WS_PATTERN, word_shingle
 from .functions.timeops import epoch_seconds
 from .operators import dedup, multimodal, quality, similarity
 from .operators import text as text_ops
+from .operators.relational import materialize
 from .queries import _t, query
 from .streaming import windows as win
 
@@ -2031,28 +2032,23 @@ def events_rolling_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     "timestamp arithmetic.",
 )
 def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.relational import checkpoint_reliable
-
     ev = _t(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     # each stage table feeds BOTH the next stage's join and its own
     # count; materialized once per stage or stage N re-runs stages 1..N
-    # (the funnel re-read the events scan 6x instead of 3x). Stage
-    # tables are |users| rows — NOT driver-bounded — so reliable
-    # scratch, not executor-pinned localCheckpoint (VERDICT r08
-    # item 2: one lost executor must not kill the query)
-    s1 = checkpoint_reliable(
+    # (the funnel re-read the events scan 6x instead of 3x)
+    s1 = materialize(
         ev.where(F.col("event_type") == "signup")
         .groupBy("user_id")
         .agg(F.min("ts").alias("t1")),
-        "funnel_s1",
+        "funnel_s1", "reliable",
     )
-    s2 = checkpoint_reliable(
+    s2 = materialize(
         ev.where(F.col("event_type") == "click")
         .join(s1, "user_id")
         .where(F.col("ts") > F.col("t1"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t2")),
-        "funnel_s2",
+        "funnel_s2", "reliable",
     )
     s3 = (
         ev.where(F.col("event_type") == "purchase")
@@ -2359,19 +2355,14 @@ def doc_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # an OFFLINE artifact (train once, search many) — caching it here keeps
 # knn_pq measuring what a production query pays: the ADC scan + re-rank,
 # not the Lloyd training that round 1 mislabeled as query latency.
-# checkpoint_reliable (not localCheckpoint): codes are |vectors| rows
-# and the cache OUTLIVES the building query, so the materialization
-# must survive executor loss for the whole process — the scratch
-# parquet does (a recall with the same label on rebuild replaces it;
-# atexit sweeps it; VERDICT r08 item 2).
+# The cache outlives the building query, so its copies must survive
+# executor loss for the whole process: ``reliable``.
 _PQ_CODEBOOK_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
 
 
 def _pq_codebook(
     spark: SparkSession, sf_dir: str, rebuild: bool = False
 ) -> tuple[DataFrame, DataFrame]:
-    from .operators.relational import checkpoint_reliable
-
     key = (spark.sparkContext.applicationId, sf_dir)
     if rebuild or key not in _PQ_CODEBOOK_CACHE:
         emb = _t(spark, sf_dir, "embeddings").where(F.col("vec_id") != 0)
@@ -2380,8 +2371,8 @@ def _pq_codebook(
         )
         tag = _hashlib.md5(sf_dir.encode()).hexdigest()[:8]
         _PQ_CODEBOOK_CACHE[key] = (
-            checkpoint_reliable(codes, f"pq_codes_{tag}"),
-            checkpoint_reliable(cents, f"pq_cents_{tag}"),
+            materialize(codes, f"pq_codes_{tag}", "reliable"),
+            materialize(cents, f"pq_cents_{tag}", "reliable"),
         )
     return _PQ_CODEBOOK_CACHE[key]
 

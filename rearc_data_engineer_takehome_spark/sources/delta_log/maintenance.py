@@ -1079,8 +1079,10 @@ def delta_restore(table_dir: str, version: int) -> DeltaState:
 
     cur = {_key(a): a for a in head.adds.values()}
     tgt = {_key(a): a for a in target.adds.values()}
-    to_add = [tgt[k] for k in tgt.keys() - cur.keys()]
-    to_remove = [cur[k] for k in cur.keys() - tgt.keys()]
+    # log order, not set order: the commit must not vary with the
+    # string-hash seed
+    to_add = [a for k, a in tgt.items() if k not in cur]
+    to_remove = [a for k, a in cur.items() if k not in tgt]
     missing = []
     for a in to_add:
         if not os.path.exists(os.path.join(table_dir, a["path"])):

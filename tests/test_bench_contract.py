@@ -64,8 +64,38 @@ def test_bench_final_line_is_compact_parseable_json(
     assert set(detail["queries"]) == set(small) - bench.BUILDS
     assert set(detail["builds"]) == {"pq_codebook"}
     assert detail["value"] == round(sum(detail["queries"].values()), 4)
+    assert detail["cpus"] == 4
 
 
 def test_headline_subset_is_registered():
     missing = [n for n in bench.HEADLINE if n not in REGISTRY]
     assert not missing, f"HEADLINE names not in REGISTRY: {missing}"
+
+
+def test_scale_report_names_the_cpu_count(monkeypatch, tmp_path):
+    """The scaling report states the core count both detail files
+    recorded, and says so when one lacks it or the two differ."""
+    import sys
+
+    from tools import scale_report
+
+    def detail(name, secs, **extra):
+        p = tmp_path / name
+        p.write_text(json.dumps({"queries": {"q1": secs, "q2": 2 * secs}, **extra}))
+        return str(p)
+
+    def report(base, big):
+        out = tmp_path / "report.md"
+        monkeypatch.setattr(sys, "argv", ["scale_report", base, big, "10", str(out)])
+        with redirect_stdout(io.StringIO()):
+            scale_report.main()
+        return out.read_text()
+
+    base = detail("base.json", 1.0, cpus=4)
+    text = report(base, detail("big.json", 8.0, cpus=4))
+    assert "(local[4])" in text and "32" not in text
+    assert "| q1 | 1.00 | 8.00 | 8.0x | sub-linear |" in text
+    text = report(base, detail("big8.json", 8.0, cpus=8))
+    assert "CPU counts differ: local[4] base, local[8] probe" in text
+    text = report(base, detail("old.json", 8.0))
+    assert "CPU count not recorded in " in text and "old.json" in text

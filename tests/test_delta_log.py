@@ -439,6 +439,73 @@ def _raw_commit(table_dir, version, actions):
             f.write(json.dumps(a, separators=(",", ":")) + "\n")
 
 
+def test_restore_commit_does_not_follow_string_hash_seed(tmp_path):
+    """RESTORE lists its removes and re-adds in log order: the same
+    table restored under three string-hash seeds writes the same
+    commit, timestamps aside. RESTORE needs no Spark, so each run is a
+    plain interpreter with its own PYTHONHASHSEED."""
+    import shutil
+    import subprocess
+    import sys
+
+    src = str(tmp_path / "src")
+    schema_json = (
+        '{"type":"struct","fields":[{"name":"k","type":"long",'
+        '"nullable":true,"metadata":{}}]}'
+    )
+
+    def add(name):
+        return {"add": {"path": f"{name}.parquet", "partitionValues": {},
+                        "size": 1, "modificationTime": 0,
+                        "dataChange": True}}
+
+    _raw_commit(src, 0, [
+        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+        {"metaData": {
+            "id": "test-id", "format": {"provider": "parquet",
+                                        "options": {}},
+            "schemaString": schema_json, "partitionColumns": [],
+            "configuration": {}, "createdTime": 0,
+        }},
+        *[add(n) for n in ("a", "b", "c")],
+    ])
+    _raw_commit(src, 1, [
+        *[{"remove": {"path": f"{n}.parquet", "deletionTimestamp": 0,
+                      "dataChange": True}} for n in ("a", "b", "c")],
+        *[add(n) for n in ("d", "e", "f")],
+    ])
+    for n in "abcdef":
+        open(os.path.join(src, f"{n}.parquet"), "w").close()
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import sys; sys.path.insert(0, sys.argv[1]); "
+        "from rearc_data_engineer_takehome_spark.sources import "
+        "delta_log as dl; dl.delta_restore(sys.argv[2], 0)"
+    )
+
+    def untimed(x):
+        if isinstance(x, dict):
+            return {
+                k: untimed(v) for k, v in x.items()
+                if k not in ("timestamp", "deletionTimestamp")
+            }
+        return x
+
+    commits = []
+    for seed in ("1", "2", "3"):
+        t = str(tmp_path / f"seed{seed}")
+        shutil.copytree(src, t)
+        subprocess.run(
+            [sys.executable, "-c", code, root, t], check=True,
+            env={**os.environ, "PYTHONHASHSEED": seed},
+        )
+        with open(dl._commit_path(t, 2)) as f:
+            commits.append([untimed(json.loads(ln)) for ln in f])
+    kinds = [next(iter(a)) for a in commits[0]]
+    assert (kinds.count("remove"), kinds.count("add")) == (3, 3)
+    assert commits[1] == commits[0] and commits[2] == commits[0]
+
+
 @settings(max_examples=60, deadline=None,
           suppress_health_check=[HealthCheck.too_slow])
 @given(
@@ -1241,30 +1308,30 @@ def test_vacuum_missing_timestamps_fail_safe(spark, tmp_path):
 
 
 def test_checkpoint_reliable_supersedes_previous_copy(spark, tmp_path):
-    """checkpoint_reliable keeps at most ONE scratch copy per label:
-    a second call for the same label deletes the first run's files
-    (bench sessions re-run each query; without this every run leaks a
-    full materialized copy for up to a day)."""
+    """A ``reliable`` materialization keeps at most ONE scratch copy
+    per label: a second call for the same label deletes the first
+    run's files (bench sessions re-run each query; without this every
+    run leaks a full materialized copy for up to a day)."""
     from rearc_data_engineer_takehome_spark.operators import (
         relational as rel,
     )
 
-    d1 = rel.checkpoint_reliable(
-        spark.createDataFrame([(1,)], "k long"), "ut_label"
+    d1 = rel.materialize(
+        spark.createDataFrame([(1,)], "k long"), "ut_label", "reliable"
     )
     p1 = rel._RELIABLE_SCRATCH["ut_label"]
     assert os.path.isdir(p1)
     assert _rows(d1) == [(1,)]
-    d2 = rel.checkpoint_reliable(
-        spark.createDataFrame([(2,)], "k long"), "ut_label"
+    d2 = rel.materialize(
+        spark.createDataFrame([(2,)], "k long"), "ut_label", "reliable"
     )
     p2 = rel._RELIABLE_SCRATCH["ut_label"]
     assert not os.path.exists(p1)  # previous copy swept
     assert os.path.isdir(p2)
     assert _rows(d2) == [(2,)]
     # other labels are untouched
-    rel.checkpoint_reliable(
-        spark.createDataFrame([(3,)], "k long"), "ut_other"
+    rel.materialize(
+        spark.createDataFrame([(3,)], "k long"), "ut_other", "reliable"
     )
     assert os.path.isdir(p2)
     # explicit sweep clears everything (the atexit path)

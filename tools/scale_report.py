@@ -20,6 +20,14 @@ def main() -> None:
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     base = json.load(open(os.path.join(root, base_path)))
     big = json.load(open(os.path.join(root, big_path)))
+    cpus = (base.get("cpus"), big.get("cpus"))
+    if None in cpus:
+        lacking = [p for p, c in zip((base_path, big_path), cpus) if c is None]
+        host = f"CPU count not recorded in {' and '.join(lacking)}"
+    elif cpus[0] != cpus[1]:
+        host = f"CPU counts differ: local[{cpus[0]}] base, local[{cpus[1]}] probe"
+    else:
+        host = f"local[{cpus[0]}]"
     rows = []
     for name, tg in sorted(big["queries"].items()):
         tb = base["queries"].get(name)
@@ -69,14 +77,14 @@ def main() -> None:
         f.write(
             f"# SCALE_PROBE ({replicas}x) — FULL-REGISTRY measured "
             f"scaling, sf0.1 vs {replicas}x replicated facts "
-            "(local[32])\n\n"
+            f"({host})\n\n"
             "Generated by `python tools/scale_report.py` from two "
             f"`bench.py` runs: `{base_path}` (base) and `{big_path}` "
             f"(probe dir written by tools/scale_probe.py, facts "
             f"replicated {replicas}x with per-replica key offsets, "
             f"dims catalog-sized). Coverage: {len(rows)} queries "
             f"measured at both scales. {build_note}{uncovered_note}"
-            "On a fixed 32-core box a scale-linear operator "
+            "At a fixed core count a scale-linear operator "
             f"costs <= ~{replicas}x at {replicas}x rows; sub-linear "
             "means the base scale under-utilized cores; ratios above "
             f"{replicas}x * 1.3 flag a shuffle/skew/driver bottleneck."
