@@ -12,8 +12,17 @@ driver's ~2 KB tail capture):
 * BENCH_DETAIL.json (repo root): the full per-query timing map plus
   any failures, for humans and the judge.
 
-Each query is executed with a count()-style action that forces full
-evaluation without driver-side materialization of wide rows.
+Every sample builds the query's DataFrame afresh (``time_query``) and
+writes it to Spark's ``noop`` sink (``run_action``), which evaluates
+every output column without moving rows to the driver. A ``count()``
+does not force full evaluation: Catalyst drops every column the count
+does not need, and with them aggregates, windows, joins and Python
+nodes (the exact median of ``describe_lineitem``, pass 2 of the
+two-pass quantiles). Each sample also splits its seconds and Spark
+jobs into the plan build (``q.spark()``, including the eager jobs it
+starts) and the action; BENCH_DETAIL.json keeps that split under
+``layers`` for every query. ``tools/scale_probe.py`` times through
+the same two functions.
 """
 
 from __future__ import annotations
@@ -76,6 +85,86 @@ HEADLINE = [
 ]
 
 
+# The timed action and its name, recorded in BENCH_DETAIL.json so
+# tools/bench_diff.py can refuse to compare pins taken with different
+# actions.
+ACTION = "noop"
+
+
+def run_action(df) -> None:
+    """Evaluate every output column of ``df``; keep no rows."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def time_query(spark, q, sf_dir: str) -> dict:
+    """One sample of registry query ``q``: build its DataFrame afresh,
+    then run the action on it. Returns the seconds and the Spark jobs
+    of each phase. Jobs come from the scheduler's job-id counter, so
+    every job counts whatever its group; the counter is read outside
+    the timed windows."""
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = sched.nextJobId()
+    t0 = time.perf_counter()
+    df = q.spark(spark, sf_dir)
+    build_s = time.perf_counter() - t0
+    j1 = sched.nextJobId()
+    t1 = time.perf_counter()
+    run_action(df)
+    action_s = time.perf_counter() - t1
+    j2 = sched.nextJobId()
+    return {
+        "build_s": round(build_s, 4),
+        "action_s": round(action_s, 4),
+        "build_jobs": j1 - j0,
+        "action_jobs": j2 - j1,
+    }
+
+
+def seconds(sample: dict) -> float:
+    return round(sample["build_s"] + sample["action_s"], 4)
+
+
+# Warm the JVM, parquet footers, python worker pool, and the
+# higher-order-function codepaths once, so per-query timings measure
+# steady-state execution rather than first-touch JIT.
+# pq_codebook also fills the offline PQ codebook cache, so knn_pq
+# times the ADC scan + re-rank (the per-query cost), not the Lloyd
+# training that only happens once per corpus.
+# dedup_ngram_jaccard warms the shingle-explode + inverted-index
+# join machinery (first-touch codegen measured ~5 s on a cold JVM,
+# otherwise absorbed by dedup_clusters — alphabetically the first
+# query to hit it); doc_bm25_topk warms the posting-explode +
+# unpartitioned-window path for the retrieval family.
+WARM_UP = (
+    "pricing_summary",
+    "doc_fingerprints",
+    "knn_bruteforce",
+    "dedup_ngram_jaccard",
+    "doc_bm25_topk",
+    "pq_codebook",
+)
+
+
+def warm_up(spark, sf_dir: str) -> None:
+    for name in WARM_UP:
+        if name in REGISTRY:
+            time_query(spark, REGISTRY[name], sf_dir)
+    # the grouped-map Arrow path spawns a different python worker type
+    # than scalar pandas UDFs; warm it with a trivial op so the BLAS
+    # operators measure compute, not worker-pool cold start
+    from pyspark.sql import functions as F
+
+    run_action(
+        spark.range(64)
+        .withColumn("g", F.col("id") % 2)
+        .groupBy("g")
+        .applyInPandas(lambda pdf: pdf, schema="id long, g long")
+    )
+    # mapInPandas (MAP_PANDAS_ITER) spawns yet another worker type —
+    # cold it adds ~2.5 s to the first multimodal query's timing
+    run_action(spark.range(64).mapInPandas(lambda it: it, schema="id long"))
+
+
 def main() -> None:
     # Result-cache hygiene (VERDICT r11 item 8, additions-only): the
     # plan-fingerprint result cache (plans/result_cache.py) legitimately
@@ -102,39 +191,8 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("WARN")
 
-    # Warm the JVM, parquet footers, python worker pool, and the
-    # higher-order-function codepaths once, so per-query timings measure
-    # steady-state execution rather than first-touch JIT.
+    warm_up(spark, SF_DIR)
     names = sorted(REGISTRY)
-    # pq_codebook also fills the offline PQ codebook cache, so knn_pq
-    # below times the ADC scan + re-rank (the per-query cost), not the
-    # Lloyd training that only happens once per corpus.
-    # dedup_ngram_jaccard warms the shingle-explode + inverted-index
-    # join machinery (first-touch codegen measured ~5 s on a cold JVM,
-    # otherwise absorbed by dedup_clusters — alphabetically the first
-    # query to hit it); doc_bm25_topk warms the posting-explode +
-    # unpartitioned-window path for the retrieval family.
-    for warm in (
-        "pricing_summary",
-        "doc_fingerprints",
-        "knn_bruteforce",
-        "dedup_ngram_jaccard",
-        "doc_bm25_topk",
-        "pq_codebook",
-    ):
-        if warm in REGISTRY:
-            REGISTRY[warm].spark(spark, SF_DIR).count()
-    # the grouped-map Arrow path spawns a different python worker type
-    # than scalar pandas UDFs; warm it with a trivial op so the BLAS
-    # operators measure compute, not worker-pool cold start
-    from pyspark.sql import functions as F
-
-    spark.range(64).withColumn("g", F.col("id") % 2).groupBy("g").applyInPandas(
-        lambda pdf: pdf, schema="id long, g long"
-    ).count()
-    # mapInPandas (MAP_PANDAS_ITER) spawns yet another worker type —
-    # cold it adds ~2.5 s to the first multimodal query's timing
-    spark.range(64).mapInPandas(lambda it: it, schema="id long").count()
 
     # Checkpoint-block hygiene: iterative operators localCheckpoint
     # intermediates, and 117 queries on one JVM accumulate those blocks
@@ -158,20 +216,17 @@ def main() -> None:
     # were observed to vary 1.5-4x run to run on identical code). The
     # run count is reported in the output so the estimator is explicit.
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
-    samples: dict[str, list[float]] = {}
+    samples: dict[str, list[dict]] = {}
     failures: dict[str, str] = {}
     for _ in range(n_runs):
         for name in names:
-            q = REGISTRY[name]
-            start = time.perf_counter()
             try:
-                n = q.spark(spark, SF_DIR).count()
-                t = round(time.perf_counter() - start, 4)
-                samples.setdefault(name, []).append(t)
+                samples.setdefault(name, []).append(
+                    time_query(spark, REGISTRY[name], SF_DIR)
+                )
                 # a query that failed in an earlier pass but succeeded in
                 # this one is timed, not failed — keep the sets disjoint
                 failures.pop(name, None)
-                _ = n
             except Exception as e:  # one broken query must not void the run
                 failures[name] = str(e).splitlines()[0][:200]
                 # disjoint in BOTH directions: a query that timed in an
@@ -200,11 +255,8 @@ def main() -> None:
         else []
     )
     for name in extra:
-        q = REGISTRY[name]
-        start = time.perf_counter()
         try:
-            q.spark(spark, SF_DIR).count()
-            samples[name].append(round(time.perf_counter() - start, 4))
+            samples[name].append(time_query(spark, REGISTRY[name], SF_DIR))
         except Exception:  # noqa: S110 - already timed in the main passes
             pass
         _free_query_blocks()
@@ -213,9 +265,13 @@ def main() -> None:
     # max-min (scheduler/host noise band, VERDICT r05 item 5) — a
     # round-over-round delta inside the union of both rounds' spreads
     # is noise, not regression; tools/bench_diff.py applies that test
-    # mechanically against a previous BENCH_DETAIL.json.
-    timings = {n: min(s) for n, s in samples.items()}
-    spread = {n: round(max(s) - min(s), 4) for n, s in samples.items()}
+    # mechanically against a previous BENCH_DETAIL.json. A query's
+    # layers are those of its min sample.
+    layers = {n: min(s, key=seconds) for n, s in samples.items()}
+    timings = {n: seconds(s) for n, s in layers.items()}
+    spread = {
+        n: round(max(map(seconds, s)) - timings[n], 4) for n, s in samples.items()
+    }
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else SF_DIR
@@ -247,9 +303,7 @@ def main() -> None:
         _ts = []
         try:
             for _ in range(10):
-                _t0 = time.perf_counter()
-                REGISTRY[_probe].spark(spark, SF_DIR).count()
-                _ts.append(round(time.perf_counter() - _t0, 4))
+                _ts.append(seconds(time_query(spark, REGISTRY[_probe], SF_DIR)))
         except Exception as e:  # noqa: BLE001 - recorded, run goes on
             host_control["probes"][_probe] = {
                 "error": f"{type(e).__name__}: {e}"[:500]
@@ -264,6 +318,7 @@ def main() -> None:
 
     detail = {
         "metric": "total_query_seconds",
+        "action": ACTION,
         "value": round(sum(query_timings.values()), 4),
         "host_control": host_control,
         "unit": "sec",
@@ -278,6 +333,8 @@ def main() -> None:
         # per-query max-min over the samples: the measured noise band
         # this run; diffs smaller than spread are machine noise
         "spread": spread,
+        # build/action seconds and Spark jobs of each query's min sample
+        "layers": layers,
         "scalable_twins": scalable_twins,
     }
     if failures:

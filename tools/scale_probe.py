@@ -6,7 +6,9 @@ measurement behind it at the scales this box can hold. An operator whose
 plan is scale-linear should cost <= ~10x at 10x rows on a fixed core
 count (sub-linear when the small scale under-utilizes cores); anything
 super-linear indicates a shuffle/skew/driver bottleneck that would only
-get worse on a cluster.
+get worse on a cluster. Each time is the min over SCALE_PROBE_RUNS samples
+of bench.py's ``time_query`` (plan build plus a noop write), after
+bench.py's ``warm_up``.
 
 Synthesis: each fact table is replicated REPLICAS times with key offsets
 (order/doc/event/vec ids shifted per replica) so join fan-outs and group
@@ -23,7 +25,6 @@ Usage:
 from __future__ import annotations
 
 import os
-import shutil
 import sys
 import time
 
@@ -31,6 +32,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 
+from bench import seconds, time_query, warm_up  # noqa: E402
 from rearc_data_engineer_takehome_spark.queries import REGISTRY  # noqa: E402
 from rearc_data_engineer_takehome_spark.session import get_spark, usable_cpus  # noqa: E402
 
@@ -159,32 +161,17 @@ def main() -> None:
             file=sys.stderr,
         )
 
-    # warm worker pools / codegen archetypes once (same set as bench.py)
-    for warm in ("pricing_summary", "doc_fingerprints", "knn_bruteforce"):
-        REGISTRY[warm].spark(spark, BASE_SF).count()
-    spark.range(64).withColumn("g", F.col("id") % 2).groupBy("g").applyInPandas(
-        lambda pdf: pdf, schema="id long, g long"
-    ).count()
-    spark.range(64).mapInPandas(lambda it: it, schema="id long").count()
-
-    # min over N passes per (query, scale): same estimator as bench.py —
-    # deterministic queries on a microVM whose co-tenant noise is
-    # invisible to the guest, so the minimum measures the code
+    warm_up(spark, BASE_SF)
+    # min over N samples per (query, scale), bench.py's estimator
     n_runs = int(os.environ.get("SCALE_PROBE_RUNS", "2"))
-
-    def _best(q, path: str) -> float:
-        best = float("inf")
-        for _ in range(n_runs):
-            t0 = time.perf_counter()
-            q.spark(spark, path).count()
-            best = min(best, time.perf_counter() - t0)
-        return best
 
     rows = []
     for name in PROBE_QUERIES:
         q = REGISTRY[name]
-        t_base = _best(q, BASE_SF)
-        t_big = _best(q, PROBE_DIR)
+        t_base, t_big = (
+            min(seconds(time_query(spark, q, path)) for _ in range(n_runs))
+            for path in (BASE_SF, PROBE_DIR)
+        )
         ratio = t_big / t_base if t_base > 0 else float("inf")
         rows.append((name, t_base, t_big, ratio))
         print(
@@ -240,7 +227,7 @@ def main() -> None:
             f.write(
                 f"| {name} | {tb:.2f} | {tg:.2f} | {r:.1f}x | {verdict} |\n"
             )
-    print("wrote SCALE_PROBE.md", file=sys.stderr)
+    print(f"wrote {out_name}", file=sys.stderr)
     spark.stop()
 
 
