@@ -85,12 +85,6 @@ HEADLINE = [
 ]
 
 
-# The timed action and its name, recorded in BENCH_DETAIL.json so
-# tools/bench_diff.py can refuse to compare pins taken with different
-# actions.
-ACTION = "noop"
-
-
 def run_action(df) -> None:
     """Evaluate every output column of ``df``; keep no rows."""
     df.write.format("noop").mode("overwrite").save()
@@ -318,7 +312,9 @@ def main() -> None:
 
     detail = {
         "metric": "total_query_seconds",
-        "action": ACTION,
+        # run_action's sink: tools/bench_diff.py refuses to compare pins
+        # timed with different actions
+        "action": "noop",
         "value": round(sum(query_timings.values()), 4),
         "host_control": host_control,
         "unit": "sec",

@@ -65,11 +65,84 @@ def test_bench_final_line_is_compact_parseable_json(
     assert set(detail["builds"]) == {"pq_codebook"}
     assert detail["value"] == round(sum(detail["queries"].values()), 4)
     assert detail["cpus"] == 4
+    # the timed action evaluates every column, and each query's min
+    # sample is split into build and action seconds and jobs
+    assert detail["action"] == "noop"
+    assert set(detail["layers"]) == set(small)
+    for layer in detail["layers"].values():
+        assert set(layer) == {"build_s", "action_s", "build_jobs", "action_jobs"}
+    assert detail["layers"]["pq_codebook"]["build_jobs"] >= 1
+    for n, t in {**detail["queries"], **detail["builds"]}.items():
+        layer = detail["layers"][n]
+        assert t == round(layer["build_s"] + layer["action_s"], 4)
+
+
+def test_timed_action_evaluates_what_count_prunes(spark, sf_smoke):
+    """The bench's action runs describe_lineitem's exact median. A
+    ``.count()`` plans the scan and a row count only: Catalyst prunes
+    every aggregate the count does not read, so a harness timing it
+    would miss the costliest part of the query."""
+    sc = spark.sparkContext._jsc.sc()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions() -> dict:
+        sc.listenerBus().waitUntilEmpty()
+        lst = store.executionsList()
+        return {
+            e.executionId(): e.physicalPlanDescription()
+            for e in (lst.apply(i) for i in range(lst.size()))
+        }
+
+    df = REGISTRY["describe_lineitem"].spark(spark, sf_smoke)
+    before = executions()
+    bench.run_action(df)
+    plans = [p for i, p in executions().items() if i not in before]
+    assert len(plans) == 1
+    assert "percentile" in plans[0]
 
 
 def test_headline_subset_is_registered():
     missing = [n for n in bench.HEADLINE if n not in REGISTRY]
     assert not missing, f"HEADLINE names not in REGISTRY: {missing}"
+
+
+def test_bench_diff_refuses_pins_timed_with_different_actions(
+    monkeypatch, tmp_path
+):
+    """A pin without an ``action`` key timed ``.count()``; bench_diff
+    compares it with a count pin but refuses a noop pin, naming both
+    actions."""
+    import sys
+
+    import pytest
+
+    from tools import bench_diff
+
+    def detail(name, **extra):
+        p = tmp_path / name
+        p.write_text(
+            json.dumps({"sf": 0.1, "queries": {"q1": 1.0}, "spread": {}, **extra})
+        )
+        return str(p)
+
+    def diff(old, new):
+        out = tmp_path / "diff.md"
+        out.unlink(missing_ok=True)
+        monkeypatch.setattr(sys, "argv", ["bench_diff", old, new, str(out)])
+        with redirect_stdout(io.StringIO()):
+            bench_diff.main()
+        return out.read_text()
+
+    old = detail("old.json")
+    assert "Regressions: 0" in diff(old, detail("count.json", action="count"))
+    assert "Regressions: 0" in diff(
+        detail("a.json", action="noop"), detail("b.json", action="noop")
+    )
+    with pytest.raises(SystemExit, match="different actions") as exc:
+        diff(old, detail("noop.json", action="noop"))
+    assert "old.json used 'count'" in str(exc.value)
+    assert "noop.json used 'noop'" in str(exc.value)
+    assert not (tmp_path / "diff.md").exists()
 
 
 def test_scale_report_names_the_cpu_count(monkeypatch, tmp_path):

@@ -21,8 +21,11 @@ With no args, OLD defaults to the newest pinned per-round artifact
 diff against the *committed* previous-round basis, never a mid-round
 refresh — the README r6 claim was wrong for exactly that reason).
 
-Exit code 0 always (reporting tool, not a gate); the regression count
-is in the last stdout line for scripting.
+Exit code 0 on a report (a reporting tool, not a gate); the regression
+count is in the last stdout line for scripting. Two pins timed with
+different actions (``"action"`` in the detail file; a pin without it
+timed ``.count()``) are refused: their per-query times do not measure
+the same work.
 """
 
 from __future__ import annotations
@@ -109,6 +112,13 @@ def main() -> None:
     out_path = argv[2] if len(argv) >= 3 else None
     old = json.load(open(old_path))
     new = json.load(open(new_path))
+    old_action, new_action = (d.get("action", "count") for d in (old, new))
+    if old_action != new_action:
+        raise SystemExit(
+            f"bench_diff: refusing to diff pins timed with different "
+            f"actions: {old_path} used {old_action!r}, {new_path} used "
+            f"{new_action!r}"
+        )
     if old.get("sf") != new.get("sf"):
         print(
             f"WARNING: comparing different scale factors "
