@@ -115,6 +115,7 @@ def time_query(spark, q, sf_dir: str) -> dict:
 
 
 def seconds(sample: dict) -> float:
+    """A sample's wall seconds: plan build plus action."""
     return round(sample["build_s"] + sample["action_s"], 4)
 
 
