@@ -189,9 +189,10 @@ def main() -> None:
     warm_up(spark, SF_DIR)
     names = sorted(REGISTRY)
 
-    # Checkpoint-block hygiene: iterative operators localCheckpoint
-    # intermediates, and 117 queries on one JVM accumulate those blocks
-    # until late queries pay GC/eviction for early queries' state.
+    # Block hygiene: iterative operators localCheckpoint intermediates
+    # and others cache them, and the whole registry on one JVM
+    # accumulates those blocks until late queries pay GC/eviction for
+    # early queries' state.
     # Between queries, unpersist every RDD persisted AFTER the warm
     # phase; warm-era blocks (the PQ codebook cache knn_pq reads) are
     # protected. A locally-checkpointed RDD cannot recompute once

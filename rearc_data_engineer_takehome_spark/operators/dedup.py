@@ -90,7 +90,10 @@ def ngram_jaccard_pairs(
     Returns (id_a, id_b, jaccard) with id_a < id_b, J ≥ threshold,
     jaccard rounded to 6dp for cross-engine comparison.
     """
-    posting = _shingle_posting(df, text_col, id_col, k, max_df).cache()
+    posting = materialize(
+        _shingle_posting(df, text_col, id_col, k, max_df),
+        "jaccard_posting", "cache",
+    )
     return _jaccard_from_posting(posting, id_col, threshold)
 
 
@@ -178,7 +181,10 @@ def ngram_jaccard_pairs_staged(
     duplicates exist.
     """
     members, _, rep_docs = _digest_groups(df, text_col, id_col)
-    posting = _shingle_posting(rep_docs, text_col, id_col, k, max_df).persist()
+    posting = materialize(
+        _shingle_posting(rep_docs, text_col, id_col, k, max_df),
+        "staged_posting", "cache",
+    )
     rpairs = _jaccard_from_posting(posting, id_col, threshold)
     # reps with >=1 post-cap shingle — gate for within-group emission
     valid = posting.select(F.col(id_col).alias("__rep")).distinct()
@@ -266,13 +272,16 @@ def ngram_jaccard_pairs_prefix(
     id_b, jaccard) with id_a < id_b, J >= threshold, 6dp rounding.
     """
     members, _, rep_docs = _digest_groups(df, text_col, id_col)
-    posting = _shingle_posting(rep_docs, text_col, id_col, k, None).persist()
+    posting = materialize(
+        _shingle_posting(rep_docs, text_col, id_col, k, None),
+        "prefix_posting", "cache",
+    )
     dfreq = posting.groupBy("sh").agg(F.count(F.lit(1)).alias("__df"))
     # ONE per-doc aggregate yields both the canonical prefix (sort the
     # doc-length-bounded (df, sh) array IN-ROW and slice — no
     # row_number window, so no per-doc sort shuffle stage) and the
     # verify array (full shingle-hash set for array_intersect).
-    arrs = (
+    arrs = materialize(
         posting.join(dfreq, "sh")
         .groupBy(id_col)
         .agg(
@@ -298,8 +307,8 @@ def ngram_jaccard_pairs_prefix(
                 ).cast("int"),
             ).alias("__pref"),
             "__n",
-        )
-        .persist()
+        ),
+        "prefix_arrays", "cache",
     )
     prefix = arrs.select(
         id_col, F.explode("__pref").alias("sh"), "__n"
@@ -385,7 +394,10 @@ def staged_near_dup_clusters(
     shallow near-dup graphs) or ``star`` (:func:`cluster_pairs_star`,
     O(log n) rounds — the choice when components may be deep)."""
     members, _, rep_docs = _digest_groups(df, text_col, id_col)
-    posting = _shingle_posting(rep_docs, text_col, id_col, k, max_df).persist()
+    posting = materialize(
+        _shingle_posting(rep_docs, text_col, id_col, k, max_df),
+        "cluster_posting", "cache",
+    )
     rpairs = _jaccard_from_posting(posting, id_col, threshold).select(
         "id_a", "id_b"
     )
@@ -433,14 +445,20 @@ def incremental_dedup_filter(
     exact_alive = b_dig.join(c_dig, "__digest", "left_anti").select(id_col)
     alive = batch.join(exact_alive, id_col, "left_semi")
 
-    bp = _shingle_posting(alive, text_col, id_col, k, None).persist()
+    bp = materialize(
+        _shingle_posting(alive, text_col, id_col, k, None),
+        "ingest_batch_posting", "cache",
+    )
     b_sizes = bp.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_b"))
     # The corpus posting feeds both the size table and the vocabulary-
-    # restricted join side; persist so the corpus text is shingled ONCE
+    # restricted join side; cache it so the corpus text is shingled ONCE
     # per ingest. In production this is the materialized posting INDEX —
-    # built once, reused across every batch — so the persist models the
-    # index, not a per-query cache.
-    cp = _shingle_posting(corpus, text_col, id_col, k, max_df).persist()
+    # built once, reused across every batch — so the cache models the
+    # index within one ingest.
+    cp = materialize(
+        _shingle_posting(corpus, text_col, id_col, k, max_df),
+        "ingest_corpus_posting", "cache",
+    )
     # corpus posting restricted to the batch's shingle vocabulary BEFORE
     # its sizes are computed? NO — sizes must be the corpus documents'
     # true (capped) posting sizes, or the Jaccard denominator is wrong.
@@ -577,12 +595,12 @@ def minhash_lsh_pairs(
     rows = n_perm // bands
     sig = minhash_signatures(df, text_col, id_col, k, n_perm, seed)
     # PERF: the banded table feeds BOTH sides of the candidate self-join.
-    # Without persist(), each join side re-inlines and re-evaluates the
+    # Without a cache, each join side re-inlines and re-evaluates the
     # full signature expression inside its Generate — interpreted, per
-    # output row (measured 52 s vs 1 s at sf0.1). Persisting the ~40-byte
+    # output row (measured 52 s vs 1 s at sf0.1). Caching the ~40-byte
     # band rows is also the correct 100 TB architecture: signatures are
     # computed once and reused across every LSH stage.
-    banded = (
+    banded = materialize(
         sig.select(
             id_col,
             F.explode(
@@ -607,12 +625,12 @@ def minhash_lsh_pairs(
                 )
             ).alias("bd"),
         )
-        .select(id_col, "bd.band", "bd.bh")
-        .persist()
+        .select(id_col, "bd.band", "bd.bh"),
+        "minhash_bands", "cache",
     )
 
     if max_bucket is not None:
-        # Bucket stats ride the persisted band rows (one extra hash-agg on
+        # Bucket stats ride the cached band rows (one extra hash-agg on
         # the SAME (band, bh) key as the self-join). The LEFT side of the
         # join is pre-filtered: in an oversized bucket only the min-id row
         # survives, so the join emits n-1 star pairs instead of C(n,2) —
@@ -642,8 +660,11 @@ def minhash_lsh_pairs(
     )
 
     # exact-Jaccard verify ONLY the candidates; posting feeds both join
-    # sides → persist for the same reuse reason as above
-    posting = _shingle_posting(df, text_col, id_col, k, None).persist()
+    # sides → cache for the same reuse reason as above
+    posting = materialize(
+        _shingle_posting(df, text_col, id_col, k, None),
+        "minhash_posting", "cache",
+    )
     sizes = posting.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a = posting.select(F.col(id_col).alias("id_a"), "sh")
     b = posting.select(F.col(id_col).alias("id_b"), "sh")
@@ -756,7 +777,7 @@ def fingerprint_band_pairs(
         ).alias("bd"),
     ).select(id_col, fp_col, "bd.band", "bd.bh")
     if max_bucket is not None:
-        banded = banded.persist()
+        banded = materialize(banded, "hamming_bands", "cache")
         bstats = banded.groupBy("band", "bh").agg(
             F.count(F.lit(1)).alias("__bn"), F.min(id_col).alias("__bmin")
         )
@@ -1421,7 +1442,10 @@ def ngram_containment_pairs(
     with the smaller post-cap shingle set (ties: the lower id), and
     containment = |∩| / |inner| rounded 6dp, >= threshold.
     """
-    posting = _shingle_posting(df, text_col, id_col, k, max_df).persist()
+    posting = materialize(
+        _shingle_posting(df, text_col, id_col, k, max_df),
+        "containment_posting", "cache",
+    )
     sizes = posting.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a = posting.select(F.col(id_col).alias("id_a"), "sh")
     b = posting.select(F.col(id_col).alias("id_b"), "sh")

@@ -54,6 +54,10 @@ def _sweep_reliable_scratch() -> None:
     _RELIABLE_SCRATCH.clear()
 
 
+# the live copy per ``cache`` label
+_CACHED: dict[str, DataFrame] = {}
+
+
 def materialize(
     df: DataFrame,
     label: str,
@@ -85,16 +89,35 @@ def materialize(
       loop are listed in ROADMAP.md for reclassification one measured
       change at a time. ``eager=False`` defers the job to the first
       consumer's action.
+    * ``"cache"``: a lazy ``persist()`` at Spark's default storage
+      level. No job starts here; the first action that reads it fills
+      it, and a lost or evicted block is recomputed from the lineage
+      it keeps. The label's previous copy is unpersisted when the next
+      call for it starts, the ``reliable`` rule: one copy per label.
+      Spark's cache registry matches plans, not labels, and a scan of
+      a file rewritten in place plans like the scan of its old
+      content, so a live copy of the same plan under any label is
+      dropped too: a copy is never served to a later call.
 
     A domain-bounded relation is ``small``; any other relation with
-    several consumers is ``reliable``.
+    several consumers is ``reliable``, unless all its consumers run in
+    the plan or the scoped operation that built it: such a site picks
+    ``cache``, which starts no job and no write, and whose early
+    release costs a recompute, never a different result.
 
     Jobs started here carry the Spark job description
     ``materialize:<kind>:<label>``; the caller's description is
     restored afterwards.
     """
-    if kind not in ("small", "reliable", "local"):
+    if kind not in ("small", "reliable", "local", "cache"):
         raise ValueError(f"unknown materialize kind {kind!r}")
+    if kind == "cache":
+        prev = _CACHED.pop(label, None)
+        if prev is not None:
+            prev.unpersist()
+        df.unpersist()
+        _CACHED[label] = df.persist()
+        return _CACHED[label]
     if kind == "small" and max_rows is None:
         raise ValueError("materialize(kind='small') needs max_rows")
     if kind == "local" and not eager:

@@ -1177,14 +1177,16 @@ def events_decayed_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def source_score_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    # persist: the quality-feature extraction (regexp-heavy) feeds BOTH
+    # cache: the quality-feature extraction (regexp-heavy) feeds BOTH
     # the percentile grid (broadcast build) and the per-source rank
-    # pass — without it the text features are computed twice
-    # (optimization round, guide §2.4). The persisted relation is the
-    # 3-column projection, never raw text.
-    q = text_ops.quality_features(docs).select(
-        "doc_id", "source", F.col("quality_score").alias("s")
-    ).persist()
+    # pass — without it the text features are computed twice. The
+    # cached relation is the 3-column projection, never raw text.
+    q = materialize(
+        text_ops.quality_features(docs).select(
+            "doc_id", "source", F.col("quality_score").alias("s")
+        ),
+        "calibration_scores", "cache",
+    )
     # ONE array-percentile aggregate (101 exact order statistics in a
     # single expression) instead of 101 separate percentile()
     # aggregates over the same rows — identical values, 100x less

@@ -15,6 +15,7 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ...operators.relational import materialize
 from .. import dv as _dv
 from .. import _files
 from .log import DeltaState, _merge_feature_protocol, _now_ms, _writable_head
@@ -334,7 +335,7 @@ def delta_delete(
         # guide §2.4) — this also makes the bitmap and cdc row sets
         # identical by construction, closing the documented
         # nondeterministic-predicate hazard
-        matched = matched.persist()
+        matched = materialize(matched, "delete_matched", "cache")
     try:
         hits = matched.select(_DV_PATH, _DV_IDX)
         cdc_actions: list[dict] = []
@@ -660,13 +661,13 @@ def delta_update(
     # the per-file DV pandas filter — the bitmap pass, the CDC
     # preimage, the CDC postimage, and the rewritten-copy write are
     # FOUR scans of the same matched set (measured 2.4s vs 0.9s for
-    # the single-scan DELETE on the same table). persist (not
+    # the single-scan DELETE on the same table). A cache (not
     # localCheckpoint) keeps lineage recomputable; the working set is
     # bounded by the matched rows, which every one of those consumers
     # materializes anyway. It also closes the documented
     # nondeterministic-predicate hazard: the bitmaps and the
     # rewritten copies now come from the SAME materialized row set.
-    matched = live.where(cond).persist()
+    matched = materialize(live.where(cond), "update_matched", "cache")
     try:
         return _delta_update_commit(
             spark, table_dir, head, predicate, assignments,
@@ -681,7 +682,7 @@ def _delta_update_commit(
     schema, matched, rt_on, mat_id,
 ):
     """Tail of :func:`delta_update` over the persisted ``matched``
-    set (split out so the persist/unpersist lifecycle wraps it)."""
+    set (split out so the cache/unpersist lifecycle wraps it)."""
     # materialize the persist exactly once up front: the count is the
     # same converged-no-op gate the bitmap pass's None return used to
     # provide, and it lets the three independent jobs below (bitmap

@@ -29,10 +29,13 @@ Delta code involved:
 
 Scale posture: positions ride as *serialized roaring bytes*, never
 exploded driver-side row lists — executors serialize their own file's
-bitmap (``delta_log.delta_delete`` groups by file), the driver merges
-O(touched-files) compressed blobs, and scans broadcast the decoded
-position arrays per file (bounded by file row count, the same payload
-native Delta ships to its scan tasks).
+bitmap (``delta_log.delta_delete`` groups by file), and the driver
+merges O(touched-files) compressed blobs. Scans broadcast only the DV
+descriptors; each scan task reads and decodes its own file's bitmap
+(``delta_log.scan._dv_live_filter``), as a native Delta scan does.
+Only the change feed (``read_delta_changes``) broadcasts decoded
+position arrays: for each file whose DV a commit changed, the
+positions that changed.
 """
 
 from __future__ import annotations

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import DataStreamWriter
 
 from ..functions.timeops import epoch_seconds
+from ..operators.relational import materialize
 
 
 def tumbling_agg(
@@ -144,7 +145,8 @@ def hypertable_rollup(
             "n_events", "sum_value",
         )
     )
-    hourly = hourly.persist()  # feeds three outputs
+    # feeds three outputs
+    hourly = materialize(hourly, "rollup_hourly", "cache")
 
     def coarsen(seconds: int):
         return (

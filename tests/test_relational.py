@@ -62,6 +62,7 @@ def test_unknown_kind_and_unbounded_small_raise(spark):
         ("local", {"eager": False}, 0),
         ("small", {"max_rows": 10}, 1),  # the collect
         ("reliable", {}, 1),  # the parquet write; the read-back is lazy
+        ("cache", {}, 0),  # filled by the first consumer's action
     ],
 )
 def test_jobs_started_per_kind(spark, kind, kwargs, n_jobs):
@@ -103,9 +104,10 @@ def test_jobs_carry_description_and_caller_description_survives(
 
 def test_one_materialization_helper():
     """Every materialization goes through ``relational.materialize``:
-    no other module calls ``localCheckpoint``, the two helpers it
-    replaced are gone by name, and each call names its kind as a
-    literal, so the policy of every site can be read at the site."""
+    no other module calls ``localCheckpoint``, ``persist`` or
+    ``cache``, the two helpers it replaced are gone by name, and each
+    call names its kind as a literal, so the policy of every site can
+    be read at the site."""
     root = pathlib.Path(pkg.__file__).parent
     files = sorted(root.rglob("*.py"))
     rels = {f.relative_to(root).as_posix() for f in files}
@@ -125,7 +127,11 @@ def test_one_materialization_helper():
             if not isinstance(n, ast.Call):
                 continue
             fn = getattr(n.func, "attr", None) or getattr(n.func, "id", None)
-            if fn == "localCheckpoint" and name != "operators/relational.py":
+            if (
+                fn in ("localCheckpoint", "persist", "cache")
+                and isinstance(n.func, ast.Attribute)
+                and name != "operators/relational.py"
+            ):
                 local_callers.append((name, n.lineno))
             if fn == "materialize":
                 n_calls += 1
@@ -134,10 +140,79 @@ def test_one_materialization_helper():
                 )
                 if not (
                     isinstance(kind, ast.Constant)
-                    and kind.value in ("small", "reliable", "local")
+                    and kind.value in ("small", "reliable", "local", "cache")
                 ):
                     bad_kinds.append((name, n.lineno))
     assert local_callers == []
     assert stale == []
     assert bad_kinds == []
     assert n_calls > 0
+
+
+def _live_entry(spark, df):
+    """Identity of the session cache registry's entry for ``df``'s
+    plan, or None when the plan is not cached."""
+    hit = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(
+        df._jdf
+    )
+    return spark._jvm.System.identityHashCode(hit.get()) if hit.isDefined() else None
+
+
+def test_cache_keeps_one_live_copy_per_label(spark):
+    """A second ``cache`` call for a label unpersists the first copy:
+    its plan leaves Spark's cache registry. A call whose plan another
+    label holds caches it afresh instead of serving that copy."""
+    registry = spark._jsparkSession.sharedState().cacheManager()
+    first = rel.materialize(_small_df(spark, 3), "ut_cache", "cache")
+    n = registry.numCachedEntries()
+    assert _live_entry(spark, first) is not None
+    second = rel.materialize(_small_df(spark, 4), "ut_cache", "cache")
+    assert _live_entry(spark, first) is None
+    assert registry.numCachedEntries() == n
+    held = _live_entry(spark, second)
+    other = rel.materialize(_small_df(spark, 4), "ut_cache_other", "cache")
+    assert registry.numCachedEntries() == n
+    assert _live_entry(spark, other) not in (None, held)
+    assert sorted(tuple(r) for r in other.collect()) == [
+        (i, 2 * i) for i in range(4)
+    ]
+
+
+def test_cached_dedup_reads_a_file_rewritten_in_place(spark, tmp_path):
+    """Spark's cache registry matches a parquet scan by its path, so a
+    copy cached by an earlier call must not serve a later call after
+    the file was rewritten in place: neither a re-run of the same
+    operator nor another operator that caches the same relation. The
+    file is rewritten outside Spark, as a mirror sync does; a Spark
+    overwrite would refresh the registry itself."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from rearc_data_engineer_takehome_spark.operators import dedup
+
+    path = tmp_path / "docs"
+    path.mkdir()
+    base = "a b c d e f g"
+
+    def docs(*texts):
+        pq.write_table(
+            pa.table({
+                "doc_id": pa.array(range(1, len(texts) + 1), pa.int64()),
+                "text": list(texts),
+            }),
+            path / "part-0.parquet",
+        )
+        return spark.read.parquet(str(path))
+
+    def pairs(df):
+        out = dedup.ngram_jaccard_pairs_staged(df, max_df=64)
+        return sorted((r.id_a, r.id_b) for r in out.collect())
+
+    assert pairs(docs(f"{base} h", f"{base} x", "p q r s t u v w")) == [(1, 2)]
+    assert pairs(docs(f"{base} h", "m n o p q r s t", f"{base} y")) == [(1, 3)]
+    # the staged clusters cache the same posting relation under their
+    # own label
+    clusters = dedup.staged_near_dup_clusters(
+        docs("m n o p q r s t", f"{base} h", f"{base} y"), max_df=64
+    )
+    assert sorted(tuple(r) for r in clusters.collect()) == [(2, 2), (3, 2)]

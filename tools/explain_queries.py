@@ -7,6 +7,9 @@ constructing their DataFrame; the captured plan is the final read —
 the part a reader of the plan diff cares about (scan shape, DV filter
 node, join strategy).
 
+The session is the bench's: ``local[N]`` with N shuffle partitions,
+N from ``session.usable_cpus()``.
+
 Usage:
     python tools/explain_queries.py <repo_root> <outdir> <suffix> q1 q2 ...
 """
@@ -23,12 +26,15 @@ names = sys.argv[4:]
 sys.path.insert(0, root)
 
 from rearc_data_engineer_takehome_spark.queries import REGISTRY  # noqa: E402
-from rearc_data_engineer_takehome_spark.session import get_spark  # noqa: E402
+from rearc_data_engineer_takehome_spark.session import get_spark, usable_cpus  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+CPUS = usable_cpus()
 
 spark = get_spark(
-    app_name="explain_queries", master="local[8]", shuffle_partitions=8
+    app_name="explain_queries",
+    master=f"local[{CPUS}]",
+    shuffle_partitions=int(CPUS),
 )
 spark.sparkContext.setLogLevel("ERROR")
 os.makedirs(outdir, exist_ok=True)

@@ -1,10 +1,12 @@
 """Generate PLANS.md: a physical-plan shape summary for every
 registered query.
 
-Run standalone (``python tools/plan_report.py``). For each query the
-report records the operators that determine 100 TB behavior: exchange
-count, join strategies, window/sort presence, TakeOrderedAndProject,
-Arrow/pandas stages, and whether filters/pruning reached the scan.
+Run standalone (``python tools/plan_report.py``). The session is the
+bench's: ``local[N]`` with N shuffle partitions, N from
+``session.usable_cpus()``. For each query the report records the
+operators that determine 100 TB behavior: exchange count, join
+strategies, window/sort presence, TakeOrderedAndProject, Arrow/pandas
+stages, and whether filters/pruning reached the scan.
 tests/test_plans.py asserts the critical shapes; this report is the
 whole-surface view the assertions sample from.
 """
@@ -21,16 +23,15 @@ SF_DIR = os.environ.get("SPARK_GRAFT_PLAN_SF", "/root/testdata/sf0.001")
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     from rearc_data_engineer_takehome_spark.plans import explain
     from rearc_data_engineer_takehome_spark.queries import REGISTRY
+    from rearc_data_engineer_takehome_spark.session import get_spark, usable_cpus
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .appName("plan-report")
-        .getOrCreate()
+    cpus = usable_cpus()
+    spark = get_spark(
+        app_name="plan-report",
+        master=f"local[{cpus}]",
+        shuffle_partitions=int(cpus),
     )
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -89,6 +90,7 @@ def main() -> None:
         "# PLANS — physical-plan shape per registered query",
         "",
         f"Generated by `python tools/plan_report.py` at `{SF_DIR}` "
+        f"on `local[{cpus}]` "
         "(plan SHAPE is data-size independent; AQE may further coalesce "
         "or convert joins at runtime). Columns: shuffle exchange count, "
         "join strategies, notable operators, whether any filter was "
